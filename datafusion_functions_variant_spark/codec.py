@@ -847,7 +847,7 @@ def convert_value(value: Any, buf: bytearray, metadata: Metadata) -> None:
 
 def _encode_object(value: dict, metadata: Metadata) -> bytes:
     """One dict → its object value bytes. Shared by ``convert_value``
-    and the top-level fast path in ``batch_from_json`` (an object ROW
+    and the top-level fast path in ``encode_batch`` (an object ROW
     goes straight to its bytes — no scratch bytearray and no extra
     full-row copy per row; round 16, guide §4.2)."""
     ob = ObjectBuilder(metadata)
@@ -857,33 +857,50 @@ def _encode_object(value: dict, metadata: Metadata) -> bytes:
     return ob.finish()
 
 
+def parse_json(text: str) -> Any:
+    """One strict ``json.loads``: a malformed text raises
+    ``VariantError("malformed JSON: ...")``."""
+    try:
+        return json.loads(text)
+    except (ValueError, TypeError) as exc:
+        raise VariantError(f"malformed JSON: {exc}") from exc
+
+
 def batch_from_json(
-    texts: Iterable[str | None],
+    texts: Iterable[str | None], tolerant: bool = False
 ) -> tuple[bytes, list[bytes | None]]:
     """The flagship kernel: JSON strings → (shared metadata, value buffers).
 
-    Mirrors ``variant_from_json`` (json.rs:38-81): parse every row, build
-    ONE metadata dictionary from the union of all keys (json.rs:51-55),
-    then encode each row against it. Fails the whole batch on the first
-    malformed row (json.rs:42-48). A top-level JSON ``null`` yields a
-    Python ``None`` (the Arrow-null of json.rs:185-196); nested nulls
-    become variant nulls.
+    Mirrors ``variant_from_json`` (json.rs:38-81): parse every row on
+    its own, then ``encode_batch``. A malformed row fails the whole
+    batch (json.rs:42-48); with ``tolerant`` it becomes a null slot
+    instead. A top-level JSON ``null`` yields a Python ``None`` (the
+    Arrow-null of json.rs:185-196); nested nulls become variant nulls.
     """
-    texts = list(texts)
-    nulls = [t is None for t in texts]
-    parsed = _parse_batch(texts, nulls)
+    rows: list[Any] = []
+    for t in texts:
+        try:
+            rows.append(None if t is None else parse_json(t))
+        except VariantError:
+            if not tolerant:
+                raise
+            rows.append(None)
+    return encode_batch(rows)
 
+
+def encode_batch(rows: list[Any]) -> tuple[bytes, list[bytes | None]]:
+    """Parsed JSON rows → (shared metadata, value buffers): ONE metadata
+    dictionary from the union of all keys (json.rs:51-55), then each
+    row encoded against it. A ``None`` row becomes a null slot."""
     keys: set[str] = set()
-    for p, isnull in zip(parsed, nulls):
-        if not isnull:
-            collect_keys(p, keys)
+    for p in rows:
+        collect_keys(p, keys)
     metadata_buf = build_metadata(keys)
     metadata = Metadata(metadata_buf)
 
     values: list[bytes | None] = []
-    for p, isnull in zip(parsed, nulls):
-        if isnull or p is None:
-            # input SQL null OR top-level JSON null → null slot
+    for p in rows:
+        if p is None:
             values.append(None)
         elif type(p) is dict:
             # object row (the overwhelmingly common shape): straight
@@ -896,43 +913,38 @@ def batch_from_json(
     return metadata_buf, values
 
 
-def _parse_batch(texts: list, nulls: list[bool]) -> list[Any]:
-    """Parse a batch of JSON texts with ONE C-level ``json.loads`` of
-    the comma-joined array instead of one interpreter round-trip per
-    row (round 16, guide §4.2: amortize per-row work over the batch).
+class BatchDecoder:
+    """Decodes the rows of one batch against their metadata blobs.
 
-    Strict-mode semantics are preserved exactly: a malformed row makes
-    the joined array malformed too, so the whole batch still fails —
-    except for one ambiguity class, a "row" that is itself a
-    comma/whitespace-separated JSON value SEQUENCE (e.g. ``"1,2"``),
-    which is invalid standalone but would silently splice extra
-    elements into the array. The element-count check catches exactly
-    that class (and any other disagreement), falling back to the
-    per-row loop whose error/acceptance behavior is the original one.
-    """
-    row_texts = [t for t, isnull in zip(texts, nulls) if not isnull]
-    parsed_rows: list[Any] | None = None
-    if row_texts:
-        try:
-            arr = json.loads("[" + ",".join(row_texts) + "]")
-            if isinstance(arr, list) and len(arr) == len(row_texts):
-                parsed_rows = arr
-        except (ValueError, TypeError):
-            parsed_rows = None  # per-row loop raises the precise error
-    else:
-        parsed_rows = []
-    if parsed_rows is None:
-        parsed_rows = []
-        for t in row_texts:
-            try:
-                parsed_rows.append(json.loads(t))
-            except (json.JSONDecodeError, TypeError) as exc:
-                raise VariantError(f"malformed JSON: {exc}") from exc
-    out: list[Any] = []
-    it = iter(parsed_rows)
-    for isnull in nulls:
-        out.append(None if isnull else next(it))
-    return out
+    Every row of a Track C batch carries the batch's one shared
+    dictionary, so each distinct blob is parsed into ``Metadata`` once,
+    not once per row (rebuilding it per row cost more than the decode
+    itself), and each parsed path's field ids are resolved once per
+    blob. Make one per batch."""
+
+    def __init__(self) -> None:
+        self._metas: dict[bytes, Metadata] = {}
+        self._fids: dict[tuple, list] = {}
+
+    def metadata(self, blob: bytes) -> Metadata:
+        m = self._metas.get(blob)
+        if m is None:
+            m = self._metas[blob] = Metadata(blob)
+        return m
+
+    def fids(self, blob: bytes, steps: tuple) -> list:
+        """``resolve_steps`` of the parsed path ``steps`` against ``blob``."""
+        key = (blob, steps)
+        f = self._fids.get(key)
+        if f is None:
+            f = self._fids[key] = resolve_steps(self.metadata(blob), steps)
+        return f
+
+    def to_python(self, value_buf: bytes, blob: bytes) -> Any:
+        return to_python(Variant(value_buf), self.metadata(blob))
+
+    def to_json(self, value_buf: bytes, blob: bytes) -> str:
+        return _render_json(self.to_python(value_buf, blob))
 
 
 def to_python(value: Variant, metadata: Metadata) -> Any:
@@ -1030,8 +1042,8 @@ def get_path(
     path is absent.
 
     Batch callers (the pandas UDFs) should instead parse the path once
-    with ``parse_json_path``, resolve field ids once per metadata blob
-    with ``resolve_steps``, and evaluate rows via ``walk_path`` /
+    with ``parse_json_path``, take the metadata and field ids from a
+    ``BatchDecoder``, and evaluate rows via ``walk_path`` /
     ``get_path_prepared`` — in a batch every row shares the metadata,
     so per-row Metadata construction + dictionary lookups are pure
     overhead (this was ~5x the cost of the actual decode).

@@ -67,45 +67,9 @@ def variant_from_json(texts: pd.Series) -> pd.DataFrame:
 
 @pandas_udf(VARIANT_STRUCT)
 def try_variant_from_json(texts: pd.Series) -> pd.DataFrame:
-    """Per-row-tolerant ingestion: malformed rows → null value slot."""
-    import json as _json
-
-    texts_l = texts.tolist()
-    nulls = [t is None for t in texts_l]
-    try:
-        # clean batch (the common case): ONE C-level array parse
-        # (codec._parse_batch, r16) — tolerant semantics unchanged
-        # because a failure of the joined parse falls through to the
-        # per-row loop below, which maps each bad row to None
-        parsed = codec._parse_batch(texts_l, nulls)
-        ok = [not n for n in nulls]
-    except codec.VariantError:
-        parsed, ok = [], []
-        for t in texts_l:
-            if t is None:
-                parsed.append(None)
-                ok.append(False)
-                continue
-            try:
-                parsed.append(_json.loads(t))
-                ok.append(True)
-            except (ValueError, TypeError):
-                parsed.append(None)
-                ok.append(False)
-    keys: set[str] = set()
-    for p, good in zip(parsed, ok):
-        if good:
-            codec.collect_keys(p, keys)
-    meta = codec.build_metadata(keys)
-    m = codec.Metadata(meta)
-    values: list[bytes | None] = []
-    for p, good in zip(parsed, ok):
-        if not good or p is None:
-            values.append(None)
-        else:
-            b = bytearray()
-            codec.convert_value(p, b, m)
-            values.append(bytes(b))
+    """Per-row-tolerant ingestion: a malformed row becomes a null value
+    slot; every other row encodes as in ``variant_from_json``."""
+    meta, values = codec.batch_from_json(texts.tolist(), tolerant=True)
     return pd.DataFrame({"metadata": [meta] * len(values), "value": values})
 
 
@@ -156,40 +120,29 @@ def variant_extract(col, fields: dict[str, tuple[str, str]]) -> Column:
     # only pays its own coercion — a bigint + string getter on $.k
     # cost one walk_path + one to_python, not two of each (round 15:
     # decode measured 0.64x on the bench key's spec shape).
-    groups: list[tuple[list, list[tuple[str, str]]]] = []
+    groups: list[tuple[tuple, list[tuple[str, str]]]] = []
     _by_path: dict[tuple, int] = {}
     for name, steps, dtype in specs:
         gi = _by_path.setdefault(tuple(steps), len(groups))
         if gi == len(groups):
-            groups.append((steps, []))
+            groups.append((tuple(steps), []))
         groups[gi][1].append((name, dtype))
 
     @pandas_udf(StructType(out_fields))
     def _extract(v: pd.DataFrame) -> pd.DataFrame:
-        metas = v["metadata"]
-        vals = v["value"]
-        # per distinct metadata blob: Metadata parse + field-id
-        # resolution for every path group, exactly once
-        cache: dict[bytes, tuple[codec.Metadata, list[list]]] = {}
+        dec = codec.BatchDecoder()
         data: dict[str, list] = {name: [] for name, _, _ in specs}
-        for mb, vb in zip(metas, vals):
+        for mb, vb in zip(v["metadata"], v["value"]):
             if vb is None or mb is None:
                 for name, _, _ in specs:
                     data[name].append(None)
                 continue
             mkey = bytes(mb)
-            ent = cache.get(mkey)
-            if ent is None:
-                m = codec.Metadata(mkey)
-                ent = cache[mkey] = (
-                    m,
-                    [codec.resolve_steps(m, steps) for steps, _ in groups],
-                )
-            m, fid_lists = ent
+            m = dec.metadata(mkey)
             vbytes = bytes(vb)
-            for (steps, outs), fids in zip(groups, fid_lists):
+            for steps, outs in groups:
                 try:
-                    node = codec.walk_path(vbytes, steps, fids)
+                    node = codec.walk_path(vbytes, steps, dec.fids(mkey, steps))
                 except codec.VariantError:
                     node = None
                 py = None
@@ -238,9 +191,10 @@ def _coerce(py, dtype: str):
 @pandas_udf(StringType())
 def variant_to_json(v: pd.DataFrame) -> pd.Series:
     """Explicit variant struct → canonical JSON text."""
+    dec = codec.BatchDecoder()
     out = []
     for mb, vb in zip(v["metadata"], v["value"]):
-        out.append(None if vb is None else codec.to_json_str(bytes(vb), bytes(mb)))
+        out.append(None if vb is None else dec.to_json(bytes(vb), bytes(mb)))
     return pd.Series(out, dtype=object)
 
 
@@ -276,43 +230,20 @@ def variant_merge_patch(vs: pd.DataFrame, patches: pd.Series) -> pd.DataFrame:
     scalars replace — and re-encode the whole batch against ONE new
     union dictionary (the post-merge key set can both shrink and grow,
     so the output batch rebuilds its shared metadata exactly like
-    ingestion does). A null patch or null target passes the target /
-    null through per RFC semantics."""
-    metas = vs["metadata"]
-    vals = vs["value"]
-    patch_l = patches.tolist()
-    # batch-parse the patch column (ONE C-level array parse; strict —
-    # a malformed patch fails the batch exactly as json.loads did).
-    # Null-TARGET rows are excluded from the parse like the original
-    # per-row loop, which never touched their patch text.
-    parsed_patches = codec._parse_batch(
-        patch_l,
-        [p is None or vb is None for p, vb in zip(patch_l, vals)],
-    )
+    ingestion does). A SQL NULL patch passes the target through; a
+    SQL NULL target stays null and its patch is not parsed. A JSON
+    ``null`` patch replaces the target with null (RFC 7386). A
+    malformed patch fails the batch with ``VariantError``."""
+    dec = codec.BatchDecoder()
     merged: list = []
-    for mb, vb, patch in zip(metas, vals, parsed_patches):
+    for mb, vb, patch in zip(vs["metadata"], vs["value"], patches):
         if vb is None:
             merged.append(None)
             continue
-        target = codec.to_python(
-            codec.Variant(bytes(vb)), codec.Metadata(bytes(mb))
-        )
+        target = dec.to_python(bytes(vb), bytes(mb))
         if patch is None:
             merged.append(target)
-            continue
-        merged.append(codec.merge_patch(target, patch))
-    keys: set[str] = set()
-    for m in merged:
-        if m is not None:
-            codec.collect_keys(m, keys)
-    meta = codec.build_metadata(keys)
-    mobj = codec.Metadata(meta)
-    out: list[bytes | None] = []
-    for m in merged:
-        if m is None:
-            out.append(None)
-            continue
-        b = bytearray()
-        codec.convert_value(m, b, mobj)
-        out.append(bytes(b))
+        else:
+            merged.append(codec.merge_patch(target, codec.parse_json(patch)))
+    meta, out = codec.encode_batch(merged)
     return pd.DataFrame({"metadata": [meta] * len(out), "value": out})

@@ -21,17 +21,21 @@ from . import explicit
 def _get_with_path_col(spark_type, dtype: str):
     @pandas_udf(spark_type)
     def _get(v: pd.DataFrame, paths: pd.Series) -> pd.Series:
-        meta_cache: dict[bytes, codec.Metadata] = {}
+        dec = codec.BatchDecoder()
+        steps_by_path: dict[str, tuple] = {}
         out = []
         for mb, vb, path in zip(v["metadata"], v["value"], paths):
             if vb is None or mb is None or path is None:
                 out.append(None)
                 continue
             mkey = bytes(mb)
-            if mkey not in meta_cache:
-                meta_cache[mkey] = codec.Metadata(mkey)
             try:
-                py = codec.get_path(bytes(vb), mkey, path)
+                steps = steps_by_path.get(path)
+                if steps is None:
+                    steps = steps_by_path[path] = tuple(codec.parse_json_path(path))
+                py = codec.get_path_prepared(
+                    bytes(vb), dec.metadata(mkey), steps, dec.fids(mkey, steps)
+                )
             except codec.VariantError:
                 py = None
             out.append(explicit._coerce(py, dtype))

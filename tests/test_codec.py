@@ -253,8 +253,13 @@ def test_batch_shared_metadata():
 
 
 def test_parsing_error():
-    with pytest.raises(c.VariantError):
-        c.batch_from_json(['{"ok": 1}', "{not json"])  # batch fails (json.rs:42-48)
+    for texts in (
+        ['{"ok": 1}', "{not json"],  # batch fails (json.rs:42-48)
+        ["[1", "2]", "3,4"],  # rows that splice into a valid JSON array
+        ["1,2"],  # a value sequence, not one value
+    ):
+        with pytest.raises(c.VariantError, match="malformed JSON"):
+            c.batch_from_json(texts)
 
 
 def test_to_json_roundtrip():

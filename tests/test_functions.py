@@ -123,6 +123,63 @@ def test_explicit_tolerant_parse(spark):
     assert out[0]["v"]["value"] is not None
     assert out[1]["v"]["value"] is None
     assert out[2]["v"]["value"] is None
+    # rows that splice into a valid JSON array, each batch on its own
+    for rows in (["[1", "2]", "3,4"], ["1,2"]):
+        df = spark.createDataFrame([(r,) for r in rows], ["j"]).coalesce(1)
+        out = df.select(explicit.try_variant_from_json(F.col("j")).alias("v")).collect()
+        assert [r["v"]["value"] for r in out] == [None] * len(rows)
+
+
+def test_explicit_merge_patch(spark):
+    """variant_merge_patch agrees with codec.merge_patch (pinned to an
+    RFC 7386 reference) per row; a SQL NULL patch passes the target
+    through, a SQL NULL target stays null."""
+    import pytest
+
+    from datafusion_functions_variant_spark import codec
+
+    target = '{"a": 1, "b": {"c": 2}}'
+    rows = [
+        (target, "null"),
+        (target, "false"),
+        (target, "0"),
+        (target, '{"a": null}'),
+        (target, None),
+        (None, '{"a": 1}'),
+    ]
+    df = spark.createDataFrame(rows, "j string, patch string").coalesce(1)
+    out = df.select(
+        explicit.variant_merge_patch(
+            explicit.variant_from_json(F.col("j")), F.col("patch")
+        ).alias("m")
+    ).collect()
+    got = [
+        None
+        if r["m"]["value"] is None
+        else codec.to_python(
+            codec.Variant(bytes(r["m"]["value"])),
+            codec.Metadata(bytes(r["m"]["metadata"])),
+        )
+        for r in out
+    ]
+    want = []
+    for t, p in rows:
+        if t is None:
+            want.append(None)
+        elif p is None:
+            want.append(json.loads(t))
+        else:
+            want.append(codec.merge_patch(json.loads(t), json.loads(p)))
+    assert got == want
+    assert got[:4] == [None, False, 0, {"b": {"c": 2}}]
+
+    bad = spark.createDataFrame([(target, "{broken")], "j string, patch string")
+    with pytest.raises(Exception, match="malformed JSON"):
+        bad.select(
+            explicit.variant_merge_patch(
+                explicit.variant_from_json(F.col("j")), F.col("patch")
+            )
+        ).collect()
 
 
 def test_explicit_matches_native(spark):

@@ -208,14 +208,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     shutil.rmtree(path, ignore_errors=True)
-    q = (
-        st.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", path + "_ckpt_tmp")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(path + "_ckpt_tmp", ignore_errors=True)
+    core.run_foreach_batch(st, write_batch, path + "_ckpt_tmp")
     back = spark.read.parquet(path)
     return (
         back.groupBy("event_type")
@@ -299,6 +292,119 @@ def _index_update_ingest(spark, idx, out_dir):
     return ingest
 
 
+#: Generation budgets of the tiered capstone cells: low enough that
+#: promotions (and a gen1→gen2 cascade) fire inside the gate drive at
+#: sf0.01 — at production scale the budgets are the LSM dials.
+_TIERED = {"budget_rows": 120, "growth": 4}
+
+
+def _run_capstone(spark, sf_dir, tag, feed, index_cls, index_kwargs, mode):
+    """Drive one cell of the ingest-dedup capstone cube and return
+    ``(verdicts, idx)``. A cell is a point on three axes:
+
+    * ``feed`` — how the doc_id % 3 batches arrive: ``"hash"`` (a
+      precomputed content-hash column), ``"json"`` (raw JSON
+      envelopes, key extracted per batch by ``parse_json`` →
+      ``variant_get``) or ``"shredded"`` (the envelope landed with the
+      key path as a typed column);
+    * ``index_cls``/``index_kwargs`` — ``SelfUpdatingHistoryIndex`` or
+      ``GenerationalHistoryIndex`` and its kwargs (``expected_keys``
+      defaults to the corpus row count: a parquet metadata-only upper
+      bound on distinct content hashes; over-sizing only lowers FPR);
+    * ``mode`` — ``"update"`` streams batches 0-2 in one phase;
+      ``"restart"`` streams batches 0-1, simulates a driver crash (the
+      index's metastore entries and session-held Bloom bitset are
+      gone; its files and the source checkpoint survive), recovers the
+      index with ``attach()`` and RESUMES batch 2 on the same
+      checkpoint — the source log already holds batches 0-1, so only
+      batch 2 forms a micro-batch.
+
+    Every batch runs the feed's and index's foreachBatch callback
+    (probe-before-append, idempotent verdict write), so the oracle of
+    a cell is the strictly-earlier-batch spec whatever the axes. Names
+    derive from ``tag``: split dir ``docs_idx_{tag}_split``, index
+    table ``stream_{tag}_hash_idx``, verdicts ``stream_{tag}_verdicts``."""
+    import os as _os
+    import shutil as _sh
+
+    from ..sources.tables import load_table
+    from . import catalog as _catalog
+
+    split_dir = _os.path.join(_catalog._IO_DIR, f"docs_idx_{tag}_split")
+    idx_table = f"stream_{tag}_hash_idx"
+    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
+    out_dir = _os.path.join(_catalog._IO_DIR, f"stream_{tag}_verdicts")
+    ckpt = out_dir + "_ckpt_tmp"
+    for d in (split_dir, idx_dir, out_dir, ckpt):
+        _sh.rmtree(d, ignore_errors=True)
+    kwargs = {"path": idx_dir, **index_kwargs}
+    if "expected_keys" not in kwargs:
+        kwargs["expected_keys"] = load_table(spark, sf_dir, "documents").count()
+    # the hash feed's update cells stream the raw corpus; every other
+    # cell is replica-enriched (see core._split_documents)
+    with_replicas = feed != "hash" or mode == "restart"
+    write, read = {
+        "hash": (core.write_documents_split, core.documents_split_stream),
+        "json": (
+            core.write_documents_json_split,
+            core.documents_json_split_stream,
+        ),
+        "shredded": (
+            core.write_documents_shredded_split,
+            core.documents_shredded_split_stream,
+        ),
+    }[feed]
+
+    def run(batches, idx, keep_checkpoint=False):
+        spec = write(
+            spark, sf_dir, split_dir, batches=batches, with_replicas=with_replicas
+        )
+        if feed == "json":
+            ingest = _variant_keyed_ingest(spark, idx, out_dir)
+        elif feed == "shredded":
+            ingest = _shredded_keyed_ingest(spark, idx, out_dir, spec)
+        elif index_cls is _history.SelfUpdatingHistoryIndex:
+            ingest = _index_update_ingest(spark, idx, out_dir)
+        else:
+            ingest = _tiered_ingest(spark, idx, out_dir)
+        core.run_foreach_batch(
+            read(spark, split_dir), ingest, ckpt, keep_checkpoint
+        )
+
+    idx = index_cls(spark, idx_table, "h", overwrite=True, **kwargs)
+    if mode == "restart":
+        run((0, 1), idx, keep_checkpoint=True)
+        if index_cls is _history.SelfUpdatingHistoryIndex:
+            tables = [idx_table]
+        else:
+            tables = [f"{idx_table}_g{g}" for g in range(idx.n_generations)]
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx = index_cls.attach(spark, idx_table, "h", **kwargs)
+        run((2,), idx)
+    else:
+        run((0, 1, 2), idx)
+    verdicts = (
+        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
+    )
+    return verdicts, idx
+
+
+#: Sources every capstone cell's spec hash reads besides its own index,
+#: ingest callback and feed writer: the driver, the runner, and the
+#: split helpers the feed writers share (replica rule, JSON envelope,
+#: batch-file split, mtime pinning) — an edit to any of them re-fronts
+#: all nine cells for oracle re-verification.
+_CAPSTONE_DEPS = (
+    _run_capstone,
+    core.run_foreach_batch,
+    core._split_documents,
+    core._envelope,
+    core._write_split_batches,
+    core._pin_batch_mtime,
+)
+
+
 @query(
     "stream_dedup_index_update",
     oracle=r"""
@@ -321,7 +427,12 @@ def _index_update_ingest(spark, idx, out_dir):
     """,
     # the probe/append topology lives in the history module — changes
     # there must re-front this query for driver re-verification
-    hash_deps=(_history.SelfUpdatingHistoryIndex, _index_update_ingest),
+    hash_deps=(
+        _history.SelfUpdatingHistoryIndex,
+        _index_update_ingest,
+        core.write_documents_split,
+        *_CAPSTONE_DEPS,
+    ),
 )
 def stream_dedup_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-at-ingest with a SELF-UPDATING index — the loop the other
@@ -355,46 +466,10 @@ def stream_dedup_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffles the accumulated index — the O(index) per-batch terms
     are one in-place scan and nothing else. SCALE.md probes the
     per-batch cost against a K×-grown index."""
-    import os as _os
-    import shutil as _sh
-
-    from ..sources.tables import load_table
-    from ..streaming.history import SelfUpdatingHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_update_split")
-    idx_table = "stream_upd_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_upd_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    st = core.read_multibatch_documents_stream(spark, sf_dir, split_dir)
-    # expected key universe for bloom sizing = corpus row count (a
-    # parquet metadata-only count — cheap at any scale; an upper bound
-    # on distinct content hashes, and over-sizing only lowers FPR)
-    idx = SelfUpdatingHistoryIndex(
-        spark,
-        idx_table,
-        "h",
-        path=idx_dir,
-        expected_keys=load_table(spark, sf_dir, "documents").count(),
-        overwrite=True,  # create-fresh pipeline; idx_dir rmtree'd above
-    )
-
-    ingest = _index_update_ingest(spark, idx, out_dir)
-
-    q = (
-        st.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
+    return _run_capstone(
+        spark, sf_dir, "upd", "hash", _history.SelfUpdatingHistoryIndex,
+        {}, "update",
+    )[0]
 
 
 @query(
@@ -433,6 +508,7 @@ def stream_dedup_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         _history.SelfUpdatingHistoryIndex,
         _index_update_ingest,
         core.write_documents_split,
+        *_CAPSTONE_DEPS,
     ),
 )
 def stream_dedup_index_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,72 +537,17 @@ def stream_dedup_index_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_index_update_ingest``) against the recovered index. The oracle
     is the restart-free twin's: recovery must be semantically
     invisible."""
-    import os as _os
-    import shutil as _sh
-
-    from ..sources.tables import load_table
-    from ..streaming.history import SelfUpdatingHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_restart_split")
-    idx_table = "stream_restart_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_restart_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    n_docs = load_table(spark, sf_dir, "documents").count()
-
-    # ---- phase 1: the pipeline before the crash (batches 0 and 1)
-    core.write_documents_split(
-        spark, sf_dir, split_dir, batches=(0, 1), with_replicas=True
-    )
     # compact_after_files=12: LOW threshold so the auto-compaction
     # policy deterministically fires BETWEEN streamed batches at every
     # gate SF — each later batch then probes a just-compacted index,
     # and phase 2's post-crash attach() recovers an index that has
-    # already been through rewrite cycles. Recovery + compaction + the
-    # epoch-filtered replay semantics become ONE exercised story; the
-    # verdicts (and the oracle) are unaffected because compaction
-    # preserves rows and _b stamps exactly.
-    idx = SelfUpdatingHistoryIndex(
-        spark, idx_table, "h", path=idx_dir, expected_keys=n_docs,
-        overwrite=True,  # phase 1 creates fresh; recovery uses attach()
-        compact_after_files=12,
-    )
-    q = (
-        core.documents_split_stream(spark, split_dir)
-        .writeStream.foreachBatch(_index_update_ingest(spark, idx, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # ---- the crash: metastore entry and in-memory bitset gone; the
-    # index table's files and the source checkpoint survive on disk
-    spark.sql(f"DROP TABLE IF EXISTS {idx_table}")
-
-    # ---- phase 2: the restarted driver picks up batch 2
-    core.write_documents_split(
-        spark, sf_dir, split_dir, batches=(2,), with_replicas=True
-    )
-    recovered = SelfUpdatingHistoryIndex.attach(
-        spark, idx_table, "h", path=idx_dir, expected_keys=n_docs,
-        compact_after_files=12,  # same policy as phase 1
-    )
-    q = (
-        core.documents_split_stream(spark, split_dir)
-        .writeStream.foreachBatch(_index_update_ingest(spark, recovered, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
+    # already been through rewrite cycles. The verdicts (and the
+    # oracle) are unaffected because compaction preserves rows and
+    # _b stamps exactly.
+    return _run_capstone(
+        spark, sf_dir, "restart", "hash", _history.SelfUpdatingHistoryIndex,
+        {"compact_after_files": 12}, "restart",
+    )[0]
 
 
 @query(
@@ -2083,7 +2104,12 @@ def _tiered_ingest(spark, idx, out_dir):
     FROM d JOIN firstb f ON d.h = f.h
     ORDER BY d.doc_id
     """,
-    hash_deps=(_history.GenerationalHistoryIndex, _tiered_ingest),
+    hash_deps=(
+        _history.GenerationalHistoryIndex,
+        _tiered_ingest,
+        core.write_documents_split,
+        *_CAPSTONE_DEPS,
+    ),
 )
 def stream_dedup_index_update_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The self-updating ingest dedup over the LSM-STYLE
@@ -2105,42 +2131,10 @@ def stream_dedup_index_update_tiered(spark: SparkSession, sf_dir: str) -> DataFr
     map-side. ``budget_rows`` is set low here so promotions (and a
     gen1→gen2 cascade) actually fire inside the gate drive at sf0.01
     — at production scale the budgets are the LSM dials."""
-    import os as _os
-    import shutil as _sh
-
-    from ..sources.tables import load_table
-    from ..streaming.history import GenerationalHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_tiered_split")
-    idx_table = "stream_tiered_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_tiered_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    st = core.read_multibatch_documents_stream(spark, sf_dir, split_dir)
-    idx = GenerationalHistoryIndex(
-        spark,
-        idx_table,
-        "h",
-        path=idx_dir,
-        expected_keys=load_table(spark, sf_dir, "documents").count(),
-        budget_rows=120,
-        growth=4,
-        overwrite=True,
-    )
-    q = (
-        st.writeStream.foreachBatch(_tiered_ingest(spark, idx, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
+    return _run_capstone(
+        spark, sf_dir, "tiered", "hash", _history.GenerationalHistoryIndex,
+        _TIERED, "update",
+    )[0]
 
 
 @query(
@@ -2174,6 +2168,7 @@ def stream_dedup_index_update_tiered(spark: SparkSession, sf_dir: str) -> DataFr
         _history.GenerationalHistoryIndex,
         _tiered_ingest,
         core.write_documents_split,
+        *_CAPSTONE_DEPS,
     ),
 )
 def stream_dedup_index_restart_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2191,65 +2186,10 @@ def stream_dedup_index_restart_tiered(spark: SparkSession, sf_dir: str) -> DataF
     probed by the shared ``_tiered_ingest`` callback. Oracle is the
     single-table restart twin's: layout and recovery are both
     invisible to verdicts."""
-    import os as _os
-    import shutil as _sh
-
-    from ..sources.tables import load_table
-    from ..streaming.history import GenerationalHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_trestart_split")
-    idx_table = "stream_trestart_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_trestart_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    n_docs = load_table(spark, sf_dir, "documents").count()
-
-    # ---- phase 1: batches 0 and 1, promotions firing pre-crash
-    core.write_documents_split(
-        spark, sf_dir, split_dir, batches=(0, 1), with_replicas=True
-    )
-    idx = GenerationalHistoryIndex(
-        spark, idx_table, "h", path=idx_dir, expected_keys=n_docs,
-        budget_rows=120, growth=4, overwrite=True,
-    )
-    q = (
-        core.documents_split_stream(spark, split_dir)
-        .writeStream.foreachBatch(_tiered_ingest(spark, idx, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # ---- the crash: per-generation metastore entries and the
-    # in-memory bitset are gone; generation files, the promotion
-    # manifest, and the source checkpoint survive on disk
-    for g in range(idx.n_generations):
-        spark.sql(f"DROP TABLE IF EXISTS {idx_table}_g{g}")
-
-    # ---- phase 2: the restarted driver picks up batch 2
-    core.write_documents_split(
-        spark, sf_dir, split_dir, batches=(2,), with_replicas=True
-    )
-    recovered = GenerationalHistoryIndex.attach(
-        spark, idx_table, "h", path=idx_dir, expected_keys=n_docs,
-        budget_rows=120, growth=4,
-    )
-    q = (
-        core.documents_split_stream(spark, split_dir)
-        .writeStream.foreachBatch(_tiered_ingest(spark, recovered, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
+    return _run_capstone(
+        spark, sf_dir, "trestart", "hash", _history.GenerationalHistoryIndex,
+        _TIERED, "restart",
+    )[0]
 
 
 def _variant_keyed_ingest(spark, idx, out_dir):
@@ -2334,6 +2274,7 @@ def _variant_keyed_ingest(spark, idx, out_dir):
         _variant_keyed_ingest,
         _tiered_ingest,
         core.write_documents_json_split,
+        *_CAPSTONE_DEPS,
     ),
 )
 def stream_dedup_index_variant_keyed(
@@ -2357,43 +2298,10 @@ def stream_dedup_index_variant_keyed(
     Oracle: DuckDB extracts the same path with ``->>`` and replays the
     strictly-earlier-batch spec — layout, codec track, and storage
     tiers all invisible to verdicts."""
-    import os as _os
-    import shutil as _sh
-
-    from ..sources.tables import load_table
-    from ..streaming.history import GenerationalHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_vkey_split")
-    idx_table = "stream_vkey_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_vkey_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    core.write_documents_json_split(spark, sf_dir, split_dir)
-    idx = GenerationalHistoryIndex(
-        spark,
-        idx_table,
-        "h",
-        path=idx_dir,
-        expected_keys=load_table(spark, sf_dir, "documents").count(),
-        budget_rows=120,
-        growth=4,
-        overwrite=True,
-    )
-    q = (
-        core.documents_json_split_stream(spark, split_dir)
-        .writeStream.foreachBatch(_variant_keyed_ingest(spark, idx, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
+    return _run_capstone(
+        spark, sf_dir, "vkey", "json", _history.GenerationalHistoryIndex,
+        _TIERED, "update",
+    )[0]
 
 
 @query(
@@ -2434,6 +2342,7 @@ def stream_dedup_index_variant_keyed(
         _variant_keyed_ingest,
         _tiered_ingest,
         core.write_documents_json_split,
+        *_CAPSTONE_DEPS,
     ),
 )
 def stream_dedup_index_restart_variant_keyed(
@@ -2455,62 +2364,10 @@ def stream_dedup_index_restart_variant_keyed(
     to ``_b < 2`` against keys it must re-derive from the payloads.
     Oracle identical to the update twin: recovery, layout, and codec
     track all invisible to verdicts."""
-    import os as _os
-    import shutil as _sh
-
-    from ..sources.tables import load_table
-    from ..streaming.history import GenerationalHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_vkrestart_split")
-    idx_table = "stream_vkrestart_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_vkrestart_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    n_docs = load_table(spark, sf_dir, "documents").count()
-
-    # ---- phase 1: batches 0 and 1, promotions firing pre-crash
-    core.write_documents_json_split(spark, sf_dir, split_dir, batches=(0, 1))
-    idx = GenerationalHistoryIndex(
-        spark, idx_table, "h", path=idx_dir, expected_keys=n_docs,
-        budget_rows=120, growth=4, overwrite=True,
-    )
-    q = (
-        core.documents_json_split_stream(spark, split_dir)
-        .writeStream.foreachBatch(_variant_keyed_ingest(spark, idx, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # ---- the crash: metastore entries and the in-memory bitset are
-    # gone; generation files, manifest, and source checkpoint survive
-    for g in range(idx.n_generations):
-        spark.sql(f"DROP TABLE IF EXISTS {idx_table}_g{g}")
-
-    # ---- phase 2: the restarted driver picks up batch 2
-    core.write_documents_json_split(spark, sf_dir, split_dir, batches=(2,))
-    recovered = GenerationalHistoryIndex.attach(
-        spark, idx_table, "h", path=idx_dir, expected_keys=n_docs,
-        budget_rows=120, growth=4,
-    )
-    q = (
-        core.documents_json_split_stream(spark, split_dir)
-        .writeStream.foreachBatch(
-            _variant_keyed_ingest(spark, recovered, out_dir)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
+    return _run_capstone(
+        spark, sf_dir, "vkrestart", "json", _history.GenerationalHistoryIndex,
+        _TIERED, "restart",
+    )[0]
 
 
 def _shredded_keyed_ingest(spark, idx, out_dir, spec):
@@ -2574,6 +2431,7 @@ def _shredded_keyed_ingest(spark, idx, out_dir, spec):
         _shredded_keyed_ingest,
         _tiered_ingest,
         core.write_documents_shredded_split,
+        *_CAPSTONE_DEPS,
     ),
 )
 def stream_dedup_index_shredded_keyed(
@@ -2599,49 +2457,10 @@ def stream_dedup_index_shredded_keyed(
     Oracle: DuckDB replays the strictly-earlier-batch spec straight
     off the text column — shredding, codec track, and storage tiers
     all invisible to verdicts."""
-    import os as _os
-    import shutil as _sh
-
-    from ..sources.tables import load_table
-    from ..streaming.history import GenerationalHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_skey_split")
-    idx_table = "stream_skey_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_skey_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    spec = core.write_documents_shredded_split(spark, sf_dir, split_dir)
-    idx = GenerationalHistoryIndex(
-        spark,
-        idx_table,
-        "h",
-        path=idx_dir,
-        expected_keys=load_table(spark, sf_dir, "documents").count(),
-        budget_rows=120,
-        growth=4,
-        overwrite=True,
-    )
-    q = (
-        # with_residual=False: the ingest needs only (doc_id,
-        # body_text) — the source scan never reads the envelope bytes
-        core.documents_shredded_split_stream(
-            spark, split_dir, with_residual=False
-        )
-        .writeStream.foreachBatch(
-            _shredded_keyed_ingest(spark, idx, out_dir, spec)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
+    return _run_capstone(
+        spark, sf_dir, "skey", "shredded", _history.GenerationalHistoryIndex,
+        _TIERED, "update",
+    )[0]
 
 
 @query(
@@ -2675,6 +2494,7 @@ def stream_dedup_index_shredded_keyed(
         _shredded_keyed_ingest,
         _tiered_ingest,
         core.write_documents_shredded_split,
+        *_CAPSTONE_DEPS,
     ),
 )
 def stream_dedup_index_restart_shredded_keyed(
@@ -2696,74 +2516,10 @@ def stream_dedup_index_restart_shredded_keyed(
 
     Oracle identical to the update twin: recovery, storage layout,
     and key-derivation track all invisible to verdicts."""
-    import os as _os
-    import shutil as _sh
-
-    from ..sources.tables import load_table
-    from ..streaming.history import GenerationalHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_skrestart_split")
-    idx_table = "stream_skrestart_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_skrestart_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    n_docs = load_table(spark, sf_dir, "documents").count()
-
-    # ---- phase 1: shredded batches 0 and 1, promotions pre-crash
-    spec = core.write_documents_shredded_split(
-        spark, sf_dir, split_dir, batches=(0, 1)
-    )
-    idx = GenerationalHistoryIndex(
-        spark, idx_table, "h", path=idx_dir, expected_keys=n_docs,
-        budget_rows=120, growth=4, overwrite=True,
-    )
-    q = (
-        core.documents_shredded_split_stream(
-            spark, split_dir, with_residual=False
-        )
-        .writeStream.foreachBatch(
-            _shredded_keyed_ingest(spark, idx, out_dir, spec)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # ---- the crash: metastore entries and the in-memory bitset are
-    # gone; generation files, manifest, shredded store (typed key
-    # column + sidecar), and source checkpoint all survive
-    for g in range(idx.n_generations):
-        spark.sql(f"DROP TABLE IF EXISTS {idx_table}_g{g}")
-
-    # ---- phase 2: the restarted driver lands batch 2 shredded and
-    # resumes — the replay reads the typed column, no parse anywhere
-    core.write_documents_shredded_split(
-        spark, sf_dir, split_dir, batches=(2,)
-    )
-    recovered = GenerationalHistoryIndex.attach(
-        spark, idx_table, "h", path=idx_dir, expected_keys=n_docs,
-        budget_rows=120, growth=4,
-    )
-    q = (
-        core.documents_shredded_split_stream(
-            spark, split_dir, with_residual=False
-        )
-        .writeStream.foreachBatch(
-            _shredded_keyed_ingest(spark, recovered, out_dir, spec)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    return (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
+    return _run_capstone(
+        spark, sf_dir, "skrestart", "shredded", _history.GenerationalHistoryIndex,
+        _TIERED, "restart",
+    )[0]
 
 
 def _run_autogrow_capstone(spark, sf_dir):
@@ -2773,46 +2529,14 @@ def _run_autogrow_capstone(spark, sf_dir):
     registry entry's oracle cannot see. Shared by
     ``stream_dedup_index_update_autogrow`` (drops the idx) and
     tests/test_history.py (asserts rebuilds fired)."""
-    import os as _os
-    import shutil as _sh
-
-    from ..streaming.history import GenerationalHistoryIndex
-    from . import catalog as _catalog
-
-    split_dir = _os.path.join(_catalog._IO_DIR, "docs_idx_autogrow_split")
-    idx_table = "stream_autogrow_hash_idx"
-    idx_dir = _os.path.join(_catalog._IO_DIR, idx_table)
-    out_dir = _os.path.join(_catalog._IO_DIR, "stream_autogrow_verdicts")
-    ckpt = out_dir + "_ckpt_tmp"
-    for d in (split_dir, idx_dir, out_dir, ckpt):
-        _sh.rmtree(d, ignore_errors=True)
-    st = core.read_multibatch_documents_stream(spark, sf_dir, split_dir)
     # expected_keys=64 → the 4096-bit floor: what an operator sizes
     # when the feed's cardinality is unknowable up front. The policy,
     # not the sizing, keeps the prescreen effective.
-    idx = GenerationalHistoryIndex(
-        spark,
-        idx_table,
-        "h",
-        path=idx_dir,
-        expected_keys=64,
-        budget_rows=120,
-        growth=4,
-        overwrite=True,
-        auto_rebuild_fill=0.18,
+    return _run_capstone(
+        spark, sf_dir, "autogrow", "hash", _history.GenerationalHistoryIndex,
+        {**_TIERED, "expected_keys": 64, "auto_rebuild_fill": 0.18},
+        "update",
     )
-    q = (
-        st.writeStream.foreachBatch(_tiered_ingest(spark, idx, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _sh.rmtree(ckpt, ignore_errors=True)
-    verdicts = (
-        spark.read.parquet(out_dir).select("doc_id", "is_dup").orderBy("doc_id")
-    )
-    return verdicts, idx
 
 
 @query(
@@ -2841,6 +2565,8 @@ def _run_autogrow_capstone(spark, sf_dir):
         _history.GenerationalHistoryIndex,
         _tiered_ingest,
         _run_autogrow_capstone,
+        core.write_documents_split,
+        *_CAPSTONE_DEPS,
     ),
 )
 def stream_dedup_index_update_autogrow(

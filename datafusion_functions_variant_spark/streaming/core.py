@@ -33,7 +33,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 _SINK_COUNTER = [0]
@@ -163,6 +162,30 @@ def run_to_batch(stream_df: DataFrame, output_mode: str = "append") -> DataFrame
     except Exception:
         LAST_EXECUTED_PLAN[0] = ""  # plan capture is best-effort
     return spark.table(name)
+
+
+def run_foreach_batch(
+    stream_df: DataFrame, fn, checkpoint: str, keep_checkpoint: bool = False
+) -> None:
+    """Execute a streaming plan to completion (AvailableNow) through the
+    foreachBatch callback ``fn(batch_df, batch_id)``. A failing callback
+    re-raises here with the query stopped. The checkpoint is removed
+    once the query is done, unless ``keep_checkpoint`` — a restart
+    scenario resumes a second run on it."""
+    import shutil
+
+    q = (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+        if not keep_checkpoint:
+            shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def tumbling_counts(stream: DataFrame, window: str = "1 hour", delay: str = "1 minute") -> DataFrame:
@@ -510,6 +533,27 @@ def transform_with_state_profile(stream: DataFrame) -> DataFrame:
     )
 
 
+#: FileStreamSource orders a split's batch files by modification time;
+#: batch p's file is pinned to ``_SPLIT_MTIME_BASE + 10 * p``.
+_SPLIT_MTIME_BASE = 1_700_000_000
+
+
+def _pin_batch_mtime(path: str, p: int) -> None:
+    t = _SPLIT_MTIME_BASE + p * 10
+    os.utime(path, (t, t))
+
+
+def _split_file_stream(spark: SparkSession, schema: str, split_dir: str) -> DataFrame:
+    """Stream a split dir one batch file per trigger
+    (``maxFilesPerTrigger=1``) under the DDL ``schema``."""
+    return (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(split_dir)
+    )
+
+
 def read_multibatch_events_stream(
     spark: SparkSession, sf_dir: str, split_dir: str
 ) -> DataFrame:
@@ -538,30 +582,15 @@ def read_multibatch_events_stream(
         F.col("event_id") % 4 == 1,
         F.col("event_id") % 4 == 3,
     ]
-    paths = []
-    for parity, sel in enumerate(selectors):
-        p = os.path.join(split_dir, f"batch{parity}.parquet")
-        _write_single_file_split(full.where(sel), p)
-        paths.append(p)
-    base = 1_700_000_000
-    for i, p in enumerate(paths):
-        os.utime(p, (base + i * 10, base + i * 10))
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(split_dir)
+    for p, sel in enumerate(selectors):
+        path = os.path.join(split_dir, f"batch{p}.parquet")
+        _write_single_file_split(full.where(sel), path)
+        _pin_batch_mtime(path, p)
+    return _split_file_stream(
+        spark,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+        split_dir,
     )
 
 
@@ -608,44 +637,79 @@ def read_multibatch_dedup_stream(
         .where(F.col("_rn") == 1)
         .select("event_id", "ts", "h", "b")
     )
-    paths = []
     for p in range(3):
         path = os.path.join(split_dir, f"batch{p}.parquet")
         _write_single_file_split(
             cand.where(F.col("b") == p).select("event_id", "ts", "h"), path
         )
-        paths.append(path)
-    base = 1_700_000_000
-    for i, path in enumerate(paths):
-        os.utime(path, (base + i * 10, base + i * 10))
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("h", StringType()),
-        ]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(split_dir)
+        _pin_batch_mtime(path, p)
+    return _split_file_stream(
+        spark, "event_id long, ts timestamp, h string", split_dir
     )
 
 
-def read_multibatch_documents_stream(
-    spark: SparkSession, sf_dir: str, split_dir: str
+def _split_documents(
+    spark: SparkSession, sf_dir: str, split_dir: str, with_replicas: bool
 ) -> DataFrame:
-    """Documents as THREE deterministic micro-batches of
-    (doc_id, content-hash) rows — batch p holds doc_id % 3 == p, file
-    order pinned via mtimes (FileStreamSource orders by modification
-    time), ``maxFilesPerTrigger=1``. The narrow projection is computed
-    ONCE at split-write time with the same normalize→md5 convention
-    the dedup oracles replay, so batch membership and content keys are
-    engine-reproducible. Used by ``stream_dedup_index_update``."""
-    write_documents_split(spark, sf_dir, split_dir)
-    return documents_split_stream(spark, split_dir)
+    """(doc_id, text) of the documents table for a doc_id % 3 split
+    into ``split_dir`` (created).
+
+    ``with_replicas`` adds deterministic cross-batch duplicates: every
+    10th doc gets an exact-content replica at doc_id + 1,000,000,
+    which lands in a DIFFERENT batch ((id + 1e6) % 3 == (id + 1) % 3,
+    wrapping 2→0, so for doc_id % 3 == 2 the replica precedes the
+    original and is itself the non-dup under the min-batch rule both
+    stream and oracle apply). Without it the test corpora have zero
+    duplicate texts at the sf0.001/0.01 gates and an ingest-dedup
+    capstone would hash-green on an all-zero verdict column, proving
+    exactly-once replay but never an actual dedup hit. The enrichment
+    is plain SQL over the same table, so the oracles replay it
+    verbatim."""
+    from ..sources.tables import load_table
+
+    os.makedirs(split_dir, exist_ok=True)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    if with_replicas:
+        docs = docs.unionByName(
+            docs.where(F.col("doc_id") % 10 == 0).select(
+                (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
+            )
+        )
+    return docs
+
+
+def _envelope(docs: DataFrame, bulk_factor: int) -> DataFrame:
+    """(doc_id, payload, b): each doc as the raw JSON envelope
+    ``{"id": doc_id, "body": {"text": ...}}`` of a crawl feed, with its
+    batch ``b = doc_id % 3``. ``bulk_factor > 0`` adds a ``bulk`` field
+    of ``bulk_factor`` repetitions of the text — a FAT envelope whose
+    payload bytes ≫ the key path's bytes."""
+    return docs.select(
+        "doc_id",
+        F.to_json(
+            F.struct(
+                F.col("doc_id").alias("id"),
+                F.struct(F.col("text").alias("text")).alias("body"),
+                *(
+                    [F.repeat(F.col("text"), bulk_factor).alias("bulk")]
+                    if bulk_factor
+                    else []
+                ),
+            )
+        ).alias("payload"),
+        (F.col("doc_id") % 3).alias("b"),
+    )
+
+
+def _write_split_batches(
+    full: DataFrame, split_dir: str, batches: tuple[int, ...]
+) -> None:
+    """Write batch files ``batches`` of ``full`` (split on its ``b``
+    column, which is dropped) as single parquet files, mtime-pinned."""
+    for p in batches:
+        path = os.path.join(split_dir, f"batch{p}.parquet")
+        _write_single_file_split(full.where(F.col("b") == p).drop("b"), path)
+        _pin_batch_mtime(path, p)
 
 
 def write_documents_split(
@@ -657,56 +721,28 @@ def write_documents_split(
 ) -> None:
     """Write the (doc_id, content-hash) batch files ``batches`` of the
     doc_id % 3 split into ``split_dir`` (mtime-pinned to batch order).
-    Exposed separately from the reader so restart scenarios can stage
-    files in phases: write batches (0, 1), run a stream to completion,
-    then write (2,) and RESUME on the same checkpoint — the file
-    source's log already holds batches 0-1, so only batch 2 forms a
-    new micro-batch, exactly a production ingest picking up where the
-    crashed driver stopped."""
+    The narrow projection is computed ONCE at split-write time with the
+    same normalize→md5 convention the dedup oracles replay, so batch
+    membership and content keys are engine-reproducible. Restart
+    scenarios stage files in phases: write batches (0, 1), run a
+    stream to completion, then write (2,) and RESUME on the same
+    checkpoint — the file source's log already holds batches 0-1, so
+    only batch 2 forms a new micro-batch, exactly a production ingest
+    picking up where the crashed driver stopped. Replica enrichment:
+    see ``_split_documents``."""
     from ..operators.dedup import normalize_text
-    from ..sources.tables import load_table
 
-    os.makedirs(split_dir, exist_ok=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if with_replicas:
-        # deterministic cross-batch duplicates: every 10th doc gets an
-        # exact-content replica at doc_id + 1,000,000, which lands in
-        # the NEXT batch ((id + 1e6) % 3 == (id + 1) % 3) — without
-        # this the test corpora have zero duplicate texts at the
-        # sf0.001/0.01 gates and an ingest-dedup capstone would
-        # hash-green on an all-zero verdict column, proving
-        # exactly-once replay but never an actual dedup hit. The
-        # enrichment is plain SQL over the same table, so the oracle
-        # replays it verbatim.
-        docs = docs.unionByName(
-            docs.where(F.col("doc_id") % 10 == 0).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-            )
-        )
+    docs = _split_documents(spark, sf_dir, split_dir, with_replicas)
     full = docs.select(
         "doc_id",
         F.md5(normalize_text("text")).alias("h"),
         (F.col("doc_id") % 3).alias("b"),
     )
-    base = 1_700_000_000
-    for p in batches:
-        path = os.path.join(split_dir, f"batch{p}.parquet")
-        _write_single_file_split(
-            full.where(F.col("b") == p).select("doc_id", "h"), path
-        )
-        os.utime(path, (base + p * 10, base + p * 10))
+    _write_split_batches(full, split_dir, batches)
 
 
 def documents_split_stream(spark: SparkSession, split_dir: str) -> DataFrame:
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("h", StringType())]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(split_dir)
-    )
+    return _split_file_stream(spark, "doc_id long, h string", split_dir)
 
 
 def write_documents_json_split(
@@ -724,66 +760,21 @@ def write_documents_json_split(
     extraction (``parse_json`` → ``variant_get('$.body.text')``) —
     the shape of a real crawl feed, where documents arrive as
     semi-structured blobs and the key is buried in the payload.
-    Replica enrichment (every 10th doc duplicated at doc_id + 1e6,
-    which lands in batch ``(doc_id + 1e6) % 3 == (doc_id + 1) % 3`` —
-    a DIFFERENT batch, wrapping 2→0, so for doc_id % 3 == 2 the
-    replica precedes the original and is itself the non-dup under the
-    min-batch rule both stream and oracle apply) defaults ON so the
-    dedup verdicts are non-trivial; batch membership (doc_id % 3) and
-    mtime pinning match the hash split so oracles share the
-    strictly-earlier-batch spec.
+    Replica enrichment defaults ON so the dedup verdicts are
+    non-trivial; batch membership (doc_id % 3) and mtime pinning match
+    the hash split so oracles share the strictly-earlier-batch spec.
 
-    ``bulk_factor > 0`` adds a ``bulk`` field of ``bulk_factor``
-    repetitions of the text to every envelope — a FAT-envelope feed
-    where payload bytes ≫ the key path's bytes (the 100 TB crawl
+    ``bulk_factor > 0`` makes the envelope FAT (the 100 TB crawl
     shape: headers, markup, outlinks dwarfing the body). The dedup
     semantics are unchanged (the key path stays ``$.body.text``);
     only the bytes a parse-per-batch consumer must chew through
     grow. Used by the round-15 payload-skew A/B (SCALE.md)."""
-    from ..sources.tables import load_table
-
-    os.makedirs(split_dir, exist_ok=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if with_replicas:
-        docs = docs.unionByName(
-            docs.where(F.col("doc_id") % 10 == 0).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-            )
-        )
-    full = docs.select(
-        "doc_id",
-        F.to_json(
-            F.struct(
-                F.col("doc_id").alias("id"),
-                F.struct(F.col("text").alias("text")).alias("body"),
-                *(
-                    [F.repeat(F.col("text"), bulk_factor).alias("bulk")]
-                    if bulk_factor
-                    else []
-                ),
-            )
-        ).alias("payload"),
-        (F.col("doc_id") % 3).alias("b"),
-    )
-    base = 1_700_000_000
-    for p in batches:
-        path = os.path.join(split_dir, f"batch{p}.parquet")
-        _write_single_file_split(
-            full.where(F.col("b") == p).select("doc_id", "payload"), path
-        )
-        os.utime(path, (base + p * 10, base + p * 10))
+    docs = _split_documents(spark, sf_dir, split_dir, with_replicas)
+    _write_split_batches(_envelope(docs, bulk_factor), split_dir, batches)
 
 
 def documents_json_split_stream(spark: SparkSession, split_dir: str) -> DataFrame:
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("payload", StringType())]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(split_dir)
-    )
+    return _split_file_stream(spark, "doc_id long, payload string", split_dir)
 
 
 def write_documents_shredded_split(
@@ -813,33 +804,10 @@ def write_documents_shredded_split(
     import shutil
 
     from ..sources.shredded import SPEC_FILE, write_shredded
-    from ..sources.tables import load_table
 
-    os.makedirs(split_dir, exist_ok=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    if with_replicas:
-        docs = docs.unionByName(
-            docs.where(F.col("doc_id") % 10 == 0).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-            )
-        )
-    full = docs.select(
-        "doc_id",
-        F.to_json(
-            F.struct(
-                F.col("doc_id").alias("id"),
-                F.struct(F.col("text").alias("text")).alias("body"),
-                *(
-                    [F.repeat(F.col("text"), bulk_factor).alias("bulk")]
-                    if bulk_factor
-                    else []
-                ),
-            )
-        ).alias("payload"),
-        (F.col("doc_id") % 3).alias("b"),
-    )
+    docs = _split_documents(spark, sf_dir, split_dir, with_replicas)
+    full = _envelope(docs, bulk_factor)
     spec = {"body_text": ("$.body.text", "string")}
-    base = 1_700_000_000
     for p in batches:
         tmp = os.path.join(split_dir, f"_tmp_b{p}")
         write_shredded(
@@ -864,35 +832,26 @@ def write_documents_shredded_split(
                 os.path.join(split_dir, SPEC_FILE),
             )
         shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(path, (base + p * 10, base + p * 10))
+        _pin_batch_mtime(path, p)
     return spec
 
 
 def documents_shredded_split_stream(
-    spark: SparkSession, split_dir: str, with_residual: bool = True
+    spark: SparkSession, split_dir: str
 ) -> DataFrame:
-    """Stream the shredded landing one batch-file per trigger. The
-    schema is the shredded layout — the key path is already a typed
-    column; ``_shred_spec.json`` is invisible to the file source
+    """Stream the shredded landing one batch-file per trigger, declaring
+    only ``(doc_id, body_text)``: the key path is already a typed
+    column, and ``_shred_spec.json`` is invisible to the file source
     (underscore-prefixed files are ignored by Spark's listing).
 
-    ``with_residual=False`` drops the residual from the DECLARED
-    schema — the round-14 scale point: a FileStreamSource materializes
-    every declared column into each micro-batch (the foreachBatch
-    frame is a ``Scan ExistingRDD``, so pruning can't happen after
-    the fact), and the residual is payload-sized. A consumer that only
-    needs shredded columns declares them alone and the source's
-    parquet read skips the envelope bytes entirely — the streaming
-    counterpart of the batch-read path's column pruning."""
-    fields = [
-        StructField("doc_id", LongType()),
-        StructField("body_text", StringType()),
-    ]
-    if with_residual:
-        fields.append(StructField("_residual", StringType()))
-    return (
-        spark.readStream.schema(StructType(fields))
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(split_dir)
+    The residual is left out of the DECLARED schema — the round-14
+    scale point: a FileStreamSource materializes every declared column
+    into each micro-batch (the foreachBatch frame is a ``Scan
+    ExistingRDD``, so pruning can't happen after the fact), and the
+    residual is payload-sized. Declaring the shredded columns alone
+    lets the source's parquet read skip the envelope bytes entirely —
+    the streaming counterpart of the batch-read path's column
+    pruning."""
+    return _split_file_stream(
+        spark, "doc_id long, body_text string", split_dir
     )

@@ -79,14 +79,11 @@ def stream_variant(spark, sf_dir, io_dir, spec):
         expected_keys=load_table(spark, sf_dir, "documents").count(),
         budget_rows=120, growth=4, overwrite=True,
     )
-    q = (
-        core.documents_json_split_stream(spark, split_dir)
-        .writeStream.foreachBatch(_variant_keyed_ingest(spark, idx, out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    core.run_foreach_batch(
+        core.documents_json_split_stream(spark, split_dir),
+        _variant_keyed_ingest(spark, idx, out_dir),
+        ckpt,
     )
-    q.awaitTermination()
     return spark.read.parquet(out_dir).count()
 
 
@@ -106,18 +103,11 @@ def stream_shredded(spark, sf_dir, io_dir, spec):
         expected_keys=load_table(spark, sf_dir, "documents").count(),
         budget_rows=120, growth=4, overwrite=True,
     )
-    q = (
-        core.documents_shredded_split_stream(
-            spark, split_dir, with_residual=False
-        )
-        .writeStream.foreachBatch(
-            _shredded_keyed_ingest(spark, idx, out_dir, spec)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    core.run_foreach_batch(
+        core.documents_shredded_split_stream(spark, split_dir),
+        _shredded_keyed_ingest(spark, idx, out_dir, spec),
+        ckpt,
     )
-    q.awaitTermination()
     return spark.read.parquet(out_dir).count()
 
 

@@ -1,8 +1,9 @@
 """Capture ``.explain("formatted")`` for every headline query into
-plans/r15/<query>_<tag>.txt — the optimization round's plan evidence
+plans/<round>/<query>_<tag>.txt — an optimization round's plan evidence
 (the judge checks plan claims against these files).
 
-Usage: python scripts/capture_plans_r15.py <tag> [name ...]
+Usage: python scripts/capture_plans.py --round rNN <tag> [name ...]
+  rNN:  the round (output dir plans/rNN, Spark app plans_rNN_<tag>)
   tag:  'before' | 'after' (file suffix)
   name: optional subset of query names (default: all HEADLINE +
         HEADLINE_ISOLATED from bench.py)
@@ -16,6 +17,7 @@ only show the memory-sink read.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -25,8 +27,13 @@ from bench import HEADLINE, HEADLINE_ISOLATED  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    subset = sys.argv[2:] or None
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--round", required=True, help="round tag, e.g. r17")
+    ap.add_argument("tag", nargs="?", default="before")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    tag = args.tag
+    subset = args.names or None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -35,7 +42,7 @@ def main() -> None:
     from datafusion_functions_variant_spark.streaming import core as score
 
     spark = get_session(
-        app_name=f"plans_r15_{tag}",
+        app_name=f"plans_{args.round}_{tag}",
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 16),
     )
@@ -45,7 +52,7 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r15",
+        args.round,
     )
     os.makedirs(out_dir, exist_ok=True)
 

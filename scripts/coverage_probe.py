@@ -17,9 +17,9 @@ DataFrame composition plus foreachBatch callbacks, both of which run
 on the driver, so their numbers are exact for the traced test set.
 
 Usage:
-    python coverage_probe.py MODULE[,MODULE...] -- PYTEST_ARGS...
+    python scripts/coverage_probe.py MODULE[,MODULE...] -- PYTEST_ARGS...
 e.g.
-    python coverage_probe.py \
+    python scripts/coverage_probe.py \
         datafusion_functions_variant_spark/operators/dedup.py \
         -- tests/test_operator_properties.py -q
 
@@ -34,7 +34,7 @@ import os
 import sys
 import threading
 
-REPO = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
@@ -61,7 +61,7 @@ def main() -> int:
         targets, pytest_args = argv, ["tests/", "-q"]
     targets = [t for arg in targets for t in arg.split(",") if t]
     if not targets:
-        print("usage: coverage_probe.py MODULE... -- PYTEST_ARGS...")
+        print("usage: scripts/coverage_probe.py MODULE... -- PYTEST_ARGS...")
         return 2
 
     paths = {os.path.abspath(t) for t in targets}

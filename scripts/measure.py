@@ -1,4 +1,4 @@
-"""Isolated per-query measurement for the optimization round.
+"""Isolated per-query measurement for an optimization round.
 
 Times a subset of registry queries with the SAME warmup+median
 protocol as bench.py (one untimed warmup, N timed samples, median +
@@ -11,7 +11,7 @@ consume modes:
   every row, discards; no JVM-side checksum arithmetic).
 
 Usage:
-  python scripts/measure_r15.py [--runs N] [--dir D] [--noop] name...
+  python scripts/measure.py [--runs N] [--dir D] [--noop] name...
 
 Prints one line per query: name, median, min, loadavg-at-finish.
 """
@@ -43,7 +43,7 @@ def main() -> None:
     from datafusion_functions_variant_spark.queries import load_all_queries
 
     spark = get_session(
-        app_name="measure_r15",
+        app_name="measure",
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 16),
     )

@@ -1292,9 +1292,7 @@ def test_shredded_stream_microbatch_reads_only_shredded_columns(
         plans.append(probe._jdf.queryExecution().executedPlan().toString())
 
     q = (
-        score.documents_shredded_split_stream(
-            spark, split_dir, with_residual=False
-        )
+        score.documents_shredded_split_stream(spark, split_dir)
         .writeStream.foreachBatch(capture)
         .option("checkpointLocation", str(tmp_path / "ckpt_mb"))
         .trigger(availableNow=True)

@@ -1445,6 +1445,66 @@ def test_minhash_signatures_text_canonical_equals_plain(spark):
         assert len({r[0] for r in rows_c}) == 30  # one row per doc id
 
 
+def test_text_content_key_fields_and_canonical_plan(spark, monkeypatch):
+    """The content key the canonical signing collapses on is
+    ``struct(xxhash64(text), xxhash64(reverse(text)), length(text))``
+    (NULL text → NULL key), and widening it from the one-hash form
+    keeps the signing plan intrinsic-only with the same Exchange
+    count."""
+    import re
+
+    from datafusion_functions_variant_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [(0, "abc"), (1, None), (2, ""), (3, "cba")], "doc_id long, text string"
+    )
+    keyed = df.select("doc_id", dedup.text_content_key("text").alias("k"))
+    assert (
+        keyed.schema["k"].dataType.simpleString()
+        == "struct<h:bigint,r:bigint,l:int>"
+    )
+    want = df.select(
+        "doc_id",
+        F.xxhash64("text"),
+        F.xxhash64(F.reverse("text")),
+        F.length("text"),
+    ).collect()
+    got = {r["doc_id"]: r["k"] for r in keyed.collect()}
+    assert got[1] is None
+    for doc_id, h, r, n in want:
+        if doc_id != 1:
+            assert tuple(got[doc_id]) == (h, r, n)
+    # a text and its reverse share the length but not the key
+    assert got[0] != got[3]
+
+    docs = spark.createDataFrame(
+        [(i, f"text number {i % 4} of the corpus") for i in range(20)],
+        ["doc_id", "text"],
+    )
+
+    def plan() -> str:
+        out = dedup.minhash_signatures_text_canonical(
+            docs, "text", "doc_id", num_hashes=4, hash_fn="xxhash64"
+        )
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    wide = plan()
+    for udf in ("PythonUDF", "BatchEvalPython", "ArrowEvalPython", "md5("):
+        assert udf not in wide
+    monkeypatch.setattr(
+        dedup,
+        "text_content_key",
+        lambda c: F.when(
+            F.col(c).isNotNull(),
+            F.struct(F.xxhash64(c).alias("h"), F.length(c).alias("l")),
+        ),
+    )
+    narrow = plan()
+    assert len(re.findall(r"Exchange", wide)) == len(
+        re.findall(r"Exchange", narrow)
+    ) > 0
+
+
 def test_history_degenerate_attach_and_noop_rebuild(spark):
     """attach() with no bloom headroom must come back bitset-less
     (member() passes everything, rebuild_bitset is a no-op) while the

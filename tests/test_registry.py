@@ -7,6 +7,8 @@ of the window with only outdated verification evidence behind it.
 
 from __future__ import annotations
 
+import pytest
+
 from datafusion_functions_variant_spark import queries as Q
 
 
@@ -142,3 +144,39 @@ def test_tier2_order_rotates_with_round(monkeypatch):
             f"window overlap {overlap} > tier0+sample {allowed} (+{slack} "
             "slack): tier-2 rotation is not rotating"
         )
+
+
+#: The ingest-dedup capstone cells: each builder is one call to the
+#: shared driver, so its spec hash must cover the driver's source.
+CAPSTONE_CELLS = (
+    "stream_dedup_index_update",
+    "stream_dedup_index_restart",
+    "stream_dedup_index_update_tiered",
+    "stream_dedup_index_restart_tiered",
+    "stream_dedup_index_variant_keyed",
+    "stream_dedup_index_restart_variant_keyed",
+    "stream_dedup_index_shredded_keyed",
+    "stream_dedup_index_restart_shredded_keyed",
+    "stream_dedup_index_update_autogrow",
+)
+
+
+@pytest.mark.parametrize("name", CAPSTONE_CELLS)
+def test_capstone_spec_hash_covers_driver(name):
+    """An edit to the capstone driver, the foreachBatch runner or the
+    split helpers the feed writers share (replica rule, JSON envelope,
+    batch-file split, mtime pinning) must move every cell's spec hash
+    (re-fronting it for verification)."""
+    from datafusion_functions_variant_spark.queries import streaming_queries as sq
+    from datafusion_functions_variant_spark.streaming import core
+
+    deps = Q.REGISTRY[name].hash_deps
+    for dep in (
+        sq._run_capstone,
+        core.run_foreach_batch,
+        core._split_documents,
+        core._envelope,
+        core._write_split_batches,
+        core._pin_batch_mtime,
+    ):
+        assert dep in deps, dep.__name__

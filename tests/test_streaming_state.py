@@ -1025,3 +1025,23 @@ def test_scoped_shuffle_width_restores_session_value(spark):
     except RuntimeError:
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_run_foreach_batch_failing_callback_raises_and_stops(spark, tmp_path):
+    """A foreachBatch callback that raises must surface from
+    ``core.run_foreach_batch`` as an error, leave no active query
+    behind, and still clean up the checkpoint."""
+    from datafusion_functions_variant_spark.streaming import core
+
+    in_dir = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    spark.range(10).coalesce(1).write.parquet(in_dir)
+    stream = spark.readStream.schema("id long").parquet(in_dir)
+
+    def boom(batch_df, batch_id):
+        raise ValueError("callback failed on purpose")
+
+    with pytest.raises(Exception, match="callback failed on purpose"):
+        core.run_foreach_batch(stream, boom, ckpt)
+    assert spark.streams.active == []
+    assert not __import__("os").path.exists(ckpt)

@@ -450,9 +450,10 @@ def transform_with_state_profile(stream: DataFrame) -> DataFrame:
     Requires the RocksDB state store provider (the only provider
     transformWithState supports) — callers set
     ``spark.sql.streaming.stateStore.providerClass`` — and the Python
-    ``protobuf`` package (the state-server wire protocol), which this
-    container lacks; the operator is therefore exercised by an
-    availability-gated test rather than a registry query. At scale:
+    ``protobuf`` package (the state-server wire protocol); where the
+    real wheel is absent the vendored miniproto runtime supplies it
+    (``vendor.ensure_protobuf_for_session``). The registry query
+    ``stream_transform_with_state`` runs this operator. At scale:
     state is partitioned by the grouping key across executors and
     checkpointed incrementally by RocksDB — this exact code runs
     unbounded with a TTL on the state handles."""

@@ -611,22 +611,20 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND the executor python workers; ``ensure_protobuf_for_session``
     injects the vendor path into ``sc.environment`` so workers resolve
     it even when the JVM predates the import (no-op when the real
-    wheel exists). Requires the RocksDB state store provider — set for
-    the duration of the (eager, AvailableNow) run and restored.
+    wheel exists), and swaps in the wrapper ``pythonExec`` that this
+    builder restores when the run ends. Requires the RocksDB state
+    store provider — set for the duration of the (eager, AvailableNow)
+    run and restored.
 
     Scale: state is hash-partitioned by the grouping key across
     executors and incrementally checkpointed by RocksDB; this exact
     processor runs unbounded with handle TTLs."""
-    from ..vendor import ensure_protobuf_for_session, preflight_python_exec
+    from ..vendor import (
+        ensure_protobuf_for_session,
+        preflight_python_exec,
+        restore_python_exec,
+    )
 
-    ensure_protobuf_for_session(spark)
-    # pre-flight the ACTIVE pythonExec (the vendor wrapper here)
-    # against the hardcoded 10s connect-back window BEFORE .start():
-    # a broken wrapper raises a named error now instead of an opaque
-    # 'Python worker failed to connect back' mid-query, and a slow
-    # cold-start is measured + warned (VERDICT r11 #2). Cached per
-    # session, so reruns in one bench/test session pay it once.
-    preflight_python_exec(spark)
     rocksdb = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
@@ -636,7 +634,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = spark.conf.get(key)
     except Exception:
         prev = None
-    spark.conf.set(key, rocksdb)
     # Scale-adaptive STATE width (round 16, VERDICT r15 #1): the
     # stateful exchange pays a fixed per-partition toll per
     # micro-batch (RocksDB store open/commit + one Python state-runner
@@ -652,13 +649,30 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = core.stateful_shuffle_width(
         spark, _os.path.join(sf_dir, "events.parquet")
     )
+    # Everything from the pythonExec swap on sits in one try: the swap
+    # is undone when the query is done, raised or not. Spark keeps one
+    # Python daemon and idle-worker pool per pythonExec/env key, so a
+    # swap left in place would give every UDF built later a new key, a
+    # new daemon and cold-forked workers. The TWS function captures the
+    # wrapper when its plan is built, and the run is eager, so the
+    # restore does not reach the query.
     try:
+        ensure_protobuf_for_session(spark)
+        # pre-flight the ACTIVE pythonExec (the vendor wrapper here)
+        # against the hardcoded 10s connect-back window BEFORE .start():
+        # a broken wrapper raises a named error now instead of an opaque
+        # 'Python worker failed to connect back' mid-query, and a slow
+        # cold-start is measured + warned (VERDICT r11 #2). Cached per
+        # session, so reruns in one bench/test session pay it once.
+        preflight_python_exec(spark)
+        spark.conf.set(key, rocksdb)
         with core.scoped_shuffle_width(spark, width):
             st = core.read_events_stream(spark, sf_dir)
             out = core.run_to_batch(
                 core.transform_with_state_profile(st), "update"
             )
     finally:
+        restore_python_exec(spark)
         if prev is None:
             spark.conf.unset(key)
         else:

@@ -132,8 +132,10 @@ def test_explicit_tolerant_parse(spark):
 
 def test_explicit_merge_patch(spark):
     """variant_merge_patch agrees with codec.merge_patch (pinned to an
-    RFC 7386 reference) per row; a SQL NULL patch passes the target
-    through, a SQL NULL target stays null."""
+    RFC 7386 reference) per row, and with DuckDB's json_merge_patch on
+    the scalar and JSON-null patch texts; a SQL NULL patch passes the
+    target through, a SQL NULL target stays null."""
+    import duckdb
     import pytest
 
     from datafusion_functions_variant_spark import codec
@@ -172,6 +174,15 @@ def test_explicit_merge_patch(spark):
             want.append(codec.merge_patch(json.loads(t), json.loads(p)))
     assert got == want
     assert got[:4] == [None, False, 0, {"b": {"c": 2}}]
+    duck = [
+        json.loads(
+            duckdb.sql(
+                "SELECT json_merge_patch(?::JSON, ?::JSON)", params=[t, p]
+            ).fetchone()[0]
+        )
+        for t, p in rows[:4]
+    ]
+    assert got[:4] == duck
 
     bad = spark.createDataFrame([(target, "{broken")], "j string, patch string")
     with pytest.raises(Exception, match="malformed JSON"):

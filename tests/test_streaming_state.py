@@ -49,6 +49,8 @@ real wheel wins (the vendor gate never shadows an installed package)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from .conftest import SF_DIR
@@ -877,6 +879,98 @@ def test_python_exec_wrapper_is_portable_and_reversible(spark):
         assert restore_python_exec(spark) is (provider == "miniproto")
     assert sc.pythonExec == orig
     assert restore_python_exec(spark) is False  # already restored
+    # a later ensure/restore cycle reuses the wrapper without rewriting
+    # it (a worker starting meanwhile must never exec a half-written
+    # file); an old mtime shows any rewrite
+    os.utime(wrapper, ns=(10**9, 10**9))
+    ensure_protobuf_for_session(spark)
+    try:
+        assert sc.pythonExec == wrapper
+        assert os.stat(wrapper).st_mtime_ns == 10**9
+    finally:
+        restore_python_exec(spark)
+    # a wrapper whose text differs is replaced whole
+    with open(wrapper, "w") as fh:
+        fh.write("#!/bin/sh\nexit 1\n")
+    ensure_protobuf_for_session(spark)
+    try:
+        assert open(wrapper).read() == body
+        assert os.access(wrapper, os.X_OK)
+    finally:
+        restore_python_exec(spark)
+    assert sc.pythonExec == orig
+
+
+@pytest.mark.parametrize("fail", [None, "run", "preflight"])
+def test_stream_transform_with_state_restores_python_exec(spark, monkeypatch, fail):
+    """The pythonExec wrapper swap lasts only as long as the
+    transformWithState query: after the builder returns, or raises in
+    the preflight or in the run, the session's pythonExec is the one
+    it had before. A swap left in place gives every UDF built later a
+    new daemon key and cold-forked workers. Passes trivially when the
+    real protobuf wheel is present (no swap happens)."""
+    from datafusion_functions_variant_spark import vendor
+    from datafusion_functions_variant_spark.queries.streaming_queries import (
+        stream_transform_with_state,
+    )
+    from datafusion_functions_variant_spark.streaming import core
+
+    vendor.restore_python_exec(spark)  # an earlier test may have left a swap
+    sc = spark.sparkContext
+    before = sc.pythonExec
+
+    def boom(*_a, **_kw):
+        raise RuntimeError("injected failure")
+
+    if fail == "run":
+        monkeypatch.setattr(core, "run_to_batch", boom)
+    elif fail == "preflight":
+        monkeypatch.setattr(vendor, "preflight_python_exec", boom)
+    if fail is None:
+        assert stream_transform_with_state(spark, SF_DIR).count() > 0
+    else:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            stream_transform_with_state(spark, SF_DIR)
+    assert sc.pythonExec == before
+
+
+def test_udfs_after_stream_reuse_the_python_daemon(spark):
+    """Spark keeps one Python daemon per pythonExec/env key. A pandas
+    UDF run before the transformWithState query, and a fresh pandas
+    UDF and a mapInArrow kernel run after it, are all served by
+    workers of the same daemon(s): each reports its parent pid."""
+    import pyarrow as pa
+    from pyspark.sql.functions import pandas_udf
+
+    from datafusion_functions_variant_spark import vendor
+    from datafusion_functions_variant_spark.queries.streaming_queries import (
+        stream_transform_with_state,
+    )
+
+    def rows():
+        return spark.range(0, 64, numPartitions=4)
+
+    def udf_daemons() -> set:
+        def ppid(s):
+            import pandas as pd
+
+            return pd.Series([os.getppid()] * len(s))
+
+        udf = pandas_udf(ppid, "long")
+        return {r[0] for r in rows().select(udf("id")).distinct().collect()}
+
+    def kernel_daemons() -> set:
+        def ppid(batches):
+            for b in batches:
+                yield pa.RecordBatch.from_pydict({"ppid": [os.getppid()] * b.num_rows})
+
+        return {r[0] for r in rows().mapInArrow(ppid, "ppid long").distinct().collect()}
+
+    vendor.restore_python_exec(spark)  # an earlier test may have left a swap
+    before = udf_daemons()
+    stream_transform_with_state(spark, SF_DIR).collect()
+    assert udf_daemons() == before
+    assert kernel_daemons() == before
 
 
 def test_preflight_python_exec_measures_and_caches(spark):

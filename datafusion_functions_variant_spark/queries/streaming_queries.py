@@ -613,8 +613,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     it even when the JVM predates the import (no-op when the real
     wheel exists), and swaps in the wrapper ``pythonExec`` that this
     builder restores when the run ends. Requires the RocksDB state
-    store provider — set for the duration of the (eager, AvailableNow)
-    run and restored.
+    store provider — set, with the state width and the checkpoint
+    manager, for the query's ``.start()`` only.
 
     Scale: state is hash-partitioned by the grouping key across
     executors and incrementally checkpointed by RocksDB; this exact
@@ -629,26 +629,21 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    # Scale-adaptive STATE width (round 16, VERDICT r15 #1): the
-    # stateful exchange pays a fixed per-partition toll per
-    # micro-batch (RocksDB store open/commit + one Python state-runner
-    # per partition) and AQE cannot coalesce it — the r15 driver's own
-    # scaling block ran this key 2× faster at half the width. Width
-    # derives from the input's parquet-footer row count (floor 8,
-    # capped at the session setting,
-    # spark.graft.streaming.stateWidth overrides), so a
-    # 100 TB feed keeps the full session width while a small state
-    # stops paying 32 store inits for 8 partitions' worth of keys.
+    # The state width (one partition per 25k input rows, see
+    # core.stateful_shuffle_width), the RocksDB provider and the local
+    # checkpoint manager are set for this query's .start() only
+    # (core.scoped_confs): the running query keeps its clone of them,
+    # the session never shows them to another query.
     import os as _os
 
     width = core.stateful_shuffle_width(
         spark, _os.path.join(sf_dir, "events.parquet")
     )
+    confs = {
+        "spark.sql.shuffle.partitions": str(width),
+        "spark.sql.streaming.stateStore.providerClass": rocksdb,
+        **core.local_checkpoint_confs(spark),
+    }
     # Everything from the pythonExec swap on sits in one try: the swap
     # is undone when the query is done, raised or not. Spark keeps one
     # Python daemon and idle-worker pool per pythonExec/env key, so a
@@ -665,18 +660,12 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cold-start is measured + warned (VERDICT r11 #2). Cached per
         # session, so reruns in one bench/test session pay it once.
         preflight_python_exec(spark)
-        spark.conf.set(key, rocksdb)
-        with core.scoped_shuffle_width(spark, width):
-            st = core.read_events_stream(spark, sf_dir)
-            out = core.run_to_batch(
-                core.transform_with_state_profile(st), "update"
-            )
+        st = core.read_events_stream(spark, sf_dir)
+        out = core.run_to_batch(
+            core.transform_with_state_profile(st), "update", confs=confs
+        )
     finally:
         restore_python_exec(spark)
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     return (
         out.groupBy("user_id", "event_type")
         .agg(

@@ -22,6 +22,7 @@ nothing here is test-only except run_to_batch's memory sink.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 
@@ -142,20 +143,25 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table_stream(spark, sf_dir, "events")
 
 
-def run_to_batch(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
+def run_to_batch(
+    stream_df: DataFrame, output_mode: str = "append", confs: dict | None = None
+) -> DataFrame:
     """Execute a streaming plan to completion (AvailableNow) into a
-    memory sink; return the materialized rows as a batch DataFrame."""
+    memory sink; return the materialized rows as a batch DataFrame.
+    ``confs`` are session confs this query alone runs with: they are
+    set for its ``.start()`` only (``scoped_confs``)."""
     spark = stream_df.sparkSession
     with _SINK_LOCK:
         _SINK_COUNTER[0] += 1
         name = f"stream_sink_{_SINK_COUNTER[0]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with scoped_confs(spark, confs or {}):
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
     q.awaitTermination()
     try:
         LAST_EXECUTED_PLAN[0] = q._jsq.explainInternal(True)
@@ -290,23 +296,19 @@ def stateful_running_max(stream: DataFrame, delay: str = "1 minute") -> DataFram
     )
 
 
-#: conf knobs for ``stateful_shuffle_width`` — explicit override wins,
-#: else width = clamp(input_rows / target_rows, floor, session
-#: shuffle partitions). A stateful exchange pays a PER-PARTITION fixed
-#: toll every micro-batch (state store open/commit + one Python
-#: state-runner handshake), so width beyond what the keyed work needs
-#: is pure overhead — but width BELOW the keyed work's parallelism
-#: need serializes the per-key processing. Both regimes were measured
-#: on this exact key (round 16 interleaved A/B, one checksum across
-#: variants): at 100k input rows width 8 beats 32 (min 3.92 s vs
-#: 5.43 — and the r15 DRIVER scaling block showed the same key 2×
-#: faster at half the width), while at 1M rows width 32 beats 8
-#: (7.06 s vs 16.42 — 15k users × 8 state round-trips each need every
-#: core). 25k rows per partition crosses over exactly between those
-#: two measured points.
+#: ``stateful_shuffle_width``'s one override; otherwise the width is
+#: one partition per ``_STATE_WIDTH_TARGET_ROWS`` input rows, capped at
+#: the session's shuffle partitions. A stateful exchange pays a
+#: PER-PARTITION fixed toll every micro-batch (state store open/commit
+#: + one Python state-runner handshake), so width beyond what the keyed
+#: work needs is pure overhead — but width BELOW the keyed work's
+#: parallelism need serializes the per-key processing. Measured on the
+#: transformWithState key (process-tree CPU, 4 vCPUs): at 1k rows width
+#: 1 takes 27% less than width 8 (3.98 vs 5.48 s); at 100k rows width 4
+#: is no worse than 8 (37.9 vs 39.4 s); at 1M rows width 32 beat 8
+#: (7.06 vs 16.42 s wall — 15k users × 8 state round-trips each need
+#: every core).
 STATE_WIDTH_CONF = "spark.graft.streaming.stateWidth"
-STATE_WIDTH_TARGET_CONF = "spark.graft.streaming.stateWidthTargetRows"
-_STATE_WIDTH_FLOOR = 8
 _STATE_WIDTH_TARGET_ROWS = 25_000
 
 
@@ -340,17 +342,15 @@ def stateful_shuffle_width(spark: SparkSession, input_path: str) -> int:
     the row work, and AQE cannot coalesce it — the width is frozen
     into the checkpoint at first batch. The session default
     (~core count, right for scan/join exchanges) over-pays whenever
-    the keyed work is small (r15 driver scaling block: this bench key
-    2× faster at half the width), yet narrowing a LARGE keyed input
-    serializes the per-key state round-trips (round-16 A/B: 8 wide at
-    1M rows ran 2.3× slower than 32). Width therefore derives from the
-    input ROW COUNT, read from parquet footers before the stream
-    starts: one partition per ``stateWidthTargetRows`` (default 25k),
-    floored at 8 and capped at the session's shuffle-partition setting
-    — a 100 TB feed saturates the cap, i.e. behaves exactly as before;
-    the derivation only narrows SMALL states.
-    ``spark.graft.streaming.stateWidth`` overrides outright;
-    deployments that know their key cardinality should set it."""
+    the keyed work is small, yet narrowing a LARGE keyed input
+    serializes the per-key state round-trips. Width therefore derives
+    from the input ROW COUNT, read from parquet footers before the
+    stream starts: ceil(rows / 25k), at least 1 and capped at the
+    session's shuffle-partition setting — a 100 TB feed saturates the
+    cap, i.e. behaves exactly as the session width; the derivation only
+    narrows SMALL states. ``spark.graft.streaming.stateWidth``
+    overrides outright; deployments that know their key cardinality
+    should set it."""
     explicit = spark.conf.get(STATE_WIDTH_CONF, None)
     if explicit:
         return max(1, int(explicit))
@@ -358,40 +358,60 @@ def stateful_shuffle_width(spark: SparkSession, input_path: str) -> int:
     rows = _input_rows(input_path)
     if rows is None:
         return session_width
-    target = int(
-        spark.conf.get(STATE_WIDTH_TARGET_CONF, None)
-        or _STATE_WIDTH_TARGET_ROWS
-    )
-    derived = (rows + target - 1) // target
-    return max(min(max(int(derived), _STATE_WIDTH_FLOOR), session_width), 1)
+    derived = -(-rows // _STATE_WIDTH_TARGET_ROWS)
+    return max(min(derived, session_width), 1)
 
 
-class scoped_shuffle_width:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` for the
-    duration of one (eager) streaming run, restoring the session value
-    after — the stateful exchange freezes the width at first batch, so
-    the pin only needs to cover ``run_to_batch``."""
+#: Hadoop FileSystem-API checkpoint manager (the Spark 4.1 package).
+#: Spark's default, the FileContext manager, is there for HDFS's atomic
+#: rename; on a local disk its permission and link calls shell out to
+#: ``chmod``/``readlink``/``rm`` dozens of times per query.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 
-    def __init__(self, spark: SparkSession, width: int):
-        self._spark = spark
-        self._width = int(width)
-        self._prev: str | None = None
 
-    def __enter__(self) -> "scoped_shuffle_width":
-        try:
-            self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        except Exception:
-            self._prev = None
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._width))
-        return self
+def local_checkpoint_confs(spark: SparkSession) -> dict[str, str]:
+    """The checkpoint-manager conf for one stream query: the FileSystem
+    manager when the checkpoint root — ``spark.sql.streaming.
+    checkpointLocation``, else the JVM's temp dir, where Spark puts a
+    memory sink's checkpoint — resolves to a ``file:`` path; nothing
+    otherwise (HDFS keeps the FileContext default and its atomic
+    rename)."""
+    jvm = spark.sparkContext._jvm
+    root = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    if not root:
+        root = jvm.java.lang.System.getProperty("java.io.tmpdir")
+    scheme = jvm.org.apache.hadoop.fs.Path(root).toUri().getScheme()
+    if scheme is None:  # a bare path lives on the default file system
+        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(hadoop_conf).getScheme()
+    if scheme == "file":
+        return {_CHECKPOINT_MANAGER_CONF: _FS_CHECKPOINT_MANAGER}
+    return {}
 
-    def __exit__(self, *exc) -> None:
-        if self._prev is None:
-            self._spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self._spark.conf.set(
-                "spark.sql.shuffle.partitions", self._prev
-            )
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set the session confs ``confs`` for the body and put back each
+    one's prior value (unset when it had none) on exit, raised or not.
+    Scope it to a stream query's ``.start()``: ``StreamExecution``
+    clones the session before ``start()`` returns, so the running query
+    keeps these values while every query planned meanwhile, or later,
+    sees the session's own."""
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def _fold_profile_batch(pdf) -> tuple[int, int, dict]:

@@ -844,14 +844,46 @@ def test_transform_with_state_mapstate_full_api_and_delete(spark):
     assert got == want
 
 
-def test_python_exec_wrapper_is_portable_and_reversible(spark):
+def _exported_pythonpath(wrapper_text: str, argv: list, tmp_path, pythonpath: str) -> str:
+    """The PYTHONPATH the wrapper exports for ``argv``, captured by
+    running a copy whose last line prints it instead of exec-ing the
+    interpreter (the real pre-init module would wait to connect back)."""
+    import subprocess
+
+    lines = wrapper_text.splitlines()
+    assert lines[-1].startswith("exec ")
+    probe = tmp_path / "capture.sh"
+    probe.write_text("\n".join(lines[:-1] + ['printf "%s" "$PYTHONPATH"']) + "\n")
+    env = dict(os.environ, PYTHONPATH=pythonpath)
+    return subprocess.run(
+        ["sh", str(probe), *argv], env=env, capture_output=True, text=True, check=True
+    ).stdout
+
+
+def _pyspark_file(pythonpath: str) -> str:
+    import subprocess
+    import sys
+
+    env = dict(os.environ, PYTHONPATH=pythonpath)
+    return subprocess.run(
+        [sys.executable, "-c", "import pyspark; print(pyspark.__file__)"],
+        env=env, capture_output=True, text=True, check=True, cwd="/",
+    ).stdout.strip()
+
+
+def test_python_exec_wrapper_is_portable_and_reversible(spark, monkeypatch, tmp_path):
     """The transformWithState pythonExec swap (r10 ADVICE): the
     wrapper must keep the session's ORIGINAL exec name verbatim (a
     relative name stays PATH-resolved on each worker host — baking in
     the driver's sys.executable breaks heterogeneous deployments),
     live in a per-session temp dir (no cross-session file races), and
-    be reversible via restore_python_exec."""
+    be reversible via restore_python_exec. For the pre-init module
+    only, and only when the installed pyspark has the zipped one's
+    version, it puts the bytecode-cached installed pyspark first."""
     pytest.importorskip("google.protobuf")
+    from pyspark.find_spark_home import _find_spark_home
+
+    from datafusion_functions_variant_spark import vendor
     from datafusion_functions_variant_spark.vendor import (
         ensure_protobuf_for_session,
         restore_python_exec,
@@ -896,6 +928,58 @@ def test_python_exec_wrapper_is_portable_and_reversible(spark):
     try:
         assert open(wrapper).read() == body
         assert os.access(wrapper, os.X_OK)
+    finally:
+        restore_python_exec(spark)
+    assert sc.pythonExec == orig
+
+    # the pre-init branch: the JVM puts the zipped pyspark first on a
+    # Python worker's path; the wrapper puts the installed one ahead of
+    # it for the transformWithState pre-init module only
+    lib = os.path.join(_find_spark_home(), "python", "lib")
+    zipped = os.path.join(lib, "pyspark.zip")
+    if vendor._bytecode_pyspark() is None or not os.path.exists(zipped):
+        pytest.skip("no installed pyspark matching the zipped one")
+    jvm_path = os.pathsep.join(
+        [zipped] + [os.path.join(lib, f) for f in os.listdir(lib) if f.startswith("py4j")]
+    )
+    preinit = ["-m", vendor._PREINIT_MODULE]
+    assert "pyspark.zip" not in _pyspark_file(
+        _exported_pythonpath(body, preinit, tmp_path, jvm_path)
+    )
+    # any other module keeps the zip first
+    assert "pyspark.zip" in _pyspark_file(
+        _exported_pythonpath(body, ["-m", "pyspark.daemon"], tmp_path, jvm_path)
+    )
+    # a version mismatch, or no zip, leaves the wrapper as it was
+    # without the branch
+    plain = (
+        "#!/bin/sh\n"
+        "# generated by vendor.ensure_protobuf_for_session:\n"
+        "# prepend the miniproto runtime for spawned python\n"
+        "# workers whose runner drops envVars' PYTHONPATH\n"
+        f'PYTHONPATH="{vendor.MINIPROTO_DIR}${{PYTHONPATH:+:$PYTHONPATH}}"\n'
+        "export PYTHONPATH\n"
+        f'exec "{orig}" "$@"\n'
+    )
+    assert body != plain
+    try:
+        for patch in (
+            lambda: monkeypatch.setattr(vendor, "_zipped_pyspark_version", lambda: "0.0.1"),
+            lambda: monkeypatch.setenv("SPARK_HOME", str(tmp_path)),
+        ):
+            patch()
+            vendor._bytecode_pyspark.cache_clear()
+            ensure_protobuf_for_session(spark)
+            try:
+                assert open(wrapper).read() == plain
+            finally:
+                restore_python_exec(spark)
+            monkeypatch.undo()
+    finally:
+        vendor._bytecode_pyspark.cache_clear()
+    ensure_protobuf_for_session(spark)
+    try:
+        assert open(wrapper).read() == body
     finally:
         restore_python_exec(spark)
     assert sc.pythonExec == orig
@@ -1063,37 +1147,42 @@ def test_preflight_python_exec_raises_on_failing_import(spark, tmp_path):
 
 
 def test_stateful_shuffle_width_derivation(spark, monkeypatch, tmp_path):
-    """Round 16 (VERDICT r15 #1): the stateful exchange's width must be
-    scale-adaptive — floor 8 for tiny state, growing with input bytes,
-    capped at the session shuffle setting, with an explicit conf
-    override winning outright."""
+    """The stateful exchange's width is one partition per 25k input
+    rows — no floor, so a tiny state runs on one partition — capped at
+    the session shuffle setting, with an explicit conf override
+    winning outright."""
     from datafusion_functions_variant_spark.streaming import core
 
     session_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # tiny input -> the floor (keeps multi-core fold parallelism)
+    # tiny input -> one partition
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     small = tmp_path / "t.parquet"
     pq.write_table(pa.table({"x": list(range(5))}), str(small))
     assert core._input_rows(str(small)) == 5
-    assert core.stateful_shuffle_width(spark, str(small)) == min(
-        8, session_width
-    )
+    assert core.stateful_shuffle_width(spark, str(small)) == 1
 
     # huge input -> rows / target, capped at the session width
     monkeypatch.setattr(core, "_input_rows", lambda p: 10**12)
     assert core.stateful_shuffle_width(spark, "ignored") == session_width
 
-    # mid input -> proportional (between floor and cap) when it fits
+    # mid input -> proportional, up to the cap
     monkeypatch.setattr(
         core, "_input_rows", lambda p: 10 * core._STATE_WIDTH_TARGET_ROWS
     )
-    expect = max(min(10, session_width), 8)
-    assert core.stateful_shuffle_width(spark, "ignored") == expect
+    assert core.stateful_shuffle_width(spark, "ignored") == min(10, session_width)
+    monkeypatch.setattr(
+        core, "_input_rows", lambda p: core._STATE_WIDTH_TARGET_ROWS + 1
+    )
+    assert core.stateful_shuffle_width(spark, "ignored") == min(2, session_width)
 
-    # unreadable input -> the session width (the pre-r16 behavior)
+    # empty input -> still one partition
+    monkeypatch.setattr(core, "_input_rows", lambda p: 0)
+    assert core.stateful_shuffle_width(spark, "ignored") == 1
+
+    # unreadable input -> the session width
     monkeypatch.setattr(core, "_input_rows", lambda p: None)
     assert core.stateful_shuffle_width(spark, "ignored") == session_width
 
@@ -1105,20 +1194,132 @@ def test_stateful_shuffle_width_derivation(spark, monkeypatch, tmp_path):
         spark.conf.unset(core.STATE_WIDTH_CONF)
 
 
-def test_scoped_shuffle_width_restores_session_value(spark):
+def test_scoped_confs_restores_session_values(spark):
+    """``scoped_confs`` sets its confs for the body only: a conf that
+    had a value gets it back, one that had none is unset again, on a
+    clean exit and when the body raises."""
     from datafusion_functions_variant_spark.streaming import core
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with core.scoped_shuffle_width(spark, 5):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # restores on exception too
+    set_key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.graft.test.scopedConf"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    for fail in (False, True):
+        try:
+            with core.scoped_confs(spark, {set_key: "5", unset_key: "x"}):
+                assert spark.conf.get(set_key) == "5"
+                assert spark.conf.get(unset_key) == "x"
+                if fail:
+                    raise RuntimeError("boom")
+        except RuntimeError:
+            assert fail
+        assert spark.conf.get(set_key) == before
+        assert spark.conf.get(unset_key, None) is None
+
+
+#: the three confs the transformWithState builder sets for its query
+_STREAM_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.streaming.checkpointFileManagerClass",
+)
+
+
+def test_stream_transform_with_state_scopes_confs_to_start(spark, monkeypatch):
+    """The state width, the RocksDB provider and the local checkpoint
+    manager hold for the query's ``.start()`` only: while the query
+    runs, the session has its own values, yet the query ran with the
+    derived width on RocksDB (StreamExecution clones the session at
+    start)."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from datafusion_functions_variant_spark.queries.streaming_queries import (
+        stream_transform_with_state,
+    )
+    from datafusion_functions_variant_spark.streaming import core
+
+    prior = {k: spark.conf.get(k, None) for k in _STREAM_CONFS}
+    during: list[dict] = []
+    queries: list[StreamingQuery] = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def recording_await(self, *args, **kwargs):
+        during.append({k: spark.conf.get(k, None) for k in _STREAM_CONFS})
+        queries.append(self)
+        return await_termination(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", recording_await)
+    assert stream_transform_with_state(spark, SF_DIR).count() > 0
+    assert during == [prior]
+    assert {k: spark.conf.get(k, None) for k in _STREAM_CONFS} == prior
+
+    width = core.stateful_shuffle_width(spark, os.path.join(SF_DIR, "events.parquet"))
+    assert width < int(prior["spark.sql.shuffle.partitions"])
+    (q,) = queries
+    ops = [op for p in q.recentProgress for op in p.stateOperators]
+    assert ops and {op.numShufflePartitions for op in ops} == {width}
+    assert any(k.startswith("rocksdb") for op in ops for k in op.customMetrics)
+    # its checkpoint logs were made at start() with the local manager
+    for log in (q._jsq.streamingQuery().offsetLog(), q._jsq.streamingQuery().commitLog()):
+        manager = log.fileManager().getClass().getName()
+        assert manager.endswith("FileSystemBasedCheckpointFileManager")
+
+
+def test_stream_transform_with_state_restores_confs_when_start_raises(
+    spark, monkeypatch
+):
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from datafusion_functions_variant_spark.queries.streaming_queries import (
+        stream_transform_with_state,
+    )
+
+    prior = {k: spark.conf.get(k, None) for k in _STREAM_CONFS}
+    seen: list[dict] = []
+
+    def boom(self, *_a, **_kw):
+        seen.append({k: spark.conf.get(k, None) for k in _STREAM_CONFS})
+        raise RuntimeError("injected start failure")
+
+    monkeypatch.setattr(DataStreamWriter, "start", boom)
+    with pytest.raises(RuntimeError, match="injected start failure"):
+        stream_transform_with_state(spark, SF_DIR)
+    # the confs were in place at start(), and are gone after it raised
+    (at_start,) = seen
+    assert at_start["spark.sql.streaming.stateStore.providerClass"].endswith(
+        "RocksDBStateStoreProvider"
+    )
+    assert at_start["spark.sql.streaming.checkpointFileManagerClass"].endswith(
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert {k: spark.conf.get(k, None) for k in _STREAM_CONFS} == prior
+
+
+def test_local_checkpoint_confs_follow_the_checkpoint_scheme(spark, tmp_path):
+    """The FileSystem checkpoint manager is chosen for a ``file:``
+    checkpoint root only; any other scheme keeps Spark's default."""
+    from datafusion_functions_variant_spark.streaming import core
+
+    key = "spark.sql.streaming.checkpointLocation"
+    prior = spark.conf.get(key, None)
     try:
-        with core.scoped_shuffle_width(spark, 7):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        for root, local in (
+            (None, True),
+            (str(tmp_path), True),
+            (f"file://{tmp_path}", True),
+            ("hdfs://namenode:8020/checkpoints", False),
+        ):
+            if root is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, root)
+            got = core.local_checkpoint_confs(spark)
+            assert bool(got) is local, root
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 def test_run_foreach_batch_failing_callback_raises_and_stops(spark, tmp_path):

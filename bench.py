@@ -11,23 +11,19 @@ never reads, so count-based timings understate real cost. The checksum
 forces every output column of every row to be materialized while
 keeping the consumption JVM-side (one scalar returns to the driver).
 
-Each query is timed ``BENCH_RUNS`` times (default 5 as of round 5;
-was 3) and the median is reported, bounding the run-to-run noise
-(page cache / JIT) that made byte-identical code swing ~30% between
-rounds 1 and 2 and again +26% between rounds 3 and 4 on unchanged
-code (sub-second queries at sf0.1 are harness-noise dominated).
+Each query is timed ``BENCH_RUNS`` times (default 5) after one untimed
+warm-up, and the median wall clock is reported with the min-of-N
+floor; sub-second queries at sf0.1 are dominated by harness noise (page
+cache, JIT), which a 3-run median did not bound. Each key also gets
+its median process-tree CPU seconds (``queries_cpu_s``), which load on
+a shared box does not inflate the way it inflates wall clock. A scaled
+column replays the same queries over a K×-replicated copy of the data
+(``ensure_scaled_dir``). Totals compare between runs ONLY on shared
+keys.
 
-Round-over-round totals compare ONLY on shared keys. Round-5
-verification of the r3→r4 +26% drift: with BENCH_RUNS=5 the r3-shared
-total came back to 6.98 s vs r3's 7.51 s (0.93×) with the biggest r4
-"regressors" reverting on byte-identical code (similarity_dot_topk
-0.51→0.286 s, theta_join 0.653→0.453 s) — the drift was 3-run-median
-harness noise, not a plan regression. Round 4 adds
-``dedup_minhash_xxhash`` (the Spark-native fast-hash twin). Its
-isolated signature stage is 1.47× faster than the md5 twin's
-(sf0.1, 7-run medians 1.90 s vs 2.78 s); end-to-end the two queries
-are within ~10% because the band-bucket join dominates — see
-``operators/dedup.py::gram_hash``.
+The full-precision artifact goes to ``BENCH.json`` (and the
+core-count-stamped ``BENCH_c{cpus}.json``) after every set; the
+printed line is ``compact_stdout_line``'s hard-capped summary.
 """
 
 from __future__ import annotations
@@ -39,6 +35,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.procstat import tree_cpu_seconds  # noqa: E402
 
 HEADLINE = [
     # one per operator family: variant parse+extract, explicit codec,
@@ -61,240 +58,118 @@ HEADLINE = [
     "dedup_embedding_cosine",
     "similarity_dot_topk",
     "text_token_counts",
-    # round 5: broadcast-model classifier inference family
+    # broadcast-model classifier inference
     "text_quality_classifier",
-    # round 5 (second wave): continuous-ingest family
+    # continuous ingest
     "dedup_incremental_index",
     "similarity_knn_graph",
-    # round 6: the production shape of the incremental index — index
-    # persisted bucketBy(8) so only the batch side shuffles. Timed
-    # end-to-end here (build+probe, comparable with the unbucketed
-    # twin) AND probe-only as dedup_incremental_bucketed_probe (the
-    # steady-state per-batch cost, measured after one untimed build).
+    # the production shape of the incremental index — index persisted
+    # bucketBy(8) so only the batch side shuffles. Timed end-to-end
+    # here (build+probe, comparable with the unbucketed twin) AND
+    # probe-only as dedup_incremental_bucketed_probe (the steady-state
+    # per-batch cost, measured after one untimed build).
     "dedup_incremental_bucketed_index",
-    # round 6: duplicate-proof 1-NN graph (exact canonicalize first) —
-    # at the 10x all-duplicates scaled point this collapses the graph
-    # back to 1x size before the bucket join
+    # duplicate-proof 1-NN graph (exact canonicalize first) — at the
+    # 10x all-duplicates scaled point this collapses the graph back to
+    # 1x size before the bucket join
     "similarity_knn_graph_canonical",
-    # round 6 (late): distributed total-order ranking under load —
-    # length-curriculum quartiles via global_rank (literal range
-    # buckets, no single-partition window); at the 10x scaled point
-    # this is the recorded evidence that exact global ranking stays
-    # flat when the corpus grows
+    # distributed total-order ranking: length-curriculum quartiles via
+    # global_rank (literal range buckets, no single-partition window);
+    # the scaled point shows whether exact global ranking stays flat
+    # when the corpus grows
     "dataset_curriculum_stages",
-    # round 7: the canonicalize-first twin of dedup_embedding_cosine —
-    # on the 10x all-dup replica corpus the pair-enumerating twin's
-    # OUTPUT grows ~K² per cluster (r6 scaled ratio 5.74x); this one
-    # collapses duplicate mass in one groupBy(embedding) and emits
-    # each canonical pair once with its multiplicity, so the scaled
-    # curve stays flat — the recorded pair-enum vs canonicalize
-    # contrast (VERDICT r6 ask #4)
+    # the canonicalize-first twin of dedup_embedding_cosine — on the
+    # 10x all-dup replica corpus the pair-enumerating twin's OUTPUT
+    # grows ~K² per cluster; this one collapses duplicate mass in one
+    # groupBy(embedding) and emits each canonical pair once with its
+    # multiplicity, so its scaled curve stays flat
     "dedup_embedding_cosine_canonical",
-    # round 7: the capstone crawl→clean→dedup→shard pipeline — the
-    # single most representative 100 TB workload in the repo
-    # (SCALE.md: 0.73x flat at 8x); now a recorded BENCH number in
-    # both columns (VERDICT r6 ask #5)
+    # the capstone crawl→clean→dedup→shard pipeline — the most
+    # representative 100 TB workload in the repo (SCALE.md)
     "pipeline_crawl_to_shards",
-    # round 7 (session 4): explicit bloom prefilter — build side and m
-    # auto-size with the corpus, probe stays map-side; expected ~linear
-    # in both columns
+    # explicit bloom prefilter — build side and m auto-size with the
+    # corpus, probe stays map-side; expected ~linear in both columns
     "join_bloom_prefilter",
-    # round 7 (session 4): the embeddings capstone (gate → exact
-    # canonicalize → bucketed near-dup flag → per-label report). The
-    # 10x replica corpus makes every vector 10x-duplicated — the
-    # canonicalize stage absorbs the whole inflation before the bucket
-    # join, so the scaled point should stay near-flat (the vector twin
-    # of pipeline_crawl_to_shards' 0.73x)
+    # the embeddings capstone (gate → exact canonicalize → bucketed
+    # near-dup flag → per-label report). The 10x replica corpus makes
+    # every vector 10x-duplicated — the canonicalize stage absorbs the
+    # whole inflation before the bucket join, so the scaled point
+    # should stay near-flat
     "pipeline_embeddings_curation",
-    # round 7 (session 4): bucketed snapshot reconciliation. NOTE the
-    # in-query drift is PROPORTIONAL (okey % 97/101/103), so at the 10x
-    # point the diff itself is 10x and most buckets are dirty — this
-    # measures the operator under linear drift (expected ~linear); the
-    # FIXED-drift flat curve (512 rows at every K) is SCALE.md's
+    # bucketed snapshot reconciliation. NOTE the in-query drift is
+    # PROPORTIONAL (okey % 97/101/103), so at the 10x point the diff
+    # itself is 10x and most buckets are dirty — this measures the
+    # operator under linear drift (expected ~linear); the FIXED-drift
+    # flat curve (512 rows at every K) is SCALE.md's
     # snapshot_diff_fixed_drift probe
     "snapshot_diff_bucketed",
-    # round 8: incremental view maintenance — changelog delta partials
-    # merged into the stored rollup. The fixture's changelog is
-    # PROPORTIONAL (event_id % 10 / % 17), so both columns measure
-    # linear-drift maintenance; the delta-sized-exchange claim is the
-    # test_plans.py pin
+    # incremental view maintenance — changelog delta partials merged
+    # into the stored rollup. The fixture's changelog is PROPORTIONAL
+    # (event_id % 10 / % 17), so both columns measure linear-drift
+    # maintenance; the delta-sized-exchange claim is the test_plans.py
+    # pin
     "rollup_incremental_maintenance",
 ]
 
-#: Keys timed LAST, after BOTH query sets have completed (round 11).
-#: ``stream_transform_with_state`` spins up the RocksDB state-store
-#: provider + per-key Python state workers for 6 consecutive runs; in
-#: round 10 it sat at the END of the sf0.1 set, i.e. immediately
-#: BEFORE the scaled set's scan-heavy TPC-H keys — and exactly those
-#: keys (q1/q3/q5) drifted up in the driver's run while every other
-#: family stayed flat (VERDICT r10 "What's wrong" #2). Running the
-#: stateful-streaming family after everything else means JVM heap /
-#: GC / state-server residue can only follow the scan keys, never
-#: precede them. Timings merge into the same per-column maps.
-#:
-#: (round 10 origin: the transformWithStateInPandas runtime — typed
-#: ValueState+MapState via the RocksDB state server over the vendored
-#: protobuf wire codec; the scaled point is 10× rows AND 10× distinct
-#: users, so it measures state-store growth, ~1.8-2.1× wall at 10×.)
+#: Keys timed LAST, after BOTH query sets have completed, each with
+#: one fresh-session retry (``run_set``'s ``new_session``).
+#: ``stream_transform_with_state`` (typed ValueState+MapState via the
+#: RocksDB state server over the vendored protobuf wire codec; the
+#: scaled point is 10× rows AND 10× distinct users, so it measures
+#: state-store growth) spins up the state-store provider and per-key
+#: Python state workers for every run. Placed before scan-heavy TPC-H
+#: keys it drove their times up; after everything else, JVM heap /
+#: GC / state-server residue can only follow the scan keys. Timings
+#: merge into the same per-column maps.
 HEADLINE_ISOLATED = [
     "stream_transform_with_state",
 ]
 
-#: Self-calibration (round 9): a fixed, deterministic, CPU-bound
-#: probe — 2B-row codegen range with a double-xxhash64 fold into ONE
-#: bit_xor scalar (no shuffle, no disk, no Python, result value is
-#: constant so any engine change that altered it would be visible).
-#: It is timed with the same warmup+median protocol as the headline
-#: queries, immediately before EACH query set. Purpose: divide out
-#: uniform machine weather. The r8 driver artifact measured 1.42x on
-#: shared scaled keys while byte-identical code measured 0.984x on a
-#: quiet box minutes apart (the third such incident: r3->r4 +26%,
-#: r5->r6 1.41x) — ambient load moves every query AND this probe by
-#: the same factor, a real plan regression moves queries but not the
-#: probe. Cross-round gate: compare (query_total / calibration)
-#: between rounds (policy in BASELINE.md).
+#: Self-calibration: a fixed, deterministic, CPU-bound probe — a
+#: 2B-row codegen range with a double-xxhash64 fold into ONE bit_xor
+#: scalar (no shuffle, no disk, no Python; the result is constant, so
+#: an engine change that altered it would be visible). It is timed
+#: with the same warm-up+median protocol as the headline queries,
+#: immediately before each query set. Ambient load moves every query
+#: and this probe by the same factor, a plan regression moves the
+#: queries but not the probe, so the cross-round gate compares
+#: (query_total / calibration) (policy in BASELINE.md).
 CALIBRATION_N = 2_000_000_000
 
 
-def calibration_probe_once(spark, cpus: int) -> float:
-    """ONE timed run of the frozen calibration probe. Used untimed+N
-    by ``calibration_times`` at each set's open, and bare by the
-    round-14 MID-SET probes (no warmup there — the codegen for this
-    exact plan is already JIT-warm from the set-opening calibration)."""
+def calibration_times(spark, cpus: int, runs: int) -> tuple[float, float, float]:
+    """(median, min, spread) wall-clock of the calibration probe over
+    ``runs`` timed samples after one untimed JIT warm-up.
+
+    ``spread`` = max - min over the timed samples: a quiet box keeps it
+    within a few percent of the median, a contended one blows it up."""
     from pyspark.sql import functions as F
 
-    t0 = time.perf_counter()
-    (
-        spark.range(0, CALIBRATION_N, 1, numPartitions=cpus)
-        .select(F.expr("bit_xor(xxhash64(xxhash64(id) ^ id))").alias("s"))
-        .collect()
-    )
-    return round(time.perf_counter() - t0, 3)
-
-
-def calibration_times(spark, cpus: int, runs: int) -> tuple[float, float, float]:
-    """(median, min, spread) wall-clock of the calibration probe.
-
-    ``spread`` = max - min over the timed samples. A quiet box keeps
-    the spread within a few percent of the median; a contended box
-    (host steal — r8, r12 incidents) blows it up. Recorded into
-    BENCH.json so weather adjudications are self-contained: a future
-    reader can tell a tainted run from a clean one without BASELINE.md
-    archaeology (r12 verdict "What's wrong" #1)."""
     samples = []
-    for i in range(runs + 1):  # one untimed JIT warmup, like queries
-        t = calibration_probe_once(spark, cpus)
+    for i in range(runs + 1):
+        t0 = time.perf_counter()
+        (
+            spark.range(0, CALIBRATION_N, 1, numPartitions=cpus)
+            .select(F.expr("bit_xor(xxhash64(xxhash64(id) ^ id))").alias("s"))
+            .collect()
+        )
         if i:
-            samples.append(t)
+            samples.append(time.perf_counter() - t0)
     return (
-        round(sorted(samples)[len(samples) // 2], 3),
+        _median(samples),
         round(min(samples), 3),
         round(max(samples) - min(samples), 3),
     )
 
 
-def loadavg_now() -> list[float] | None:
-    """1/5/15-minute load averages, or None where unsupported.
-
-    Stamped into BENCH.json before and after each query set: the box
-    state rides in the artifact itself, so when a round's scaled
-    column moves the reader can see whether the run was contended
-    (r12: driver box at guest load 15 with zero guest processes)
-    without cross-referencing prose."""
-    try:
-        return [round(x, 2) for x in os.getloadavg()]
-    except (OSError, AttributeError):
-        return None
-
-
-def cpu_now() -> list[int] | None:
-    """Cumulative CPU jiffies from /proc/stat —
-    [user, nice, system, idle, iowait, irq, softirq, steal] — or None
-    where unsupported (round 15).
-
-    Loadavg cannot separate SELF-load (a local[32] bench legitimately
-    runs the 1-min average to 10-30 while it works) from the things
-    that actually slow a run, and the CPU-only calibration probe only
-    catches uniform compute steal. The per-key DELTA of this counter
-    classifies a mover by where its wall time physically went
-    (``queries_cpu``: {u,s,w,st} = user/system/iowait/steal as % of
-    all CPU time while the key ran):
-
-    * ``st`` elevated → hypervisor steal (the r8/r12/r14 incident
-      class) — weather, named in-artifact;
-    * ``w`` elevated → storage stalls — weather on this rig (the
-      corpus reads from host cache at ~4 GB/s when healthy);
-    * ``s`` elevated with flat ``st``/``w`` → kernel/fault-path
-      slowdown (attempt-11 signature: clean probes, clean steal,
-      system-time inflation on allocation-heavy keys only);
-    * ``u`` tracking the elevation → the key really ran more compute:
-      look at the plan, not the weather."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        if len(parts) < 9:
-            # pre-2.6.11 kernels lack the steal field — a short list
-            # here would IndexError later in cpu_delta_pct, killing
-            # the whole set (ADVICE r15); honor the "None where
-            # unsupported" contract instead
-            return None
-        return [int(x) for x in parts[1:9]]
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def cpu_delta_pct(prev: list[int] | None, cur: list[int] | None) -> dict | None:
-    """{u,s,w,st} percentages of the jiffies elapsed between two
-    ``cpu_now`` snapshots, or None when either snapshot is missing or
-    no time elapsed."""
-    if prev is None or cur is None:
-        return None
-    d = [b - a for a, b in zip(prev, cur)]
-    tot = sum(d)
-    if tot <= 0:
-        return None
-    return {
-        "u": round(100.0 * (d[0] + d[1]) / tot, 1),  # user + nice
-        "s": round(100.0 * d[2] / tot, 1),
-        "w": round(100.0 * d[4] / tot, 1),
-        "st": round(100.0 * d[7] / tot, 1),
-    }
-
-
-#: Round 14: weather, localized PER KEY instead of per column. The r13
-#: six-run shakedown proved the set-opening ``calibration_spread``
-#: cannot catch BURSTY host steal that lands mid-set (run 6: pristine
-#: 0.012 spread, worst query column of the day; the r13 driver
-#: artifact: clean scaled spread 0.052 yet three keys at ≥2×). Two
-#: in-artifact signals bracket a burst to the keys it actually hit:
-#: * ``queries_load`` — the 1-minute loadavg stamped as each key
-#:   finishes (free);
-#: * ``mid_calibrations`` — the frozen calibration probe re-timed once
-#:   every ``MID_PROBE_EVERY`` completed keys (~1 s quiet each, ~3 per
-#:   28-key column), keyed by the name of the key just finished. A
-#:   probe reading ≥2× the set-opening calibration marks the
-#:   surrounding window contended; flat probes around an elevated key
-#:   point at the plan instead.
-#: Both ride only in the committed BENCH.json — compact_stdout_line
-#: never prints them, so the driver's 2 KB stdout tail is unaffected.
-MID_PROBE_EVERY = 8
-#: Round 15: tighter cadence for the sf0.1 column ONLY. Both r14
-#: bursts landed BETWEEN probes (run 1 keys 9–13, run 3 keys 7–9,
-#: BASELINE.md) — exactly the 7-key blind window every-8 leaves open,
-#: and the sf0.1 keys are sub-second so a short burst can double
-#: several of them before the 1-min loadavg smoothing catches up.
-#: Every-4 costs ~6 probes × ~1 s quiet on the ~30-key set and
-#: brackets any burst to ≤3 keys. The scaled column keeps every-8:
-#: its keys run 1–13 s each, so the loadavg stamp alone already
-#: localizes well there.
-MID_PROBE_EVERY_SF01 = 4
+def _median(samples: list[float]) -> float:
+    return round(sorted(samples)[len(samples) // 2], 3)
 
 
 #: reported per-query but EXCLUDED from the summed total: the probe is
 #: a subset re-measurement of dedup_incremental_bucketed_index's
 #: already-counted work (steady-state per-batch cost after one untimed
-#: index build) — summing both would double-count the probe (r6
-#: ADVICE)
+#: index build) — summing both would double-count the probe
 NOT_IN_TOTAL = {"dedup_incremental_bucketed_probe"}
 
 #: Hard byte cap for the ONE printed JSON line. The driver records
@@ -517,111 +392,108 @@ def ensure_scaled_dir(spark, sf_dir: str, k: int, out_dir: str) -> None:
         _json.dump(want, fh)
 
 
-def time_samples(spark, build, dir_: str, runs: int, consume) -> list[float]:
-    """``runs`` timed samples of build+consume, after one untimed
-    warm-up (JIT + page cache + shuffle-file reuse otherwise land in
-    the first timed sample and skew a short median upward by ~2x on
-    the UDF-heavy queries). The timer starts BEFORE build(): builders
-    that do eager work (persist an index table, collect model/bucket
-    state) must pay for it in their end-to-end number."""
-    samples: list[float] = []
+def time_samples(
+    spark, build, dir_: str, runs: int, consume
+) -> tuple[list[float], list[float]]:
+    """(wall seconds, CPU seconds) of ``runs`` timed samples of
+    build+consume, after one untimed warm-up (JIT + page cache +
+    shuffle-file reuse otherwise land in the first timed sample and
+    skew a short median upward by ~2x on the UDF-heavy queries). The
+    timer starts BEFORE build(): builders that do eager work (persist
+    an index table, collect model/bucket state) must pay for it in
+    their end-to-end number.
+
+    CPU seconds are the process tree's (this driver, the JVM it
+    launched and the JVM's Python workers), read from /proc before and
+    after each sample, outside the wall timer. Unlike wall clock they
+    do not grow when other load on the box delays the run."""
+    walls: list[float] = []
+    cpus: list[float] = []
     for i in range(runs + 1):
+        c0 = tree_cpu_seconds(os.getpid())
         t0 = time.perf_counter()
         df = build(spark, dir_)
         consume(df)
+        wall = time.perf_counter() - t0
         if i:
-            samples.append(time.perf_counter() - t0)
-    return samples
+            walls.append(wall)
+            cpus.append(tree_cpu_seconds(os.getpid()) - c0)
+    return walls, cpus
 
 
 def run_set(
-    spark,
+    sess: list,
     registry,
     dir_: str,
     runs: int,
     names: list[str],
     consume,
     with_probe: bool = True,
-    cpus: int | None = None,
-    probe_every: int = MID_PROBE_EVERY,
+    new_session=None,
 ) -> tuple[
-    dict[str, float], dict[str, float], dict[str, str],
     dict[str, float], dict[str, float], dict[str, float],
+    dict[str, str], dict[str, str],
 ]:
-    """Returns (median, min, errors, per-key loadavg, mid-set
-    calibration probes, per-key cpu breakdown) per query. The min-of-N rides
-    along as the noise floor: cross-round median comparisons on
-    sub-second sf0.1 queries have documented ±30-40% ambient swings
-    (BASELINE.md), and the min separates 'the box was busy' from 'the
-    plan regressed' — a plan regression moves the min too.
+    """Times ``names`` on ``sess[0]`` and returns (median, min, median
+    CPU seconds, errors, retried) per query. The min-of-N rides along
+    as the noise floor: sub-second sf0.1 medians swing ±30-40% with
+    ambient load (BASELINE.md), a plan regression moves the min too.
+    The CPU seconds (``time_samples``) settle whether a move is the
+    code's or the box's.
 
-    Round 14: the last two maps localize weather PER KEY (see
-    MID_PROBE_EVERY). ``load`` stamps the 1-min loadavg as each key
-    finishes (errored keys too — a burst can BE the error); ``probes``
-    re-times the frozen calibration query after every
-    ``probe_every``-th completed key when ``cpus`` is given (round
-    15: the sf0.1 column passes MID_PROBE_EVERY_SF01=4 — both r14
-    bursts landed inside every-8's 7-key blind window).
+    FAULT-ISOLATED per key: a key whose build/consume raises records
+    ``errors[name]`` and the set continues, so no single key can
+    vaporize the others' numbers. With a ``new_session`` factory a
+    failed key gets ONE retry in a fresh session (fresh state server,
+    fresh pythonExec wrapper, empty worker pool — a worker that missed
+    PythonWorkerFactory's 10 s connect-back under load fails a key
+    that runs green everywhere else): the old session is stopped, the
+    new one replaces it in the 1-element holder ``sess`` (so the
+    caller keeps it), and success records the numbers plus a
+    ``retried`` note; a double failure records both errors.
 
-    FAULT-ISOLATED per key (round 12): a key whose build/consume
-    raises records ``errors[name]`` and the set continues — the
-    driver's r11 run lost BOTH fully-measured columns because ONE
-    streaming key threw after everything else had been timed
-    (BENCH_r11.json rc=1, VERDICT r11 #1). No single key may vaporize
-    the others' numbers, by construction."""
+    ``with_probe`` adds ``dedup_incremental_bucketed_probe``
+    (NOT_IN_TOTAL) after the named keys."""
     timings: dict[str, float] = {}
     minimums: dict[str, float] = {}
+    cpu_s: dict[str, float] = {}
     errors: dict[str, str] = {}
-    load: dict[str, float] = {}
-    probes: dict[str, float] = {}
-    cpu: dict[str, dict] = {}
-    done = 0
-    prev_stat = cpu_now()
+    retried: dict[str, str] = {}
 
-    def record(name: str, samples: list[float]) -> None:
-        timings[name] = round(sorted(samples)[len(samples) // 2], 3)
-        minimums[name] = round(min(samples), 3)
-
-    def weather_mark(name: str) -> None:
-        nonlocal done, prev_stat
-        done += 1
-        la = loadavg_now()
-        if la is not None:
-            load[name] = la[0]
-        # per-key CPU breakdown: where the wall time physically went
-        # while the key ran (round 15 — the loadavg stamp cannot tell
-        # self-load from steal/kernel/storage stalls; this can)
-        cur_stat = cpu_now()
-        pct = cpu_delta_pct(prev_stat, cur_stat)
-        if pct is not None:
-            cpu[name] = pct
-        prev_stat = cur_stat
-        if cpus is not None and done % probe_every == 0:
-            try:
-                probes[name] = calibration_probe_once(spark, cpus)
-            except Exception as e:  # noqa: BLE001 — probe loss ≠ set loss
-                print(f"bench: mid-set probe failed: {_err_text(e)}",
-                      file=sys.stderr)
-            finally:
-                # re-snapshot AFTER the probe: its deliberately
-                # CPU-saturating burn would otherwise be charged to
-                # the NEXT key's queries_cpu delta and read as "that
-                # key ran more compute" — the exact misclassification
-                # the instrument exists to prevent (ADVICE r15)
-                prev_stat = cpu_now()
+    def record(name: str, build) -> None:
+        walls, cpus = time_samples(sess[0], build, dir_, runs, consume)
+        timings[name] = _median(walls)
+        minimums[name] = round(min(walls), 3)
+        cpu_s[name] = _median(cpus)
 
     for name in names:
         spec = registry.get(name)
         if spec is None:
             continue
         try:
-            record(name, time_samples(spark, spec.build, dir_, runs, consume))
+            record(name, spec.build)
+            continue
         except Exception as e:  # noqa: BLE001 — isolate, record, continue
-            errors[name] = _err_text(e)
-            print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
-        weather_mark(name)
+            first = _err_text(e)
+        if new_session is None:
+            errors[name] = first
+            print(f"bench: {name} failed: {first}", file=sys.stderr)
+            continue
+        print(f"bench: {name} failed ({first}); retrying in a fresh session",
+              file=sys.stderr)
+        try:
+            try:
+                sess[0].stop()
+            except Exception:  # noqa: BLE001
+                pass
+            sess[0] = new_session()
+            record(name, spec.build)
+            retried[name] = first
+        except Exception as e:  # noqa: BLE001
+            errors[name] = f"{first} | retry: {_err_text(e)}"
+            print(f"bench: {name} retry failed: {errors[name]}", file=sys.stderr)
     if not with_probe:
-        return timings, minimums, errors, load, probes, cpu
+        return timings, minimums, cpu_s, errors, retried
     # steady-state probe of the persisted bucketed index: one untimed
     # build, then the probe alone per run — the recurring per-batch
     # cost a continuous pipeline pays (the end-to-end twin above
@@ -633,12 +505,10 @@ def run_set(
             bucketed_index_probe,
         )
 
-        bucketed_index_build(spark, dir_)
+        bucketed_index_build(sess[0], dir_)
         record(
             "dedup_incremental_bucketed_probe",
-            time_samples(
-                spark, lambda s, d: bucketed_index_probe(s, d), dir_, runs, consume
-            ),
+            lambda s, d: bucketed_index_probe(s, d),
         )
     except Exception as e:  # noqa: BLE001
         errors["dedup_incremental_bucketed_probe"] = _err_text(e)
@@ -646,78 +516,7 @@ def run_set(
             f"bench: dedup_incremental_bucketed_probe failed: {_err_text(e)}",
             file=sys.stderr,
         )
-    return timings, minimums, errors, load, probes, cpu
-
-
-def run_isolated_keys(
-    sess: list,
-    registry,
-    names: list[str],
-    dir_: str,
-    runs: int,
-    consume,
-    new_session,
-    retried: dict[str, str],
-) -> tuple[
-    dict[str, float], dict[str, float], dict[str, str],
-    dict[str, float], dict[str, float],
-]:
-    """HEADLINE_ISOLATED keys with one RETRY IN A FRESH SESSION on
-    failure. The r11 driver box hit 'Python worker failed to connect
-    back' (a spawned worker missing the hardcoded 10 s connect-back
-    select in PythonWorkerFactory under load) on a key that runs green
-    everywhere else — a fresh session gets a fresh state server, a
-    fresh pythonExec wrapper, and an empty worker pool. ``sess`` is a
-    1-element holder so the caller keeps the swapped-in session.
-    Success-after-retry records the number plus a ``retried`` note; a
-    double failure records the error and the bench continues."""
-    t: dict[str, float] = {}
-    m: dict[str, float] = {}
-    e: dict[str, str] = {}
-    load: dict[str, float] = {}
-    cpu: dict[str, dict] = {}
-    prev_stat = cpu_now()
-
-    def weather_mark(name: str) -> None:
-        nonlocal prev_stat
-        la = loadavg_now()
-        if la is not None:
-            load[name] = la[0]
-        cur_stat = cpu_now()
-        pct = cpu_delta_pct(prev_stat, cur_stat)
-        if pct is not None:
-            cpu[name] = pct
-        prev_stat = cur_stat
-
-    for name in names:
-        spec = registry.get(name)
-        if spec is None:
-            continue
-        try:
-            samples = time_samples(sess[0], spec.build, dir_, runs, consume)
-        except Exception as e1:  # noqa: BLE001
-            print(
-                f"bench: {name} failed ({_err_text(e1)}); retrying in a"
-                " fresh session",
-                file=sys.stderr,
-            )
-            try:
-                try:
-                    sess[0].stop()
-                except Exception:  # noqa: BLE001
-                    pass
-                sess[0] = new_session()
-                samples = time_samples(sess[0], spec.build, dir_, runs, consume)
-                retried[name] = _err_text(e1)
-            except Exception as e2:  # noqa: BLE001
-                e[name] = f"{_err_text(e1)} | retry: {_err_text(e2)}"
-                print(f"bench: {name} retry failed: {e[name]}", file=sys.stderr)
-                weather_mark(name)
-                continue
-        t[name] = round(sorted(samples)[len(samples) // 2], 3)
-        m[name] = round(min(samples), 3)
-        weather_mark(name)
-    return t, m, e, load, cpu
+    return timings, minimums, cpu_s, errors, retried
 
 
 def main() -> None:
@@ -769,9 +568,8 @@ def main() -> None:
 
     def flush() -> None:
         """(Re)write the full-precision artifact from what's measured
-        SO FAR — called after EVERY set (round 12): the r11 driver run
-        died on the fourth set's only key and the artifact written
-        once-at-the-end never materialized. Totals/derived fields are
+        SO FAR — called after EVERY set, so a run that dies in a later
+        set keeps the earlier sets' numbers. Totals/derived fields are
         recomputed idempotently on each call."""
         out["value"] = round(
             sum(v for k, v in out["queries"].items() if k not in NOT_IN_TOTAL), 3
@@ -796,66 +594,31 @@ def main() -> None:
                 json.dump(out, fh, indent=1, sort_keys=True)
                 fh.write("\n")
 
-    def merge(
-        col_prefix: str,
-        t: dict,
-        m: dict,
-        e: dict,
-        load: dict | None = None,
-        probes: dict | None = None,
-        cpu: dict | None = None,
-    ) -> None:
-        pre = "" if col_prefix == "" else "scaled_"
+    def merge(pre: str, t: dict, m: dict, cpu_s: dict, e: dict, retried: dict) -> None:
         out.setdefault(f"{pre}queries", {}).update(t)
         out.setdefault(f"{pre}queries_min", {}).update(m)
+        # per-key CPU seconds: BENCH.json only, never printed
+        out.setdefault(f"{pre}queries_cpu_s", {}).update(cpu_s)
         if e:
             out.setdefault(f"{pre}errors", {}).update(e)
-        # per-key weather (round 14) — BENCH.json only, never printed
-        if load:
-            out.setdefault(f"{pre}queries_load", {}).update(load)
-        if probes:
-            out.setdefault(f"{pre}mid_calibrations", {}).update(probes)
-        # per-key CPU breakdown (round 15) — BENCH.json only
-        if cpu:
-            out.setdefault(f"{pre}queries_cpu", {}).update(cpu)
-
-    def run_isolated(dir_: str, runs: int, col: str) -> None:
-        retried = out.setdefault("retried", {})
-        t, m, e, load, cpu = run_isolated_keys(
-            sess, registry, HEADLINE_ISOLATED, dir_, runs, consume,
-            new_session, retried,
-        )
-        if not retried:
-            del out["retried"]
-        merge(col, t, m, e, load, cpu=cpu)
+        if retried:
+            out.setdefault("retried", {}).update(retried)
 
     runs = int(os.environ.get("BENCH_RUNS", "5"))
     scale_k = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_K", "10"))
     scaled_runs = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_RUNS", "3"))
-    def mark_load(label: str) -> None:
-        la = loadavg_now()
-        if la is not None:
-            out.setdefault("loadavg", {})[label] = la
 
     try:
         try:
-            mark_load("sf_pre")
             calib, calib_min, calib_spread = calibration_times(sess[0], cpus, runs)
-            # machine-weather divisor measured just before this set;
-            # the cross-round gate compares value/calibration, not raw
+            # machine-load divisor measured just before this set; the
+            # cross-round gate compares value/calibration, not raw
             out["calibration"] = calib
             out["calibration_min"] = calib_min
             out["calibration_spread"] = calib_spread
         except Exception as e:  # noqa: BLE001
             out.setdefault("errors", {})["__calibration__"] = _err_text(e)
-        merge(
-            "",
-            *run_set(
-                sess[0], registry, sf_dir, runs, HEADLINE, consume, cpus=cpus,
-                probe_every=MID_PROBE_EVERY_SF01,
-            ),
-        )
-        mark_load("sf_post")
+        merge("", *run_set(sess, registry, sf_dir, runs, HEADLINE, consume))
         flush()
 
         # scaled point (~sf1): same queries over the K×-replicated
@@ -871,7 +634,6 @@ def main() -> None:
             )
             try:
                 ensure_scaled_dir(sess[0], sf_dir, scale_k, scaled_dir)
-                mark_load("scaled_pre")
                 s_calib, s_calib_min, s_calib_spread = calibration_times(
                     sess[0], cpus, scaled_runs
                 )
@@ -880,13 +642,11 @@ def main() -> None:
                 out["scaled_calibration_min"] = s_calib_min
                 out["scaled_calibration_spread"] = s_calib_spread
                 merge(
-                    "scaled",
+                    "scaled_",
                     *run_set(
-                        sess[0], registry, scaled_dir, scaled_runs, HEADLINE,
-                        consume, cpus=cpus,
+                        sess, registry, scaled_dir, scaled_runs, HEADLINE, consume
                     ),
                 )
-                mark_load("scaled_post")
             except Exception as e:  # noqa: BLE001 — corpus/calibration
                 out.setdefault("scaled_errors", {})["__scaled_set__"] = _err_text(e)
                 scaled_dir = None
@@ -895,18 +655,17 @@ def main() -> None:
         # HEADLINE_ISOLATED keys run LAST — after every scan/join/agg
         # key in both columns — so stateful-streaming residue (RocksDB
         # state server, Python state workers, JVM heap growth) cannot
-        # precede the scan-heavy keys (VERDICT r10 #2: q1/q5 scaled
-        # drift traced to 6 back-to-back streaming runs opening the
-        # scaled set). Calibration divisors are the ones measured
-        # before each column's main set — documented approximation:
-        # these keys are Python-state-bound, not scan-bound, so column
-        # weather matters less.
-        run_isolated(sf_dir, runs, "")
-        mark_load("isolated_sf_post")
-        flush()
-        if scaled_dir is not None:
-            run_isolated(scaled_dir, scaled_runs, "scaled")
-            mark_load("isolated_scaled_post")
+        # precede the scan-heavy keys. They alone get the fresh-session
+        # retry. Calibration divisors are the ones measured before each
+        # column's main set: these keys are Python-state-bound, not
+        # scan-bound, so the column's load matters less.
+        for pre, dir_, n in (("", sf_dir, runs), ("scaled_", scaled_dir, scaled_runs)):
+            if dir_ is None:
+                continue
+            merge(pre, *run_set(
+                sess, registry, dir_, n, HEADLINE_ISOLATED, consume,
+                with_probe=False, new_session=new_session,
+            ))
             flush()
     finally:
         # Self-contained full-precision artifact: the driver's stdout

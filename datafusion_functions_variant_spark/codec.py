@@ -30,6 +30,7 @@ Where the reference has latent bugs (SURVEY.md §1.3) we implement the
 from __future__ import annotations
 
 import json
+import math
 import struct
 from bisect import bisect_left
 from typing import Any, Iterable, Iterator
@@ -857,11 +858,21 @@ def _encode_object(value: dict, metadata: Metadata) -> bytes:
     return ob.finish()
 
 
+def _reject_constant(token: str) -> Any:
+    raise ValueError(f"{token} is not a JSON value")
+
+
+# Built once: json.loads with keywords builds a decoder on every call.
+_STRICT_DECODER = json.JSONDecoder(parse_constant=_reject_constant)
+
+
 def parse_json(text: str) -> Any:
-    """One strict ``json.loads``: a malformed text raises
-    ``VariantError("malformed JSON: ...")``."""
+    """One strict JSON parse: a malformed text raises
+    ``VariantError("malformed JSON: ...")``. The ``NaN``/``Infinity``/
+    ``-Infinity`` tokens that Python's parser accepts are not JSON and
+    are rejected, as Track N's ``parse_json`` rejects them."""
     try:
-        return json.loads(text)
+        return _STRICT_DECODER.decode(text)
     except (ValueError, TypeError) as exc:
         raise VariantError(f"malformed JSON: {exc}") from exc
 
@@ -998,8 +1009,10 @@ def _render_json(v: Any) -> str:
     """JSON text for a to_python() value, matching Spark's JVM
     ``to_json(variant)`` rendering: decimals emit as UNQUOTED plain
     notation (BigDecimal.toPlainString — never E-notation, which
-    str(Decimal) switches to when the adjusted exponent < -6).
-    json.dumps(default=...) can't do this (a returned str gets
+    str(Decimal) switches to when the adjusted exponent < -6), and a
+    non-finite float (``1E400`` parses to infinity) emits as a quoted
+    string such as ``"Infinity"``, so the output is always strict
+    JSON. json.dumps(default=...) can't do this (a returned str gets
     quoted), hence the hand-rolled walk."""
     from decimal import Decimal
 
@@ -1012,6 +1025,8 @@ def _render_json(v: Any) -> str:
         # decimals that survive a float round-trip render as the float
         # (shortest repr); others keep all digits, plain notation
         return json.dumps(f) if Decimal(repr(f)) == v else format(v, "f")
+    if isinstance(v, float) and not math.isfinite(v):
+        return '"NaN"' if v != v else '"Infinity"' if v > 0 else '"-Infinity"'
     if isinstance(v, (int, float)):
         return json.dumps(v)
     if isinstance(v, str):

@@ -177,9 +177,7 @@ def _coerce(py, dtype: str):
             return py if isinstance(py, bool) else None
         if dtype == "string":
             if isinstance(py, (list, dict)):
-                import json as _json
-
-                return _json.dumps(py, separators=(",", ":"))
+                return codec._render_json(py)
             if isinstance(py, bool):
                 return "true" if py else "false"
             return str(py)

@@ -78,8 +78,11 @@ class _BloomProbeMixin:
     """Shared Bloom-prescreen surface: ``member``/``attach_bitset``/
     ``drop_bitset`` over ``self.bitset``/``self.m_bits``/
     ``self.bits_col``. Used by the immutable ``HistoryIndex`` and the
-    mutable ``SelfUpdatingHistoryIndex`` so every ingest gate probes
-    through one implementation."""
+    two mutable indexes so every ingest gate probes through one
+    implementation. The mutable indexes (``SelfUpdatingHistoryIndex``,
+    ``GenerationalHistoryIndex``) also share the bitset's maintenance,
+    ``_merge_bits`` and ``rebuild_bitset``, over their ``key`` and
+    ``relation()``."""
 
     def member(self, key_expr: str) -> Column:
         """Map-side Bloom membership test for ``key_expr`` (a SQL
@@ -106,6 +109,58 @@ class _BloomProbeMixin:
         return self.spark.range(1).select(
             F.expr(f"array_repeat(0L, {m_words})").alias(self.bits_col)
         ).localCheckpoint(eager=True)
+
+    def _merge_bits(self, novel: DataFrame) -> None:
+        """OR the bits of ``novel``'s keys into the bitset: O(batch +
+        m/64 words). The checkpoint bounds lineage so batch N's bitset
+        never re-aggregates batches 0..N-1. No-op without a bitset."""
+        if self.bitset is None:
+            return
+        delta = bloom_build(novel, F.col(self.key), self.m_bits)
+        self.bitset = (
+            self.bitset.crossJoin(delta.select(F.col("bits").alias("_nb")))
+            .select(
+                F.zip_with(
+                    self.bits_col, "_nb", lambda a, b: a.bitwiseOR(b)
+                ).alias(self.bits_col)
+            )
+            .localCheckpoint(eager=True)
+        )
+
+    def rebuild_bitset(self, m_bits: int | None = None) -> None:
+        """Recovery path: one full scan of ``relation()`` re-derives the
+        bitset from the durable table(s) (see
+        ``SelfUpdatingHistoryIndex``'s docstring). No-op when the
+        index has no ``m_bits`` and none is given.
+
+        ``m_bits`` starts a new BITSET EPOCH at a different size — the
+        remedy when ``bloom_saturation()`` shows the key universe
+        outgrew ``expected_keys`` (bits from different m values never
+        merge, so a resize is definitionally a rebuild; the tables are
+        untouched, correctness never depended on the bitset). Must be
+        a positive multiple of 64 (whole words).
+
+        ``m_bits``/``bitset`` are assigned TOGETHER, only after the
+        build succeeded (ADVICE r13): a mid-build failure must never
+        leave ``member()`` indexing the OLD word array at the NEW
+        size — element_at past the array end reads as definite-miss,
+        i.e. Bloom FALSE NEGATIVES admitting duplicate keys."""
+        target = self.m_bits
+        if m_bits is not None:
+            if m_bits <= 0 or m_bits % 64:
+                raise ValueError(
+                    f"m_bits must be a positive multiple of 64, got {m_bits}"
+                )
+            target = m_bits
+        if target is None:
+            return
+        new_bitset = (
+            bloom_build(self.relation(), F.col(self.key), target)
+            .select(F.col("bits").alias(self.bits_col))
+            .localCheckpoint(eager=True)
+        )
+        self.m_bits = target
+        self.bitset = new_bitset
 
     def bloom_saturation(self) -> dict | None:
         """Operational dial for a long-running ingest whose key
@@ -521,23 +576,9 @@ class SelfUpdatingHistoryIndex(_BloomProbeMixin):
         semantics are unaffected; the crash-safe swap means a death
         mid-compact costs nothing but the rewrite."""
         _check_key_dtype(novel, self.key, "SelfUpdatingHistoryIndex")
-        if self.bitset is not None:
-            # OR the batch's bits in BEFORE the blocking write: both
-            # complete before this batch's callback returns, and the
-            # checkpoint bounds lineage so batch N's bitset never
-            # re-aggregates batches 0..N-1
-            delta = bloom_build(novel, F.col(self.key), self.m_bits)
-            self.bitset = (
-                self.bitset.crossJoin(
-                    delta.select(F.col("bits").alias("_nb"))
-                )
-                .select(
-                    F.zip_with(
-                        self.bits_col, "_nb", lambda a, b: a.bitwiseOR(b)
-                    ).alias(self.bits_col)
-                )
-                .localCheckpoint(eager=True)
-            )
+        # OR the batch's bits in BEFORE the blocking write: both
+        # complete before this batch's callback returns
+        self._merge_bits(novel)
         (
             novel.withColumn("_b", F.lit(batch_id).cast("long"))
             .write.mode("append")
@@ -590,39 +631,6 @@ class SelfUpdatingHistoryIndex(_BloomProbeMixin):
                     )
                     self._listdir_warned = True
                 return 0
-
-    def rebuild_bitset(self, m_bits: int | None = None) -> None:
-        """Recovery path: one full index scan re-derives the bitset
-        from the durable table (see class docstring).
-
-        ``m_bits`` starts a new BITSET EPOCH at a different size — the
-        remedy when ``bloom_saturation()`` shows the key universe
-        outgrew ``expected_keys`` (bits from different m values never
-        merge, so a resize is definitionally a rebuild; the table is
-        untouched, correctness never depended on the bitset). Must be
-        a positive multiple of 64 (whole words).
-
-        ``m_bits``/``bitset`` are assigned TOGETHER, only after the
-        build succeeded (ADVICE r13): a mid-build failure must never
-        leave ``member()`` indexing the OLD word array at the NEW
-        size — element_at past the array end reads as definite-miss,
-        i.e. Bloom FALSE NEGATIVES admitting duplicate keys."""
-        target = self.m_bits
-        if m_bits is not None:
-            if m_bits <= 0 or m_bits % 64:
-                raise ValueError(
-                    f"m_bits must be a positive multiple of 64, got {m_bits}"
-                )
-            target = m_bits
-        if target is None:
-            return
-        new_bitset = (
-            bloom_build(self.relation(), F.col(self.key), target)
-            .select(F.col("bits").alias(self.bits_col))
-            .localCheckpoint(eager=True)
-        )
-        self.m_bits = target
-        self.bitset = new_bitset
 
 
 class GenerationalHistoryIndex(_BloomProbeMixin):
@@ -1053,17 +1061,7 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
 
         _check_key_dtype(novel, self.key, "GenerationalHistoryIndex")
         novel = novel.localCheckpoint(eager=True)
-        if self.bitset is not None:
-            delta = bloom_build(novel, F.col(self.key), self.m_bits)
-            self.bitset = (
-                self.bitset.crossJoin(delta.select(F.col("bits").alias("_nb")))
-                .select(
-                    F.zip_with(
-                        self.bits_col, "_nb", lambda a, b: a.bitwiseOR(b)
-                    ).alias(self.bits_col)
-                )
-                .localCheckpoint(eager=True)
-            )
+        self._merge_bits(novel)
         obs = Observation()
         (
             novel.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -1108,31 +1106,6 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         self._gen_rows[g + 1] = merged_n
         self._gen_rows[g] = 0
         self._write_manifest(None)
-
-    def rebuild_bitset(self, m_bits: int | None = None) -> None:
-        """One union scan across all generations (membership is
-        generation-independent); ``m_bits`` starts a new bitset epoch
-        at a different size — see the single-table twin's docstring,
-        including why (m_bits, bitset) flip together only after the
-        build succeeds (ADVICE r13: a mid-build crash must not leave
-        member() indexing the old words at the new size — silent
-        false negatives)."""
-        target = self.m_bits
-        if m_bits is not None:
-            if m_bits <= 0 or m_bits % 64:
-                raise ValueError(
-                    f"m_bits must be a positive multiple of 64, got {m_bits}"
-                )
-            target = m_bits
-        if target is None:
-            return
-        new_bitset = (
-            bloom_build(self.relation(), F.col(self.key), target)
-            .select(F.col("bits").alias(self.bits_col))
-            .localCheckpoint(eager=True)
-        )
-        self.m_bits = target
-        self.bitset = new_bitset
 
     def _repair_overlap(self, g: int) -> None:
         """Remove from generation ``g`` every key also present in

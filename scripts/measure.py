@@ -13,7 +13,9 @@ consume modes:
 Usage:
   python scripts/measure.py [--runs N] [--dir D] [--noop] name...
 
-Prints one line per query: name, median, min, loadavg-at-finish.
+Prints one line per query: name, wall-clock median, min and samples,
+and the median process-tree CPU seconds (``time_samples``), which load
+on the box does not inflate the way it inflates wall clock.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import loadavg_now, time_samples  # noqa: E402
+from bench import time_samples  # noqa: E402
 
 
 def main() -> None:
@@ -67,15 +69,15 @@ def main() -> None:
             continue
         spark.sparkContext.setJobDescription(f"measure:{name}")
         try:
-            samples = time_samples(spark, spec.build, args.dir, args.runs, consume)
+            walls, cpu_s = time_samples(spark, spec.build, args.dir, args.runs, consume)
         except Exception as e:  # noqa: BLE001
             print(f"{name}: FAIL {type(e).__name__}: {e}".splitlines()[0][:200])
             continue
-        med = sorted(samples)[len(samples) // 2]
-        la = loadavg_now()
+        med = sorted(walls)[len(walls) // 2]
+        cpu = sorted(cpu_s)[len(cpu_s) // 2]
         print(
-            f"{name}: median={med:.3f} min={min(samples):.3f} "
-            f"samples={[round(s, 3) for s in samples]} load={la and la[0]}"
+            f"{name}: median={med:.3f} min={min(walls):.3f} "
+            f"samples={[round(s, 3) for s in walls]} cpu_s={cpu:.2f}"
         )
     spark.stop()
 

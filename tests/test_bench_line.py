@@ -4,7 +4,10 @@ pushed the two per-query maps past the window — BENCH_r10.json
 recorded ``parsed: null`` and the round's official number only
 survived in git). ``compact_stdout_line`` now hard-caps the line and
 degrades stepwise; these tests pin the cap, the degradation order,
-and that the HEADLINE set as currently registered fits."""
+the exact line for one fixed artifact, and that the HEADLINE set as
+currently registered fits. They also pin ``run_set``, the one per-key
+measurement loop: fault isolation, the fresh-session retry and the
+per-key CPU seconds."""
 
 from __future__ import annotations
 
@@ -121,17 +124,17 @@ def test_run_set_isolates_a_raising_spec(spark):
     def consume(df):
         df.collect()
 
-    t, m, e, load, probes, cpu = bench.run_set(
-        spark, registry, "/unused", 2, ["good_a", "boom", "good_b"],
+    sess = [spark]
+    t, m, cpu_s, e, retried = bench.run_set(
+        sess, registry, "/unused", 2, ["good_a", "boom", "good_b"],
         consume, with_probe=False,
     )
     assert set(t) == {"good_a", "good_b"} and set(m) == set(t)
+    assert set(cpu_s) == set(t)
     assert list(e) == ["boom"]
-    # round 14: the loadavg stamp covers EVERY attempted key (a burst
-    # can BE the error); no cpus → no mid-set probes
-    assert set(load) == {"good_a", "boom", "good_b"}
-    assert probes == {}
     assert e["boom"].startswith("RuntimeError: Python worker failed")
+    # without a session factory a failure is recorded, never retried
+    assert retried == {} and sess == [spark]
     # and the line built from a partial artifact still prints + parses
     out = {
         "metric": "headline_queries_total_wall_clock",
@@ -155,10 +158,10 @@ def test_run_set_missing_probe_module_is_isolated(spark, monkeypatch):
         raise RuntimeError("index build exploded")
 
     monkeypatch.setattr(ing, "bucketed_index_build", raising_build)
-    t, m, e, _load, _probes, _cpu = bench.run_set(
-        spark, {}, "/unused", 1, [], lambda df: df.collect(), with_probe=True
+    t, m, cpu_s, e, retried = bench.run_set(
+        [spark], {}, "/unused", 1, [], lambda df: df.collect(), with_probe=True
     )
-    assert "dedup_incremental_bucketed_probe" in e and not t
+    assert "dedup_incremental_bucketed_probe" in e and not t and not cpu_s
 
 
 def test_line_tolerates_missing_calibration():
@@ -184,11 +187,12 @@ def test_errs_survive_every_degradation_step():
 
 
 def test_run_isolated_keys_retries_in_fresh_session():
-    # first attempt throws (the r11 'connect back' shape), the retry in
-    # a fresh session succeeds: the number is recorded plus a retried
+    # the HEADLINE_ISOLATED path: run_set with a session factory. First
+    # attempt throws (the r11 'connect back' shape), the retry in a
+    # fresh session succeeds: the number is recorded plus a retried
     # note, a double failure records the error, nothing raises. Pure
-    # stubs — run_isolated_keys stops sessions, so the real shared
-    # spark fixture must never enter the holder.
+    # stubs — the retry stops sessions, so the real shared spark
+    # fixture must never enter the holder.
     attempts = []
 
     def flaky(s, d):
@@ -215,89 +219,21 @@ def test_run_isolated_keys_retries_in_fresh_session():
         made.append(1)
         return _FakeSpark()
 
-    retried = {}
-    t, m, e, load, cpu = bench.run_isolated_keys(
-        sess, registry, ["flaky_key", "dead_key"], "/unused", 2,
-        lambda df: None, new_session, retried,
+    first = sess[0]
+    t, m, cpu_s, e, retried = bench.run_set(
+        sess, registry, "/unused", 2, ["flaky_key", "dead_key"],
+        lambda df: None, with_probe=False, new_session=new_session,
     )
     # flaky_key: measured on retry, noted; dead_key: double failure recorded
-    assert "flaky_key" in t and "flaky_key" in retried
+    assert set(t) == {"flaky_key"} and set(cpu_s) == {"flaky_key"}
+    assert set(retried) == {"flaky_key"}
     assert retried["flaky_key"].startswith("RuntimeError: Python worker")
-    assert "dead_key" in e and "retry:" in e["dead_key"]
+    assert set(e) == {"dead_key"}
+    assert e["dead_key"].startswith("RuntimeError: StreamingQueryException")
+    assert "| retry: RuntimeError: StreamingQueryException" in e["dead_key"]
     # both failures stopped-and-replaced the held session
     assert len(stops) == 2 and len(made) == 2
-    assert isinstance(sess[0], _FakeSpark)
-    # round 14: per-key loadavg stamped for measured AND dead keys
-    assert set(load) == {"flaky_key", "dead_key"}
-
-
-# --- round 13: self-contained weather adjudication (VERDICT r12 #2) ---------
-#
-# BENCH.json must carry the box state (loadavg before/after each set)
-# and the calibration sample spread so a contention-tainted run is
-# identifiable from the artifact alone — the r12 driver run's scaled
-# column (guest load 15) vs the same-day quiet-window run could only
-# be told apart via BASELINE.md archaeology.
-
-
-def test_loadavg_now_shape():
-    la = bench.loadavg_now()
-    # linux container: three non-negative floats (1/5/15 min)
-    assert la is not None and len(la) == 3
-    assert all(isinstance(x, float) and x >= 0 for x in la)
-
-
-def test_cpu_now_shape_and_delta_pct():
-    # linux container: 8 monotone cumulative jiffie counters; the
-    # delta classifier returns bounded percentages that sum <= 100
-    a = bench.cpu_now()
-    assert a is not None and len(a) == 8 and all(v >= 0 for v in a)
-    import time
-
-    time.sleep(0.05)
-    b = bench.cpu_now()
-    assert all(y >= x for x, y in zip(a, b))
-    pct = bench.cpu_delta_pct(a, b)
-    assert pct is not None and set(pct) == {"u", "s", "w", "st"}
-    assert all(0.0 <= v <= 100.0 for v in pct.values())
-    assert sum(pct.values()) <= 100.0 + 1e-6
-    # degenerate inputs -> None, never a crash
-    assert bench.cpu_delta_pct(None, b) is None
-    assert bench.cpu_delta_pct(a, a) is None
-
-
-def test_run_set_stamps_per_key_cpu_breakdown(spark):
-    def good(s, d):
-        return s.range(2)
-
-    registry = {"k00": _Spec(good), "k01": _Spec(good)}
-    t, m, e, load, probes, cpu = bench.run_set(
-        spark, registry, "unused", 1, ["k00", "k01"], lambda df: df.collect(),
-        with_probe=False,
-    )
-    assert not e
-    # on this linux box the cpu map must cover every completed key
-    # with the {u,s,w,st} percentage breakdown
-    assert set(cpu) == {"k00", "k01"}
-    for pct in cpu.values():
-        assert set(pct) == {"u", "s", "w", "st"}
-        assert all(0.0 <= v <= 100.0 for v in pct.values())
-
-
-def test_committed_bench_artifact_carries_weather_fields():
-    import os
-
-    path = os.path.join(os.path.dirname(bench.__file__), "BENCH.json")
-    with open(path) as fh:
-        b = json.load(fh)
-    assert "calibration_spread" in b, "re-stamp BENCH.json with round-13 bench.py"
-    assert isinstance(b["calibration_spread"], float)
-    la = b.get("loadavg", {})
-    assert "sf_pre" in la and "sf_post" in la
-    assert all(len(v) == 3 for v in la.values())
-    if "scaled_calibration" in b:
-        assert "scaled_calibration_spread" in b
-        assert "scaled_pre" in la and "scaled_post" in la
+    assert isinstance(sess[0], _FakeSpark) and sess[0] is not first
 
 
 def test_errs_list_is_bounded_on_the_line():
@@ -311,181 +247,83 @@ def test_errs_list_is_bounded_on_the_line():
     assert len(json.dumps(d, separators=(",", ":"))) <= bench.STDOUT_LINE_LIMIT
 
 
-# --- round 14: per-key weather localization (VERDICT r13 "next" #3) ---------
-#
-# The r13 six-run shakedown proved the set-opening calibration_spread
-# cannot catch BURSTY steal landing mid-set (run 6: pristine 0.012
-# spread, worst column of the day). run_set now stamps the 1-min
-# loadavg per key and re-times the frozen calibration probe every
-# MID_PROBE_EVERY completed keys, so a burst is bracketed to the keys
-# it actually hit — in the committed BENCH.json only, never the line.
-
-
-def test_mid_set_probe_cadence(spark, monkeypatch):
-    fired = []
-
-    def fake_probe(s, cpus):
-        fired.append(cpus)
-        return 0.8
-
-    monkeypatch.setattr(bench, "calibration_probe_once", fake_probe)
-
-    def good(s, d):
-        return s.range(2)
-
-    names = [f"k{i:02d}" for i in range(bench.MID_PROBE_EVERY * 2 + 1)]
-    registry = {n: _Spec(good) for n in names}
-    t, m, e, load, probes, cpu = bench.run_set(
-        spark, registry, "/unused", 1, names, lambda df: df.collect(),
-        with_probe=False, cpus=4,
-    )
-    assert not e and set(load) == set(names)
-    # exactly one probe after each MID_PROBE_EVERY-th completed key,
-    # keyed by the name of the key just finished
-    assert fired == [4, 4]
-    assert set(probes) == {
-        names[bench.MID_PROBE_EVERY - 1],
-        names[2 * bench.MID_PROBE_EVERY - 1],
-    }
-    assert all(v == 0.8 for v in probes.values())
-
-
-def test_sf01_probe_cadence_is_tightened_to_every_4(spark, monkeypatch):
-    """Round 15: both r14 bursts landed between every-8 probes (keys
-    9–13 and 7–9 — inside the 7-key blind window). The sf0.1 column
-    now probes every MID_PROBE_EVERY_SF01=4 completed keys so a burst
-    brackets to ≤3 keys; main() passes it for the sf set only."""
-    import inspect
-
-    fired = []
-
-    def fake_probe(s, cpus):
-        fired.append(cpus)
-        return 0.8
-
-    monkeypatch.setattr(bench, "calibration_probe_once", fake_probe)
-    assert bench.MID_PROBE_EVERY_SF01 == 4
-    names = [f"k{i:02d}" for i in range(9)]
-    registry = {n: _Spec(lambda s, d: s.range(1)) for n in names}
-    t, m, e, load, probes, cpu = bench.run_set(
-        spark, registry, "/unused", 1, names, lambda df: df.collect(),
-        with_probe=False, cpus=4, probe_every=bench.MID_PROBE_EVERY_SF01,
-    )
-    assert not e and len(fired) == 2
-    assert set(probes) == {names[3], names[7]}
-    # and main() actually wires the tight cadence to the sf column
-    src = inspect.getsource(bench.main)
-    assert "probe_every=MID_PROBE_EVERY_SF01" in src
-
-
-def test_mid_set_probe_failure_does_not_kill_the_set(spark, monkeypatch):
-    def exploding_probe(s, cpus):
-        raise RuntimeError("probe session died")
-
-    monkeypatch.setattr(bench, "calibration_probe_once", exploding_probe)
-    names = [f"k{i:02d}" for i in range(bench.MID_PROBE_EVERY)]
-    registry = {n: _Spec(lambda s, d: s.range(1)) for n in names}
-    t, m, e, load, probes, cpu = bench.run_set(
-        spark, registry, "/unused", 1, names, lambda df: df.collect(),
-        with_probe=False, cpus=4,
-    )
-    assert set(t) == set(names) and not e and probes == {}
-
-
 def test_per_key_weather_maps_never_reach_the_printed_line():
     out = _out(8)
-    out["queries_load"] = {f"some_headline_query_name_{i:03d}": 1.5 for i in range(8)}
-    out["mid_calibrations"] = {"some_headline_query_name_007": 0.84}
-    out["queries_cpu"] = {f"some_headline_query_name_{i:03d}": {"u": 50.0, "s": 5.0, "w": 0.0, "st": 3.2} for i in range(8)}
-    out["scaled_queries_load"] = dict(out["queries_load"])
-    out["scaled_mid_calibrations"] = dict(out["mid_calibrations"])
-    out["scaled_queries_cpu"] = dict(out["queries_cpu"])
+    out["queries_cpu_s"] = {f"some_headline_query_name_{i:03d}": 2.5 for i in range(8)}
+    out["scaled_queries_cpu_s"] = dict(out["queries_cpu_s"])
     d = json.loads(bench.compact_stdout_line(out))
+    assert d == json.loads(bench.compact_stdout_line(_out(8)))
     for k in d:
-        assert "load" not in k and "mid_calibrations" not in k and "cpu" not in k
+        assert "cpu" not in k
 
 
-def test_calibration_probe_once_matches_calibration_times(spark):
-    # the mid-set probe IS the frozen calibration query: same plan,
-    # same constant result-blindness — one run returns a positive sec
+def test_calibration_times_one_run(spark):
+    # one timed sample after the untimed warm-up: median == min, and
+    # a single sample has no spread
     import os
 
     cpus = min(8, os.cpu_count() or 8)
-    v = bench.calibration_probe_once(spark, cpus)
-    assert isinstance(v, float) and v > 0
+    med, low, spread = bench.calibration_times(spark, cpus, 1)
+    assert isinstance(med, float) and med > 0
+    assert low == med and spread == 0.0
 
 
-# --- round 16: harness fixes (ADVICE r15 + VERDICT r15 #3) -------------------
+def test_run_set_records_median_cpu_seconds_per_key(spark):
+    def work(s, d):
+        return s.range(0, 2_000_000).selectExpr("bit_xor(xxhash64(id)) AS h")
 
+    def bad(s, d):
+        raise RuntimeError("boom")
 
-def test_cpu_now_short_procstat_line_returns_none(monkeypatch):
-    """A /proc/stat cpu line without the steal field (pre-2.6.11
-    kernels) must yield None per the docstring's 'None where
-    unsupported' contract — not a short list that IndexErrors inside
-    cpu_delta_pct mid-set (ADVICE r15 low)."""
-    import builtins
-    import io
-
-    real_open = builtins.open
-
-    def fake_open(path, *a, **kw):
-        if path == "/proc/stat":
-            return io.StringIO("cpu  100 0 50 900 10\n")
-        return real_open(path, *a, **kw)
-
-    monkeypatch.setattr(builtins, "open", fake_open)
-    assert bench.cpu_now() is None
-
-
-def test_mid_set_probe_burn_not_charged_to_next_key(spark, monkeypatch):
-    """The calibration probe saturates every core by design; its CPU
-    burn must be re-snapshotted away so it is not charged to the NEXT
-    key's queries_cpu delta as user time (ADVICE r15 medium)."""
-    snaps = []
-    real_cpu_now = bench.cpu_now
-
-    def tracking_cpu_now():
-        s = real_cpu_now()
-        snaps.append(s)
-        return s
-
-    monkeypatch.setattr(bench, "cpu_now", tracking_cpu_now)
-    monkeypatch.setattr(
-        bench, "calibration_probe_once", lambda s, cpus: 0.8
+    registry = {"k00": _Spec(work), "boom": _Spec(bad), "k01": _Spec(work)}
+    t, m, cpu_s, e, retried = bench.run_set(
+        [spark], registry, "/unused", 2, ["k00", "boom", "k01"],
+        lambda df: df.collect(), with_probe=False,
     )
-    names = [f"k{i:02d}" for i in range(bench.MID_PROBE_EVERY)]
-    registry = {n: _Spec(lambda s, d: s.range(1)) for n in names}
-    bench.run_set(
-        spark, registry, "/unused", 1, names, lambda df: df.collect(),
-        with_probe=False, cpus=4,
-    )
-    # one snapshot at set open + one per key + one EXTRA after the
-    # probe that fires on the MID_PROBE_EVERY-th key
-    assert len(snaps) == 1 + len(names) + 1
+    assert set(e) == {"boom"} and set(t) == {"k00", "k01"}
+    assert set(cpu_s) == {"k00", "k01"}
+    assert all(isinstance(v, float) and v > 0 for v in cpu_s.values())
 
 
-def test_mid_set_probe_resnapshots_even_when_probe_raises(spark, monkeypatch):
-    snaps = []
-    real_cpu_now = bench.cpu_now
+#: compact_stdout_line's output for one fixed artifact, byte for byte:
+#: the driver parses this line, so any change to it is a contract change
+GOLDEN_ARTIFACT = {
+    "metric": "headline_queries_total_wall_clock",
+    "value": 37.7912,
+    "unit": "sec",
+    "sf": 0.1,
+    "cpus": 4,
+    "queries": {
+        "q1_pricing_summary": 1.2345,
+        "variant_events_agg": 0.4,
+        "dedup_incremental_bucketed_probe": 0.333,
+    },
+    "queries_min": {"q1_pricing_summary": 1.1},
+    "queries_cpu_s": {"q1_pricing_summary": 3.21},
+    "calibration": 0.7534,
+    "calibration_min": 0.74,
+    "calibration_spread": 0.02,
+    "value_per_calib": 50.16,
+    "scale_k": 10,
+    "scaled_total": 61.9849,
+    "scaled_calibration": 0.6812,
+    "scaled_queries": {"q1_pricing_summary": 9.876, "variant_events_agg": 2.005},
+    "scaled_queries_cpu_s": {"q1_pricing_summary": 30.5},
+    "errors": {"stream_transform_with_state": "RuntimeError: boom"},
+    "scaled_errors": {"__scaled_set__": "OSError: disk"},
+}
+GOLDEN_LINE = (
+    '{"metric":"headline_queries_total_wall_clock","value":37.79,'
+    '"unit":"sec","sf":0.1,"full":"BENCH.json","queries":'
+    '{"q1_pricing_summary":1.23,"variant_events_agg":0.4},"calib":0.75,'
+    '"scale_k":10,"scaled_total":61.98,"s_calib":0.68,"scaled_queries":'
+    '{"q1_pricing_summary":9.88,"variant_events_agg":2.0},'
+    '"errs":["__scaled_set__","stream_transform_with_state"]}'
+)
 
-    def tracking_cpu_now():
-        s = real_cpu_now()
-        snaps.append(s)
-        return s
 
-    def exploding_probe(s, cpus):
-        raise RuntimeError("probe died")
-
-    monkeypatch.setattr(bench, "cpu_now", tracking_cpu_now)
-    monkeypatch.setattr(bench, "calibration_probe_once", exploding_probe)
-    names = [f"k{i:02d}" for i in range(bench.MID_PROBE_EVERY)]
-    registry = {n: _Spec(lambda s, d: s.range(1)) for n in names}
-    t, m, e, load, probes, cpu = bench.run_set(
-        spark, registry, "/unused", 1, names, lambda df: df.collect(),
-        with_probe=False, cpus=4,
-    )
-    assert set(t) == set(names) and not e and probes == {}
-    assert len(snaps) == 1 + len(names) + 1
+def test_compact_stdout_line_golden():
+    assert bench.compact_stdout_line(GOLDEN_ARTIFACT) == GOLDEN_LINE
 
 
 def test_artifact_paths_include_core_stamped_twin():

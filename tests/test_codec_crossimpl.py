@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -228,3 +229,86 @@ def test_property_get_path_reaches_every_node(obj):
         assert codec.get_path(val, meta, "$['\x00nope']") is None
     if isinstance(obj, list):
         assert codec.get_path(val, meta, f"$[{len(obj)}]") is None
+
+
+# --- Track N vs Track C: strict JSON out, every divergence pinned -----------
+#
+# (input text, Track N ``to_json(try_parse_json(t))``, Track C
+# ``batch_from_json`` → ``BatchDecoder.to_json``); None = rejected at
+# parse (SQL NULL on Track N, a null slot under ``tolerant`` on Track C).
+# ARCHITECTURE.md's "Track N vs Track C" table says which side each row
+# follows and why.
+_PI_36 = "3.14159265358979323846264338327950288"
+CROSS_TRACK_ROWS = [
+    ("1E400", '"Infinity"', '"Infinity"'),
+    ("-1E400", '"-Infinity"', '"-Infinity"'),
+    ("[1E400]", '["Infinity"]', '["Infinity"]'),
+    ('{"a":-1E400}', '{"a":"-Infinity"}', '{"a":"-Infinity"}'),
+    ("NaN", None, None),
+    ("[NaN]", None, None),
+    ('{"a":Infinity}', None, None),
+    ("-Infinity", None, None),
+    ("-0.0", "0", "-0.0"),
+    ("7.0", "7", "7.0"),
+    ("1.00000000000000000001", "1.00000000000000000001", "1.0"),
+    (_PI_36, _PI_36, "3.141592653589793"),
+    ('{"a":1,"a":2}', None, '{"a":2}'),
+]
+
+
+def _track_c_json(text: str) -> str | None:
+    meta, [val] = codec.batch_from_json([text], tolerant=True)
+    return None if val is None else codec.BatchDecoder().to_json(val, meta)
+
+
+def _strict_loads(text: str):
+    def reject(token):
+        raise ValueError(f"non-JSON token {token}")
+
+    return json.loads(text, parse_constant=reject)
+
+
+def test_cross_track_json_contract(spark):
+    from pyspark.sql import functions as F
+
+    from datafusion_functions_variant_spark.functions.explicit import _coerce
+
+    texts = [t for t, _, _ in CROSS_TRACK_ROWS]
+    native = [
+        r[0]
+        for r in spark.createDataFrame([(t,) for t in texts], "t string")
+        .select(F.to_json(F.try_parse_json("t")))
+        .collect()
+    ]
+    for (text, track_n, track_c), got_n in zip(CROSS_TRACK_ROWS, native):
+        assert got_n == track_n, text
+        got_c = _track_c_json(text)
+        assert got_c == track_c, text
+        if got_c is None:
+            with pytest.raises(codec.VariantError, match="malformed JSON"):
+                codec.parse_json(text)
+        else:
+            _strict_loads(got_c)
+    # variant_get(..., 'string') on a container renders the same way
+    assert _coerce({"a": [math.inf, "é"]}, "string") == '{"a":["Infinity","é"]}'
+
+
+_any_floats = st.floats(allow_nan=True, allow_infinity=True)
+json_values_non_finite = st.recursive(
+    st.one_of(json_scalars, _any_floats),
+    lambda children: st.one_of(
+        st.lists(children, max_size=6),
+        st.dictionaries(st.text(max_size=12), children, max_size=6),
+    ),
+    max_leaves=25,
+)
+
+
+@given(json_values_non_finite)
+@settings(max_examples=200, deadline=None)
+def test_property_track_c_output_is_strict_json(obj):
+    """Whatever value reaches the codec, non-finite floats included,
+    Track C's text parses under strict JSON."""
+    meta, [val] = codec.encode_batch([obj])
+    if val is not None:
+        _strict_loads(codec.BatchDecoder().to_json(val, meta))

@@ -5,13 +5,14 @@ the reference implements in Rust (see ``/root/reference/open-variant/src/
 metadata.rs:31-81`` for metadata, ``values/write.rs`` / ``values/read.rs``
 for values, cited per-function below). This is the "explicit codec" track
 from SURVEY.md §7: it makes the binary format testable without a JVM and
-powers the pandas_udf kernels in ``functions/explicit.py`` that reproduce
-the reference's batch-shared-dictionary design.
+powers the pandas_udf kernels in ``functions/explicit.py``. Unlike the
+reference, which shares one dictionary per Arrow batch, each encoded row
+carries a dictionary of only its own keys (``encode_batch``).
 
 A variant value is two byte buffers (open-variant/README.md:11-24):
 
-* **metadata** — version header + a sorted, deduplicated dictionary of all
-  object keys; meant to be shared across many rows.
+* **metadata** — version header + a sorted, deduplicated dictionary of
+  object keys; the spec lets many values share one.
 * **value** — a tagged binary tree; object keys are integer indexes into
   the metadata dictionary.
 
@@ -33,6 +34,7 @@ import json
 import math
 import struct
 from bisect import bisect_left
+from itertools import accumulate
 from typing import Any, Iterable, Iterator
 
 VERSION = 1
@@ -128,6 +130,39 @@ def _write_uint(buf: bytearray, value: int, width: int) -> None:
     buf += value.to_bytes(width, "little", signed=False)
 
 
+#: ``struct`` codes of the widths it has one for; width 3, which a
+#: header may name and Spark's writer emits for sizes from 2**16 to
+#: 2**24 - 1, goes one ``int.from_bytes`` per value
+_UINT_FORMATS = {2: "H", 4: "I", 8: "Q"}
+
+
+def _pack_uints(values: list[int], width: int) -> bytes:
+    """``values`` as consecutive little-endian unsigned ints of ``width``
+    bytes: the layout of every offset and field-id list in the format.
+    Width 1, the common case of a per-row dictionary, is one
+    ``bytes(values)``."""
+    if width == 1:
+        return bytes(values)
+    fmt = _UINT_FORMATS.get(width)
+    if fmt is None:
+        return b"".join(v.to_bytes(width, "little") for v in values)
+    return struct.pack(f"<{len(values)}{fmt}", *values)
+
+
+def _unpack_uints(buf: bytes, pos: int, count: int, width: int):
+    """Inverse of ``_pack_uints``: ``count`` little-endian unsigned ints
+    of ``width`` bytes from ``buf[pos:]``, as an indexable sequence."""
+    if width == 1:
+        return buf[pos : pos + count]
+    fmt = _UINT_FORMATS.get(width)
+    if fmt is None:
+        return [
+            int.from_bytes(buf[p : p + width], "little")
+            for p in range(pos, pos + width * count, width)
+        ]
+    return struct.unpack_from(f"<{count}{fmt}", buf, pos)
+
+
 def _read_uint(buf: bytes, pos: int, width: int) -> int:
     return int.from_bytes(buf[pos : pos + width], "little", signed=False)
 
@@ -144,21 +179,20 @@ def build_metadata(keys: Iterable[str]) -> bytes:
     <utf8 string bytes>``; header bits 0-3 version, bit 4 sorted_strings,
     bits 6-7 offset_size_minus_one.
     """
-    sorted_keys = sorted(set(keys))
-    encoded = [k.encode("utf-8") for k in sorted_keys]
-    total = sum(len(e) for e in encoded)
-    width = _byte_width(total)
+    return _metadata_blob([k.encode("utf-8") for k in sorted(set(keys))])
+
+
+def _metadata_blob(encoded: list[bytes]) -> bytes:
+    """``build_metadata``'s layout over already sorted, distinct UTF-8
+    keys."""
+    lens = [len(e) for e in encoded]
+    width = _byte_width(sum(lens))
     header = VERSION | (1 << 4) | ((width - 1) << 6)
-    buf = bytearray([header])
-    _write_uint(buf, len(encoded), width)
-    off = 0
-    _write_uint(buf, 0, width)
-    for e in encoded:
-        off += len(e)
-        _write_uint(buf, off, width)
-    for e in encoded:
-        buf += e
-    return bytes(buf)
+    return (
+        bytes((header,))
+        + _pack_uints([len(lens), 0, *accumulate(lens)], width)
+        + b"".join(encoded)
+    )
 
 
 class Metadata:
@@ -168,10 +202,7 @@ class Metadata:
     (test at metadata.rs:206-207).
     """
 
-    __slots__ = (
-        "buf", "version", "sorted_strings", "_width", "_len", "_strings",
-        "_index",
-    )
+    __slots__ = ("buf", "version", "sorted_strings", "_len", "_strings", "_index")
 
     def __init__(self, buf: bytes):
         if not buf:
@@ -180,18 +211,25 @@ class Metadata:
         self.buf = buf
         self.version = header & 0x0F
         self.sorted_strings = bool(header & 0x10)
-        self._width = ((header >> 6) & 0x03) + 1
-        w = self._width
-        self._len = _read_uint(buf, 1, w)
-        offsets_start = 1 + w
-        strings_start = offsets_start + (self._len + 1) * w
-        offs = [
-            _read_uint(buf, offsets_start + i * w, w) for i in range(self._len + 1)
-        ]
-        self._strings = [
-            buf[strings_start + offs[i] : strings_start + offs[i + 1]].decode("utf-8")
-            for i in range(self._len)
-        ]
+        w = ((header >> 6) & 0x03) + 1
+        n = self._len = _read_uint(buf, 1, w)
+        offs = _unpack_uints(buf, 1 + w, n + 1, w)
+        area = buf[1 + w + (n + 1) * w :]
+        self._strings = [area[offs[i] : offs[i + 1]].decode("utf-8") for i in range(n)]
+
+    @classmethod
+    def from_sorted_keys(cls, keys: tuple[str, ...]) -> "Metadata":
+        """The metadata of sorted, distinct ``keys``, built without
+        parsing its blob back: ``buf`` is ``build_metadata(keys)`` and
+        the id index is filled in."""
+        m = cls.__new__(cls)
+        m.buf = _metadata_blob([k.encode("utf-8") for k in keys])
+        m.version = VERSION
+        m.sorted_strings = True
+        m._len = len(keys)
+        m._strings = keys
+        m._index = dict(zip(keys, range(len(keys))))
+        return m
 
     def __len__(self) -> int:
         return self._len
@@ -204,7 +242,8 @@ class Metadata:
     def find_string(self, key: str) -> int | None:
         """String → dictionary id (metadata.rs:162-184's binary search,
         memoized into a dict on first use — one Metadata serves every
-        row of a batch, so the per-row bisect was pure re-derivation;
+        row of a batch with its key set, so a per-row bisect would be
+        re-derivation;
         ``setdefault`` keeps the leftmost id for duplicate strings,
         exactly what bisect_left returned)."""
         if not self.sorted_strings:
@@ -393,8 +432,7 @@ class ArrayBuilder:
         header = BASIC_ARRAY | ((width - 1) << 2) | ((1 if is_large else 0) << 4)
         out = bytearray([header])
         _write_uint(out, n, 4 if is_large else 1)
-        for off in self._offsets:
-            _write_uint(out, off, width)
+        out += _pack_uints(self._offsets, width)
         out += self._data
         return bytes(out)
 
@@ -515,10 +553,8 @@ class ObjectBuilder:
         )
         out = bytearray([header])
         _write_uint(out, n, 4 if is_large else 1)
-        for fid, _, _ in entries:
-            _write_uint(out, fid, id_width)
-        for off in offsets:
-            _write_uint(out, off, off_width)
+        out += _pack_uints([e[0] for e in entries], id_width)
+        out += _pack_uints(offsets, off_width)
         out += packed
         return bytes(out)
 
@@ -742,10 +778,11 @@ class ObjectView:
         return None
 
     def items(self, metadata: Metadata) -> Iterator[tuple[str, Variant]]:
-        for i in range(self.n):
-            key = metadata.get_string(self.get_field_id(i))
-            start = self._vals_start + self.get_offset(i)
-            yield key, Variant(self.buf[start:])
+        buf, n, vals = self.buf, self.n, self._vals_start
+        fids = _unpack_uints(buf, self._ids_start, n, self._id_width)
+        offs = _unpack_uints(buf, self._offs_start, n, self._off_width)
+        for fid, off in zip(fids, offs):
+            yield metadata.get_string(fid), Variant(buf[vals + off :])
 
 
 class ArrayView:
@@ -782,8 +819,10 @@ class ArrayView:
         return Variant(self.buf[start:end])
 
     def __iter__(self) -> Iterator[Variant]:
+        buf, vals = self.buf, self._vals_start
+        offs = _unpack_uints(buf, self._offs_start, self.n + 1, self._off_width)
         for i in range(self.n):
-            yield self.get_element(i)
+            yield Variant(buf[vals + offs[i] : vals + offs[i + 1]])
 
 
 # ---------------------------------------------------------------------------
@@ -850,10 +889,12 @@ def _encode_object(value: dict, metadata: Metadata) -> bytes:
     """One dict → its object value bytes. Shared by ``convert_value``
     and the top-level fast path in ``encode_batch`` (an object ROW
     goes straight to its bytes — no scratch bytearray and no extra
-    full-row copy per row; round 16, guide §4.2)."""
+    full-row copy per row; round 16, guide §4.2). Keys go in sorted
+    order: against a sorted dictionary their field ids then arrive
+    increasing, and ``ObjectBuilder.finish`` skips its sort and repack."""
     ob = ObjectBuilder(metadata)
-    for k, v in value.items():
-        convert_value(v, ob.begin_child(k), metadata)
+    for k in sorted(value):
+        convert_value(value[k], ob.begin_child(k), metadata)
         ob.seal_child()
     return ob.finish()
 
@@ -879,8 +920,8 @@ def parse_json(text: str) -> Any:
 
 def batch_from_json(
     texts: Iterable[str | None], tolerant: bool = False
-) -> tuple[bytes, list[bytes | None]]:
-    """The flagship kernel: JSON strings → (shared metadata, value buffers).
+) -> tuple[list[bytes], list[bytes | None]]:
+    """The flagship kernel: JSON strings → (per-row metadata, value buffers).
 
     Mirrors ``variant_from_json`` (json.rs:38-81): parse every row on
     its own, then ``encode_batch``. A malformed row fails the whole
@@ -899,21 +940,39 @@ def batch_from_json(
     return encode_batch(rows)
 
 
-def encode_batch(rows: list[Any]) -> tuple[bytes, list[bytes | None]]:
-    """Parsed JSON rows → (shared metadata, value buffers): ONE metadata
-    dictionary from the union of all keys (json.rs:51-55), then each
-    row encoded against it. A ``None`` row becomes a null slot."""
-    keys: set[str] = set()
-    for p in rows:
-        collect_keys(p, keys)
-    metadata_buf = build_metadata(keys)
-    metadata = Metadata(metadata_buf)
+#: The metadata of a row without keys, and of a null row: the struct's
+#: metadata field is non-nullable.
+EMPTY_METADATA = build_metadata(())
 
+
+def encode_batch(rows: list[Any]) -> tuple[list[bytes], list[bytes | None]]:
+    """Parsed JSON rows → (per-row metadata, value buffers). Row *i*'s
+    metadata is ``build_metadata`` of exactly row *i*'s keys, as in
+    Spark's own per-value layout; rows with the same key set share one
+    blob and one ``Metadata``. A ``None`` row becomes a null value slot
+    with ``EMPTY_METADATA``.
+
+    The reference shares one dictionary per batch instead
+    (json.rs:51-63, a ``Dictionary<Int8, Binary>`` column), but Spark
+    rejects a dictionary-encoded field returned from ``mapInArrow``, and
+    a plain binary column would repeat the batch's whole key space in
+    every row."""
+    by_keys: dict[tuple[str, ...], Metadata] = {}
+    metas: list[bytes] = []
     values: list[bytes | None] = []
     for p in rows:
         if p is None:
+            metas.append(EMPTY_METADATA)
             values.append(None)
-        elif type(p) is dict:
+            continue
+        keys: set[str] = set()
+        collect_keys(p, keys)
+        sorted_keys = tuple(sorted(keys))
+        metadata = by_keys.get(sorted_keys)
+        if metadata is None:
+            metadata = by_keys[sorted_keys] = Metadata.from_sorted_keys(sorted_keys)
+        metas.append(metadata.buf)
+        if type(p) is dict:
             # object row (the overwhelmingly common shape): straight
             # to its bytes — no scratch bytearray, no full-row copy
             values.append(_encode_object(p, metadata))
@@ -921,17 +980,16 @@ def encode_batch(rows: list[Any]) -> tuple[bytes, list[bytes | None]]:
             b = bytearray()
             convert_value(p, b, metadata)
             values.append(bytes(b))
-    return metadata_buf, values
+    return metas, values
 
 
 class BatchDecoder:
     """Decodes the rows of one batch against their metadata blobs.
 
-    Every row of a Track C batch carries the batch's one shared
-    dictionary, so each distinct blob is parsed into ``Metadata`` once,
-    not once per row (rebuilding it per row cost more than the decode
-    itself), and each parsed path's field ids are resolved once per
-    blob. Make one per batch."""
+    Each row carries its own blob, and rows with the same key set carry
+    identical ones, so each distinct blob is parsed into ``Metadata``
+    once, not once per row, and each parsed path's field ids are
+    resolved once per blob. Make one per batch."""
 
     def __init__(self) -> None:
         self._metas: dict[bytes, Metadata] = {}
@@ -1059,9 +1117,10 @@ def get_path(
     Batch callers (the pandas UDFs) should instead parse the path once
     with ``parse_json_path``, take the metadata and field ids from a
     ``BatchDecoder``, and evaluate rows via ``walk_path`` /
-    ``get_path_prepared`` — in a batch every row shares the metadata,
-    so per-row Metadata construction + dictionary lookups are pure
-    overhead (this was ~5x the cost of the actual decode).
+    ``get_path_prepared`` — rows with the same key set share one
+    metadata blob, so per-row Metadata construction + dictionary
+    lookups are overhead (this was ~5x the cost of the actual decode
+    when every row carried the batch's whole dictionary).
     """
     metadata = Metadata(metadata_buf)
     steps = parse_json_path(path)

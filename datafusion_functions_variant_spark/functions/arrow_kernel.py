@@ -1,9 +1,12 @@
 """mapInArrow variant kernel — the closest Spark analogue of the
 reference's Arrow-native ``variant_from_json`` (json.rs:38-81): the
-batch arrives as a pyarrow RecordBatch (zero-copy from the JVM), the
-key dictionary is built once per batch, and the output StructArray
-mirrors the reference's ``{metadata: Binary, values: Binary}`` layout
-(json.rs:67-80) — no pandas materialization in between.
+batch arrives as a pyarrow RecordBatch (zero-copy from the JVM), and
+the output StructArray mirrors the reference's
+``{metadata: Binary, values: Binary}`` layout (json.rs:67-80) — no
+pandas materialization in between. Each row's metadata holds only its
+own keys (``codec.encode_batch``): Spark rejects the reference's
+dictionary-encoded metadata field when a ``mapInArrow`` kernel returns
+it (``UNSUPPORTED_CALL``, ``ArrowColumnVector``'s ``getBinary``).
 """
 
 from __future__ import annotations
@@ -34,10 +37,10 @@ def variant_from_json_arrow(df: DataFrame, text_col: str, out_col: str = "v") ->
     def kernel(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
             texts = batch.column(text_col).to_pylist()
-            meta, values = codec.batch_from_json(texts)
+            metas, values = codec.batch_from_json(texts)
             struct = pa.StructArray.from_arrays(
                 [
-                    pa.array([meta] * len(values), type=pa.binary()),
+                    pa.array(metas, type=pa.binary()),
                     pa.array(values, type=pa.binary()),
                 ],
                 names=["metadata", "value"],

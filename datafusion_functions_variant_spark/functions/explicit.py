@@ -1,23 +1,23 @@
 """Track C — explicit-codec variant kernels as vectorized pandas UDFs.
 
-This track reproduces the reference's *distinguishing* design — the
-batch-shared metadata dictionary (arrow-open-variant/src/json.rs:51-63:
-one metadata blob per Arrow batch, dictionary-encoded across rows) —
-which Spark's native VariantType does NOT expose (it stores metadata
-per value). The physical representation is a plain
-``struct<metadata: binary, value: binary>`` column, mirroring the
-reference's ``StructArray{metadata, values}`` (json.rs:67-80).
+The physical representation is a plain ``struct<metadata: binary,
+value: binary>`` column, mirroring the reference's
+``StructArray{metadata, values}`` (json.rs:67-80). Each row's metadata
+holds only that row's keys, as in Spark's native VariantType. The
+reference instead shares one metadata blob per Arrow batch
+(json.rs:51-63, dictionary-encoded across rows), but Spark rejects a
+dictionary-encoded field returned from ``mapInArrow``, and a plain
+binary column would copy the batch's whole dictionary into every row.
 
 Scale notes:
 
 * All kernels are Arrow-batched pandas UDFs — the JVM→Python channel
-  is zero-copy per batch; within a batch, key collection + metadata
-  build happen ONCE (the reference's amortization,
-  open-variant/README.md:55-57).
-* The metadata bytes are identical for every row of a batch; Spark
-  can't dictionary-encode a struct field across rows, so the sharing
-  is realized as parquet dictionary encoding at write time (identical
-  byte strings → one dictionary entry per row group).
+  is zero-copy per batch. Within a batch, rows with the same key set
+  share one metadata blob, built and parsed once
+  (``codec.encode_batch``, ``codec.BatchDecoder``): the reference's
+  amortization (open-variant/README.md:55-57) at key-set grain.
+* Identical blobs also collapse into one parquet dictionary entry per
+  row group at write time.
 * These UDFs are opaque to Catalyst (no pushdown through them) — keep
   them at ingestion/extraction edges and shred hot fields early
   (functions/variant.py:shred).
@@ -55,22 +55,24 @@ VARIANT_STRUCT = StructType(
 
 @pandas_udf(VARIANT_STRUCT)
 def variant_from_json(texts: pd.Series) -> pd.DataFrame:
-    """JSON strings → variant struct with ONE shared metadata per batch.
+    """JSON strings → variant struct, each row with its own metadata.
 
     Vectorized mirror of ``variant_from_json`` (json.rs:38-81): parse
-    every row, build the union key dictionary once, encode each row
-    against it. Malformed JSON fails the whole batch (json.rs:42-48).
+    every row, then encode it against the dictionary of its own keys
+    (``codec.encode_batch``). Malformed JSON fails the whole batch
+    (json.rs:42-48).
     """
-    meta, values = codec.batch_from_json(texts.tolist())
-    return pd.DataFrame({"metadata": [meta] * len(values), "value": values})
+    metas, values = codec.batch_from_json(texts.tolist())
+    return pd.DataFrame({"metadata": metas, "value": values})
 
 
 @pandas_udf(VARIANT_STRUCT)
 def try_variant_from_json(texts: pd.Series) -> pd.DataFrame:
     """Per-row-tolerant ingestion: a malformed row becomes a null value
-    slot; every other row encodes as in ``variant_from_json``."""
-    meta, values = codec.batch_from_json(texts.tolist(), tolerant=True)
-    return pd.DataFrame({"metadata": [meta] * len(values), "value": values})
+    slot (with the empty dictionary as its metadata); every other row
+    encodes as in ``variant_from_json``."""
+    metas, values = codec.batch_from_json(texts.tolist(), tolerant=True)
+    return pd.DataFrame({"metadata": metas, "value": values})
 
 
 _GETTER_TYPES = {
@@ -85,11 +87,11 @@ def variant_get(col, path: str, dtype: str = "string") -> Column:
     """Typed path extraction from an explicit variant struct column.
 
     All row-invariant work is hoisted: the JSON path parses once per
-    UDF, and per distinct metadata blob (shared across a batch — the
-    reference's amortization, open-variant/README.md:55-57) the
-    Metadata is constructed and the path's field ids are binary-
-    searched exactly once; rows only pay the value-buffer walk
-    (metadata.rs:162-184 + values/read.rs:87-93).
+    UDF, and per distinct metadata blob (shared by the rows of a batch
+    with the same key set — the reference's amortization,
+    open-variant/README.md:55-57) the Metadata is constructed and the
+    path's field ids are resolved exactly once; rows only pay the
+    value-buffer walk (metadata.rs:162-184 + values/read.rs:87-93).
     """
     return variant_extract(col, {"v": (path, dtype)})["v"]
 
@@ -223,13 +225,13 @@ def _col(c) -> Column:
 @pandas_udf(VARIANT_STRUCT)
 def variant_merge_patch(vs: pd.DataFrame, patches: pd.Series) -> pd.DataFrame:
     """RFC 7386 merge patch at the VARIANT level: decode each target
-    value against the batch-shared dictionary, apply the (JSON text)
-    patch via codec.merge_patch — null deletes, objects recurse,
-    scalars replace — and re-encode the whole batch against ONE new
-    union dictionary (the post-merge key set can both shrink and grow,
-    so the output batch rebuilds its shared metadata exactly like
-    ingestion does). A SQL NULL patch passes the target through; a
-    SQL NULL target stays null and its patch is not parsed. A JSON
+    value against its row's dictionary, apply the (JSON text) patch via
+    codec.merge_patch — null deletes, objects recurse, scalars replace
+    — and re-encode the batch with ``codec.encode_batch`` (the
+    post-merge key set can both shrink and grow, so each row's
+    metadata is rebuilt exactly like ingestion does). A SQL NULL patch
+    passes the target through; a SQL NULL target stays null and its
+    patch is not parsed. A JSON
     ``null`` patch replaces the target with null (RFC 7386). A
     malformed patch fails the batch with ``VariantError``."""
     dec = codec.BatchDecoder()
@@ -243,5 +245,5 @@ def variant_merge_patch(vs: pd.DataFrame, patches: pd.Series) -> pd.DataFrame:
             merged.append(target)
         else:
             merged.append(codec.merge_patch(target, codec.parse_json(patch)))
-    meta, out = codec.encode_batch(merged)
-    return pd.DataFrame({"metadata": [meta] * len(out), "value": out})
+    metas, out = codec.encode_batch(merged)
+    return pd.DataFrame({"metadata": metas, "value": out})

@@ -93,7 +93,7 @@ def variant_global_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     §7: two-pass encode): pass 1 collects the distinct key universe
     (one distinct-agg, tiny result), pass 2 encodes every row against
     the single broadcast dictionary — all rows share ONE metadata blob,
-    the write-amplification-optimal layout for a 100 TB variant sink.
+    where Track C's ingest gives each row a blob of its own keys.
     Output proves the invariant: one dictionary, every row decodable."""
     from .. import codec
     from ..functions import explicit
@@ -105,7 +105,7 @@ def variant_global_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass 1: key universe (JVM-side JSON key extraction, distinct agg).
     # The global dict IS driver state, but it must be BOUNDED: collect
     # at most cap+1 keys and refuse beyond that — an unbounded key
-    # space (e.g. ids-as-keys) should use the per-batch dictionaries of
+    # space (e.g. ids-as-keys) should use the per-row dictionaries of
     # Track C (functions/explicit.py), not a global one.
     cap = 1 << 16
     keys_rows = (
@@ -117,7 +117,7 @@ def variant_global_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     if len(keys_rows) > cap:
         raise ValueError(
             f"global dictionary key universe exceeds {cap} keys; "
-            "use per-batch dictionaries (explicit.variant_from_json) instead"
+            "use per-row dictionaries (explicit.variant_from_json) instead"
         )
     key_universe = sorted(r["k"] for r in keys_rows)
     meta = codec.build_metadata(key_universe)
@@ -183,16 +183,17 @@ def variant_global_dictionary_wide(spark: SparkSession, sf_dir: str) -> DataFram
     per task and NOT materialized per row. Pass 2 encodes each row
     against the shared dictionary; encoded rows carry ONLY their
     ~10-byte value (field ids reference the broadcast dictionary),
-    which is the write-amplification-optimal layout the reference's
-    batch-shared design points at (json.rs:165-170 repeats the
-    dictionary per Arrow batch; this is its global extension). The
+    which is the global extension of the reference's batch-shared
+    design (json.rs:165-170 shares the dictionary per Arrow batch
+    through a dictionary-encoded column; Track C's ingest gives each
+    row a blob of its own keys instead). The
     verification decode walks every value back through the same
     broadcast dictionary (codec.to_python) and re-derives key ids and
     values — one dictionary, every row decodable.
 
     Driver state is O(distinct keys) during the blob build — bounded
     and refused loudly past 2^24 keys (~hundreds of MB of strings; at
-    THAT point the key space is data, not schema, and the per-batch
+    THAT point the key space is data, not schema, and the per-row
     dictionaries of Track C are the right tool)."""
     from .. import codec
 
@@ -224,7 +225,7 @@ def variant_global_dictionary_wide(spark: SparkSession, sf_dir: str) -> DataFram
     if len(key_universe) > cap:
         raise ValueError(
             f"global dictionary key universe exceeds {cap} keys; "
-            "use per-batch dictionaries (explicit.variant_from_json) instead"
+            "use per-row dictionaries (explicit.variant_from_json) instead"
         )
     n_keys = len(key_universe)
     meta_bc = spark.sparkContext.broadcast(

@@ -1557,14 +1557,15 @@ def map_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def variant_merge_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 7386 merge patch executed at the VARIANT level on the
-    explicit-codec track (codec.py:merge_patch + the batch-shared
+    explicit-codec track (codec.py:merge_patch + the per-row
     dictionary rebuild in functions/explicit.py): even events delete
     the ``k`` key and add ``sq``; odd events only add. The result
     renders through the codec's canonical to_json (object keys in
     dictionary order), which DuckDB's ``json_merge_patch`` also
     produces for this key set — variant mutation is the capability the
     reference's append-only builders lack. Arrow-batched end to end;
-    one dictionary build per batch on each side of the patch."""
+    one dictionary build per distinct key set on each side of the
+    patch."""
     from ..functions import explicit
 
     ev = load_table(spark, sf_dir, "events")

@@ -218,7 +218,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def variant_arrow_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mapInArrow codec track (reference json.rs:38-81 at the
     Arrow level): RecordBatches cross the JVM boundary zero-copy, one
-    shared dictionary per batch, StructArray out — then typed
+    dictionary of its own keys per row, StructArray out — then typed
     extraction and aggregation on the result."""
     from ..functions import explicit
     from ..functions.arrow_kernel import variant_from_json_arrow
@@ -414,10 +414,10 @@ def grouped_map_top2_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def variant_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variant column through a parquet sink and back: ingest JSON →
-    explicit variant struct → write parquet (identical per-batch
-    metadata blobs collapse into one dictionary entry per row group —
-    the reference's shared-dictionary design realized as parquet
-    encoding) → read back → typed extraction + aggregate."""
+    explicit variant struct (each row's metadata holds its own keys) →
+    write parquet (rows with the same key set carry identical blobs,
+    which parquet dictionary encoding stores once per row group) →
+    read back → typed extraction + aggregate."""
     from ..functions import explicit
 
     path = os.path.join(_IO_DIR, "events_variant")

@@ -123,7 +123,7 @@ def variant_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def variant_explicit_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Track C end-to-end: pandas-UDF JSON→variant kernel with a
-    batch-shared dictionary (json.rs:51-63), then fused typed path
+    per-row dictionary (codec.encode_batch), then fused typed path
     extraction + typeof through OUR binary codec (one decode UDF for
     all three outputs — one Arrow transfer of the variant struct, one
     buffer walk per row) — gated by the same SQL oracle. fan_out

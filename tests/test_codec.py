@@ -181,16 +181,17 @@ def test_large_array_and_object():
 
 
 def roundtrip(texts):
-    meta_buf, values = c.batch_from_json(texts)
-    out = []
-    for v in values:
-        out.append(None if v is None else c.to_python(c.Variant(v), c.Metadata(meta_buf)))
-    return meta_buf, values, out
+    metas, values = c.batch_from_json(texts)
+    out = [
+        None if v is None else c.to_python(c.Variant(v), c.Metadata(m))
+        for m, v in zip(metas, values)
+    ]
+    return metas, values, out
 
 
 def test_nulls():
     # top-level JSON null → slot null; nested null → variant Null
-    meta_buf, values, out = roundtrip(['null', '{"a": null}', None])
+    _, values, out = roundtrip(['null', '{"a": null}', None])
     assert values[0] is None  # json.rs:185-196 special case
     assert out[1] == {"a": None}
     assert values[2] is None
@@ -208,7 +209,7 @@ def test_numbers():
 
 def test_big_integers():
     big = 2**100
-    meta_buf, values, out = roundtrip([str(big), str(-big)])
+    _, values, out = roundtrip([str(big), str(-big)])
     assert out == [big, -big]
     v = c.Variant(values[0])
     assert v.primitive_type_id == c.PRIM_DECIMAL16  # json.rs:213-218
@@ -243,13 +244,64 @@ def test_arrays():
     assert out == [[]]
 
 
-def test_batch_shared_metadata():
-    # one dictionary for the whole batch = union of all rows' keys
-    meta_buf, values, _ = roundtrip(['{"k1": 1}', '{"k2": 2}', "[]"])
-    m = c.Metadata(meta_buf)
-    assert len(m) == 2
-    assert m.find_string("k1") == 0
-    assert m.find_string("k2") == 1
+def test_per_row_metadata():
+    # each row's dictionary is exactly its own keys, nested ones included
+    texts = [
+        '{"k1": 1}', '{"k2": {"z": [{"a": 0}]}}', "[]", "7", "null", None,
+        '{"k1": 2}', '{"b": 1, "a": 2}', '{"a": 3, "b": 4}',
+    ]
+    metas, values, _ = roundtrip(texts)
+    assert metas[0] == c.build_metadata(["k1"])
+    assert metas[1] == c.build_metadata(["a", "k2", "z"])
+    # keyless rows, JSON null and SQL NULL carry the empty dictionary
+    for i in (2, 3, 4, 5):
+        assert metas[i] == c.EMPTY_METADATA == c.build_metadata([])
+    assert values[4] is None and values[5] is None
+    # rows with the same key set carry identical bytes
+    assert metas[6] == metas[0]
+    assert metas[7] == metas[8] == c.build_metadata(["a", "b"])
+    # the one-byte-width blob and the wider one both match build_metadata
+    wide = {f"key{i:04d}": i for i in range(40)}
+    metas, _, out = roundtrip([json.dumps(wide)])
+    assert metas[0] == c.build_metadata(wide) and metas[0][0] >> 6 == 1
+    assert out == [wide]
+
+
+def test_from_sorted_keys_matches_parsed_blob():
+    """The encoder's Metadata, built straight from the sorted keys,
+    equals the one parsed back from its blob: same bytes as
+    build_metadata, same strings, same ids, at offset widths 1, 2, 4."""
+    for keys in (
+        [], [""], ["a"], ["b", "a", ""], ["é", "ünï", "🎉", "z"],
+        [f"k{i:03d}" for i in range(60)], ["x" * 40_000],
+    ):
+        sk = tuple(sorted(set(keys)))
+        fast = c.Metadata.from_sorted_keys(sk)
+        parsed = c.Metadata(fast.buf)
+        assert fast.buf == c.build_metadata(keys)
+        assert len(fast) == len(parsed) == len(sk)
+        assert [fast.get_string(i) for i in range(len(sk))] == [
+            parsed.get_string(i) for i in range(len(sk))
+        ] == list(sk)
+        assert [fast.find_string(k) for k in sk] == [parsed.find_string(k) for k in sk]
+        assert fast.find_string("absent key") is None
+
+
+def test_packed_uint_lists_match_per_value_encoding():
+    """Offset and field-id lists pack and unpack like one
+    ``to_bytes``/``from_bytes`` per value, at every width: 1-4 as a
+    header may name them (Spark's writer emits 3) and 8 for values."""
+    for width, top in (
+        (1, 0x7F),
+        (2, 0x7FFF),
+        (3, 0xFFFFFF),
+        (4, 0x7FFFFFFF),
+        (8, 2**63 - 1),
+    ):
+        vals = [0, 1, top // 3, top]
+        packed = c._pack_uints(vals, width)
+        assert packed == b"".join(v.to_bytes(width, "little") for v in vals)
+        assert list(c._unpack_uints(b"\xaa" + packed, 1, len(vals), width)) == vals
 
 
 def test_parsing_error():
@@ -264,13 +316,13 @@ def test_parsing_error():
 
 def test_to_json_roundtrip():
     src = '{"a":[1,2.5,"x",null,true],"b":{"c":-3}}'
-    meta_buf, values, _ = roundtrip([src])
-    assert json.loads(c.to_json_str(values[0], meta_buf)) == json.loads(src)
+    metas, values, _ = roundtrip([src])
+    assert json.loads(c.to_json_str(values[0], metas[0])) == json.loads(src)
 
 
 def test_get_path():
-    meta_buf, values, _ = roundtrip(['{"a": {"b": [10, {"c": "hit"}]}, "d": 4}'])
-    v, m = values[0], meta_buf
+    metas, values, _ = roundtrip(['{"a": {"b": [10, {"c": "hit"}]}, "d": 4}'])
+    v, m = values[0], metas[0]
     assert c.get_path(v, m, "$.a.b[1].c") == "hit"
     assert c.get_path(v, m, "$.d") == 4
     assert c.get_path(v, m, "$.a.b[0]") == 10
@@ -291,7 +343,7 @@ def test_type_names():
         ("[1]", "array"),
         ('{"a":1}', "object"),
     ]
-    meta_buf, values, _ = roundtrip([t for t, _ in cases])
+    _, values, _ = roundtrip([t for t, _ in cases])
     for (txt, expect), v in zip(cases, values):
         if expect is None:
             assert v is None
@@ -440,8 +492,8 @@ class TestMergePatch:
     def test_roundtrips_through_codec(self):
         from datafusion_functions_variant_spark import codec
 
-        meta, vals = codec.batch_from_json(['{"k": 5, "nest": {"x": 1, "y": 2}}'])
-        target = codec.to_python(codec.Variant(vals[0]), codec.Metadata(meta))
+        (meta,), (val,) = codec.batch_from_json(['{"k": 5, "nest": {"x": 1, "y": 2}}'])
+        target = codec.to_python(codec.Variant(val), codec.Metadata(meta))
         merged = codec.merge_patch(target, {"k": None, "nest": {"y": 20}, "z": True})
         keys: set = set()
         codec.collect_keys(merged, keys)

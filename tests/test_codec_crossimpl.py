@@ -22,13 +22,10 @@ except ImportError:  # pragma: no cover
     HAVE_VARIANTVAL = False
 
 
-def _codec_encode(obj) -> tuple[bytes, bytes]:
-    keys: set[str] = set()
-    codec.collect_keys(obj, keys)
-    meta = codec.build_metadata(keys)
-    buf = bytearray()
-    codec.convert_value(obj, buf, codec.Metadata(meta))
-    return meta, bytes(buf)
+def _codec_encode(obj) -> tuple[bytes, bytes | None]:
+    """The shipped encoder on one row: (its metadata, its value)."""
+    (meta,), (val,) = codec.encode_batch([obj])
+    return meta, val
 
 
 FIXTURES = [
@@ -55,6 +52,10 @@ FIXTURES = [
 ]
 
 
+#: the fixtures that have a value: a top-level None is the SQL NULL slot
+ROW_FIXTURES = [o for o in FIXTURES if o is not None]
+
+
 def _norm(x):
     """JSON-comparable form (ints vs floats, -0.0, etc.)."""
     if isinstance(x, float) and x.is_integer() and not math.isinf(x):
@@ -65,7 +66,9 @@ def _norm(x):
 def test_variantval_reads_our_buffers():
     if not HAVE_VARIANTVAL:
         return
-    for obj in FIXTURES:
+    # a top-level null is the SQL NULL slot: no value, empty dictionary
+    assert _codec_encode(None) == (codec.EMPTY_METADATA, None)
+    for obj in ROW_FIXTURES:
         meta, val = _codec_encode(obj)
         got = json.loads(VariantVal(val, meta).toJson())
         assert got == json.loads(json.dumps(obj)), f"mismatch for {obj!r}"
@@ -74,7 +77,7 @@ def test_variantval_reads_our_buffers():
 def test_variantval_agrees_with_our_reader():
     if not HAVE_VARIANTVAL:
         return
-    for obj in FIXTURES:
+    for obj in ROW_FIXTURES:
         meta, val = _codec_encode(obj)
         ours = json.loads(codec.to_json_str(val, meta))
         theirs = json.loads(VariantVal(val, meta).toJson())
@@ -95,6 +98,31 @@ def test_our_reader_reads_spark_native_bytes(spark):
         assert got == json.loads(s), f"codec failed on native bytes for {s}"
 
 
+def test_our_reader_reads_spark_native_wide_offsets(spark):
+    """Spark's writer gives a size from 2**16 to 2**24 - 1 a 3-byte
+    width, which ours never emits: an object and an array whose data
+    area passes 64 KiB, and a dictionary whose strings do, must decode
+    through our codec all the same."""
+    from pyspark.sql import functions as F
+
+    big = "x" * 70_000
+    samples = [
+        {"big": big, "n": 1, "tail": [True, None]},
+        [big, 2, {"k": "v"}],
+        # Jackson caps one name at 50 000 chars: many keys pass 64 KiB
+        {f"key{i:05d}" + "y" * 40: i for i in range(1_700)},
+    ]
+    df = spark.createDataFrame([(json.dumps(o),) for o in samples], ["j"])
+    rows = df.select(F.parse_json("j").alias("v")).collect()
+    for obj, r in zip(samples, rows):
+        value, meta = bytes(r["v"].value), bytes(r["v"].metadata)
+        # the case under test: an offset width of 3, in the value's
+        # header or the dictionary's
+        assert (value[0] >> 2) & 0x03 == 2 or (meta[0] >> 6) & 0x03 == 2
+        assert json.loads(codec.to_json_str(value, meta)) == obj
+        assert codec.BatchDecoder().to_python(value, meta) == obj
+
+
 json_scalars = st.one_of(
     st.none(),
     st.booleans(),
@@ -111,9 +139,11 @@ json_values = st.recursive(
     ),
     max_leaves=25,
 )
+#: a row that has a value: a top-level None is the SQL NULL slot
+json_rows = json_values.filter(lambda o: o is not None)
 
 
-@given(json_values)
+@given(json_rows)
 @settings(max_examples=200, deadline=None)
 def test_property_roundtrip(obj):
     meta, val = _codec_encode(obj)
@@ -121,7 +151,7 @@ def test_property_roundtrip(obj):
     assert back == json.loads(json.dumps(obj))
 
 
-@given(json_values)
+@given(json_rows)
 @settings(max_examples=100, deadline=None)
 def test_property_variantval_parity(obj):
     if not HAVE_VARIANTVAL:
@@ -129,6 +159,35 @@ def test_property_variantval_parity(obj):
     meta, val = _codec_encode(obj)
     theirs = json.loads(VariantVal(val, meta).toJson())
     assert theirs == json.loads(json.dumps(obj))
+
+
+def _keys_of(obj) -> set[str]:
+    """Every object key in ``obj``, nested ones included."""
+    if isinstance(obj, dict):
+        return set(obj).union(*map(_keys_of, obj.values()))
+    if isinstance(obj, list):
+        return set().union(*map(_keys_of, obj))
+    return set()
+
+
+@given(st.lists(json_values, max_size=12))
+@settings(max_examples=150, deadline=None)
+def test_property_encode_batch_rows_carry_own_minimal_metadata(rows):
+    """Every (metadata, value) pair ``encode_batch`` gives decodes back
+    to its input row, through our reader and pyspark's, and every blob
+    is exactly that row's dictionary: ``build_metadata`` of its own
+    keys, the empty one for a null row."""
+    metas, values = codec.encode_batch(rows)
+    assert len(metas) == len(values) == len(rows)
+    for obj, meta, val in zip(rows, metas, values):
+        assert meta == codec.build_metadata(_keys_of(obj))
+        if obj is None:
+            assert val is None
+            continue
+        want = json.loads(json.dumps(obj))
+        assert json.loads(codec.to_json_str(val, meta)) == want
+        if HAVE_VARIANTVAL:
+            assert json.loads(VariantVal(val, meta).toJson()) == want
 
 
 # Mixed-width UTF-8 alphabet: 1-, 2-, 3-, and 4-byte encodings, so the
@@ -257,7 +316,7 @@ CROSS_TRACK_ROWS = [
 
 
 def _track_c_json(text: str) -> str | None:
-    meta, [val] = codec.batch_from_json([text], tolerant=True)
+    (meta,), (val,) = codec.batch_from_json([text], tolerant=True)
     return None if val is None else codec.BatchDecoder().to_json(val, meta)
 
 
@@ -309,6 +368,6 @@ json_values_non_finite = st.recursive(
 def test_property_track_c_output_is_strict_json(obj):
     """Whatever value reaches the codec, non-finite floats included,
     Track C's text parses under strict JSON."""
-    meta, [val] = codec.encode_batch([obj])
+    meta, val = _codec_encode(obj)
     if val is not None:
         _strict_loads(codec.BatchDecoder().to_json(val, meta))

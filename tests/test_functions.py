@@ -6,6 +6,7 @@ import json
 
 from pyspark.sql import functions as F
 
+from datafusion_functions_variant_spark import codec
 from datafusion_functions_variant_spark.functions import explicit, variant
 
 
@@ -43,18 +44,49 @@ def test_track_n_shred(spark):
     assert (row["a"], row["b"]) == (5, "x")
 
 
-def test_explicit_kernel_batch_metadata(spark):
-    # single partition → single Arrow batch; sharing is per-batch
+def test_explicit_kernel_per_row_metadata(spark):
+    # single partition → single Arrow batch; still one dictionary per row
     df = spark.createDataFrame(
-        [('{"x": 1}',), ('{"y": 2}',), ("null",), (None,)], ["j"]
+        [('{"x": 1}',), ('{"y": {"z": 2}}',), ("null",), (None,), ('{"x": 3}',)],
+        ["j"],
     ).coalesce(1)
     out = df.select(explicit.variant_from_json(F.col("j")).alias("v")).collect()
-    # one shared metadata for the batch (union of keys x, y)
-    metas = {bytes(r["v"]["metadata"]) for r in out}
-    assert len(metas) == 1
-    # top-level JSON null AND SQL null both → null value slot
-    assert out[2]["v"]["value"] is None
-    assert out[3]["v"]["value"] is None
+    metas = [bytes(r["v"]["metadata"]) for r in out]
+    assert metas[0] == codec.build_metadata(["x"])
+    assert metas[1] == codec.build_metadata(["y", "z"])
+    # same key set, identical bytes
+    assert metas[4] == metas[0]
+    # top-level JSON null AND SQL null both → null value slot with the
+    # empty dictionary (the struct's metadata field is non-nullable)
+    for r in out[2:4]:
+        assert r["v"]["value"] is None
+        assert bytes(r["v"]["metadata"]) == codec.EMPTY_METADATA
+
+
+def test_pandas_udf_and_arrow_kernel_structs_byte_identical(spark):
+    """The pandas UDF and the mapInArrow kernel encode a batch to the
+    same per-row (metadata, value) bytes."""
+    from datafusion_functions_variant_spark.functions import arrow_kernel
+
+    texts = ['{"b": [1, {"c": null}], "a": 2.5}', "null", None, "[1]", '{"a": "x"}']
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "i long, j string"
+    ).coalesce(1)
+
+    def pairs(rows):
+        return [
+            (r["i"], bytes(r["v"]["metadata"]),
+             None if r["v"]["value"] is None else bytes(r["v"]["value"]))
+            for r in sorted(rows, key=lambda r: r["i"])
+        ]
+
+    via_pandas = pairs(
+        df.select("i", explicit.variant_from_json(F.col("j")).alias("v")).collect()
+    )
+    via_arrow = pairs(arrow_kernel.variant_from_json_arrow(df, "j").select("i", "v").collect())
+    assert via_pandas == via_arrow
+    metas, values = codec.batch_from_json(texts)
+    assert via_pandas == list(zip(range(len(texts)), metas, values))
 
 
 def test_explicit_get_and_typeof(spark):

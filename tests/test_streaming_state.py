@@ -985,6 +985,32 @@ def test_python_exec_wrapper_is_portable_and_reversible(spark, monkeypatch, tmp_
     assert sc.pythonExec == orig
 
 
+def test_restore_python_exec_undoes_pythonpath_prepend(spark, monkeypatch):
+    """``restore_python_exec`` undoes ``ensure_protobuf_for_session``'s
+    miniproto prepend to ``sc.environment["PYTHONPATH"]``: the prior
+    value comes back, so no Python function built later carries the
+    vendor path."""
+    from datafusion_functions_variant_spark import vendor
+
+    if vendor.ensure_protobuf() != "miniproto":
+        pytest.skip("real protobuf wheel present; no prepend happens")
+    vendor.restore_python_exec(spark)  # an earlier test may have left a swap
+    sc = spark.sparkContext
+    env = dict(sc.environment)
+    monkeypatch.setattr(sc, "environment", env)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and p != vendor.MINIPROTO_DIR
+    )
+    before = dict(env)
+    vendor.ensure_protobuf_for_session(spark)
+    try:
+        assert vendor.MINIPROTO_DIR in env["PYTHONPATH"].split(os.pathsep)
+    finally:
+        vendor.restore_python_exec(spark)
+    assert sc.environment == before
+
+
 @pytest.mark.parametrize("fail", [None, "run", "preflight"])
 def test_stream_transform_with_state_restores_python_exec(spark, monkeypatch, fail):
     """The pythonExec wrapper swap lasts only as long as the

@@ -113,7 +113,7 @@ HEADLINE = [
 
 #: Keys timed LAST, after BOTH query sets have completed, each with
 #: one fresh-session retry (``run_set``'s ``new_session``).
-#: ``stream_transform_with_state`` (typed ValueState+MapState via the
+#: ``stream_transform_with_state`` (a typed ValueState per user via the
 #: RocksDB state server over the vendored protobuf wire codec; the
 #: scaled point is 10× rows AND 10× distinct users, so it measures
 #: state-store growth) spins up the state-store provider and per-key

@@ -16,6 +16,9 @@ real 1000-executor cluster share the same knobs:
   the normalization).
 * **UTC session timezone** — deterministic timestamp semantics across
   engines (DuckDB oracle parity).
+* **A generated-class cache of 1000 entries** — Spark's 100 is smaller
+  than the steady working set of the registry ops, which then keep
+  recompiling with Janino after warm-up.
 """
 
 from __future__ import annotations
@@ -82,6 +85,13 @@ def get_session(
         # the adjacent, configurable timeout so a load spike that
         # survives accept can't die in auth instead.
         .config("spark.python.authenticate.socketTimeout", "120s")
+        # STATIC conf: the generated-class cache. Spark's 100 entries
+        # (in Guava segments, which evict before the total is reached)
+        # are fewer than the steady working set of the registry ops, so
+        # they kept recompiling after warm-up (dedup_minhash_lsh 27-41
+        # Janino compiles a run, ~130-170 ms of CPU per native_ingest
+        # pass); at 1000 a repeated op compiles nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -80,7 +80,10 @@ def sql_codec_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The explicit codec reached purely through SQL names
     (spark.udf.register): parse → typed get → typeof → to_json, plus a
     missing-path probe. Same kernels as the Python API; the SQL layer
-    is only name binding."""
+    is only name binding. The ORDER BY wraps the raw ``events`` read:
+    an outer one would make its range exchange's sample job run the
+    UDFs a second time (and Spark drops an inner sort below an outer
+    one)."""
     register_sql_functions(spark)
     register_views(spark, sf_dir)
     return spark.sql(
@@ -90,9 +93,9 @@ def sql_codec_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
                codec_typeof(v) AS t,
                codec_to_json(v) AS j,
                codec_get_string(v, '$.missing') AS absent
-        FROM (SELECT event_id, codec_parse_json(props) AS v FROM events)
+        FROM (SELECT event_id, codec_parse_json(props) AS v
+              FROM (SELECT event_id, props FROM events ORDER BY event_id))
         WHERE event_id < 1000
-        ORDER BY event_id
         """
     )
 

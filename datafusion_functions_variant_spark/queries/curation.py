@@ -1565,10 +1565,11 @@ def variant_merge_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces for this key set — variant mutation is the capability the
     reference's append-only builders lack. Arrow-batched end to end;
     one dictionary build per distinct key set on each side of the
-    patch."""
+    patch. Sorted on ``event_id`` before the UDFs, so the range
+    exchange's sample job reads only the scan, not the Python chain."""
     from ..functions import explicit
 
-    ev = load_table(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events").orderBy("event_id")
     sq = (F.col("event_id") % 97) * (F.col("event_id") % 97)
     patch = F.when(
         F.col("event_id") % 2 == 0,
@@ -1586,7 +1587,7 @@ def variant_merge_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select(
         "event_id",
         explicit.variant_to_json(F.col("m")).alias("merged_json"),
-    ).orderBy("event_id")
+    )
 
 
 @query(

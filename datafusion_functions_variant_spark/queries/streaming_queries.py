@@ -597,9 +597,9 @@ def stream_stateful_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4's ``transformWithStateInPandas`` — TYPED state variables
-    (ValueState totals + MapState per-event-type counts) behind a
-    StatefulProcessor, per-user profile re-emitted every batch in
+    """Spark 4's ``transformWithStateInPandas`` — a TYPED state variable
+    (one ValueState per user: totals plus a per-event-type count map)
+    behind a StatefulProcessor, per-user profile re-emitted every batch in
     update mode (streaming/core.py::transform_with_state_profile).
     Counts are monotonic, so the max emission per (user, type) equals
     the final state, which the oracle reproduces from the batch

@@ -126,10 +126,16 @@ def variant_explicit_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row dictionary (codec.encode_batch), then fused typed path
     extraction + typeof through OUR binary codec (one decode UDF for
     all three outputs — one Arrow transfer of the variant struct, one
-    buffer walk per row) — gated by the same SQL oracle. fan_out
-    parallelizes the Python kernels on narrow local inputs (no-op on
-    an already-wide 100 TB scan)."""
-    ev = fan_out(load_table(spark, sf_dir, "events"))
+    buffer walk per row) — gated by the same SQL oracle.
+
+    The sort on ``event_id`` sits below the UDFs: a sort above them
+    would make its range exchange's sample job run the whole Python
+    chain a second time. The projection keeps the sorted order.
+    fan_out stays below the sort: where a consumer drops the sort
+    (an order-free aggregate over this query), it still spreads the
+    Python kernels of a narrow local input over the cores, and the
+    sample job reads only its shuffle output."""
+    ev = fan_out(load_table(spark, sf_dir, "events")).orderBy("event_id")
     v = ev.withColumn("var", explicit.variant_from_json(F.col("props")))
     ex = explicit.variant_extract(
         "var",
@@ -140,7 +146,7 @@ def variant_explicit_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex["k"].alias("k"),
         ex["k_str"].alias("k_str"),
         (ex["t"] == F.lit("object")).alias("root_is_obj"),
-    ).orderBy("event_id")
+    )
 
 
 @query(

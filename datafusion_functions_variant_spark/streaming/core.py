@@ -306,8 +306,8 @@ def stateful_running_max(stream: DataFrame, delay: str = "1 minute") -> DataFram
 #: transformWithState key (process-tree CPU, 4 vCPUs): at 1k rows width
 #: 1 takes 27% less than width 8 (3.98 vs 5.48 s); at 100k rows width 4
 #: is no worse than 8 (37.9 vs 39.4 s); at 1M rows width 32 beat 8
-#: (7.06 vs 16.42 s wall — 15k users × 8 state round-trips each need
-#: every core).
+#: (7.06 vs 16.42 s wall — 15k users × 8 state round-trips each, with
+#: the two state variables of then, need every core).
 STATE_WIDTH_CONF = "spark.graft.streaming.stateWidth"
 _STATE_WIDTH_TARGET_ROWS = 25_000
 
@@ -455,11 +455,10 @@ def _fold_profile_batch(pdf) -> tuple[int, int, dict]:
 def transform_with_state_profile(stream: DataFrame) -> DataFrame:
     """Per-user profile via Spark 4's transformWithStateInPandas — the
     successor API to applyInPandasWithState with TYPED state variables:
+    one ValueState ``profile`` per user holding (event count, exact
+    value cents, event_type → running count).
 
-    * ValueState ``totals``  — (event count, exact value cents)
-    * MapState  ``by_type`` — event_type → running count
-
-    Each batch updates both states and re-emits the full per-user
+    Each batch updates the state and re-emits the full per-user
     profile (one row per event_type seen so far, carrying the user
     totals). Counts are monotonic, so the last emission per
     (user, type) equals the batch aggregate — that's the oracle.
@@ -476,7 +475,7 @@ def transform_with_state_profile(stream: DataFrame) -> DataFrame:
     ``stream_transform_with_state`` runs this operator. At scale:
     state is partitioned by the grouping key across executors and
     checkpointed incrementally by RocksDB — this exact code runs
-    unbounded with a TTL on the state handles."""
+    unbounded with a TTL on the state handle."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
     out_schema = StructType(
@@ -491,9 +490,8 @@ def transform_with_state_profile(stream: DataFrame) -> DataFrame:
 
     class ProfileProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            self.totals = handle.getValueState("totals", "n BIGINT, cents BIGINT")
-            self.by_type = handle.getMapState(
-                "by_type", "event_type STRING", "cnt BIGINT"
+            self.profile = handle.getValueState(
+                "profile", "n BIGINT, cents BIGINT, by_type MAP<STRING, BIGINT>"
             )
 
         def handleInputRows(self, key, rows, timer_values):
@@ -501,33 +499,24 @@ def transform_with_state_profile(stream: DataFrame) -> DataFrame:
 
             # Every state call is one synchronous round-trip to the
             # JVM state server (request + blocking response through
-            # the protobuf wire codec) — with ~users × types calls per
-            # batch the round-trips ARE the operator's cost, so the
-            # batch is folded locally first and the state is touched
-            # the minimum number of times: one ValueState.get (returns
-            # None when absent — no separate exists() probe), ONE map
-            # iterator pass replacing a getValue per event type, one
-            # updateValue per type actually seen, one totals.update.
-            # Emission is built from the locally-merged dict, dropping
-            # the second full-map iterator read. 14 → 8 round-trips
-            # per user at 5 event types; same state contents, same
-            # emitted rows (guide §4: shrink the Python<->JVM chatter,
-            # not just the bytes). The local fold itself is the
-            # raw-numpy form (see _fold_profile_batch).
-            got = self.totals.get()
-            n, cents = got if got is not None else (0, 0)
-            inc: dict = {}
+            # the protobuf wire codec), and with one key per user the
+            # round-trips ARE the operator's cost. So the batch is
+            # folded locally and the whole profile lives in ONE value:
+            # one get (None when absent — no separate exists() probe)
+            # and one update per user, whatever the number of event
+            # types (a MapState of per-type counts would add an
+            # iterator read and one updateValue per type seen). The
+            # local fold itself is the raw-numpy form (see
+            # _fold_profile_batch).
+            got = self.profile.get()
+            n, cents, counts = (got[0], got[1], dict(got[2])) if got is not None else (0, 0, {})
             for pdf in rows:
                 k, c_add, type_counts = _fold_profile_batch(pdf)
                 n += k
                 cents += c_add
                 for et, c in type_counts.items():
-                    inc[et] = inc.get(et, 0) + c
-            counts = {k[0]: v[0] for k, v in self.by_type.iterator()}
-            for et, c in inc.items():
-                counts[et] = counts.get(et, 0) + c
-                self.by_type.updateValue((et,), (counts[et],))
-            self.totals.update((n, cents))
+                    counts[et] = counts.get(et, 0) + c
+            self.profile.update((n, cents, counts))
             ets = sorted(counts.items())
             yield pd.DataFrame(
                 {

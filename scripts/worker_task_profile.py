@@ -12,7 +12,9 @@ and starts the next.
 Prints one line per task: the worker pid, how many times
 ``zipimport._read_directory`` ran, the cumulative time of
 ``pyspark.worker_util.setup_spark_files``, the time of the daemon's
-``gc.collect()`` after the previous task, and which
+``gc.collect()`` after the previous task, how many objects the worker
+has frozen out of the collector's reach (``gc.get_freeze_count()``,
+see ``vendor.freeze_worker_heap``), and which
 ``zipimporter.invalidate_caches`` the worker had installed. Times are
 under cProfile, which inflates them; the counts are exact.
 
@@ -44,6 +46,7 @@ def _arm(s):
 
 def _dump(s):
     import cProfile
+    import gc
     import zipimport
 
     prof = getattr(cProfile, "_worker_task_profile", None)
@@ -66,6 +69,7 @@ def _dump(s):
             "read_directory": reads,
             "setup_spark_files_s": setup_s,
             "gc_collect_s": gc_s,
+            "freeze_count": gc.get_freeze_count(),
             "invalidate_caches": f"{fn.__module__}.{fn.__qualname__}",
         }
     )
@@ -96,7 +100,7 @@ def main() -> None:
         rows.select(arm("j")).collect()
         print(
             "task  pid      read_directory  setup_spark_files_ms  gc_collect_ms  "
-            "invalidate_caches"
+            "freeze_count  invalidate_caches"
         )
         for task in range(1, args.tasks + 1):
             # count("v") keeps the package UDF from being pruned
@@ -107,7 +111,7 @@ def main() -> None:
             print(
                 f"{task:>4}  {r['pid']:<7}  {r['read_directory']:>14}  "
                 f"{r['setup_spark_files_s'] * 1e3:>20.1f}  {r['gc_collect_s'] * 1e3:>13.1f}  "
-                f"{r['invalidate_caches']}"
+                f"{r['freeze_count']:>12}  {r['invalidate_caches']}"
             )
     finally:
         spark.stop()

@@ -1392,3 +1392,33 @@ def test_stage_boundary_local_and_reliable_paths(spark, tmp_path):
         assert found, "reliable checkpoint wrote nothing"
     finally:
         spark.conf.unset(CHECKPOINT_RELIABLE_CONF)
+
+
+#: the ops of the ``native_ingest`` perfbench workload: together their
+#: generated classes outnumber Spark's default cache of 100 entries
+NATIVE_INGEST_OPS = (
+    "variant_events_agg",
+    "variant_get_typed",
+    "variant_filter_pushdown",
+    "variant_shredded_storage",
+    "dedup_minhash_lsh",
+)
+
+
+def test_codegen_cache_holds_the_native_ops_working_set(spark):
+    """``get_session`` sizes the generated-class cache (static conf
+    ``spark.sql.codegen.cache.maxEntries``) to the working set: once the
+    native ops have run in turn twice, a third sweep compiles nothing
+    with Janino. At Spark's default of 100 the ops evict each other's
+    classes and the third sweep recompiles."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def sweep():
+        for name in NATIVE_INGEST_OPS:
+            REGISTRY[name].build(spark, SF).collect()
+
+    sweep()
+    sweep()
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    sweep()
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == before

@@ -40,9 +40,10 @@ protobuf runtime (public wire-format spec) that the conftest adds to
 ``sys.path``/``PYTHONPATH`` only when the real wheel is absent;
 ``pyspark.sql.streaming.proto.StateMessage_pb2`` generates against it
 unmodified, and test_transform_with_state_profile now RUNS in this
-container — ValueState + MapState against the JVM's RocksDB-backed
-state server, every request parsed by the JVM's protobuf and every
-response parsed by miniproto. Wire-level unit vectors live in
+container — a ValueState holding a map (the per-user profile) against
+the JVM's RocksDB-backed state server, every request parsed by the
+JVM's protobuf and every response parsed by miniproto; MapState has
+its own test (test_transform_with_state_mapstate_full_api_and_delete). Wire-level unit vectors live in
 tests/test_miniproto.py; the oracled registry twin is
 ``stream_transform_with_state``. On a normally-provisioned cluster the
 real wheel wins (the vendor gate never shadows an installed package)."""
@@ -179,6 +180,64 @@ def test_transform_with_state_profile(spark):
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+
+
+def test_transform_with_state_profile_merges_across_batches(spark, tmp_path):
+    """The profile's read-merge-write: the events arrive as two
+    micro-batches (even, then odd event_ids) on one checkpoint, so
+    users seen in both batches read back the state the first one
+    wrote. The largest emission per (user, type) must still equal the
+    batch aggregate over all events."""
+    pytest.importorskip("google.protobuf")
+    import pyspark.sql.functions as F
+
+    from datafusion_functions_variant_spark.sources.tables import load_table
+    from datafusion_functions_variant_spark.streaming import core
+
+    ev = load_table(spark, SF_DIR, "events")
+    split = str(tmp_path / "split")
+    os.makedirs(split)
+    for p in range(2):
+        path = os.path.join(split, f"batch{p}.parquet")
+        core._write_single_file_split(
+            ev.where(F.col("event_id") % 2 == p).select("user_id", "event_type", "value"),
+            path,
+        )
+        core._pin_batch_mtime(path, p)
+    st = core._split_file_stream(spark, "user_id long, event_type string, value double", split)
+    out = core.run_to_batch(
+        core.transform_with_state_profile(st),
+        "update",
+        confs={"spark.sql.streaming.stateStore.providerClass": ROCKSDB},
+    )
+    got = (
+        out.groupBy("user_id", "event_type")
+        .agg(F.max("n_type"), F.max("n_total"), F.max("sum_value"))
+        .orderBy("user_id", "event_type")
+        .collect()
+    )
+    # users of both batches emitted twice: the second batch read state
+    assert out.count() > len(got)
+    from pyspark.sql import Window
+
+    uw = Window.partitionBy("user_id")
+    want = (
+        ev.groupBy("user_id", "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_type"),
+            F.sum(F.col("value").cast("decimal(18,2)")).alias("s"),
+        )
+        .select(
+            "user_id",
+            "event_type",
+            "n_type",
+            F.sum("n_type").over(uw).alias("n_total"),
+            F.sum("s").over(uw).cast("double").alias("sum_value"),
+        )
+        .orderBy("user_id", "event_type")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
 def test_checkpoint_recovery_exactly_once(spark, tmp_path):
@@ -729,8 +788,9 @@ def test_transform_with_state_initial_state_handoff(spark):
 
 
 def test_transform_with_state_mapstate_full_api_and_delete(spark):
-    """The remaining MapState arms (containsKey / keys / values /
-    removeKey / clear) plus handle.deleteIfExists — with these, every
+    """Every MapState arm (getValue / updateValue / iterator /
+    containsKey / keys / values / removeKey / clear) plus
+    handle.deleteIfExists — with these, every
     state-variable protocol message in StateMessage.proto has runtime
     JVM-interop coverage. Per user: counts per event_type go into a
     MapState; the largest-count key is removed and the rest re-read

@@ -1,10 +1,14 @@
-"""The stat-guarded ``zipimporter.invalidate_caches`` that reused Spark
-Python workers install (``vendor.install_zipimport_guard``): it skips
-re-reading an unchanged archive, re-reads a rewritten one exactly like
-the stdlib version, and stays out of the driver."""
+"""What a reused Spark Python worker does when it imports the package.
+
+The stat-guarded ``zipimporter.invalidate_caches`` it installs
+(``vendor.install_zipimport_guard``) skips re-reading an unchanged
+archive, re-reads a rewritten one exactly like the stdlib version, and
+stays out of the driver. ``vendor.freeze_worker_heap`` freezes the
+worker's import-time heap once, and never the driver's."""
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import subprocess
@@ -121,15 +125,38 @@ def test_guard_install_is_noop_outside_reused_workers_and_on_3_13(prelude, env_e
 def test_package_udf_worker_runs_guard_and_driver_does_not(spark):
     @pandas_udf("string")
     def report(s):
+        import gc
         import zipimport
 
         fn = zipimport.zipimporter.invalidate_caches
-        return s.map(lambda _: f"{fn.__module__}.{fn.__qualname__}")
+        frozen = gc.get_freeze_count()
+        return s.map(lambda _: f"{fn.__module__}.{fn.__qualname__} {frozen}")
 
     df = spark.createDataFrame([('{"a": 1}',), ('{"b": [2]}',)], "j string").coalesce(1)
     rows = df.select(explicit.variant_from_json("j").alias("v"), report("j").alias("r")).collect()
     expected = GUARDED if sys.version_info < (3, 13) else STDLIB
-    assert [r.r for r in rows] == [expected, expected]
+    reports = [r.r.split() for r in rows]
+    assert [fn for fn, _ in reports] == [expected, expected]
+    # the worker froze its import-time heap (vendor.freeze_worker_heap)
+    assert all(int(frozen) > 0 for _, frozen in reports)
     assert all(r.v is not None for r in rows)
     fn = zipimport.zipimporter.invalidate_caches
     assert f"{fn.__module__}.{fn.__qualname__}" == STDLIB
+    assert gc.get_freeze_count() == 0
+
+
+def test_freeze_worker_heap_is_gated_on_reused_workers_and_runs_once():
+    script = (
+        "import gc, json\n"
+        "import datafusion_functions_variant_spark\n"
+        "from datafusion_functions_variant_spark import vendor\n"
+        "first = gc.get_freeze_count()\n"
+        "again = vendor.freeze_worker_heap()\n"
+        "print(json.dumps({'frozen': again, 'first': first,"
+        " 'after': gc.get_freeze_count()}))\n"
+    )
+    reused = _run(script, env_extra={"SPARK_REUSE_WORKER": "1"})
+    # the package import froze the heap; a second call freezes nothing
+    assert reused["frozen"] and reused["first"] > 0
+    assert reused["after"] == reused["first"]
+    assert _run(script) == {"frozen": False, "first": 0, "after": 0}

@@ -245,9 +245,9 @@ class Metadata:
         row of a batch with its key set, so a per-row bisect would be
         re-derivation;
         ``setdefault`` keeps the leftmost id for duplicate strings,
-        exactly what bisect_left returned)."""
-        if not self.sorted_strings:
-            raise VariantError("metadata dictionary is not sorted")
+        exactly what bisect_left returned). The index needs no order,
+        so it serves unsorted dictionaries (Spark's own writer lists
+        keys in first-seen order) too."""
         try:
             index = self._index
         except AttributeError:
@@ -447,6 +447,10 @@ class ObjectBuilder:
     """
 
     def __init__(self, metadata: Metadata):
+        if not metadata.sorted_strings:
+            # fields go in id order, which is key order only when the
+            # dictionary is sorted
+            raise VariantError("metadata dictionary is not sorted")
         self._meta = metadata
         self._entries: list[tuple[int, int, int]] = []  # (field_id, start, end)
         self._data = bytearray()
@@ -721,20 +725,23 @@ class Variant:
     def get_array(self) -> "ArrayView":
         return ArrayView(self)
 
-    def field(self, idx: int) -> "Variant | None":
-        """Object field-id OR array index; None for scalars (read.rs:87-93)."""
+    def field(self, idx: int, sorted_ids: bool = True) -> "Variant | None":
+        """Object field-id OR array index; None for scalars (read.rs:87-93).
+        ``sorted_ids`` is the metadata's ``sorted_strings``, as in
+        ``ObjectView.get_field``."""
         bt = self.basic_type
         if bt == BASIC_OBJECT:
-            return ObjectView(self).get_field(idx)
+            return ObjectView(self).get_field(idx, sorted_ids)
         if bt == BASIC_ARRAY:
             return ArrayView(self).get_element(idx)
         return None
 
 
 class ObjectView:
-    """Object reader (read.rs:99-211). Field ids are sorted → binary
-    search in ``get_field``; value slices run to the end of the value
-    area because offsets need not be monotonic (read.rs:173-186)."""
+    """Object reader (read.rs:99-211). Fields are listed in key-name
+    order, which is field-id order when the dictionary is sorted →
+    binary search in ``get_field``; value slices run to the end of the
+    value area because offsets need not be monotonic (read.rs:173-186)."""
 
     __slots__ = ("buf", "n", "_id_width", "_off_width", "_ids_start", "_offs_start", "_vals_start")
 
@@ -763,7 +770,16 @@ class ObjectView:
     def get_offset(self, i: int) -> int:
         return _read_uint(self.buf, self._offs_start + i * self._off_width, self._off_width)
 
-    def get_field(self, field_id: int) -> Variant | None:
+    def get_field(self, field_id: int, sorted_ids: bool = True) -> Variant | None:
+        """The field with ``field_id``, or None. ``sorted_ids`` says
+        the dictionary is sorted; against an unsorted one the ids are
+        not in order, so the id list is scanned."""
+        if not sorted_ids:
+            fids = _unpack_uints(self.buf, self._ids_start, self.n, self._id_width)
+            if field_id not in fids:
+                return None
+            start = self._vals_start + self.get_offset(fids.index(field_id))
+            return Variant(self.buf[start:])
         lo, hi = 0, self.n
         while lo < hi:
             mid = (lo + hi) // 2
@@ -1110,7 +1126,7 @@ def get_path(
     """Evaluate a JSON path like ``$.a.b[2].c`` against a variant pair.
 
     Key resolution happens once per call via ``Metadata.find_string``
-    (binary search) — the reference's amortization point
+    (an index lookup) — the reference's amortization point
     (open-variant/README.md:55-57). Returns a Python value or None if the
     path is absent.
 
@@ -1136,9 +1152,12 @@ def resolve_steps(metadata: "Metadata", steps: list) -> list:
     ]
 
 
-def walk_path(value_buf: bytes, steps: list, fids: list) -> "Variant | None":
+def walk_path(
+    value_buf: bytes, steps: list, fids: list, sorted_ids: bool = True
+) -> "Variant | None":
     """Walk pre-parsed steps (with pre-resolved field ids) down a
-    value buffer; returns the Variant at the path or None."""
+    value buffer; returns the Variant at the path or None.
+    ``sorted_ids`` is the metadata's ``sorted_strings``."""
     v: Variant | None = Variant(value_buf)
     for step, fid in zip(steps, fids):
         if v is None:
@@ -1146,7 +1165,7 @@ def walk_path(value_buf: bytes, steps: list, fids: list) -> "Variant | None":
         if isinstance(step, str):
             if v.basic_type != BASIC_OBJECT or fid is None:
                 return None
-            v = v.get_object().get_field(fid)
+            v = v.get_object().get_field(fid, sorted_ids)
         else:
             if v.basic_type != BASIC_ARRAY:
                 return None
@@ -1158,7 +1177,7 @@ def get_path_prepared(
     value_buf: bytes, metadata: "Metadata", steps: list, fids: list
 ) -> Any:
     """``get_path`` with all row-invariant work hoisted out."""
-    v = walk_path(value_buf, steps, fids)
+    v = walk_path(value_buf, steps, fids, metadata.sorted_strings)
     if v is None:
         return None
     return to_python(v, metadata)

@@ -144,7 +144,9 @@ def variant_extract(col, fields: dict[str, tuple[str, str]]) -> Column:
             vbytes = bytes(vb)
             for steps, outs in groups:
                 try:
-                    node = codec.walk_path(vbytes, steps, dec.fids(mkey, steps))
+                    node = codec.walk_path(
+                        vbytes, steps, dec.fids(mkey, steps), m.sorted_strings
+                    )
                 except codec.VariantError:
                     node = None
                 py = None

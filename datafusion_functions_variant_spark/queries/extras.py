@@ -297,7 +297,13 @@ def udaf_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the UDAF surface the reference's DataFusion crate would have had):
     linenumber-weighted mean quantity per returnflag. All-integer
     accumulation (quantity and weight are integral) so float summation
-    order can't perturb the result."""
+    order can't perturb the result.
+
+    The input is sorted on the grouping key, not the result: the range
+    exchange then also satisfies the aggregate's clustering, so rows
+    come out in ``l_returnflag`` order without a sort above the Python
+    aggregate, whose stage the range partitioner's sample job would
+    otherwise run a second time."""
     # explicit functionType: PEP-563 stringified hints defeat inference
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
@@ -315,12 +321,12 @@ def udaf_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     return (
-        li.groupBy("l_returnflag")
+        li.orderBy("l_returnflag")
+        .groupBy("l_returnflag")
         .agg(
             wavg(F.col("l_quantity"), F.col("l_linenumber")).alias("wavg_qty"),
             pcount(F.col("l_quantity")).alias("n"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -341,7 +347,12 @@ def udtf_json_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (table function surface): explode a JSON object
     column into (key, value) rows via LATERAL — the row-generating
     counterpart of variant_get. Output values keep their JSON
-    rendering so heterogeneous types survive."""
+    rendering so heterogeneous types survive.
+
+    The rows are sorted on ``event_id`` below the LATERAL and the UDTF
+    yields each row's keys in sorted order, so the output comes back in
+    ``(event_id, prop_key)`` order with no sort above the UDTF, whose
+    stage the range partitioner's sample job would run a second time."""
     import json as _json
 
     from pyspark.sql.functions import udtf
@@ -364,9 +375,9 @@ def udtf_json_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         """
         SELECT e.event_id, t.prop_key, t.prop_val
-        FROM events e, LATERAL explode_json(e.props) t
-        WHERE e.event_id < 500
-        ORDER BY e.event_id, t.prop_key
+        FROM (SELECT event_id, props FROM events
+              WHERE event_id < 500 ORDER BY event_id) e,
+             LATERAL explode_json(e.props) t
         """
     )
 

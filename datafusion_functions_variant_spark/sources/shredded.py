@@ -23,7 +23,11 @@ component, expressed Spark-first:
 * The path→column mapping is recorded in a ``_shred_spec.json``
   sidecar so readers resolve paths without out-of-band knowledge —
   ``shredded_col`` serves a shredded path from its typed column and
-  transparently falls back to the residual for everything else.
+  transparently falls back to the residual for everything else. The
+  sidecar also records the schema of the written data columns, so
+  ``read_shredded`` hands it to the reader instead of running Spark's
+  footer-inference job (partition columns are still inferred from the
+  directory names, as before).
 
 Nested shredded paths (``$.a.b``) get typed columns too, but residual
 removal only applies to top-level keys — removing a leaf from a nested
@@ -48,6 +52,7 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Sidecar file name recording the shred spec inside a shredded dir.
 SPEC_FILE = "_shred_spec.json"
@@ -145,16 +150,28 @@ def write_shredded(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(out_dir)
 
+    data_schema = StructType([f for f in out.schema if f.name not in partition_by])
     with open(os.path.join(out_dir, SPEC_FILE), "w") as fh:
-        json.dump({n: list(pt) for n, pt in spec.items()}, fh)
+        json.dump(
+            {
+                "columns": {n: list(pt) for n, pt in spec.items()},
+                "schema": data_schema.jsonValue(),
+            },
+            fh,
+            separators=(",", ":"),
+        )
 
 
 def read_shredded(spark: SparkSession, in_dir: str) -> tuple[DataFrame, dict]:
     """Open a shredded dir: returns (DataFrame, spec). The DataFrame
-    is a plain parquet scan — filters on shredded columns push down."""
+    is a plain parquet scan — filters on shredded columns push down —
+    read with the data schema the sidecar recorded, so opening the
+    store launches no Spark job."""
     with open(os.path.join(in_dir, SPEC_FILE)) as fh:
-        spec = {n: tuple(pt) for n, pt in json.load(fh).items()}
-    return spark.read.parquet(in_dir), spec
+        sidecar = json.load(fh)
+    spec = {n: tuple(pt) for n, pt in sidecar["columns"].items()}
+    schema = StructType.fromJson(sidecar["schema"])
+    return spark.read.schema(schema).parquet(in_dir), spec
 
 
 def shredded_col(spec: Mapping[str, tuple[str, str]], path: str, dtype: str) -> Column:

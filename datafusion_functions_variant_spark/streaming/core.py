@@ -106,18 +106,19 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """A test table as a file stream, schema-normalized like the batch
     catalog.
 
-    FileStreamSource needs an explicit schema; take it from the batch
-    reader's parquet footer so the stream adapts to whichever physical
-    encoding (e.g. events.ts as NANOS→bigint or micros→timestamp) the
-    test driver generated, then apply the same normalization as the
-    batch catalog (``tables.normalize_timestamps``).
+    FileStreamSource needs an explicit schema; take it from the table's
+    parquet footer (``tables.parquet_schema``, cached) so the stream
+    adapts to whichever physical encoding (e.g. events.ts as
+    NANOS→bigint or micros→timestamp) the test driver generated, then
+    apply the same normalization as the batch catalog
+    (``tables.normalize_timestamps``).
     """
     from ..plans.session import tune
-    from ..sources.tables import normalize_timestamps
+    from ..sources.tables import normalize_timestamps, parquet_schema
 
     tune(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    file_schema = spark.read.parquet(path).schema
+    file_schema = parquet_schema(spark, path)
     if os.path.isdir(path):
         # Spark-written table (e.g. the K×-replicated bench corpus):
         # stream the directory itself. The glob branch below would

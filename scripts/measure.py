@@ -14,8 +14,10 @@ Usage:
   python scripts/measure.py [--runs N] [--dir D] [--noop] name...
 
 Prints one line per query: name, wall-clock median, min and samples,
-and the median process-tree CPU seconds (``time_samples``), which load
-on the box does not inflate the way it inflates wall clock.
+the median process-tree CPU seconds (``time_samples``), which load on
+the box does not inflate the way it inflates wall clock, and the number
+of Spark jobs the last timed sample started (build and consume; each
+sample runs under its own job group).
 """
 
 from __future__ import annotations
@@ -49,7 +51,8 @@ def main() -> None:
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 16),
     )
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     registry = load_all_queries()
     spark.read.parquet(os.path.join(args.dir, "region.parquet")).count()
 
@@ -67,17 +70,25 @@ def main() -> None:
         if spec is None:
             print(f"{name}: NOT IN REGISTRY", file=sys.stderr)
             continue
-        spark.sparkContext.setJobDescription(f"measure:{name}")
+        samples = iter(range(args.runs + 1))  # the warm-up, then the timed ones
+
+        def grouped_build(spark, dir_):
+            group = f"measure:{name}#{next(samples)}"
+            spark.sparkContext.setJobGroup(group, group)
+            return spec.build(spark, dir_)
+
         try:
-            walls, cpu_s = time_samples(spark, spec.build, args.dir, args.runs, consume)
+            walls, cpu_s = time_samples(spark, grouped_build, args.dir, args.runs, consume)
         except Exception as e:  # noqa: BLE001
             print(f"{name}: FAIL {type(e).__name__}: {e}".splitlines()[0][:200])
             continue
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker late
+        jobs = len(sc.statusTracker().getJobIdsForGroup(f"measure:{name}#{args.runs}"))
         med = sorted(walls)[len(walls) // 2]
         cpu = sorted(cpu_s)[len(cpu_s) // 2]
         print(
             f"{name}: median={med:.3f} min={min(walls):.3f} "
-            f"samples={[round(s, 3) for s in walls]} cpu_s={cpu:.2f}"
+            f"samples={[round(s, 3) for s in walls]} cpu_s={cpu:.2f} jobs={jobs}"
         )
     spark.stop()
 

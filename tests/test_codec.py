@@ -610,12 +610,13 @@ def test_codec_error_paths_fail_loudly():
         c.Metadata(b"")
     with pytest.raises(c.VariantError):
         c.Variant(b"")
-    # binary search requires the sorted flag: clear it and find_string
-    # must refuse rather than silently bisect an unsorted dictionary
+    # an unsorted dictionary: keys resolve through the index (no
+    # bisect), but an object writer, which orders fields by id, refuses
     unsorted = bytearray(c.build_metadata(["x", "y"]))
     unsorted[0] &= ~0x10
+    assert c.Metadata(bytes(unsorted)).find_string("y") == 1
     with pytest.raises(c.VariantError):
-        c.Metadata(bytes(unsorted)).find_string("x")
+        c.ObjectBuilder(c.Metadata(bytes(unsorted)))
     scalar = bytearray()
     c.write_bool(scalar, True)
     with pytest.raises(c.VariantError):

@@ -123,6 +123,31 @@ def test_our_reader_reads_spark_native_wide_offsets(spark):
         assert codec.BatchDecoder().to_python(value, meta) == obj
 
 
+def test_path_extraction_reads_spark_native_unsorted_dictionary(spark):
+    """Spark's writer lists dictionary keys in first-seen order and
+    leaves the sorted bit clear, while an object lists its fields by
+    key name; field lookup must not assume id order."""
+    from pyspark.sql import functions as F
+
+    paths = {"b": ("$.b", "bigint"), "a1": ("$.a[1]", "bigint"), "c": ("$.c", "string")}
+    df = spark.range(1).select(F.parse_json(F.lit('{"b": 1, "a": [2, 3], "c": "x"}')).alias("v"))
+    row = df.select(
+        "v", *[F.variant_get("v", p, t).alias(n) for n, (p, t) in paths.items()]
+    ).collect()[0]
+    value, meta = bytes(row["v"].value), bytes(row["v"].metadata)
+    assert not codec.Metadata(meta).sorted_strings  # the case under test
+    for name, (path, _) in paths.items():
+        assert codec.get_path(value, meta, path) == row[name], path
+    steps = tuple(codec.parse_json_path("$.c"))
+    dec = codec.BatchDecoder()
+    node = codec.walk_path(value, steps, dec.fids(meta, steps), False)
+    assert node.get_string() == "x"
+    m = codec.Metadata(meta)
+    assert codec.Variant(value).field(m.find_string("a"), False).get_array().n == 2
+    with pytest.raises(codec.VariantError, match="not sorted"):
+        codec.ObjectBuilder(codec.Metadata(meta))
+
+
 json_scalars = st.one_of(
     st.none(),
     st.booleans(),

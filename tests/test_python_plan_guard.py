@@ -49,14 +49,20 @@ KNOWN_RANGE_SAMPLED = frozenset(
         "multimodal_wav_resample",
         "multimodal_y4m_downsample",
         "multimodal_y4m_frames",
-        "udaf_weighted_avg",
-        "udtf_json_explode",
         "udtf_table_partitioned",
     }
 )
 
 #: The Track C queries sorted on ``event_id`` before their UDFs.
 SORTED_BEFORE_UDFS = ("variant_explicit_codec", "variant_merge_patch", "sql_codec_surface")
+
+#: Queries sorted on an input column below their Python node, which
+#: hands the rows on in the sort key's order: name -> the output
+#: columns that come back sorted.
+SORTED_BELOW_PYTHON = {
+    "udtf_json_explode": ("event_id", "prop_key"),
+    "udaf_weighted_avg": ("l_returnflag",),
+}
 
 
 def _children(node) -> list:
@@ -106,6 +112,15 @@ def test_track_c_udfs_run_once_per_row_and_rows_come_back_sorted(spark, name):
     assert range_sampled_python_nodes(df) == []
     ids = [r.event_id for r in rows]
     assert ids == sorted(ids) and len(ids) > 1
+
+
+@pytest.mark.parametrize("name", sorted(SORTED_BELOW_PYTHON))
+def test_python_node_above_its_input_sort_runs_once_and_rows_come_back_sorted(spark, name):
+    df = load_all_queries()[name].build(spark, SF_DIR)
+    rows = df.collect()
+    assert range_sampled_python_nodes(df) == []
+    keys = [tuple(r[c] for c in SORTED_BELOW_PYTHON[name]) for r in rows]
+    assert keys == sorted(keys) and len(keys) > 1
 
 
 def test_guard_sees_a_python_node_under_a_range_exchange(spark):

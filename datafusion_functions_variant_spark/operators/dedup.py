@@ -318,10 +318,10 @@ def minhash_signatures_inrow(
 def banded_hashes(
     sigs: DataFrame, num_hashes: int = 8, bands: int = 2
 ) -> list[F.Column]:
-    """The per-band hash expressions (same convention as ``_banded``:
-    md5 of the concatenated band signature values) as plain columns —
-    for callers that need band hashes IN-ROW (streaming ingest probes)
-    rather than exploded to (id, band) rows."""
+    """The per-band hash expressions (md5 of the concatenated band
+    signature values) as plain columns — for callers that need band
+    hashes IN-ROW (streaming ingest probes); ``banded_rows_inrow``
+    explodes them to (id, band) rows."""
     r = num_hashes // bands
     return [
         F.md5(F.concat(*[F.col(f"mh{b * r + i}") for i in range(r)])).alias(
@@ -338,48 +338,19 @@ def banded_rows_inrow(
     bands: int = 2,
     keep: list | None = None,
 ) -> DataFrame:
-    """Melt a signature frame's IN-ROW band hashes (``banded_hashes``
-    columns) into (id, band_id, band_hash) rows — the probe-side twin
-    of ``_banded`` for frames whose signatures were computed with
-    ``minhash_signatures_inrow`` (streaming ingest probes, batch
-    screening, chunk-level dedup). ``keep`` lists extra columns to
-    carry through. One in-row explode; no shuffle."""
-    bh = banded_hashes(sigs, num_hashes=num_hashes, bands=bands)
+    """(id, band_id, band_hash) — one row per (doc, band), with the
+    ``keep`` columns carried through. The band hash is
+    ``banded_hashes``' md5 of the band's r concatenated minhash values;
+    its cardinality is ≈ #docs, so a downstream bucket groupBy shuffles
+    uniformly. One in-row explode; no shuffle."""
     extra = keep or []
-    melted = sigs.select(id_col, *extra, *bh).select(
-        id_col,
-        *extra,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.col(f"band_hash{b}").alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bnd"),
-    )
-    return melted.select(
-        id_col, *extra, "_bnd.band_id", "_bnd.band_hash"
-    )
-
-
-def _banded(sigs: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band_id, band_hash) — one row per (doc, band). The band
-    hash concatenates the band's r minhash values; its cardinality is
-    ≈ #docs, so the downstream bucket groupBy shuffles uniformly."""
-    r = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * r + i}") for i in range(r)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_id"), F.md5(F.concat(*parts)).alias("band_hash"))
-        )
+    band_rows = [
+        F.struct(F.lit(b).alias("band_id"), h.alias("band_hash"))
+        for b, h in enumerate(banded_hashes(sigs, num_hashes, bands))
+    ]
     return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bnd")
-    ).select(id_col, "bnd.band_id", "bnd.band_hash")
+        F.col(id_col), *extra, F.explode(F.array(*band_rows)).alias("bnd")
+    ).select(id_col, *extra, "bnd.band_id", "bnd.band_hash")
 
 
 def lsh_candidate_pairs(
@@ -445,7 +416,7 @@ def lsh_candidate_pairs(
     band_hash) satisfies the subgroup aggregate's clustering (subset
     key), so the groupBy re-uses it (plan-pinned).
     """
-    banded = _banded(sigs, id_col, num_hashes, bands)
+    banded = banded_rows_inrow(sigs, id_col, num_hashes, bands)
     w = Window.partitionBy("band_id", "band_hash")
     routed = banded.select(
         "band_id",
@@ -531,7 +502,7 @@ def lsh_bucket_stats(
     overflow path.
     """
     counts = (
-        _banded(sigs, id_col, num_hashes, bands)
+        banded_rows_inrow(sigs, id_col, num_hashes, bands)
         .groupBy("band_id", "band_hash")
         .agg(F.count(F.lit(1)).alias("n"))
     )

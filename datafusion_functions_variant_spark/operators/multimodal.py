@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import png, ppm, wav, y4m
+
 #: Metadata schema produced by featurize_binary.
 MEDIA_META_SCHEMA = StructType(
     [
@@ -160,14 +162,10 @@ def register_stdlib_decoders() -> None:
     installs better decoders first wins. Runs at import: the registry
     is REAL in this container, with two genuine image formats plus
     audio — ``decode_via_registry`` dispatches across them."""
-    from . import png as _png
-    from . import ppm as _ppm
-    from . import wav as _wav
-
     for kind, factory in (
-        ("image/png", _png.png_decoder),
-        ("image/ppm", _ppm.ppm_decoder),
-        ("audio/wav", _wav.wav_decoder),
+        ("image/png", png.png_decoder),
+        ("image/ppm", ppm.ppm_decoder),
+        ("audio/wav", wav.wav_decoder),
     ):
         if kind not in _DECODERS:
             register_decoder(kind, factory())
@@ -303,6 +301,111 @@ def featurize_binary(
     return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
         _featurize, out_schema
     )
+
+
+#: Schema of the asset frames ``synthesize_assets`` and ``map_payloads``
+#: emit.
+_ASSET_SCHEMA = "asset_id long, payload binary"
+
+
+def synthesize_assets(
+    ids: DataFrame, id_col: str, payload_fn: Callable[[int], bytes]
+) -> DataFrame:
+    """``(asset_id, payload)`` with ``payload_fn(id)`` for each row of
+    ``ids``, in one Arrow-batched mapInPandas stage. Rows keep their
+    input order: ids sorted below this stage come back sorted through
+    every order-keeping stage above it, so only the 8-byte id crosses
+    the range exchange and the range partitioner's sample job never
+    runs the Python chain a second time."""
+
+    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids_ = pdf[id_col]
+            yield pd.DataFrame(
+                {"asset_id": ids_, "payload": [payload_fn(int(i)) for i in ids_]}
+            )
+
+    return ids.select(id_col).mapInPandas(_synth, _ASSET_SCHEMA)
+
+
+def map_payloads(assets: DataFrame, fn: Callable[[bytes], bytes]) -> DataFrame:
+    """Per-payload transform stage ``(asset_id, payload) → (asset_id,
+    fn(payload))`` (resize, resample, transcode), one Arrow-batched
+    mapInPandas that keeps row order. A PIL/libvips/av transform drops
+    in as ``fn`` with no change to the plan."""
+
+    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "asset_id": pdf["asset_id"],
+                    "payload": [fn(bytes(p)) for p in pdf["payload"]],
+                }
+            )
+
+    return assets.select("asset_id", "payload").mapInPandas(_map, _ASSET_SCHEMA)
+
+
+# Synthetic payloads: each is a pure function of the asset id, and the
+# multimodal queries' DuckDB oracles replay its formula arithmetically.
+
+
+def png_gray(i: int) -> bytes:
+    """(8 + i%5) x (6 + i%4) gray PNG, pixel (x, y) = (i + 7x + 13y)
+    % 256, scanline filter i % 5 (all five spec filters over the ids)."""
+    w, h = 8 + i % 5, 6 + i % 4
+    pix = bytes((i + 7 * x + 13 * y) % 256 for y in range(h) for x in range(w))
+    return png.encode_png(w, h, pix, 1, filter_type=i % 5)
+
+
+def ppm_image(i: int) -> bytes:
+    """(9 + i%6) x (5 + i%3) Netpbm image, RGB (P6) for i % 4 == 1 and
+    gray (P5) otherwise; sample (x, y, c) = (i + 7x + 13y + 97c) % 251."""
+    w, h = 9 + i % 6, 5 + i % 3
+    cc = 3 if i % 4 == 1 else 1
+    pix = bytes(
+        (i + 7 * x + 13 * y + 97 * c) % 251
+        for y in range(h)
+        for x in range(w)
+        for c in range(cc)
+    )
+    return ppm.encode_ppm(w, h, pix, cc)
+
+
+def wav_sawtooth(i: int) -> bytes:
+    """8 kHz mono 16-bit WAV of 30 + i%20 samples, sample j =
+    (i + 37j) % 4001 - 2000."""
+    return wav.encode_wav(
+        [(i + 37 * j) % 4001 - 2000 for j in range(30 + i % 20)], 8000, 1
+    )
+
+
+def y4m_letters(i: int) -> bytes:
+    """4x2 mono Y4M of 6 + i%4 frames; pixel p of frame f is the ASCII
+    letter 65 + (i + 3f + 5p) % 26, so an oracle can rebuild each
+    frame as text."""
+    frames = [
+        bytes(65 + (i + 3 * f + 5 * p) % 26 for p in range(8))
+        for f in range(6 + i % 4)
+    ]
+    return y4m.encode_y4m(frames, 4, 2)
+
+
+def phash_png(i: int, group_modulus: int) -> bytes:
+    """18x16 gray PNG for perceptual dedup. Pattern group b = i %
+    group_modulus picks the gradient; variant v = i // group_modulus
+    adds a +2v uniform brightness shift (dHash-invariant) and, for
+    v % 4 == 3, a +40 blob over pixels x<2, y<4 (flips only band-0
+    bits)."""
+    b, v = i % group_modulus, i // group_modulus
+    pix = bytes(
+        ((11 + b) * x + (23 + 2 * b) * y) % 97
+        + 2 * v
+        + (40 if v % 4 == 3 and x < 2 and y < 4 else 0)
+        for y in range(16)
+        for x in range(18)
+    )
+    return png.encode_png(18, 16, pix, 1, filter_type=i % 5)
 
 
 def frame_sample_plan(

@@ -20,6 +20,8 @@ every byte is spec-real: a fixture written here pipes straight into
 
 from __future__ import annotations
 
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
 _MAGIC = b"YUV4MPEG2"
 
 
@@ -99,3 +101,28 @@ def y4m_frame_extractor(payload: bytes, every_n: int) -> list[tuple[int, bytes]]
         raise ValueError(f"every_n must be >= 1, got {every_n}")
     d = decode_y4m(payload)
     return [(i, f) for i, f in enumerate(d["frames"]) if i % every_n == 0]
+
+
+def y4m_decoder():
+    """``MediaDecoder`` for the registry seam: real decode emitting the
+    frame count and the exact pixel-byte sum over every frame — an
+    oracle-checkable content proof."""
+    from .multimodal import MediaDecoder
+
+    def _decode(payload: bytes) -> dict:
+        d = decode_y4m(payload)
+        return {
+            "n_frames": len(d["frames"]),
+            "px_sum": sum(sum(f) for f in d["frames"]),
+        }
+
+    return MediaDecoder(
+        name="stdlib-y4m",
+        fields=StructType(
+            [
+                StructField("n_frames", IntegerType()),
+                StructField("px_sum", LongType()),
+            ]
+        ),
+        fn=_decode,
+    )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import multimodal
 from ..sources.tables import load_table
 from . import query
 
@@ -2353,6 +2354,7 @@ def curation_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(asset_id) AS BIGINT) AS last_asset
     FROM packed GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
     """,
+    hash_deps=(multimodal.synthesize_assets, multimodal.png_gray),
 )
 def pipeline_media_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multimodal CAPSTONE — binary ingest to training shards in
@@ -2380,32 +2382,14 @@ def pipeline_media_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims do. Reference parity: the reference has no media layer at
     all; this is the Spark-native shape its codec-style column model
     (binary + typed metadata) supports."""
-    from ..operators import multimodal
     from ..operators import png as pngmod
 
     ids = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 200
     ).select("doc_id")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                s = int(i) % 100
-                w, h = 8 + s % 5, 6 + s % 4
-                pix = bytes(
-                    (s + 7 * x + 13 * y) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(
-                    pngmod.encode_png(w, h, pix, 1, filter_type=s % 5)
-                )
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    assets = ids.mapInPandas(gen, "asset_id long, payload binary")
+    assets = multimodal.synthesize_assets(
+        ids, "doc_id", lambda i: multimodal.png_gray(i % 100)
+    )
     feat = multimodal.featurize_binary(
         assets, "payload", "asset_id", decoder=pngmod.png_decoder()
     )

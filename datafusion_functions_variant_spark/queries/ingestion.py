@@ -143,7 +143,7 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs_c = dedup.minhash_signatures_text(
         corpus_t, "text", "_th", n=8, num_hashes=8
     )
-    index = dedup._banded(sigs_c, "_th", 8, 2).select(
+    index = dedup.banded_rows_inrow(sigs_c, "_th", 8, 2).select(
         "band_id", "band_hash"
     ).distinct()
 
@@ -781,7 +781,7 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in _SWEEP_BANDS:
         r = 8 // b
         counts = (
-            dedup._banded(sigs, "doc_id", 8, b)
+            dedup.banded_rows_inrow(sigs, "doc_id", 8, b)
             .groupBy("band_id", "band_hash")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -1338,7 +1338,7 @@ def bucketed_index_build(spark: SparkSession, sf_dir: str) -> None:
         corpus_t, "text", "_th", n=8, num_hashes=8
     )
     index = (
-        dedup._banded(sigs_c, "_th", 8, 2)
+        dedup.banded_rows_inrow(sigs_c, "_th", 8, 2)
         .select(
             F.md5(F.concat("band_id", "band_hash")).alias("bh2")
         )
@@ -2228,7 +2228,7 @@ def _register_bloom_prescreen() -> None:
             corpus, "text", "doc_id", n=8, num_hashes=8
         )
         index = (
-            dedup._banded(sigs_c, "doc_id", 8, 2)
+            dedup.banded_rows_inrow(sigs_c, "doc_id", 8, 2)
             .select("band_id", "band_hash")
             .distinct()
             .localCheckpoint(eager=True)  # built once, read twice (bloom + verify)

@@ -13,6 +13,7 @@ relational queries. The heavy lifting lives in operators/
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -939,6 +940,26 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.featurize_binary(docs, "payload", "doc_id").orderBy("asset_id")
 
 
+#: Shared sources every synthetic-asset query's spec hash reads besides
+#: its builder: the synthesizer, the payload-map stage and the payload
+#: functions whose formulas the oracles replay. An edit to any of them
+#: re-fronts all nine queries for oracle re-verification.
+#:
+#: The seven multimodal ones sort their ids BELOW the Python chain:
+#: every stage above keeps row order, so the rows come back in
+#: ``asset_id`` order, only the 8-byte id crosses the range exchange,
+#: and the range partitioner's sample job never re-runs the chain.
+_SYNTHETIC_ASSET_DEPS = (
+    multimodal.synthesize_assets,
+    multimodal.map_payloads,
+    multimodal.png_gray,
+    multimodal.ppm_image,
+    multimodal.wav_sawtooth,
+    multimodal.y4m_letters,
+    multimodal.phash_png,
+)
+
+
 @query(
     "multimodal_png_decode",
     oracle="""
@@ -957,6 +978,7 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3, 4, 5
     ORDER BY asset_id
     """,
+    hash_deps=_SYNTHETIC_ASSET_DEPS,
 )
 def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode end-to-end, no PIL: per asset, a genuine PNG
@@ -973,33 +995,13 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import png as pngmod
 
-    ids = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50).select(
-        "doc_id"
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 8 + i % 5, 6 + i % 4
-                pix = bytes(
-                    (i + 7 * x + 13 * y) % 256 for y in range(h) for x in range(w)
-                )
-                payloads.append(
-                    pngmod.encode_png(w, h, pix, 1, filter_type=i % 5)
-                )
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    assets = ids.mapInPandas(gen, "asset_id long, payload binary")
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.where(F.col("doc_id") < 50).select("doc_id").orderBy("doc_id")
+    assets = multimodal.synthesize_assets(ids, "doc_id", multimodal.png_gray)
     feat = multimodal.featurize_binary(
         assets, "payload", "asset_id", decoder=pngmod.png_decoder()
     )
-    return feat.select(
-        "asset_id", "mime", "width", "height", "channels", "px_sum"
-    ).orderBy("asset_id")
+    return feat.select("asset_id", "mime", "width", "height", "channels", "px_sum")
 
 
 @query(
@@ -1017,6 +1019,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3, 4
     ORDER BY asset_id
     """,
+    hash_deps=_SYNTHETIC_ASSET_DEPS,
 )
 def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode end-to-end, no librosa: per asset a genuine
@@ -1031,29 +1034,13 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import wav as wavmod
 
-    ids = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50).select(
-        "doc_id"
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 30 + i % 20
-                samples = [((i + 37 * j) % 4001) - 2000 for j in range(n)]
-                payloads.append(wavmod.encode_wav(samples, 8000, 1))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    assets = ids.mapInPandas(gen, "asset_id long, payload binary")
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.where(F.col("doc_id") < 50).select("doc_id").orderBy("doc_id")
+    assets = multimodal.synthesize_assets(ids, "doc_id", multimodal.wav_sawtooth)
     feat = multimodal.featurize_binary(
         assets, "payload", "asset_id", decoder=wavmod.wav_decoder()
     )
-    return feat.select(
-        "asset_id", "sample_rate", "channels", "n_frames", "abs_sum"
-    ).orderBy("asset_id")
+    return feat.select("asset_id", "sample_rate", "channels", "n_frames", "abs_sum")
 
 
 @query(
@@ -1089,6 +1076,7 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3, 4, 5
     ORDER BY asset_id
     """,
+    hash_deps=_SYNTHETIC_ASSET_DEPS,
 )
 def multimodal_registry_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO registered decoder kinds dispatched in one pass (VERDICT r8
@@ -1106,48 +1094,16 @@ def multimodal_registry_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: encode and dispatch-decode are two chained mapInPandas
     stages — payloads never shuffle; the registry lookup happens at
     plan build time, so executors run a fixed dispatch table."""
-    from ..operators import png as pngmod
-    from ..operators import ppm as ppmmod
-
-    ids = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 60)
-        .select("doc_id")
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.where(F.col("doc_id") < 60).select("doc_id").orderBy("doc_id")
+    assets = multimodal.synthesize_assets(
+        ids,
+        "doc_id",
+        lambda i: multimodal.png_gray(i) if i % 2 == 0 else multimodal.ppm_image(i),
     )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                if i % 2 == 0:
-                    w, h = 8 + i % 5, 6 + i % 4
-                    pix = bytes(
-                        (i + 7 * x + 13 * y) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    payloads.append(
-                        pngmod.encode_png(w, h, pix, 1, filter_type=i % 5)
-                    )
-                else:
-                    w, h = 9 + i % 6, 5 + i % 3
-                    cc = 3 if i % 4 == 1 else 1
-                    pix = bytes(
-                        (i + 7 * x + 13 * y + 97 * c) % 251
-                        for y in range(h)
-                        for x in range(w)
-                        for c in range(cc)
-                    )
-                    payloads.append(ppmmod.encode_ppm(w, h, pix, cc))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    assets = ids.mapInPandas(gen, "asset_id long, payload binary")
     return multimodal.decode_via_registry(
         assets, "payload", "asset_id", kinds=("image/png", "image/ppm")
-    ).orderBy("asset_id")
+    )
 
 
 @query(
@@ -1165,6 +1121,7 @@ def multimodal_registry_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 FROM (SELECT unnest(range(8)) AS p) p)) AS frame_md5
     FROM fr ORDER BY asset_id, frame_idx
     """,
+    hash_deps=_SYNTHETIC_ASSET_DEPS,
 )
 def multimodal_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video frame extraction, no av/ffmpeg: per asset a genuine
@@ -1180,29 +1137,13 @@ def multimodal_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import y4m as y4mmod
 
-    ids = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 40).select(
-        "doc_id"
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                frames = [
-                    bytes(65 + (i + 3 * f + 5 * p) % 26 for p in range(8))
-                    for f in range(6 + i % 4)
-                ]
-                payloads.append(y4mmod.encode_y4m(frames, 4, 2))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    assets = ids.mapInPandas(gen, "asset_id long, payload binary")
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.where(F.col("doc_id") < 40).select("doc_id").orderBy("doc_id")
+    assets = multimodal.synthesize_assets(ids, "doc_id", multimodal.y4m_letters)
     return multimodal.frame_sample_plan(
         assets, "payload", "asset_id", every_n=2,
         frame_extractor=y4mmod.y4m_frame_extractor,
-    ).orderBy("asset_id", "frame_idx")
+    )
 
 
 @query(
@@ -1577,6 +1518,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     ORDER BY asset_id
     """,
+    hash_deps=_SYNTHETIC_ASSET_DEPS,
 )
 def multimodal_png_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image RESIZE end-to-end, no PIL: synth PNG → decode →
@@ -1593,65 +1535,31 @@ def multimodal_png_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: three chained mapInPandas stages (synth → resize →
     featurize) with NO shuffle between them — payloads live and die
     inside one partition chain, the mandatory discipline when a "row"
-    is megabytes (plan-pinned: zero exchanges before the final sort).
-    A PIL/libvips thumbnailer drops into the middle stage with the
-    same (asset_id, payload) → (asset_id, payload) signature."""
+    is megabytes (plan-pinned: the one Exchange is the range sort of
+    the ids below the chain). A PIL/libvips thumbnailer drops into
+    the middle stage (``multimodal.map_payloads``) with the same
+    (asset_id, payload) → (asset_id, payload) signature."""
     from ..operators import png as pngmod
 
-    ids = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50).select(
-        "doc_id"
+    def thumb(payload: bytes) -> bytes:
+        d = pngmod.decode_png(payload)
+        w, px = d["width"], d["pixels"]
+        tw, th = (w + 1) // 2, (d["height"] + 1) // 2
+        small = bytes(px[2 * y * w + 2 * x] for y in range(th) for x in range(tw))
+        return pngmod.encode_png(tw, th, small, 1, filter_type=0)
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.where(F.col("doc_id") < 50).select("doc_id").orderBy("doc_id")
+    thumbs = multimodal.map_payloads(
+        multimodal.synthesize_assets(ids, "doc_id", multimodal.png_gray), thumb
     )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 8 + i % 5, 6 + i % 4
-                pix = bytes(
-                    (i + 7 * x + 13 * y) % 256 for y in range(h) for x in range(w)
-                )
-                payloads.append(pngmod.encode_png(w, h, pix, 1, filter_type=i % 5))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    def thumb(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                d = pngmod.decode_png(bytes(payload))
-                w, h, px = d["width"], d["height"], d["pixels"]
-                tw, th = (w + 1) // 2, (h + 1) // 2
-                small = bytes(
-                    px[(2 * y) * w + (2 * x)] for y in range(th) for x in range(tw)
-                )
-                out.append(pngmod.encode_png(tw, th, small, 1, filter_type=0))
-            yield pd.DataFrame({"asset_id": pdf["asset_id"], "payload": out})
-
-    def feats(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = pngmod.decode_png(bytes(payload))
-                rows.append(
-                    (int(aid), d["width"], d["height"], sum(d["pixels"]))
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "thumb_w", "thumb_h", "thumb_px_sum"]
-            )
-
-    assets = ids.mapInPandas(gen, "asset_id long, payload binary")
-    thumbs = assets.mapInPandas(thumb, "asset_id long, payload binary")
-    return (
-        thumbs.mapInPandas(
-            feats, "asset_id long, thumb_w int, thumb_h int, thumb_px_sum long"
-        )
-        .orderBy("asset_id")
+    return multimodal.featurize_binary(
+        thumbs, "payload", "asset_id", decoder=pngmod.png_decoder()
+    ).select(
+        "asset_id",
+        F.col("width").alias("thumb_w"),
+        F.col("height").alias("thumb_h"),
+        F.col("px_sum").alias("thumb_px_sum"),
     )
 
 
@@ -1736,6 +1644,7 @@ def dataset_group_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     ORDER BY asset_id
     """,
+    hash_deps=_SYNTHETIC_ASSET_DEPS,
 )
 def multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio RESAMPLE end-to-end, no librosa: synth 8 kHz WAV →
@@ -1748,60 +1657,24 @@ def multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the kept sample indices, so the resample is verified
     SAMPLE-exact. Audio resize leg, next to the image leg
     (`multimodal_png_thumbnail`); same scale discipline — chained
-    mapInPandas, payloads never shuffled, one Exchange (final sort)."""
+    mapInPandas, payloads never shuffled, one Exchange (the range sort
+    of the ids below the chain)."""
     from ..operators import wav as wavmod
 
-    ids = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50).select(
-        "doc_id"
+    def decimate(payload: bytes) -> bytes:
+        d = wavmod.decode_wav(payload)
+        return wavmod.encode_wav(d["samples"][::2], d["sample_rate"] // 2, 1)
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.where(F.col("doc_id") < 50).select("doc_id").orderBy("doc_id")
+    small = multimodal.map_payloads(
+        multimodal.synthesize_assets(ids, "doc_id", multimodal.wav_sawtooth), decimate
     )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 30 + i % 20
-                samples = [((i + 37 * j) % 4001) - 2000 for j in range(n)]
-                payloads.append(wavmod.encode_wav(samples, 8000, 1))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    def resample(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                d = wavmod.decode_wav(bytes(payload))
-                kept = d["samples"][::2]
-                out.append(wavmod.encode_wav(kept, d["sample_rate"] // 2, 1))
-            yield pd.DataFrame({"asset_id": pdf["asset_id"], "payload": out})
-
-    def feats(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = wavmod.decode_wav(bytes(payload))
-                rows.append(
-                    (
-                        int(aid),
-                        d["sample_rate"],
-                        len(d["samples"]),
-                        sum(abs(s) for s in d["samples"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "sample_rate", "out_frames", "abs_sum"]
-            )
-
-    assets = ids.mapInPandas(gen, "asset_id long, payload binary")
-    small = assets.mapInPandas(resample, "asset_id long, payload binary")
-    return small.mapInPandas(
-        feats, "asset_id long, sample_rate int, out_frames int, abs_sum long"
-    ).orderBy("asset_id")
+    return multimodal.featurize_binary(
+        small, "payload", "asset_id", decoder=wavmod.wav_decoder()
+    ).select(
+        "asset_id", "sample_rate", F.col("n_frames").alias("out_frames"), "abs_sum"
+    )
 
 
 @query(
@@ -1819,6 +1692,7 @@ def multimodal_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS px_sum
     FROM kept GROUP BY asset_id, nf ORDER BY asset_id
     """,
+    hash_deps=_SYNTHETIC_ASSET_DEPS,
 )
 def multimodal_y4m_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video temporal RESIZE: decode the Y4M stream → keep every
@@ -1834,92 +1708,18 @@ def multimodal_y4m_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-Exchange chained-mapInPandas discipline."""
     from ..operators import y4m as y4mmod
 
-    ids = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 40).select(
-        "doc_id"
+    def halve(payload: bytes) -> bytes:
+        d = y4mmod.decode_y4m(payload)
+        return y4mmod.encode_y4m(d["frames"][::2], d["width"], d["height"])
+
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.where(F.col("doc_id") < 40).select("doc_id").orderBy("doc_id")
+    halved = multimodal.map_payloads(
+        multimodal.synthesize_assets(ids, "doc_id", multimodal.y4m_letters), halve
     )
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                frames = [
-                    bytes(65 + (i + 3 * f + 5 * p) % 26 for p in range(8))
-                    for f in range(6 + i % 4)
-                ]
-                payloads.append(y4mmod.encode_y4m(frames, 4, 2))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    def halve(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                d = y4mmod.decode_y4m(bytes(payload))
-                out.append(
-                    y4mmod.encode_y4m(d["frames"][::2], d["width"], d["height"])
-                )
-            yield pd.DataFrame({"asset_id": pdf["asset_id"], "payload": out})
-
-    def feats(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = y4mmod.decode_y4m(bytes(payload))
-                rows.append(
-                    (
-                        int(aid),
-                        len(d["frames"]),
-                        sum(sum(f) for f in d["frames"]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "out_frames", "px_sum"])
-
-    assets = ids.mapInPandas(gen, "asset_id long, payload binary")
-    halved = assets.mapInPandas(halve, "asset_id long, payload binary")
-    return halved.mapInPandas(
-        feats, "asset_id long, out_frames int, px_sum long"
-    ).orderBy("asset_id")
-
-
-def phash_png_fixture(group_modulus: int):
-    """mapInPandas generator: doc_id -> deterministic 18x16 gray PNG.
-    Pattern group b = id % group_modulus picks the gradient; variant
-    v = id // group_modulus applies a +2v uniform brightness shift
-    (dHash-invariant) and, for v % 4 == 3, a +40 blob over pixels
-    x<2, y<4 (flips only band-0 bits). Shared by `dedup_image_phash`
-    (modulus 25) and scale_probe.py's adversarial depth case, and
-    replayed arithmetically by the DuckDB oracle."""
-    from ..operators import png as pngmod
-
-    W, H = 18, 16
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                b, v = i % group_modulus, i // group_modulus
-                pix = bytearray()
-                for y in range(H):
-                    for x in range(W):
-                        p = ((11 + b) * x + (23 + 2 * b) * y) % 97 + 2 * v
-                        if v % 4 == 3 and x < 2 and y < 4:
-                            p += 40
-                        pix.append(p)
-                payloads.append(
-                    pngmod.encode_png(W, H, bytes(pix), 1, filter_type=i % 5)
-                )
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
+    return multimodal.featurize_binary(
+        halved, "payload", "asset_id", decoder=y4mmod.y4m_decoder()
+    ).select("asset_id", F.col("n_frames").alias("out_frames"), "px_sum")
 
 
 @query(
@@ -1979,11 +1779,7 @@ def phash_png_fixture(group_modulus: int):
         + bit_count(xor(sa.band3, sb.band3)) <= 6
     ORDER BY id_a, id_b
     """,
-    hash_deps=(
-        phash.dhash_bands,
-        phash.neardup_pairs,
-        phash_png_fixture,
-    ),
+    hash_deps=(phash.dhash_bands, phash.neardup_pairs, *_SYNTHETIC_ASSET_DEPS),
 )
 def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate IMAGE dedup — ties the multimodal and
@@ -2021,8 +1817,8 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 100)
         .select("doc_id")
     )
-    assets = ids.mapInPandas(
-        phash_png_fixture(group_modulus=25), "asset_id long, payload binary"
+    assets = multimodal.synthesize_assets(
+        ids, "doc_id", partial(multimodal.phash_png, group_modulus=25)
     )
     sigs = phash.dhash_bands(assets, "asset_id", "payload")
     return phash.neardup_pairs(
@@ -2181,10 +1977,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(depth * (depth - 1)) AS BIGINT) AS candidate_pairs
     FROM buckets GROUP BY band_id ORDER BY band_id
     """,
-    # the oracle replays phash_png_fixture's generative pixel formula
-    # too — without it in hash_deps, editing the fixture would leave
-    # this query's ledger hash silently stale (r8 ADVICE)
-    hash_deps=(phash.dhash_bands, phash_png_fixture),
+    # the oracle replays phash_png's generative pixel formula too —
+    # without it in hash_deps, editing the fixture would leave this
+    # query's ledger hash silently stale (r8 ADVICE)
+    hash_deps=(phash.dhash_bands, *_SYNTHETIC_ASSET_DEPS),
 )
 def phash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-flight audit for `dedup_image_phash`'s banded blocking —
@@ -2203,8 +1999,8 @@ def phash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 100)
         .select("doc_id")
     )
-    assets = ids.mapInPandas(
-        phash_png_fixture(group_modulus=25), "asset_id long, payload binary"
+    assets = multimodal.synthesize_assets(
+        ids, "doc_id", partial(multimodal.phash_png, group_modulus=25)
     )
     sigs = phash.dhash_bands(assets, "asset_id", "payload")
     exploded = sigs.select(

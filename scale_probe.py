@@ -29,6 +29,7 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -61,7 +62,7 @@ def replicate(df, k: int, id_col: str):
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from datafusion_functions_variant_spark.operators import dedup, similarity
+    from datafusion_functions_variant_spark.operators import dedup, multimodal, similarity
     from datafusion_functions_variant_spark.operators.text import quality_stats, words
     from datafusion_functions_variant_spark.plans.session import get_session
 
@@ -124,28 +125,9 @@ def main() -> None:
     def png_decode_pipeline(docs):
         # mirrors multimodal_png_decode: synth PNGs (mapInPandas) →
         # stdlib decode (mapInPandas) — the Python-stage scale story
-        from datafusion_functions_variant_spark.operators import multimodal
         from datafusion_functions_variant_spark.operators import png as pngmod
 
-        ids = docs.select("doc_id")
-
-        def gen(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                payloads = []
-                for i in pdf["doc_id"]:
-                    i = int(i)
-                    w, h = 8 + i % 5, 6 + i % 4
-                    pix = bytes(
-                        (i + 7 * x + 13 * y) % 256
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    payloads.append(pngmod.encode_png(w, h, pix, 1, i % 5))
-                yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
-
-        assets = ids.mapInPandas(gen, "asset_id long, payload binary")
+        assets = multimodal.synthesize_assets(docs, "doc_id", multimodal.png_gray)
         feat = multimodal.featurize_binary(
             assets, "payload", "asset_id", decoder=pngmod.png_decoder()
         )
@@ -201,7 +183,7 @@ def main() -> None:
             corpus, "text", "doc_id", hash_fn="xxhash64"
         )
         index = (
-            dedup._banded(sigs_c, "doc_id", 8, 2)
+            dedup.banded_rows_inrow(sigs_c, "doc_id", 8, 2)
             .select("band_id", "band_hash").distinct().persist()
         )
         index.count()  # materialize index outside the timed probe
@@ -406,16 +388,12 @@ def main() -> None:
     # K; the claim under test is that blocking stays an equi-join
     # (never all-pairs) and the K^2 term is the OUTPUT, not a scan.
     from datafusion_functions_variant_spark.operators import phash
-    from datafusion_functions_variant_spark.queries.llmdata import (
-        phash_png_fixture,
-    )
 
     per_k = {}
     for k in KS:
         ids = spark.range(0, 1000 * k).select(F.col("id").alias("doc_id"))
-        assets = ids.mapInPandas(
-            phash_png_fixture(group_modulus=250),
-            "asset_id long, payload binary",
+        assets = multimodal.synthesize_assets(
+            ids, "doc_id", partial(multimodal.phash_png, group_modulus=250)
         )
         sigs = phash.dhash_bands(assets, "asset_id", "payload")
         pairs = phash.neardup_pairs(sigs, "asset_id", max_hamming=6)
@@ -450,9 +428,8 @@ def main() -> None:
         ids = spark.range(0, 1000 * k).select(
             F.lit(0).cast("long").alias("doc_id")  # constant → identical PNGs
         )
-        assets = ids.mapInPandas(
-            phash_png_fixture(group_modulus=1),
-            "asset_id long, payload binary",
+        assets = multimodal.synthesize_assets(
+            ids, "doc_id", partial(multimodal.phash_png, group_modulus=1)
         ).withColumn("asset_id", F.monotonically_increasing_id())
         sigs = phash.dhash_bands(assets, "asset_id", "payload")
         pairs = phash.neardup_pairs(

@@ -95,7 +95,7 @@ def test_incremental_probe_flags_every_exact_duplicate(spark):
     incoming = spark.createDataFrame(incoming_rows, ["doc_id", "text"])
 
     sigs_c = dedup.minhash_signatures_text(corpus, "text", "doc_id", n=8, num_hashes=8)
-    index = dedup._banded(sigs_c, "doc_id", 8, 2).select(
+    index = dedup.banded_rows_inrow(sigs_c, "doc_id", 8, 2).select(
         "band_id", "band_hash"
     ).distinct()
     probe = dedup.minhash_signatures_inrow(

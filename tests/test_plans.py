@@ -1020,12 +1020,12 @@ def test_bitemporal_filters_push_before_window(spark):
 
 def test_png_thumbnail_payload_chain_has_no_shuffle(spark):
     # synth → resize → featurize are chained mapInPandas stages: image
-    # payloads must never cross an Exchange (only the final tiny sort
-    # of feature rows shuffles)
+    # payloads must never cross an Exchange (only the range sort of the
+    # 8-byte ids below the chain shuffles)
     plan = plan_of(spark, "multimodal_png_thumbnail")
     assert plan.count("MapInPandas") == 3
-    # the only Exchange in the whole plan is the final range
-    # partitioning for the orderBy of the tiny feature rows
+    # the only Exchange in the whole plan is the range partitioning
+    # of the ids sorted below the chain
     assert plan.count("Exchange") == 1
     assert "rangepartitioning" in plan
 
@@ -1074,8 +1074,8 @@ def test_spatial_nearest_guarded_two_phase(spark):
 
 def test_wav_resample_payload_chain_has_no_shuffle(spark):
     # same discipline as the image thumbnail: three chained
-    # mapInPandas stages, the only Exchange is the final sort of the
-    # tiny feature rows
+    # mapInPandas stages, the only Exchange is the range sort of the
+    # ids below the chain
     plan = plan_of(spark, "multimodal_wav_resample")
     assert plan.count("MapInPandas") == 3
     assert plan.count("Exchange") == 1

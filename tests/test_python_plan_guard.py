@@ -32,9 +32,9 @@ from .conftest import SF_DIR
 _PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
 
 #: Queries whose Python node sits in a range exchange's stage because
-#: the sorted rows come from the Python side (a UDTF, a grouped map or
-#: aggregate, or a mapInPandas output); ROADMAP lists them as an open
-#: item.
+#: the sorted rows come from the Python side (a UDTF, a grouped map, or
+#: a mapInPandas over the document text, which a sort below would carry
+#: through the exchange); ROADMAP lists them as an open item.
 KNOWN_RANGE_SAMPLED = frozenset(
     {
         "cogroup_order_event_coverage",
@@ -42,13 +42,6 @@ KNOWN_RANGE_SAMPLED = frozenset(
         "multimodal_audio_framing",
         "multimodal_binary_meta",
         "multimodal_frame_sample",
-        "multimodal_png_decode",
-        "multimodal_png_thumbnail",
-        "multimodal_registry_dispatch",
-        "multimodal_wav_decode",
-        "multimodal_wav_resample",
-        "multimodal_y4m_downsample",
-        "multimodal_y4m_frames",
         "udtf_table_partitioned",
     }
 )
@@ -62,6 +55,13 @@ SORTED_BEFORE_UDFS = ("variant_explicit_codec", "variant_merge_patch", "sql_code
 SORTED_BELOW_PYTHON = {
     "udtf_json_explode": ("event_id", "prop_key"),
     "udaf_weighted_avg": ("l_returnflag",),
+    "multimodal_png_decode": ("asset_id",),
+    "multimodal_wav_decode": ("asset_id",),
+    "multimodal_registry_dispatch": ("asset_id",),
+    "multimodal_y4m_frames": ("asset_id", "frame_idx"),
+    "multimodal_png_thumbnail": ("asset_id",),
+    "multimodal_wav_resample": ("asset_id",),
+    "multimodal_y4m_downsample": ("asset_id",),
 }
 
 
@@ -121,6 +121,31 @@ def test_python_node_above_its_input_sort_runs_once_and_rows_come_back_sorted(sp
     assert range_sampled_python_nodes(df) == []
     keys = [tuple(r[c] for c in SORTED_BELOW_PYTHON[name]) for r in rows]
     assert keys == sorted(keys) and len(keys) > 1
+
+
+def test_synthesizer_runs_once_per_asset_with_its_ids_sorted_below(spark):
+    from pyspark.sql import functions as F
+
+    from datafusion_functions_variant_spark.operators import multimodal
+    from datafusion_functions_variant_spark.sources.tables import load_table
+
+    n = 50
+    calls = spark.sparkContext.accumulator(0)
+
+    def payload(i: int) -> bytes:
+        calls.add(1)
+        return multimodal.png_gray(i)
+
+    ids = load_table(spark, SF_DIR, "documents").where(F.col("doc_id") < n).select("doc_id")
+    rows = multimodal.synthesize_assets(ids.orderBy("doc_id"), "doc_id", payload).collect()
+    assert calls.value == n
+    assert [r.asset_id for r in rows] == list(range(n))
+    assert rows[7].payload == multimodal.png_gray(7)
+
+    # the accumulator sees the sample job: sorted above, the chain runs again
+    calls.value = 0
+    multimodal.synthesize_assets(ids, "doc_id", payload).orderBy("asset_id").collect()
+    assert calls.value > n
 
 
 def test_guard_sees_a_python_node_under_a_range_exchange(spark):

@@ -180,3 +180,38 @@ def test_capstone_spec_hash_covers_driver(name):
         core._pin_batch_mtime,
     ):
         assert dep in deps, dep.__name__
+
+
+#: The queries built on the synthetic-asset stage: each oracle replays
+#: a payload formula, so each spec hash must cover the shared stage.
+SYNTHETIC_ASSET_QUERIES = (
+    "multimodal_png_decode",
+    "multimodal_wav_decode",
+    "multimodal_registry_dispatch",
+    "multimodal_y4m_frames",
+    "multimodal_png_thumbnail",
+    "multimodal_wav_resample",
+    "multimodal_y4m_downsample",
+    "dedup_image_phash",
+    "phash_band_stats",
+)
+
+
+@pytest.mark.parametrize("name", SYNTHETIC_ASSET_QUERIES)
+def test_synthetic_asset_spec_hash_covers_shared_stage(name):
+    """An edit to the asset synthesizer, the payload-map stage or a
+    payload function must move the spec hash of every query built on
+    them (re-fronting it for verification)."""
+    from datafusion_functions_variant_spark.operators import multimodal as mm
+
+    deps = Q.load_all_queries()[name].hash_deps
+    for dep in (
+        mm.synthesize_assets,
+        mm.map_payloads,
+        mm.png_gray,
+        mm.ppm_image,
+        mm.wav_sawtooth,
+        mm.y4m_letters,
+        mm.phash_png,
+    ):
+        assert dep in deps, dep.__name__

@@ -18,15 +18,6 @@ from ..streaming import history as _history
 from . import dsum_sql, isum_sql, query
 
 
-def history_default_threshold() -> int:
-    """The size-aware history-probe broadcast cutoff (env-dialable,
-    see streaming/history.py) — resolved lazily so tests can
-    monkeypatch the module constant."""
-    from ..streaming.history import DEFAULT_BROADCAST_THRESHOLD_ROWS
-
-    return DEFAULT_BROADCAST_THRESHOLD_ROWS
-
-
 @query(
     "stream_tumbling_counts",
     oracle=f"""
@@ -217,44 +208,27 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _index_update_ingest(spark, idx, out_dir):
-    """foreachBatch callback of the self-updating ingest dedup — the
-    probe-before-append transaction both the fresh-index capstone
-    (``stream_dedup_index_update``) and its restart twin
-    (``stream_dedup_index_restart``) run; shared so the two can never
-    drift. ``idx`` is a ``SelfUpdatingHistoryIndex`` (fresh-built or
-    attach()-recovered — the callback is agnostic, which is the point:
+def _tiered_ingest(spark, idx, out_dir):
+    """foreachBatch callback of the ingest dedup — the probe-before-
+    append transaction every capstone cell runs (the JSON and shredded
+    feeds derive the key first, then call it). ``idx`` is a
+    ``GenerationalHistoryIndex``, fresh-built or attach()-recovered:
     recovery changes WHERE the index came from, not how batches probe
-    and grow it)."""
+    and grow it. Verdicts chain one merge-hinted, Exchange-free
+    bucketed join per generation (never a union — a union of bucketed
+    tables forfeits the bucket distribution and would shuffle the
+    whole index per batch); promotions cascade inside ``append`` when
+    generations exceed their geometric budgets."""
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         # pin the batch so the two actions below share one evaluation
         b = batch_df.localCheckpoint(eager=True)
-        # verdicts probe the index AS OF the previous batch (_b <
-        # batch_id): on a crash-replay the batch's own pre-crash
-        # append is already in the table, and probing it would flag
-        # every doc a dup of itself. The append below anti-joins the
-        # FULL table instead, so the replayed append is a no-op.
-        seen = idx.relation(before=batch_id).select(F.col("h").alias("_ih"))
-        seen_all = idx.relation().select(F.col("h").alias("_ih"))
-        # single-pass bloom routing: definite-miss hashes probe with a
-        # salted sentinel ('#' + doc_id % 64 — 64 narrow groups, never
-        # an md5 hex) so they ride the same SMJ and emit is_dup=0
-        # without an index lookup
-        probe_key = F.when(idx.member("h"), F.col("h")).otherwise(
-            F.concat(F.lit("#"), (F.col("doc_id") % 64).cast("string"))
-        )
         # action 1: probe + emit verdicts (MUST complete before the
-        # index grows, or every doc would match its own hash)
-        verdicts = (
-            idx.attach_bitset(b)
-            .select("doc_id", probe_key.alias("_pk"))
-            .hint("merge")
-            .join(seen, F.col("_pk") == F.col("_ih"), "left")
-            .select(
-                "doc_id", F.col("_ih").isNotNull().cast("long").alias("is_dup")
-            )
-        )
+        # index grows, or every doc would match its own hash). The
+        # probe sees the index AS OF the previous batch (_b <
+        # batch_id): on a crash-replay the batch's own pre-crash
+        # append is already in the index.
+        verdicts = idx.dup_flags(b, "doc_id", before=batch_id)
         core.LAST_INGEST_PLAN[0] = spark.sparkContext._jvm.PythonSQLUtils.explainString(
             verdicts._jdf.queryExecution(), "formatted"
         )
@@ -264,10 +238,10 @@ def _index_update_ingest(spark, idx, out_dir):
         # foreachBatch exactly-once gap). Partitioning by batch_id
         # with dynamic partition overwrite makes the replay rewrite
         # ITS OWN partition and touch nothing else — together with
-        # the index append (already idempotent: the anti-join makes a
-        # replayed append a no-op) the callback becomes exactly-once
-        # end to end, which is what lets the restart twin resume on
-        # the same checkpoint without a dedup-on-read.
+        # the index append (``novel_keys`` anti-joins the FULL index,
+        # so a replayed append is a no-op) the callback is
+        # exactly-once end to end, which is what lets the restart
+        # cells resume on the same checkpoint without a dedup-on-read.
         (
             verdicts.withColumn("_batch", F.lit(batch_id))
             .write.mode("overwrite")
@@ -275,19 +249,8 @@ def _index_update_ingest(spark, idx, out_dir):
             .partitionBy("_batch")
             .parquet(out_dir)
         )
-        # action 2: grow the index with this batch's novel hashes —
-        # same bloom routing (sentinel salt from the hash itself) so
-        # definite-novel hashes skip the lookup here too
-        novel_key = F.when(idx.member("h"), F.col("h")).otherwise(
-            F.concat(F.lit("#"), F.substring("h", 1, 2))
-        )
-        novel = (
-            idx.attach_bitset(b.select("h").distinct())
-            .select("h", novel_key.alias("_pk"))
-            .join(seen_all, F.col("_pk") == F.col("_ih"), "left_anti")
-            .select("h")
-        )
-        idx.append(novel, batch_id=batch_id)
+        # action 2: grow the index with this batch's novel hashes
+        idx.append(idx.novel_keys(b), batch_id=batch_id)
 
     return ingest
 
@@ -298,19 +261,22 @@ def _index_update_ingest(spark, idx, out_dir):
 _TIERED = {"budget_rows": 120, "growth": 4}
 
 
-def _run_capstone(spark, sf_dir, tag, feed, index_cls, index_kwargs, mode):
+def _run_capstone(spark, sf_dir, tag, feed, index_kwargs, mode):
     """Drive one cell of the ingest-dedup capstone cube and return
-    ``(verdicts, idx)``. A cell is a point on three axes:
+    ``(verdicts, idx)``. Every cell runs a ``GenerationalHistoryIndex``;
+    a cell is a point on three axes:
 
     * ``feed`` — how the doc_id % 3 batches arrive: ``"hash"`` (a
       precomputed content-hash column), ``"json"`` (raw JSON
       envelopes, key extracted per batch by ``parse_json`` →
       ``variant_get``) or ``"shredded"`` (the envelope landed with the
       key path as a typed column);
-    * ``index_cls``/``index_kwargs`` — ``SelfUpdatingHistoryIndex`` or
-      ``GenerationalHistoryIndex`` and its kwargs (``expected_keys``
-      defaults to the corpus row count: a parquet metadata-only upper
-      bound on distinct content hashes; over-sizing only lowers FPR);
+    * budgets — ``index_kwargs`` for the index: ``{}`` keeps the
+      default generation budgets, so no promotion fires at test scale;
+      ``_TIERED`` sets them low enough that promotions fire
+      mid-stream. ``expected_keys`` defaults to the corpus row count
+      (a parquet metadata-only upper bound on distinct content hashes;
+      over-sizing only lowers FPR);
     * ``mode`` — ``"update"`` streams batches 0-2 in one phase;
       ``"restart"`` streams batches 0-1, simulates a driver crash (the
       index's metastore entries and session-held Bloom bitset are
@@ -319,11 +285,11 @@ def _run_capstone(spark, sf_dir, tag, feed, index_cls, index_kwargs, mode):
       checkpoint — the source log already holds batches 0-1, so only
       batch 2 forms a micro-batch.
 
-    Every batch runs the feed's and index's foreachBatch callback
-    (probe-before-append, idempotent verdict write), so the oracle of
-    a cell is the strictly-earlier-batch spec whatever the axes. Names
-    derive from ``tag``: split dir ``docs_idx_{tag}_split``, index
-    table ``stream_{tag}_hash_idx``, verdicts ``stream_{tag}_verdicts``."""
+    Every batch runs the feed's foreachBatch callback (probe-before-
+    append, idempotent verdict write), so the oracle of a cell is the
+    strictly-earlier-batch spec whatever the axes. Names derive from
+    ``tag``: split dir ``docs_idx_{tag}_split``, index table
+    ``stream_{tag}_hash_idx``, verdicts ``stream_{tag}_verdicts``."""
     import os as _os
     import shutil as _sh
 
@@ -363,24 +329,22 @@ def _run_capstone(spark, sf_dir, tag, feed, index_cls, index_kwargs, mode):
             ingest = _variant_keyed_ingest(spark, idx, out_dir)
         elif feed == "shredded":
             ingest = _shredded_keyed_ingest(spark, idx, out_dir, spec)
-        elif index_cls is _history.SelfUpdatingHistoryIndex:
-            ingest = _index_update_ingest(spark, idx, out_dir)
         else:
             ingest = _tiered_ingest(spark, idx, out_dir)
         core.run_foreach_batch(
             read(spark, split_dir), ingest, ckpt, keep_checkpoint
         )
 
-    idx = index_cls(spark, idx_table, "h", overwrite=True, **kwargs)
+    idx = _history.GenerationalHistoryIndex(
+        spark, idx_table, "h", overwrite=True, **kwargs
+    )
     if mode == "restart":
         run((0, 1), idx, keep_checkpoint=True)
-        if index_cls is _history.SelfUpdatingHistoryIndex:
-            tables = [idx_table]
-        else:
-            tables = [f"{idx_table}_g{g}" for g in range(idx.n_generations)]
-        for t in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        idx = index_cls.attach(spark, idx_table, "h", **kwargs)
+        for g in range(idx.n_generations):
+            spark.sql(f"DROP TABLE IF EXISTS {idx._gtable(g)}")
+        idx = _history.GenerationalHistoryIndex.attach(
+            spark, idx_table, "h", **kwargs
+        )
         run((2,), idx)
     else:
         run((0, 1, 2), idx)
@@ -428,8 +392,8 @@ _CAPSTONE_DEPS = (
     # the probe/append topology lives in the history module — changes
     # there must re-front this query for driver re-verification
     hash_deps=(
-        _history.SelfUpdatingHistoryIndex,
-        _index_update_ingest,
+        _history.GenerationalHistoryIndex,
+        _tiered_ingest,
         core.write_documents_split,
         *_CAPSTONE_DEPS,
     ),
@@ -450,26 +414,25 @@ def stream_dedup_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays 'dup iff the hash appeared in a strictly earlier
     batch'.
 
-    Scale shape (owned by streaming/history.py, round 11): the index
-    lives as a ``SelfUpdatingHistoryIndex`` — the SAME bucketed+sorted
-    table layout ``dedup_incremental_bucketed_index`` persists
-    (bucketBy on the probe key), every batch's probe reads it IN PLACE
-    (only the batch side shuffles — merge-hinted SMJ), and an
-    incrementally-maintained Bloom bitset routes definite-novel hashes
-    to salted sentinel keys MAP-SIDE ahead of that join ('#…' never
-    matches an md5 hex, so sentinel rows fall through unmatched —
-    lossless, one pass, no union). The append is a bucket-spec-matching
-    write of just the batch's novel hashes, with the batch's bits OR-ed
-    into the bitset so the next batch's prescreen has no false
-    negatives. The store is globally distinct BY CONSTRUCTION (each
-    append excludes already-present hashes), so no per-batch distinct
-    re-shuffles the accumulated index — the O(index) per-batch terms
-    are one in-place scan and nothing else. SCALE.md probes the
-    per-batch cost against a K×-grown index."""
-    return _run_capstone(
-        spark, sf_dir, "upd", "hash", _history.SelfUpdatingHistoryIndex,
-        {}, "update",
-    )[0]
+    Scale shape (owned by streaming/history.py): the index is a
+    ``GenerationalHistoryIndex`` at its default generation budgets, so
+    at test scale every key stays in gen0 — one bucketed+sorted table,
+    the layout ``dedup_incremental_bucketed_index`` persists (bucketBy
+    on the probe key) — and no promotion fires; the ``_tiered`` cells
+    run the same transaction with budgets low enough to promote. Every
+    batch's probe reads the index IN PLACE (only the batch side
+    shuffles — merge-hinted SMJ), and an incrementally maintained
+    Bloom bitset routes definite-novel hashes to salted sentinel keys
+    MAP-SIDE ahead of that join (``dup_flags``/``novel_keys``). The
+    append is a bucket-spec-matching write of just the batch's novel
+    hashes, with the batch's bits OR-ed into the bitset so the next
+    batch's prescreen has no false negatives. The store is globally
+    distinct BY CONSTRUCTION (each append excludes already-present
+    hashes), so no per-batch distinct re-shuffles the accumulated
+    index — the O(index) per-batch terms are one in-place scan per
+    generation and nothing else. SCALE.md probes the per-batch cost
+    against a K×-grown index."""
+    return _run_capstone(spark, sf_dir, "upd", "hash", {}, "update")[0]
 
 
 @query(
@@ -505,8 +468,8 @@ def stream_dedup_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY d.doc_id
     """,
     hash_deps=(
-        _history.SelfUpdatingHistoryIndex,
-        _index_update_ingest,
+        _history.GenerationalHistoryIndex,
+        _tiered_ingest,
         core.write_documents_split,
         *_CAPSTONE_DEPS,
     ),
@@ -523,31 +486,23 @@ def stream_dedup_index_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches after it).
 
     Phase 1 stages batch files 0-1 and streams them to completion
-    (fresh ``SelfUpdatingHistoryIndex``, checkpointed source). The
-    simulated crash then drops the index's metastore entry — its
-    bucketed table files and the source checkpoint survive, the
-    session-held Bloom bitset does not (the exact in-memory state a
-    real crash loses). Phase 2 is the restarted driver: batch file 2
-    appears, ``SelfUpdatingHistoryIndex.attach`` re-registers the
-    durable table over its files (bucket spec matched, so the in-place
+    (fresh ``GenerationalHistoryIndex`` at its default budgets,
+    checkpointed source). The simulated crash then drops the index's
+    metastore entries — its bucketed table files, manifest and the
+    source checkpoint survive, the session-held Bloom bitset does not
+    (the exact in-memory state a real crash loses). Phase 2 is the
+    restarted driver: batch file 2 appears,
+    ``GenerationalHistoryIndex.attach`` re-registers the durable
+    tables over their files (bucket spec matched, so the in-place
     Exchange-free probe scans survive) and rebuilds the bitset once
-    from the table; a NEW stream on the SAME checkpoint resumes — the
+    from them; a NEW stream on the SAME checkpoint resumes — the
     source log already holds batches 0-1, so only batch 2 forms a
     micro-batch, probed by the identical shared callback
-    (``_index_update_ingest``) against the recovered index. The oracle
-    is the restart-free twin's: recovery must be semantically
-    invisible."""
-    # compact_after_files=12: LOW threshold so the auto-compaction
-    # policy deterministically fires BETWEEN streamed batches at every
-    # gate SF — each later batch then probes a just-compacted index,
-    # and phase 2's post-crash attach() recovers an index that has
-    # already been through rewrite cycles. The verdicts (and the
-    # oracle) are unaffected because compaction preserves rows and
-    # _b stamps exactly.
-    return _run_capstone(
-        spark, sf_dir, "restart", "hash", _history.SelfUpdatingHistoryIndex,
-        {"compact_after_files": 12}, "restart",
-    )[0]
+    (``_tiered_ingest``) against the recovered index. The oracle is
+    the restart-free twin's: recovery must be semantically invisible.
+    ``stream_dedup_index_restart_tiered`` recovers an index whose
+    keys promotions have already spread across generations."""
+    return _run_capstone(spark, sf_dir, "restart", "hash", {}, "restart")[0]
 
 
 @query(
@@ -997,7 +952,7 @@ def stream_dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe-side shuffle. Twin ``stream_dedup_against_corpus_indexed``
     forces the scale path against the same oracle."""
     return _stream_dedup_against_corpus(
-        spark, sf_dir, history_default_threshold()
+        spark, sf_dir, _history.DEFAULT_BROADCAST_THRESHOLD_ROWS
     )
 
 
@@ -1495,7 +1450,9 @@ def stream_neardup_at_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 = candidate for the exact-Jaccard verify stage). Twin
     ``stream_neardup_at_ingest_indexed`` forces the scale path.
     """
-    return _stream_neardup_at_ingest(spark, sf_dir, history_default_threshold())
+    return _stream_neardup_at_ingest(
+        spark, sf_dir, _history.DEFAULT_BROADCAST_THRESHOLD_ROWS
+    )
 
 
 def _stream_neardup_at_ingest(
@@ -1698,7 +1655,9 @@ def stream_ingest_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. The reference has no streaming layer (its DataFusion query
     crate is TODO, README.md:13-16); this is the Spark-native
     composition of its codec-era building blocks."""
-    return _stream_ingest_funnel(spark, sf_dir, history_default_threshold())
+    return _stream_ingest_funnel(
+        spark, sf_dir, _history.DEFAULT_BROADCAST_THRESHOLD_ROWS
+    )
 
 
 def _stream_ingest_funnel(
@@ -2034,60 +1993,6 @@ def stream_rollup_retracting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tiered_ingest(spark, idx, out_dir):
-    """foreachBatch callback of the TIERED (LSM-generational) ingest
-    dedup — same probe-before-append transaction as
-    ``_index_update_ingest`` but over ``GenerationalHistoryIndex``:
-    verdicts chain one merge-hinted, Exchange-free bucketed join per
-    generation (never a union — a union of bucketed tables forfeits
-    the bucket distribution and would shuffle the whole index per
-    batch), epoch-filtered to ``_b < batch_id`` for replay; the novel
-    append anti-joins the FULL generation set so a replayed append is
-    a no-op; promotions cascade inside ``append`` when generations
-    exceed their geometric budgets."""
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.localCheckpoint(eager=True)
-        # bloom sentinel routing, same as the single-table capstone:
-        # definite-miss hashes ride the chained joins under a salted
-        # sentinel ('#' + doc_id % 64 — never an md5 hex) and emit
-        # is_dup=0 without any generation lookup
-        probe_key = F.when(idx.member("h"), F.col("h")).otherwise(
-            F.concat(F.lit("#"), (F.col("doc_id") % 64).cast("string"))
-        )
-        verdicts = (
-            idx.flag_members(
-                idx.attach_bitset(b).select("doc_id", probe_key.alias("_pk")),
-                "_pk",
-                "_hit",
-                before=batch_id,
-            )
-            .select("doc_id", F.col("_hit").cast("long").alias("is_dup"))
-        )
-        (
-            verdicts.withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(out_dir)
-        )
-        novel_key = F.when(idx.member("h"), F.col("h")).otherwise(
-            F.concat(F.lit("#"), F.substring("h", 1, 2))
-        )
-        novel = (
-            idx.anti_members(
-                idx.attach_bitset(b.select("h").distinct()).select(
-                    "h", novel_key.alias("_pk")
-                ),
-                "_pk",
-            )
-            .select("h")
-        )
-        idx.append(novel, batch_id=batch_id)
-
-    return ingest
-
-
 @query(
     "stream_dedup_index_update_tiered",
     oracle=r"""
@@ -2115,16 +2020,17 @@ def _tiered_ingest(spark, idx, out_dir):
     ),
 )
 def stream_dedup_index_update_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The self-updating ingest dedup over the LSM-STYLE
-    ``GenerationalHistoryIndex`` — the 100 TB answer to the
-    single-table design's compaction bill (SCALE.md round-12: one
-    table means every compaction rewrites the FULL index, amortized
-    per-append cost linear in index size). Appends land in a small
-    gen0; whole generations promote upward on geometric budgets
-    (rename-aside crash-safe, manifest-bracketed, attach()-repairable
-    mid-promote), so each key is rewritten at most ~n_generations
-    times EVER — amortized O(log index) — while verdicts stay
-    byte-identical to the single-table capstone (same oracle).
+    """``stream_dedup_index_update`` with PROMOTIONS firing: the
+    LSM-style ``GenerationalHistoryIndex`` at budgets low enough that
+    whole generations move up mid-stream — the 100 TB answer to a
+    single table's compaction bill (SCALE.md round-12: one table means
+    every compaction rewrites the FULL index, amortized per-append
+    cost linear in index size). Appends land in a small gen0; whole
+    generations promote upward on geometric budgets (rename-aside
+    crash-safe, manifest-bracketed, attach()-repairable mid-promote),
+    so each key is rewritten at most ~n_generations times EVER —
+    amortized O(log index) — while verdicts stay byte-identical to
+    the promotion-free cell (same oracle).
 
     Plan shape (pinned in tests/test_history.py): the per-batch probe
     chains one merge-hinted join per generation, each generation side
@@ -2134,10 +2040,7 @@ def stream_dedup_index_update_tiered(spark: SparkSession, sf_dir: str) -> DataFr
     map-side. ``budget_rows`` is set low here so promotions (and a
     gen1→gen2 cascade) actually fire inside the gate drive at sf0.01
     — at production scale the budgets are the LSM dials."""
-    return _run_capstone(
-        spark, sf_dir, "tiered", "hash", _history.GenerationalHistoryIndex,
-        _TIERED, "update",
-    )[0]
+    return _run_capstone(spark, sf_dir, "tiered", "hash", _TIERED, "update")[0]
 
 
 @query(
@@ -2176,7 +2079,7 @@ def stream_dedup_index_update_tiered(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def stream_dedup_index_restart_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-restart recovery of the TIERED index — completing the
-    capstone triangle (update/restart × single-table/generational):
+    capstone square (update/restart × default/low budgets):
     phase 1 streams batches 0-1 against a fresh
     ``GenerationalHistoryIndex`` (budgets low enough that promotions
     fire BEFORE the crash, so recovery adopts an index whose keys are
@@ -2187,11 +2090,10 @@ def stream_dedup_index_restart_tiered(spark: SparkSession, sf_dir: str) -> DataF
     interrupted promotion per the manifest, rebuilding the bitset
     once) and RESUMES the same checkpoint, so only batch 2 replays,
     probed by the shared ``_tiered_ingest`` callback. Oracle is the
-    single-table restart twin's: layout and recovery are both
+    promotion-free restart twin's: layout and recovery are both
     invisible to verdicts."""
     return _run_capstone(
-        spark, sf_dir, "trestart", "hash", _history.GenerationalHistoryIndex,
-        _TIERED, "restart",
+        spark, sf_dir, "trestart", "hash", _TIERED, "restart"
     )[0]
 
 
@@ -2301,10 +2203,7 @@ def stream_dedup_index_variant_keyed(
     Oracle: DuckDB extracts the same path with ``->>`` and replays the
     strictly-earlier-batch spec — layout, codec track, and storage
     tiers all invisible to verdicts."""
-    return _run_capstone(
-        spark, sf_dir, "vkey", "json", _history.GenerationalHistoryIndex,
-        _TIERED, "update",
-    )[0]
+    return _run_capstone(spark, sf_dir, "vkey", "json", _TIERED, "update")[0]
 
 
 @query(
@@ -2352,8 +2251,8 @@ def stream_dedup_index_restart_variant_keyed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Driver-restart recovery of the VARIANT-KEYED tiered index —
-    the sixth cell of the capstone cube (update/restart ×
-    single-table/tiered × precomputed-hash/variant-extracted key):
+    a cell of the capstone cube (feed × budgets × update/restart,
+    here the variant-extracted key feed):
     proves that an index whose ingest key is DERIVED through the codec
     surface per batch recovers exactly like its hash-keyed twin,
     because the index is key-provenance-agnostic (the extraction lives
@@ -2368,8 +2267,7 @@ def stream_dedup_index_restart_variant_keyed(
     Oracle identical to the update twin: recovery, layout, and codec
     track all invisible to verdicts."""
     return _run_capstone(
-        spark, sf_dir, "vkrestart", "json", _history.GenerationalHistoryIndex,
-        _TIERED, "restart",
+        spark, sf_dir, "vkrestart", "json", _TIERED, "restart"
     )[0]
 
 
@@ -2461,8 +2359,7 @@ def stream_dedup_index_shredded_keyed(
     off the text column — shredding, codec track, and storage tiers
     all invisible to verdicts."""
     return _run_capstone(
-        spark, sf_dir, "skey", "shredded", _history.GenerationalHistoryIndex,
-        _TIERED, "update",
+        spark, sf_dir, "skey", "shredded", _TIERED, "update"
     )[0]
 
 
@@ -2520,8 +2417,7 @@ def stream_dedup_index_restart_shredded_keyed(
     Oracle identical to the update twin: recovery, storage layout,
     and key-derivation track all invisible to verdicts."""
     return _run_capstone(
-        spark, sf_dir, "skrestart", "shredded", _history.GenerationalHistoryIndex,
-        _TIERED, "restart",
+        spark, sf_dir, "skrestart", "shredded", _TIERED, "restart"
     )[0]
 
 
@@ -2536,9 +2432,8 @@ def _run_autogrow_capstone(spark, sf_dir):
     # when the feed's cardinality is unknowable up front. The policy,
     # not the sizing, keeps the prescreen effective.
     return _run_capstone(
-        spark, sf_dir, "autogrow", "hash", _history.GenerationalHistoryIndex,
-        {**_TIERED, "expected_keys": 64, "auto_rebuild_fill": 0.18},
-        "update",
+        spark, sf_dir, "autogrow", "hash",
+        {**_TIERED, "expected_keys": 64, "auto_rebuild_fill": 0.18}, "update",
     )
 
 

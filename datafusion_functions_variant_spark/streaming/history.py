@@ -49,17 +49,14 @@ from ..operators.bloom import bloom_build, bloom_m_bits, bloom_member_sql
 #: Default history-size cutoff for the broadcast plan. ~4M 32-char md5
 #: keys is ~256 MB of join-side hash table — the upper edge of what a
 #: healthy executor should host; past it the bucketed-index plan wins.
-#: Env-overridable so a cluster profile can re-dial it without code.
-DEFAULT_BROADCAST_THRESHOLD_ROWS = int(
-    os.environ.get("SPARK_GRAFT_HISTORY_BROADCAST_ROWS", 4_000_000)
-)
+DEFAULT_BROADCAST_THRESHOLD_ROWS = 4_000_000
 
 #: Bloom bitset hard cap: 2^26 bits = 8 MiB — always broadcastable.
 DEFAULT_BLOOM_MAX_BITS = 1 << 26
 
 
-def _check_key_dtype(df: DataFrame, key: str, cls_name: str) -> None:
-    """The mutable indexes store the key as STRING (the md5-hex /
+def _check_key_dtype(df: DataFrame, key: str) -> None:
+    """The mutable index stores the key as STRING (the md5-hex /
     content-hash convention every registered pipeline uses, and the
     dtype baked into the external-table DDL). A non-string append
     used to fail later with an opaque bucketed-write cast error
@@ -68,9 +65,10 @@ def _check_key_dtype(df: DataFrame, key: str, cls_name: str) -> None:
     dtype = dict(df.dtypes).get(key)
     if dtype != "string":
         raise TypeError(
-            f"{cls_name}: key column {key!r} must be STRING (the index "
-            f"stores md5-hex/content-hash keys; its table DDL declares "
-            f"{key} STRING), got {dtype!r} — cast or hash the key first"
+            f"GenerationalHistoryIndex: key column {key!r} must be "
+            f"STRING (the index stores md5-hex/content-hash keys; its "
+            f"table DDL declares {key} STRING), got {dtype!r} — cast or "
+            f"hash the key first"
         )
 
 
@@ -78,11 +76,8 @@ class _BloomProbeMixin:
     """Shared Bloom-prescreen surface: ``member``/``attach_bitset``/
     ``drop_bitset`` over ``self.bitset``/``self.m_bits``/
     ``self.bits_col``. Used by the immutable ``HistoryIndex`` and the
-    two mutable indexes so every ingest gate probes through one
-    implementation. The mutable indexes (``SelfUpdatingHistoryIndex``,
-    ``GenerationalHistoryIndex``) also share the bitset's maintenance,
-    ``_merge_bits`` and ``rebuild_bitset``, over their ``key`` and
-    ``relation()``."""
+    mutable ``GenerationalHistoryIndex`` so every ingest gate probes
+    through one implementation."""
 
     def member(self, key_expr: str) -> Column:
         """Map-side Bloom membership test for ``key_expr`` (a SQL
@@ -103,97 +98,6 @@ class _BloomProbeMixin:
 
     def drop_bitset(self, df: DataFrame) -> DataFrame:
         return df.drop(self.bits_col) if self.bitset is not None else df
-
-    def _zero_bitset(self) -> DataFrame:
-        m_words = self.m_bits // 64
-        return self.spark.range(1).select(
-            F.expr(f"array_repeat(0L, {m_words})").alias(self.bits_col)
-        ).localCheckpoint(eager=True)
-
-    def _merge_bits(self, novel: DataFrame) -> None:
-        """OR the bits of ``novel``'s keys into the bitset: O(batch +
-        m/64 words). The checkpoint bounds lineage so batch N's bitset
-        never re-aggregates batches 0..N-1. No-op without a bitset."""
-        if self.bitset is None:
-            return
-        delta = bloom_build(novel, F.col(self.key), self.m_bits)
-        self.bitset = (
-            self.bitset.crossJoin(delta.select(F.col("bits").alias("_nb")))
-            .select(
-                F.zip_with(
-                    self.bits_col, "_nb", lambda a, b: a.bitwiseOR(b)
-                ).alias(self.bits_col)
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    def rebuild_bitset(self, m_bits: int | None = None) -> None:
-        """Recovery path: one full scan of ``relation()`` re-derives the
-        bitset from the durable table(s) (see
-        ``SelfUpdatingHistoryIndex``'s docstring). No-op when the
-        index has no ``m_bits`` and none is given.
-
-        ``m_bits`` starts a new BITSET EPOCH at a different size — the
-        remedy when ``bloom_saturation()`` shows the key universe
-        outgrew ``expected_keys`` (bits from different m values never
-        merge, so a resize is definitionally a rebuild; the tables are
-        untouched, correctness never depended on the bitset). Must be
-        a positive multiple of 64 (whole words).
-
-        ``m_bits``/``bitset`` are assigned TOGETHER, only after the
-        build succeeded (ADVICE r13): a mid-build failure must never
-        leave ``member()`` indexing the OLD word array at the NEW
-        size — element_at past the array end reads as definite-miss,
-        i.e. Bloom FALSE NEGATIVES admitting duplicate keys."""
-        target = self.m_bits
-        if m_bits is not None:
-            if m_bits <= 0 or m_bits % 64:
-                raise ValueError(
-                    f"m_bits must be a positive multiple of 64, got {m_bits}"
-                )
-            target = m_bits
-        if target is None:
-            return
-        new_bitset = (
-            bloom_build(self.relation(), F.col(self.key), target)
-            .select(F.col("bits").alias(self.bits_col))
-            .localCheckpoint(eager=True)
-        )
-        self.m_bits = target
-        self.bitset = new_bitset
-
-    def bloom_saturation(self) -> dict | None:
-        """Operational dial for a long-running ingest whose key
-        universe outgrew ``expected_keys``: the bitset's fill fraction
-        and the implied false-positive rate. The bitset degrades
-        GRACEFULLY (false positives shed less work; never a false
-        negative), but past ~50% fill it stops paying for itself —
-        a production pipeline alerts on this and schedules a rebuild
-        with a larger ``m_bits`` (new index epoch). One O(m/64 words)
-        aggregation over the 1-row bitset — driver-cheap at any index
-        size. Returns None when no bitset is active.
-
-        ``est_fpr`` is the standard fill-rate estimate fill**k with
-        the build's k = len(DEFAULT_SEEDS) hash probes
-        (operators/bloom.py)."""
-        if self.bitset is None:
-            return None
-        from ..operators.bloom import DEFAULT_SEEDS
-
-        [row] = self.bitset.select(
-            F.aggregate(
-                F.transform(self.bits_col, lambda w: F.bit_count(w)),
-                F.lit(0),
-                lambda acc, c: acc + c,
-            ).alias("set_bits")
-        ).collect()
-        fill = row.set_bits / self.m_bits
-        return {
-            "set_bits": row.set_bits,
-            "m_bits": self.m_bits,
-            "fill": round(fill, 6),
-            "est_fpr": round(fill ** len(DEFAULT_SEEDS), 9),
-        }
 
 
 @dataclass(frozen=True)
@@ -272,381 +176,24 @@ def build_history_index(
     )
 
 
-class SelfUpdatingHistoryIndex(_BloomProbeMixin):
+class GenerationalHistoryIndex(_BloomProbeMixin):
     """The MUTABLE twin of :func:`build_history_index` for dedup-at-
     ingest pipelines whose history IS the stream's own past batches
-    (``stream_dedup_index_update``): a bucketed+sorted key table that
-    each micro-batch probes and then appends its novel keys to, plus
-    an incrementally-maintained Bloom bitset over everything appended
-    so far.
+    (the ``stream_dedup_index_*`` capstones): each micro-batch probes
+    the index, then appends its novel keys (``dup_flags`` /
+    ``novel_keys`` / ``append``), and an incrementally maintained
+    Bloom bitset covers everything appended so far.
 
-    Why incremental: the static builder sizes and builds its bitset
-    once from a finished history. Here the history grows every batch —
-    rebuilding the bitset per batch would re-scan the whole index
-    (exactly the O(index) per-batch term this module exists to kill),
-    while a STALE bitset is a correctness bug, not a perf bug: a key
-    appended in batch N but missing from the bitset would test
-    'definitely absent' in batch N+1 and sail past the exact join as a
-    false novel. So ``append`` both writes the keys bucket-spec-
-    matched and ORs their bits into the bitset — O(batch + m/64 words)
-    — preserving the no-false-negative invariant batch over batch.
-
-    Sizing: ``m_bits`` must be FIXED up front (bits from different m
-    don't merge), so it is derived from ``expected_keys`` — the
-    pipeline's estimate of the eventual key universe (a parquet
-    metadata count of the backing corpus; cheap at any scale). An
-    underestimate degrades FPR gracefully (sheds less, never drops a
-    true match); below ~2 bits/expected-key the bitset is omitted and
-    ``member`` returns literal True, same rule as the static builder.
-
-    Recovery note: the table is the durable truth; the bitset is
-    in-memory pruning state. A restarted pipeline must rebuild it from
-    the table once (``rebuild_bitset``) before probing — resuming with
-    a bitset older than the table would reintroduce false negatives.
-
-    Key contract: the key column is STRING — the md5-hex/content-hash
-    convention of every registered pipeline, baked into the external
-    table DDL. ``append`` validates the frame's dtype up front with a
-    clear error (ADVICE r12) instead of failing later inside the
-    bucketed write.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table_name: str,
-        key: str,
-        *,
-        path: str,
-        expected_keys: int,
-        bucket_count: int = 8,
-        bloom_max_bits: int = DEFAULT_BLOOM_MAX_BITS,
-        bits_col: str = "bits",
-        compact_after_files: int | None = None,
-        overwrite: bool = False,
-    ) -> None:
-        self.spark = spark
-        self.table_name = table_name
-        self.key = key
-        self.bucket_count = bucket_count
-        self.bits_col = bits_col
-        self.path = path
-        #: auto-compaction trigger: past this many files at ``path``,
-        #: ``append`` runs ``compact()`` before returning, so a
-        #: long-running ingest's file count SAWTOOTHS instead of
-        #: growing one small-file set per micro-batch forever (the
-        #: r11 verdict's "the tool exists but the swamp still forms").
-        #: Default 16× the bucket count ≈ 16 appends' worth of files
-        #: between rewrites; None semantics preserved via the math.
-        self.compact_after_files = (
-            compact_after_files
-            if compact_after_files is not None
-            else 16 * bucket_count
-        )
-        import shutil
-
-        # __init__ is CREATE-FRESH — but destroying a DURABLE index
-        # someone meant to attach() is the easy restart mistake (r11
-        # ADVICE), so refuse to clear a non-empty path (or a crashed
-        # compact()'s recoverable ``__old`` sibling) unless the caller
-        # says ``overwrite=True``. A fresh pipeline dir or an explicit
-        # overwrite clears leftover files whose metastore entry is
-        # gone (the DROP below only removes files the CURRENT
-        # metastore knows about) — otherwise the CTAS would refuse the
-        # non-empty location.
-        leftovers = [
-            p
-            for p in (path, path + "__old", path + "__compact")
-            if os.path.isdir(p) and os.listdir(p)
-        ]
-        if leftovers and not overwrite:
-            raise ValueError(
-                f"SelfUpdatingHistoryIndex: {leftovers[0]} already holds "
-                "index files — use attach() to recover the durable index, "
-                "or pass overwrite=True to destroy it and start fresh"
-            )
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        for p in (path, path + "__old", path + "__compact"):
-            shutil.rmtree(p, ignore_errors=True)
-        # _b = the micro-batch id (epoch) that admitted the key. It
-        # exists for exactly-once REPLAY: foreachBatch re-runs a whole
-        # batch after a crash, and a replayed batch N must compute its
-        # verdicts against the index as of batch N-1 — i.e. the rows
-        # with _b < N — because its own pre-crash append (_b == N) is
-        # already in the table. Appends anti-join the FULL table, so
-        # a replayed append is a no-op either way.
-        (
-            spark.createDataFrame([], f"{key} string, _b long")
-            .write.bucketBy(bucket_count, key)
-            .sortBy(key)
-            .option("path", path)
-            .saveAsTable(table_name)
-        )
-        m_bits = min(bloom_m_bits(expected_keys), bloom_max_bits)
-        if m_bits >= 2 * expected_keys:
-            self.m_bits = m_bits
-            self.bitset = self._zero_bitset()
-        else:
-            self.m_bits = None
-            self.bitset = None
-
-    @classmethod
-    def attach(
-        cls,
-        spark: SparkSession,
-        table_name: str,
-        key: str,
-        *,
-        path: str,
-        expected_keys: int,
-        bucket_count: int = 8,
-        bloom_max_bits: int = DEFAULT_BLOOM_MAX_BITS,
-        bits_col: str = "bits",
-        compact_after_files: int | None = None,
-    ) -> "SelfUpdatingHistoryIndex":
-        """Restart-and-keep recovery: adopt an index a PREVIOUS session
-        built, without losing a key. ``__init__`` is create-fresh (it
-        clears the path); a restarted ingest pipeline instead needs the
-        durable table back as-is. A fresh session's metastore has no
-        entry for it, so this re-registers an EXTERNAL bucketed table
-        over the existing files — the bucket spec in the DDL must match
-        the one the files were written with (Spark maps the bucket id
-        from each file's name, so the in-place, Exchange-free probe
-        scans survive the restart) — then rebuilds the Bloom bitset
-        once from the table (the class docstring's recovery protocol:
-        the table is durable truth, the bitset is in-memory pruning
-        state, and a bitset older than the table would reintroduce
-        false negatives).
-
-        Also finishes a crashed ``compact()``: the swap protocol
-        guarantees a complete index at ``path`` OR at ``path__old``
-        at every instant — if only ``__old`` exists (death between
-        the two directory swaps) it is restored; any other leftover
-        sibling (a committed-but-unswapped rewrite, a superseded
-        original) is deleted.
-        """
-        idx = cls.__new__(cls)
-        idx.spark = spark
-        idx.table_name = table_name
-        idx.key = key
-        idx.bucket_count = bucket_count
-        idx.bits_col = bits_col
-        idx.path = path
-        idx.compact_after_files = (
-            compact_after_files
-            if compact_after_files is not None
-            else 16 * bucket_count
-        )
-        import shutil
-
-        old_path = path + "__old"
-        if not os.path.isdir(path) and os.path.isdir(old_path):
-            # compact() died between rename-aside and swap-in: the
-            # aside copy IS the complete pre-compact index
-            os.replace(old_path, path)
-        shutil.rmtree(old_path, ignore_errors=True)
-        shutil.rmtree(path + "__compact", ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}__compact")
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        idx._register_external()
-        m_bits = min(bloom_m_bits(expected_keys), bloom_max_bits)
-        if m_bits >= 2 * expected_keys:
-            idx.m_bits = m_bits
-            idx.rebuild_bitset()
-        else:
-            idx.m_bits = None
-            idx.bitset = None
-        return idx
-
-    def _register_external(self) -> None:
-        """Register the durable table over its existing files — the
-        bucket spec in the DDL must match the layout the files were
-        written with (Spark maps bucket ids from file names)."""
-        self.spark.sql(
-            f"""
-            CREATE TABLE {self.table_name}
-            ({self.key} STRING, _b BIGINT)
-            USING parquet
-            CLUSTERED BY ({self.key}) SORTED BY ({self.key})
-            INTO {self.bucket_count} BUCKETS
-            LOCATION '{self.path}'
-            """
-        )
-
-    def compact(self) -> None:
-        """Collapse the accumulated per-batch file sets into one file
-        per bucket, preserving rows, epochs, and the bucket spec.
-
-        Every ``append`` writes its own bucket-spec-matched file set,
-        so a long-running ingest pipeline grows the index table by one
-        set of small files per micro-batch — after thousands of
-        batches the in-place probe scan pays per-file open cost on a
-        small-files swamp (the classic streaming-sink failure mode;
-        same medicine as the ``sink_compaction`` query). The rewrite
-        funnels each bucket's rows to one write task (repartition on
-        the bucket key — same Murmur3 family the bucket spec uses),
-        lands in a sibling directory, and swaps in via two directory
-        renames. The bitset is untouched — content is identical, only
-        the file layout changes.
-
-        CRASH-SAFE swap (round 12 — the r11 sequence rmtree'd the live
-        dir BEFORE swapping the rewrite in, so a crash in that window
-        lost the registered index): rename the live dir ASIDE
-        (``path → path__old``), swap the committed rewrite in
-        (``path__compact → path``), re-register, and only then delete
-        the aside copy. Every crash window leaves a complete index:
-        before the first rename the original is live; between the two
-        renames the original is intact at ``__old`` (``attach()``
-        restores it); after the second the compacted set is at the
-        registered path. ``attach()`` knows the protocol and finishes
-        whichever step death interrupted.
-
-        Cost: one full-index read+rewrite — O(index); measured walls
-        and the amortized-per-append analysis (linear in index size;
-        when an unbounded index should graduate to an LSM-style
-        generational layout instead) are in SCALE.md §round-12.
-        """
-        import shutil
-
-        tmp_table = self.table_name + "__compact"
-        tmp_path = self.path + "__compact"
-        old_path = self.path + "__old"
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        shutil.rmtree(old_path, ignore_errors=True)
-        (
-            self.relation()
-            # group by the BUCKET ID expression (pmod(hash, n) — the
-            # same Murmur3 formula the bucket spec applies), not the
-            # raw key: the writer routes rows to bucket files WITHIN
-            # each task, so a task holding k distinct bucket ids
-            # writes k files; with all of a bucket's rows in one task
-            # the rewrite lands exactly <= n files total
-            .repartition(
-                self.bucket_count,
-                F.expr(f"pmod(hash({self.key}), {self.bucket_count})"),
-            )
-            .write.bucketBy(self.bucket_count, self.key)
-            .sortBy(self.key)
-            .option("path", tmp_path)
-            .saveAsTable(tmp_table)
-        )
-        # external tables: DROP removes the metastore entry, not files
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
-        os.replace(self.path, old_path)
-        os.replace(tmp_path, self.path)
-        self._register_external()
-        shutil.rmtree(old_path, ignore_errors=True)
-
-    def relation(self, before: int | None = None) -> DataFrame:
-        """The index as of the LAST completed ``append`` — refreshed
-        so a foreachBatch callback sees the previous batch's files.
-        ``before=N`` restricts to keys admitted by batches < N: the
-        view a replayed batch N must probe for its VERDICTS (its own
-        pre-crash append carries _b == N). Appends must NOT pass it —
-        idempotency needs the anti-join to see the full table."""
-        self.spark.catalog.refreshTable(self.table_name)
-        t = self.spark.table(self.table_name)
-        if before is not None:
-            t = t.where(F.col("_b") < before)
-        return t
-
-    def append(self, novel: DataFrame, *, batch_id: int) -> None:
-        """Grow the index with ``novel`` (must already exclude keys
-        present in the table — the caller's anti-join against the FULL
-        table guarantees the store stays distinct by construction, so
-        no per-batch distinct ever re-shuffles the accumulated index,
-        and a crash-replayed append is a no-op). Bucket-spec-matching
-        append stamped with the admitting batch id plus an O(batch)
-        bitset merge.
-
-        ``batch_id`` is REQUIRED, keyword-only (r11 ADVICE): a caller
-        that forgot it would stamp every row ``_b=0``, silently
-        defeating ``relation(before=N)``'s replay semantics — a
-        replayed batch N would probe its own pre-crash append and flag
-        every doc a dup of itself, exactly the bug ``_b`` exists to
-        prevent. Non-replaying callers pass their own monotonic
-        counter (or 0 for a one-shot build).
-
-        Past ``compact_after_files`` files on disk the append triggers
-        ``compact()`` before returning — the file count sawtooths
-        instead of growing one small-file set per micro-batch forever.
-        Compaction preserves rows and ``_b`` stamps, so replay
-        semantics are unaffected; the crash-safe swap means a death
-        mid-compact costs nothing but the rewrite."""
-        _check_key_dtype(novel, self.key, "SelfUpdatingHistoryIndex")
-        # OR the batch's bits in BEFORE the blocking write: both
-        # complete before this batch's callback returns
-        self._merge_bits(novel)
-        (
-            novel.withColumn("_b", F.lit(batch_id).cast("long"))
-            .write.mode("append")
-            .bucketBy(self.bucket_count, self.key)
-            .sortBy(self.key)
-            .saveAsTable(self.table_name)
-        )
-        # auto-compaction policy: one directory listing per append
-        # (the same metadata op the next probe's file index pays
-        # anyway). os.listdir first (free on POSIX paths — every test
-        # and local deployment), falling back to the Hadoop FileSystem
-        # API through the JVM gateway for remote paths (hdfs://,
-        # s3a://, ... — the 100 TB deployment, where os.listdir always
-        # fails). Only if BOTH fail does the policy go inert, and then
-        # LOUDLY (warn once) — a silently-disabled policy would bring
-        # back the small-file swamp it exists to stop (ADVICE r12).
-        n_files = self._count_index_files()
-        if self.compact_after_files and n_files > self.compact_after_files:
-            self.compact()
-
-    def _count_index_files(self) -> int:
-        try:
-            return sum(
-                1 for f in os.listdir(self.path) if f.endswith(".parquet")
-            )
-        except OSError as local_err:
-            try:
-                jvm = self.spark._jvm
-                jsc = self.spark._jsc
-                hpath = jvm.org.apache.hadoop.fs.Path(self.path)
-                fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-                statuses = fs.listStatus(hpath)
-                return sum(
-                    1
-                    for s in statuses
-                    if s.getPath().getName().endswith(".parquet")
-                )
-            except Exception as hadoop_err:  # noqa: BLE001 — warn, don't kill
-                if not getattr(self, "_listdir_warned", False):
-                    import warnings
-
-                    warnings.warn(
-                        f"SelfUpdatingHistoryIndex: cannot list {self.path} "
-                        f"(os: {local_err}; hadoop: {hadoop_err}); "
-                        "auto-compaction is inert on this filesystem — "
-                        "call compact() on your own cadence or the "
-                        "per-batch small-file sets will accumulate unbounded",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-                    self._listdir_warned = True
-                return 0
-
-
-class GenerationalHistoryIndex(_BloomProbeMixin):
-    """LSM-style TIERED twin of :class:`SelfUpdatingHistoryIndex` —
-    the scale evolution SCALE.md's round-12 analysis names: the
-    single-table design's auto-compaction rewrites the FULL index
-    every ~K appends (amortized per-append cost linear in index
-    size), which an unbounded 10^10-key ingest eventually cannot
-    afford. Here the index lives in ``n_generations`` bucketed+sorted
-    tables with geometric row budgets (gen0 smallest, the last
-    unbounded): appends land in gen0; when gen_i exceeds
-    ``budget_rows * growth^i`` it is MERGED into gen_{i+1} (one
-    rewrite of gen_{i+1}, rename-aside crash-safe like ``compact``)
-    and gen_i restarts empty — classic LSM leveling, so each key is
-    rewritten at most ``n_generations``-ish times ever: amortized
-    O(log(index)) instead of O(index) per compaction cycle.
+    Storage is LSM-style (O'Neil et al., LSM-tree, re-expressed as
+    Spark bucketed tables): ``n_generations`` bucketed+sorted tables
+    with geometric row budgets (gen0 smallest, the last unbounded).
+    Appends land in gen0; when gen_i exceeds ``budget_rows *
+    growth^i`` it is MERGED into gen_{i+1} (one rewrite of gen_{i+1},
+    rename-aside crash-safe) and gen_i restarts empty — classic LSM
+    leveling, so each key is rewritten at most ``n_generations``-ish
+    times ever: amortized O(log(index)) per append, where one
+    compacted table would rewrite the FULL index every few appends
+    (SCALE.md round 12).
 
     The price is a wider probe plan — and the critical plan fact this
     class encodes: a UNION of bucketed tables does NOT inherit their
@@ -658,6 +205,21 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
     scan, and because all generations share one bucket spec the probe
     side is shuffled ONCE and its partitioning is reused across the
     chained joins.
+
+    Why an incremental bitset: the history grows every batch, so
+    rebuilding the bitset per batch would re-scan the whole index,
+    while a STALE bitset is a correctness bug, not a perf bug — a key
+    appended in batch N but missing from the bitset would test
+    'definitely absent' in batch N+1 and sail past the exact join as
+    a false novel. ``append`` therefore ORs the batch's bits in,
+    O(batch + m/64 words). ``m_bits`` is FIXED up front (bits from
+    different m don't merge), derived from ``expected_keys`` — the
+    pipeline's estimate of the eventual key universe; an underestimate
+    only raises the FPR (``auto_rebuild_fill`` resizes), and below ~2
+    bits/expected-key the bitset is omitted and ``member`` returns
+    literal True, as in ``build_history_index``. The tables are the
+    durable truth and the bitset is in-memory pruning state: a
+    restarted pipeline rebuilds it once (``attach``) before probing.
 
     Invariants (promotion-safe, replay-safe):
     * a key lives in EXACTLY ONE generation (appends anti-join all
@@ -678,8 +240,7 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
     in every generation's DDL); ``append`` validates up front.
 
     No reference counterpart (the reference is a variant codec with
-    no storage layer); the LSM shape follows the public literature
-    (O'Neil et al., LSM-tree) re-expressed as Spark bucketed tables.
+    no storage layer).
     """
 
     def __init__(
@@ -721,8 +282,6 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         os.makedirs(path, exist_ok=True)
         for g in range(n_generations):
             spark.sql(f"DROP TABLE IF EXISTS {self._gtable(g)}")
-            shutil.rmtree(self._gpath(g) + "__old", ignore_errors=True)
-            shutil.rmtree(self._gpath(g) + "__compact", ignore_errors=True)
             self._create_empty(g)
         #: running per-generation row counts — the budget-check state.
         #: Maintained on append/promote and persisted in the manifest,
@@ -831,6 +390,99 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
             self.table_name, sat["fill"], self.auto_rebuild_fill, old_m, new_m,
         )
 
+    # --- bloom bitset maintenance ---------------------------------------
+
+    def _zero_bitset(self) -> DataFrame:
+        m_words = self.m_bits // 64
+        return self.spark.range(1).select(
+            F.expr(f"array_repeat(0L, {m_words})").alias(self.bits_col)
+        ).localCheckpoint(eager=True)
+
+    def _merge_bits(self, novel: DataFrame) -> None:
+        """OR the bits of ``novel``'s keys into the bitset: O(batch +
+        m/64 words). The checkpoint bounds lineage so batch N's bitset
+        never re-aggregates batches 0..N-1. No-op without a bitset."""
+        if self.bitset is None:
+            return
+        delta = bloom_build(novel, F.col(self.key), self.m_bits)
+        self.bitset = (
+            self.bitset.crossJoin(delta.select(F.col("bits").alias("_nb")))
+            .select(
+                F.zip_with(
+                    self.bits_col, "_nb", lambda a, b: a.bitwiseOR(b)
+                ).alias(self.bits_col)
+            )
+            .localCheckpoint(eager=True)
+        )
+
+    def rebuild_bitset(self, m_bits: int | None = None) -> None:
+        """Recovery path: one full scan of ``relation()`` re-derives the
+        bitset from the durable tables (the class docstring's recovery
+        protocol). No-op when the index has no ``m_bits`` and none is
+        given.
+
+        ``m_bits`` starts a new BITSET EPOCH at a different size — the
+        remedy when ``bloom_saturation()`` shows the key universe
+        outgrew ``expected_keys`` (bits from different m values never
+        merge, so a resize is definitionally a rebuild; the tables are
+        untouched, correctness never depended on the bitset). Must be
+        a positive multiple of 64 (whole words).
+
+        ``m_bits``/``bitset`` are assigned TOGETHER, only after the
+        build succeeded (ADVICE r13): a mid-build failure must never
+        leave ``member()`` indexing the OLD word array at the NEW
+        size — element_at past the array end reads as definite-miss,
+        i.e. Bloom FALSE NEGATIVES admitting duplicate keys."""
+        target = self.m_bits
+        if m_bits is not None:
+            if m_bits <= 0 or m_bits % 64:
+                raise ValueError(
+                    f"m_bits must be a positive multiple of 64, got {m_bits}"
+                )
+            target = m_bits
+        if target is None:
+            return
+        new_bitset = (
+            bloom_build(self.relation(), F.col(self.key), target)
+            .select(F.col("bits").alias(self.bits_col))
+            .localCheckpoint(eager=True)
+        )
+        self.m_bits = target
+        self.bitset = new_bitset
+
+    def bloom_saturation(self) -> dict | None:
+        """Operational dial for a long-running ingest whose key
+        universe outgrew ``expected_keys``: the bitset's fill fraction
+        and the implied false-positive rate. The bitset degrades
+        GRACEFULLY (false positives shed less work; never a false
+        negative), but past ~50% fill it stops paying for itself —
+        a production pipeline alerts on this and schedules a rebuild
+        with a larger ``m_bits`` (new index epoch). One O(m/64 words)
+        aggregation over the 1-row bitset — driver-cheap at any index
+        size. Returns None when no bitset is active.
+
+        ``est_fpr`` is the standard fill-rate estimate fill**k with
+        the build's k = len(DEFAULT_SEEDS) hash probes
+        (operators/bloom.py)."""
+        if self.bitset is None:
+            return None
+        from ..operators.bloom import DEFAULT_SEEDS
+
+        [row] = self.bitset.select(
+            F.aggregate(
+                F.transform(self.bits_col, lambda w: F.bit_count(w)),
+                F.lit(0),
+                lambda acc, c: acc + c,
+            ).alias("set_bits")
+        ).collect()
+        fill = row.set_bits / self.m_bits
+        return {
+            "set_bits": row.set_bits,
+            "m_bits": self.m_bits,
+            "fill": round(fill, 6),
+            "est_fpr": round(fill ** len(DEFAULT_SEEDS), 9),
+        }
+
     # --- naming / DDL helpers -------------------------------------------
 
     def _gtable(self, g: int) -> str:
@@ -907,14 +559,17 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         )
 
     def _rewrite_gen(self, g: int, df: DataFrame) -> int:
-        """Replace generation ``g``'s contents with ``df`` via the
-        same rename-aside swap ``SelfUpdatingHistoryIndex.compact``
-        uses — every crash window leaves a complete directory at the
-        registered path or at ``__old``. Returns the rewritten row
-        count (rides the write as a ``df.observe`` metric — no extra
-        job) so callers can RESET their running counts to it: a fresh
-        single-write observation can't inherit whatever drift the
-        per-append accumulators may have collected (ADVICE r14)."""
+        """Replace generation ``g``'s contents with ``df`` via a
+        crash-safe rename-aside swap: the rewrite commits to a
+        ``__compact`` sibling, the live directory moves aside to
+        ``__old``, the rewrite moves in, and only then is ``__old``
+        deleted — every crash window leaves a complete directory at
+        the registered path or at ``__old`` (``attach`` finishes the
+        swap). Returns the rewritten row count (rides the write as a
+        ``df.observe`` metric — no extra job) so callers can RESET
+        their running counts to it: a fresh single-write observation
+        can't inherit whatever drift the per-append accumulators may
+        have collected (ADVICE r14)."""
         import shutil
 
         from pyspark.sql import Observation
@@ -1023,13 +678,60 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
             )
         return out
 
+    # --- the ingest transaction: probe, then grow ------------------------
+
+    def _routed_key(self, salt: Column) -> Column:
+        """Bloom-routed probe key over the batch's ``key`` column: the
+        key itself where the bitset says 'maybe present', else the
+        sentinel '#' + ``salt``. '#…' never equals an md5/content-hash
+        hex key, so a definite miss rides the same join and falls
+        through unmatched without an index lookup — lossless, one
+        pass, no union; the salt spreads the sentinels over many
+        narrow join groups instead of one hot key."""
+        return F.when(self.member(self.key), F.col(self.key)).otherwise(
+            F.concat(F.lit("#"), salt)
+        )
+
+    def dup_flags(
+        self, batch: DataFrame, id_col: str, *, before: int | None = None
+    ) -> DataFrame:
+        """``(id_col, is_dup long)`` per row of ``batch`` (which carries
+        ``id_col`` and this index's ``key`` column): is the row's key
+        in the index as of batches ``< before``? A replayed batch N
+        passes ``before=N`` so its own pre-crash append (``_b == N``)
+        cannot flag every row a dup of itself. Bitset misses probe
+        with the sentinel '#' + ``id_col`` % 64."""
+        probe = self.attach_bitset(batch).select(
+            id_col,
+            self._routed_key((F.col(id_col) % 64).cast("string")).alias("_pk"),
+        )
+        return self.flag_members(probe, "_pk", "_hit", before=before).select(
+            id_col, F.col("_hit").cast("long").alias("is_dup")
+        )
+
+    def novel_keys(self, batch: DataFrame) -> DataFrame:
+        """The distinct ``key`` values of ``batch`` in NO generation —
+        the frame ``append`` takes. Anti-joins the FULL index, so a
+        replayed batch's append is a no-op. Bitset misses probe with
+        the sentinel '#' + the key's first two characters."""
+        keys = self.attach_bitset(batch.select(self.key).distinct()).select(
+            self.key, self._routed_key(F.substring(self.key, 1, 2)).alias("_pk")
+        )
+        return self.anti_members(keys, "_pk").select(self.key)
+
     # --- write paths -----------------------------------------------------
 
     def append(self, novel: DataFrame, *, batch_id: int) -> None:
         """Land ``novel`` (caller guarantees not-already-present, via
-        ``anti_members``) in gen0 with the admitting epoch, O(batch)
+        ``novel_keys``) in gen0 with the admitting epoch, O(batch)
         bitset merge, then cascade promotions while any generation
         exceeds its geometric budget.
+
+        ``batch_id`` is REQUIRED and keyword-only: a default of 0
+        would stamp every row ``_b=0`` and silently defeat
+        ``dup_flags(before=N)`` — a replayed batch N would probe its
+        own pre-crash append and flag every row a dup of itself.
+        Non-replaying callers pass their own monotonic counter.
 
         ``novel`` is eagerly checkpointed first: the batch plan (a
         chain of anti-joins over every generation) executes ONCE, and
@@ -1059,7 +761,7 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         from the durable tables."""
         from pyspark.sql import Observation
 
-        _check_key_dtype(novel, self.key, "GenerationalHistoryIndex")
+        _check_key_dtype(novel, self.key)
         novel = novel.localCheckpoint(eager=True)
         self._merge_bits(novel)
         obs = Observation()

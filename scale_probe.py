@@ -602,20 +602,20 @@ def main() -> None:
           flush=True)
 
     # --- bespoke case: self-updating ingest index, steady-state
-    # per-batch cost vs index SIZE (r10 capstone
-    # stream_dedup_index_update; r11: routed through
-    # SelfUpdatingHistoryIndex — bucketed table + incrementally
-    # maintained Bloom bitset, the registered query's exact shape).
-    # The index is pre-seeded with K x salted hashes (3.3k -> 26.6k
-    # keys, untimed), then ONE fixed batch (sf0.1 docs with doc_id % 3
-    # = 0) runs the probe-then-append transaction. The claim:
-    # per-batch cost tracks the BATCH plus one in-place index scan —
-    # no index shuffle, no per-batch distinct over the store, and the
-    # O(batch) bitset merge stays flat in K.
+    # per-batch cost vs index SIZE (the stream_dedup_index_update
+    # capstone's exact shape: a GenerationalHistoryIndex at its
+    # default budgets — every key below gen0's 100k-row budget, so no
+    # promotion fires mid-series — with an incrementally maintained
+    # Bloom bitset). The index is pre-seeded with K x salted hashes
+    # (3.3k -> 26.6k keys, untimed), then ONE fixed batch (sf0.1 docs
+    # with doc_id % 3 = 0) runs the probe-then-append transaction. The
+    # claim: per-batch cost tracks the BATCH plus one in-place index
+    # scan — no index shuffle, no per-batch distinct over the store,
+    # and the O(batch) bitset merge stays flat in K.
     import shutil as _sh
 
     from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
+        GenerationalHistoryIndex,
     )
 
     batch_fp = (
@@ -633,12 +633,9 @@ def main() -> None:
         tbl = f"idx_update_probe_k{k}"
         tdir = os.path.join(upd_base, tbl)
         _sh.rmtree(tdir, ignore_errors=True)
-        # compact_after_files=0: this probe measures the PURE per-batch
-        # probe+append cost curve — an auto-compaction firing mid-series
-        # would fold a full index rewrite into one sample
-        idx = SelfUpdatingHistoryIndex(
+        idx = GenerationalHistoryIndex(
             spark, tbl, "h", path=tdir, expected_keys=(k + 1) * n_base,
-            compact_after_files=0, overwrite=True,
+            overwrite=True,
         )
         seed = spark.range(1, k + 1).crossJoin(base_fp).select(
             F.md5(F.concat_ws("#", "h", "id")).alias("h")
@@ -647,27 +644,10 @@ def main() -> None:
         samples = []
         for i in range(RUNS + 1):
             t0 = time.perf_counter()
-            seen = idx.relation().select(F.col("h").alias("_ih"))
-            probe_key = F.when(idx.member("h"), F.col("h")).otherwise(
-                F.concat(F.lit("#"), (F.col("doc_id") % 64).cast("string"))
-            )
-            idx.attach_bitset(batch_fp).select(
-                "doc_id", probe_key.alias("_pk")
-            ).hint("merge").join(
-                seen, F.col("_pk") == F.col("_ih"), "left"
-            ).select(
-                "doc_id", F.col("_ih").isNotNull().cast("long").alias("is_dup")
-            ).agg(F.count(F.lit(1)), F.sum("is_dup")).collect()
-            novel_key = F.when(idx.member("h"), F.col("h")).otherwise(
-                F.concat(F.lit("#"), F.substring("h", 1, 2))
-            )
-            idx.append(
-                idx.attach_bitset(batch_fp.select("h").distinct())
-                .select("h", novel_key.alias("_pk"))
-                .join(seen, F.col("_pk") == F.col("_ih"), "left_anti")
-                .select("h"),
-                batch_id=i + 1,
-            )
+            idx.dup_flags(batch_fp, "doc_id").agg(
+                F.count(F.lit(1)), F.sum("is_dup")
+            ).collect()
+            idx.append(idx.novel_keys(batch_fp), batch_id=i + 1)
             if i:
                 samples.append(time.perf_counter() - t0)
         per_k[k] = round(sorted(samples)[len(samples) // 2], 3)

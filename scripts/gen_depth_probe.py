@@ -6,7 +6,7 @@ probe point at n_generations=5+').
 
 Method: same per-batch transaction as the round-12 tiered probe (one
 fixed ~sf0.1 document batch, bloom-sentinel-routed verdicts via
-``flag_members``, novel append via ``anti_members``), but the sweep
+``dup_flags``, novel append via ``novel_keys``), but the sweep
 variable is ``n_generations`` at a FIXED index size: the same salted
 seed keys are driven through the normal append/promote flow so the 5-
 and 7-generation indexes spread their keys across more (smaller)
@@ -94,30 +94,10 @@ def main() -> None:
         samples = []
         for i in range(RUNS + 1):
             t0 = time.perf_counter()
-            probe_key = F.when(idx.member("h"), F.col("h")).otherwise(
-                F.concat(F.lit("#"), (F.col("doc_id") % 64).cast("string"))
-            )
-            idx.flag_members(
-                idx.attach_bitset(batch_fp).select(
-                    "doc_id", probe_key.alias("_pk")
-                ),
-                "_pk",
-                "_hit",
-            ).agg(
-                F.count(F.lit(1)), F.sum(F.col("_hit").cast("long"))
+            idx.dup_flags(batch_fp, "doc_id").agg(
+                F.count(F.lit(1)), F.sum("is_dup")
             ).collect()
-            novel_key = F.when(idx.member("h"), F.col("h")).otherwise(
-                F.concat(F.lit("#"), F.substring("h", 1, 2))
-            )
-            idx.append(
-                idx.anti_members(
-                    idx.attach_bitset(
-                        batch_fp.select("h").distinct()
-                    ).select("h", novel_key.alias("_pk")),
-                    "_pk",
-                ).select("h"),
-                batch_id=i + 1,
-            )
+            idx.append(idx.novel_keys(batch_fp), batch_id=i + 1)
             if i:
                 samples.append(time.perf_counter() - t0)
         results[depth] = {

@@ -114,15 +114,25 @@ def _idx_dir(spark, name):
     return os.path.join(_IO_DIR, name)
 
 
-def test_self_updating_index_grows_and_never_false_negative(spark):
+def _gidx(spark, name, **kw):
     from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
+        GenerationalHistoryIndex,
     )
 
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_grow", "k",
-        path=_idx_dir(spark, "sui_t_grow"), expected_keys=400, overwrite=True,
+    kw.setdefault("expected_keys", 2000)
+    kw.setdefault("budget_rows", 100)
+    kw.setdefault("growth", 4)
+    kw.setdefault("overwrite", True)
+    return GenerationalHistoryIndex(
+        spark, name, "k", path=_idx_dir(spark, name), **kw
     )
+
+
+def test_self_updating_index_grows_and_never_false_negative(spark):
+    """The bitset grows with the index: every appended key stays a
+    member across appends and promotions (budget 100: the first append
+    already promotes)."""
+    idx = _gidx(spark, "gidx_t_grow", expected_keys=400)
     assert idx.bitset is not None and idx.m_bits >= 2 * 400
     assert idx.relation().count() == 0
     # batch 1: 150 novel keys
@@ -146,34 +156,22 @@ def test_self_updating_index_grows_and_never_false_negative(spark):
 
 
 def test_self_updating_index_rebuild_matches_incremental(spark):
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_rebuild", "k",
-        path=_idx_dir(spark, "sui_t_rebuild"), expected_keys=300, overwrite=True,
-    )
+    idx = _gidx(spark, "gidx_t_rebuild", expected_keys=300)
     idx.append(_keys(spark, 120, salt="r1"), batch_id=0)
     idx.append(_keys(spark, 80, salt="r2"), batch_id=1)
     probe = _keys(spark, 3000, salt="probe-mix").unionByName(
         _keys(spark, 120, salt="r1")
     )
     incr = idx.attach_bitset(probe).where(idx.member("k")).count()
-    idx.rebuild_bitset()  # recovery path: re-derive from the table
+    idx.rebuild_bitset()  # recovery path: re-derive from the tables
     rebuilt = idx.attach_bitset(probe).where(idx.member("k")).count()
     # identical bits (same keys, same m, same seeds) → identical sheds
     assert incr == rebuilt
 
 
 def test_self_updating_index_degenerates_without_headroom(spark):
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_degen", "k",
-        path=_idx_dir(spark, "sui_t_degen"), expected_keys=5000, overwrite=True,
+    idx = _gidx(
+        spark, "gidx_t_degen", expected_keys=5000,
         bloom_max_bits=4096,  # < 2 bits/key → prescreen off
     )
     assert idx.bitset is None and idx.m_bits is None
@@ -184,26 +182,27 @@ def test_self_updating_index_degenerates_without_headroom(spark):
 
 
 def test_self_updating_index_attach_recovers_across_sessions(spark):
-    """Restart-and-keep: a fresh session (metastore lost, files kept)
-    adopts the durable table via attach() — no key lost, bitset
-    rebuilt, bucketed Exchange-free probe scans intact, and the index
-    keeps growing from where the previous session stopped."""
+    """Restart-and-keep with no crash: a fresh session (metastore
+    lost, files kept) adopts the durable generations via attach() —
+    no key lost, bitset rebuilt, bucketed Exchange-free probe scans
+    intact, and the index keeps growing from where the previous
+    session stopped."""
     from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
+        GenerationalHistoryIndex,
     )
 
-    path = _idx_dir(spark, "sui_t_attach")
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_attach", "k", path=path, expected_keys=400, overwrite=True,
-    )
+    path = _idx_dir(spark, "gidx_t_attach")
+    idx = _gidx(spark, "gidx_t_attach", expected_keys=400)
     idx.append(_keys(spark, 150, salt="a1"), batch_id=0)
     idx.append(_keys(spark, 100, salt="a2"), batch_id=1)
 
-    # simulate the restart: metastore entry gone, files untouched
-    spark.sql("DROP TABLE IF EXISTS sui_t_attach")
+    # simulate the restart: metastore entries gone, files untouched
+    for g in range(idx.n_generations):
+        spark.sql(f"DROP TABLE IF EXISTS {idx._gtable(g)}")
 
-    re = SelfUpdatingHistoryIndex.attach(
-        spark, "sui_t_attach", "k", path=path, expected_keys=400,
+    re = GenerationalHistoryIndex.attach(
+        spark, "gidx_t_attach", "k", path=path, expected_keys=400,
+        budget_rows=100, growth=4,
     )
     assert re.relation().count() == 250
     seen = _keys(spark, 150, salt="a1").unionByName(_keys(spark, 100, salt="a2"))
@@ -215,18 +214,14 @@ def test_self_updating_index_attach_recovers_across_sessions(spark):
     fp = re.attach_bitset(_keys(spark, 2000, salt="zz")).where(re.member("k")).count()
     assert fp < 100, f"post-attach bloom FP implausibly high: {fp}/2000"
 
-    # the re-registered table keeps its bucket spec: a merge-join probe
-    # against it must NOT exchange the index side (in-place bucketed
-    # scan — the whole point of the persisted layout)
-    probe = _keys(spark, 50, salt="a1")
-    joined = probe.hint("merge").join(
-        re.relation().select(F.col("k").alias("_h")),
-        probe.k == F.col("_h"),
-        "left_semi",
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+    # the re-registered tables keep their bucket spec: the chained
+    # probe must NOT exchange an index side (in-place bucketed scans —
+    # the whole point of the persisted layout)
+    flagged = re.flag_members(_keys(spark, 50, salt="a1"), "k", "hit")
+    plan = flagged._jdf.queryExecution().executedPlan().toString()
     assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan
-    assert joined.count() == 50
+    assert plan.count("Exchange hashpartitioning") <= 1, plan
+    assert flagged.where(F.col("hit")).count() == 50
 
     # appends keep working after recovery, invariant intact
     re.append(_keys(spark, 60, salt="a3"), batch_id=2)
@@ -239,7 +234,7 @@ def test_self_updating_index_attach_recovers_across_sessions(spark):
     )
 
 
-def test_index_update_ingest_is_exactly_once_under_batch_replay(spark):
+def test_tiered_ingest_is_exactly_once_under_batch_replay(spark):
     """foreachBatch's contract is at-least-once: a crash between the
     verdict write and the index append replays the WHOLE batch. The
     callback must be idempotent — replaying batch N must leave both
@@ -251,19 +246,22 @@ def test_index_update_ingest_is_exactly_once_under_batch_replay(spark):
 
     from datafusion_functions_variant_spark.queries.catalog import _IO_DIR
     from datafusion_functions_variant_spark.queries.streaming_queries import (
-        _index_update_ingest,
+        _tiered_ingest,
     )
     from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
+        GenerationalHistoryIndex,
     )
 
     out_dir = os.path.join(_IO_DIR, "replay_verdicts")
     shutil.rmtree(out_dir, ignore_errors=True)
-    idx = SelfUpdatingHistoryIndex(
+    # budget 20: batch 0's append already promotes, so the replays
+    # below also run against keys that moved generations
+    idx = GenerationalHistoryIndex(
         spark, "replay_hash_idx", "h",
-        path=os.path.join(_IO_DIR, "replay_hash_idx"), expected_keys=100, overwrite=True,
+        path=os.path.join(_IO_DIR, "replay_hash_idx"), expected_keys=100,
+        budget_rows=20, growth=2, overwrite=True,
     )
-    ingest = _index_update_ingest(spark, idx, out_dir)
+    ingest = _tiered_ingest(spark, idx, out_dir)
 
     def batch(lo, hi):
         return spark.range(lo, hi).select(
@@ -293,192 +291,10 @@ def test_index_update_ingest_is_exactly_once_under_batch_replay(spark):
     assert snapshot() == (rows, n_keys)
 
 
-def test_self_updating_index_compact_preserves_answers_and_layout(spark):
-    """compact() must collapse the per-batch small files to ~one per
-    bucket while changing NOTHING observable: row set, epochs (the
-    before= views), bloom behavior, the Exchange-free bucketed probe
-    plan, and the ability to keep appending."""
-    import glob
-    import os
-
-    from datafusion_functions_variant_spark.queries.catalog import _IO_DIR
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
-    path = _idx_dir(spark, "sui_t_compact")
-    # compact_after_files=0 disables the auto-policy: this test drives
-    # compact() MANUALLY to pin its invariants (the policy has its own
-    # sawtooth test below)
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_compact", "k", path=path, expected_keys=500,
-        overwrite=True, compact_after_files=0,
-    )
-    for b in range(1, 5):
-        idx.append(_keys(spark, 60, salt=f"c{b}"), batch_id=b)
-
-    def files():
-        return len(glob.glob(os.path.join(path, "part-*.parquet")))
-
-    def state():
-        full = sorted(map(tuple, idx.relation().collect()))
-        asof3 = sorted(map(tuple, idx.relation(before=3).collect()))
-        return full, asof3
-
-    before_files, before_state = files(), state()
-    assert before_files >= 4 * idx.bucket_count  # one file set per append
-    idx.compact()
-    assert files() <= idx.bucket_count
-    assert state() == before_state  # rows AND epochs byte-identical
-
-    # bucketed Exchange-free probe survives the rewrite
-    probe = _keys(spark, 30, salt="c2")
-    joined = probe.hint("merge").join(
-        idx.relation().select(F.col("k").alias("_h")),
-        probe.k == F.col("_h"),
-        "left_semi",
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan
-    assert joined.count() == 30
-    # bloom untouched: every key still a member, appends keep working
-    all_keys = idx.relation().select("k")
-    assert idx.attach_bitset(all_keys).where(~idx.member("k")).count() == 0
-    idx.append(_keys(spark, 20, salt="c9"), batch_id=9)
-    assert idx.relation().count() == 260
-
-
-# --- round 12: crash-safe compact, auto-compaction, guard rails -------------
-
-
-def test_compact_crash_between_swaps_is_recoverable(spark, monkeypatch):
-    """VERDICT r11 #3 / ADVICE: the r11 compact() rmtree'd the live dir
-    before swapping the rewrite in — a crash in that window lost the
-    registered index. The rename-aside protocol must leave a complete
-    index recoverable by attach() from EVERY window. Simulated death:
-    os.replace raises on the 2nd call (between rename-aside and
-    swap-in)."""
-    import os as _os
-
-    from datafusion_functions_variant_spark.streaming import history as H
-
-    path = _idx_dir(spark, "sui_t_crash1")
-    idx = H.SelfUpdatingHistoryIndex(
-        spark, "sui_t_crash1", "k", path=path, expected_keys=300,
-        overwrite=True, compact_after_files=0,
-    )
-    idx.append(_keys(spark, 100, salt="x1"), batch_id=1)
-    idx.append(_keys(spark, 50, salt="x2"), batch_id=2)
-    before = sorted(map(tuple, idx.relation().collect()))
-
-    calls = []
-    real_replace = _os.replace
-
-    def dying_replace(src, dst):
-        calls.append((src, dst))
-        if len(calls) == 2:  # the tmp→path swap-in
-            raise OSError("simulated crash between the two renames")
-        return real_replace(src, dst)
-
-    monkeypatch.setattr(H.os, "replace", dying_replace)
-    with pytest.raises(OSError, match="simulated crash"):
-        idx.compact()
-    monkeypatch.setattr(H.os, "replace", real_replace)
-    # the registered path is GONE, but the aside copy holds the index
-    assert not _os.path.isdir(path) and _os.path.isdir(path + "__old")
-
-    re = H.SelfUpdatingHistoryIndex.attach(
-        spark, "sui_t_crash1", "k", path=path, expected_keys=300,
-    )
-    assert sorted(map(tuple, re.relation().collect())) == before
-    assert not _os.path.isdir(path + "__old")
-    assert not _os.path.isdir(path + "__compact")
-    # and the recovered index still compacts + appends cleanly
-    re.compact()
-    re.append(_keys(spark, 10, salt="x3"), batch_id=3)
-    assert re.relation().count() == 160
-
-
-def test_compact_crash_before_any_swap_leaves_original_live(spark, monkeypatch):
-    """Death during the rename-aside itself (1st os.replace): the live
-    dir never moved, attach() just cleans the committed-but-unswapped
-    rewrite."""
-    import os as _os
-
-    from datafusion_functions_variant_spark.streaming import history as H
-
-    path = _idx_dir(spark, "sui_t_crash2")
-    idx = H.SelfUpdatingHistoryIndex(
-        spark, "sui_t_crash2", "k", path=path, expected_keys=300,
-        overwrite=True, compact_after_files=0,
-    )
-    idx.append(_keys(spark, 80, salt="y1"), batch_id=1)
-    before = sorted(map(tuple, idx.relation().collect()))
-
-    def dying_replace(src, dst):
-        raise OSError("simulated crash at the first rename")
-
-    monkeypatch.setattr(H.os, "replace", dying_replace)
-    with pytest.raises(OSError, match="simulated crash"):
-        idx.compact()
-    monkeypatch.undo()
-    assert _os.path.isdir(path)  # original untouched
-    re = H.SelfUpdatingHistoryIndex.attach(
-        spark, "sui_t_crash2", "k", path=path, expected_keys=300,
-    )
-    assert sorted(map(tuple, re.relation().collect())) == before
-    assert not _os.path.isdir(path + "__compact")
-
-
-def test_append_auto_compaction_sawtooths_file_count(spark):
-    """VERDICT r11 'what's missing' #3: nothing CALLED compact() in the
-    ingest loop. append() now triggers it past compact_after_files, so
-    a long-running ingest's file count sawtooths instead of growing one
-    small-file set per batch forever — while rows/epochs stay exact."""
-    import glob
-    import os as _os
-
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
-    path = _idx_dir(spark, "sui_t_autocompact")
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_autocompact", "k", path=path, expected_keys=600,
-        overwrite=True, compact_after_files=40,
-    )
-
-    def files():
-        return len(glob.glob(_os.path.join(path, "part-*.parquet")))
-
-    peaks, expected = [], 0
-    for b in range(1, 7):
-        idx.append(_keys(spark, 50, salt=f"s{b}"), batch_id=b)
-        expected += 50
-        peaks.append(files())
-        # invariant after EVERY append (compacted or not): bounded by
-        # threshold + one batch's worth of writer tasks × buckets
-        assert files() <= 40 + 8 * spark.sparkContext.defaultParallelism
-    # the policy fired at least once (a 6-batch run without it would
-    # sit well past the threshold) and ended low, not monotonic
-    assert min(peaks) <= idx.bucket_count  # a post-compact trough exists
-    assert idx.relation().count() == expected
-    # epochs survive the rewrites: the before= replay view still works
-    assert idx.relation(before=4).count() == 150
-
-
 def test_append_requires_batch_id_keyword(spark):
     """r11 ADVICE: batch_id defaulting to 0 silently defeated the
     replay epoch contract — it is now required and keyword-only."""
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
-    path = _idx_dir(spark, "sui_t_reqbatch")
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_reqbatch", "k", path=path, expected_keys=100,
-        overwrite=True,
-    )
+    idx = _gidx(spark, "gidx_t_reqbatch")
     with pytest.raises(TypeError):
         idx.append(_keys(spark, 5, salt="q"))  # no batch_id
     with pytest.raises(TypeError):
@@ -491,29 +307,27 @@ def test_init_refuses_to_destroy_durable_index_without_overwrite(spark):
     import os as _os
 
     from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
+        GenerationalHistoryIndex,
     )
 
-    path = _idx_dir(spark, "sui_t_guard")
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_guard", "k", path=path, expected_keys=100,
-        overwrite=True,
-    )
+    path = _idx_dir(spark, "gidx_t_guard")
+    idx = _gidx(spark, "gidx_t_guard")
     idx.append(_keys(spark, 30, salt="g"), batch_id=0)
-    spark.sql("DROP TABLE IF EXISTS sui_t_guard")  # simulate new session
+    for g in range(idx.n_generations):  # simulate new session
+        spark.sql(f"DROP TABLE IF EXISTS {idx._gtable(g)}")
     with pytest.raises(ValueError, match="attach\\(\\)|overwrite=True"):
-        SelfUpdatingHistoryIndex(
-            spark, "sui_t_guard", "k", path=path, expected_keys=100,
+        GenerationalHistoryIndex(
+            spark, "gidx_t_guard", "k", path=path, expected_keys=100,
         )
     # the durable files survived the refusal
     assert _os.path.isdir(path) and _os.listdir(path)
-    re = SelfUpdatingHistoryIndex.attach(
-        spark, "sui_t_guard", "k", path=path, expected_keys=100,
+    re = GenerationalHistoryIndex.attach(
+        spark, "gidx_t_guard", "k", path=path, expected_keys=100,
     )
     assert re.relation().count() == 30
     # and explicit overwrite still works
-    fresh = SelfUpdatingHistoryIndex(
-        spark, "sui_t_guard", "k", path=path, expected_keys=100,
+    fresh = GenerationalHistoryIndex(
+        spark, "gidx_t_guard", "k", path=path, expected_keys=100,
         overwrite=True,
     )
     assert fresh.relation().count() == 0
@@ -538,20 +352,6 @@ def test_write_single_file_split_empty_partition(spark, tmp_path):
 
 
 # --- round 12: GenerationalHistoryIndex (LSM-style tiered index) ------------
-
-
-def _gidx(spark, name, **kw):
-    from datafusion_functions_variant_spark.streaming.history import (
-        GenerationalHistoryIndex,
-    )
-
-    kw.setdefault("expected_keys", 2000)
-    kw.setdefault("budget_rows", 100)
-    kw.setdefault("growth", 4)
-    kw.setdefault("overwrite", True)
-    return GenerationalHistoryIndex(
-        spark, name, "k", path=_idx_dir(spark, name), **kw
-    )
 
 
 def test_generational_index_promotes_and_stays_disjoint(spark):
@@ -832,20 +632,10 @@ def test_generational_unparseable_manifest_triggers_full_repair(spark):
 def test_index_appends_validate_key_dtype(spark):
     """ADVICE r12: a non-string key column fails AT THE CALL SITE with
     the contract, not later inside the bucketed write."""
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
     gi = _gidx(spark, "gidx_dtype")
     bad = spark.range(5).select(F.col("id").alias("k"))  # bigint key
     with pytest.raises(TypeError, match="must be STRING"):
         gi.append(bad, batch_id=0)
-    si = SelfUpdatingHistoryIndex(
-        spark, "sui_dtype", "k",
-        path=_idx_dir(spark, "sui_dtype"), expected_keys=100, overwrite=True,
-    )
-    with pytest.raises(TypeError, match="must be STRING"):
-        si.append(bad, batch_id=0)
 
 
 def test_variant_extracted_key_feeds_exchange_free_probe_chain(spark):
@@ -899,34 +689,6 @@ def test_variant_extracted_key_feeds_exchange_free_probe_chain(spark):
     assert flagged.where(~F.col("hit")).count() == 0
 
 
-def test_autocompaction_listing_falls_back_to_hadoop_fs(spark, monkeypatch):
-    """The cluster story (ADVICE r12): on a remote path os.listdir
-    always fails — the policy must fall back to the Hadoop FileSystem
-    API (which also serves local paths) and keep counting; only a
-    double failure warns-once and disables."""
-    import os as _os
-
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_hfs", "k",
-        path=_idx_dir(spark, "sui_hfs"), expected_keys=200, overwrite=True,
-    )
-    idx.append(_keys(spark, 40, salt="hf"), batch_id=0)
-    direct = idx._count_index_files()
-    assert direct > 0
-
-    def deny(path):
-        raise PermissionError(f"simulated non-POSIX path: {path}")
-
-    monkeypatch.setattr(_os, "listdir", deny)
-    via_hadoop = idx._count_index_files()
-    assert via_hadoop == direct  # the fallback counts the same files
-    assert not getattr(idx, "_listdir_warned", False)
-
-
 def test_bloom_saturation_reports_fill_and_tracks_growth(spark):
     """The operational dial for an outgrown expected_keys: fill and
     est_fpr are exact functions of the bitset; growing the index
@@ -943,14 +705,8 @@ def test_bloom_saturation_reports_fill_and_tracks_growth(spark):
     s2 = idx.bloom_saturation()
     assert s2["set_bits"] > s1["set_bits"] and s2["est_fpr"] > s1["est_fpr"]
     # degenerate: no headroom -> no bitset -> None
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
-    nob = SelfUpdatingHistoryIndex(
-        spark, "sui_sat_none", "k",
-        path=_idx_dir(spark, "sui_sat_none"),
-        expected_keys=10**12, overwrite=True,  # m capped below 2 bits/key
+    nob = _gidx(
+        spark, "gidx_sat_none", expected_keys=10**12  # m capped below 2 bits/key
     )
     assert nob.bitset is None and nob.bloom_saturation() is None
 
@@ -987,8 +743,7 @@ def test_rebuild_bitset_failure_leaves_consistent_state(spark, monkeypatch):
     dies) must leave (m_bits, bitset) CONSISTENT — the old epoch fully
     intact — or member() would index the old word array at the new
     size and read past-the-end as definite-miss: Bloom false negatives
-    silently admitting duplicates. Same contract on both index
-    classes."""
+    silently admitting duplicates."""
     from datafusion_functions_variant_spark.streaming import history as H
 
     idx = _gidx(spark, "gidx_rbfail", expected_keys=500)
@@ -1007,21 +762,6 @@ def test_rebuild_bitset_failure_leaves_consistent_state(spark, monkeypatch):
     assert idx.m_bits == old_m and idx.bitset is old_bitset
     allk = idx.relation().select("k")
     assert idx.attach_bitset(allk).where(~idx.member("k")).count() == 0
-
-    sui = H.SelfUpdatingHistoryIndex(
-        spark, "sui_rbfail", "k",
-        path=_idx_dir(spark, "sui_rbfail"),
-        expected_keys=500, overwrite=True,
-    )
-    sui.append(_keys(spark, 200, salt="rf2"), batch_id=0)
-    old_m, old_bitset = sui.m_bits, sui.bitset
-    monkeypatch.setattr(H, "bloom_build", dying_build)
-    with pytest.raises(RuntimeError, match="simulated bloom"):
-        sui.rebuild_bitset(m_bits=old_m * 4)
-    monkeypatch.undo()
-    assert sui.m_bits == old_m and sui.bitset is old_bitset
-    allk = sui.relation().select("k")
-    assert sui.attach_bitset(allk).where(~sui.member("k")).count() == 0
 
 
 def test_non_dict_manifest_reads_unknown(spark):
@@ -1340,47 +1080,11 @@ def test_auto_rebuild_rearm_when_measured_fill_below_threshold(
     assert len(calls) == n_calls
 
 
-def test_autocompaction_listing_double_failure_warns_once(spark, monkeypatch):
-    """When BOTH os.listdir and the Hadoop FileSystem API fail, the
-    policy warns ONCE (auto-compaction inert on this filesystem) and
-    keeps returning 0 — never raises into the ingest path."""
-    import os as _os
-    import warnings as _w
-
-    from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
-    )
-
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_dblfail", "k",
-        path=_idx_dir(spark, "sui_dblfail"), expected_keys=200,
-        overwrite=True,
-    )
-    idx.append(_keys(spark, 20, salt="df"), batch_id=0)
-
-    class _NoJvm:
-        def __getattr__(self, name):
-            raise RuntimeError("simulated: no gateway on this session")
-
-    monkeypatch.setattr(
-        _os, "listdir",
-        lambda p: (_ for _ in ()).throw(PermissionError("non-POSIX")),
-    )
-    monkeypatch.setattr(type(idx), "spark", property(lambda self: _NoJvm()),
-                        raising=False)
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        assert idx._count_index_files() == 0
-        assert idx._count_index_files() == 0  # second call: silent
-    texts = [str(r.message) for r in rec if "auto-compaction is inert" in str(r.message)]
-    assert len(texts) == 1 and idx._listdir_warned
-
-
 def test_generational_degenerate_arms(spark):
     """Sweep the small guard arms: no-bloom configuration (m under 2
     bits/key → prescreen off, rebuild a no-op), double-create without
-    overwrite refused, single-table bad/None rebuild sizes, and the
-    attach() crash arms (__old restore, vanished generation dir)."""
+    overwrite refused, and the attach() crash arms (__old restore,
+    vanished generation dir)."""
     import os as _os
     import shutil as _sh
 
@@ -1388,7 +1092,6 @@ def test_generational_degenerate_arms(spark):
 
     from datafusion_functions_variant_spark.streaming.history import (
         GenerationalHistoryIndex,
-        SelfUpdatingHistoryIndex,
     )
 
     # no-bloom arm: absurd expected_keys cap m below 2 bits/key
@@ -1406,16 +1109,6 @@ def test_generational_degenerate_arms(spark):
             spark, "gidx_nobloom", "k",
             path=_idx_dir(spark, "gidx_nobloom"), expected_keys=100,
         )
-
-    # single-table size validation + None no-op
-    sui = SelfUpdatingHistoryIndex(
-        spark, "sui_degen", "k", path=_idx_dir(spark, "sui_degen"),
-        expected_keys=10**12, overwrite=True,
-    )
-    assert sui.m_bits is None
-    sui.rebuild_bitset()  # None target → return
-    with _pytest.raises(ValueError, match="multiple of 64"):
-        sui.rebuild_bitset(m_bits=100)
 
     # attach crash arms: g0 left at __old (rename-aside crash window),
     # g1 vanished entirely (crash between a promote's empty-rewrite

@@ -1508,25 +1508,26 @@ def test_text_content_key_fields_and_canonical_plan(spark, monkeypatch):
 def test_history_degenerate_attach_and_noop_rebuild(spark):
     """attach() with no bloom headroom must come back bitset-less
     (member() passes everything, rebuild_bitset is a no-op) while the
-    durable table still answers exactly; drop_bitset is an identity
+    durable tables still answer exactly; drop_bitset is an identity
     on a bitset-less frame."""
     import os
 
     from datafusion_functions_variant_spark.queries.catalog import _IO_DIR
     from datafusion_functions_variant_spark.streaming.history import (
-        SelfUpdatingHistoryIndex,
+        GenerationalHistoryIndex,
     )
 
-    path = os.path.join(_IO_DIR, "sui_t_degen_attach")
-    idx = SelfUpdatingHistoryIndex(
-        spark, "sui_t_degen_attach", "k", path=path, expected_keys=50, overwrite=True,
+    path = os.path.join(_IO_DIR, "gidx_t_degen_attach")
+    idx = GenerationalHistoryIndex(
+        spark, "gidx_t_degen_attach", "k", path=path, expected_keys=50, overwrite=True,
     )
     keys = spark.range(40).select(F.md5(F.col("id").cast("string")).alias("k"))
     idx.append(keys, batch_id=0)
-    spark.sql("DROP TABLE IF EXISTS sui_t_degen_attach")
+    for g in range(idx.n_generations):
+        spark.sql(f"DROP TABLE IF EXISTS {idx._gtable(g)}")
 
-    re = SelfUpdatingHistoryIndex.attach(
-        spark, "sui_t_degen_attach", "k", path=path, expected_keys=5000,
+    re = GenerationalHistoryIndex.attach(
+        spark, "gidx_t_degen_attach", "k", path=path, expected_keys=5000,
         bloom_max_bits=4096,  # < 2 bits/key → prescreen off
     )
     assert re.bitset is None and re.m_bits is None

@@ -4,6 +4,8 @@ columns, top-k compiles to TakeOrderedAndProject, whole-stage codegen
 covers the hot path. These guard against regressions that would only
 hurt at scale."""
 
+import pytest
+
 from datafusion_functions_variant_spark.queries import load_all_queries
 
 REGISTRY = load_all_queries()
@@ -1296,22 +1298,31 @@ def test_stream_history_small_path_still_broadcasts(spark):
     assert "hist_dedup_content_idx" not in plan
 
 
-def test_stream_index_update_bloom_ahead_of_smj(spark):
+@pytest.mark.parametrize(
+    "name,table",
+    [
+        ("stream_dedup_index_update", "stream_upd_hash_idx"),
+        ("stream_dedup_index_update_tiered", "stream_tiered_hash_idx"),
+    ],
+    ids=["stream_dedup_index_update", "stream_dedup_index_update_tiered"],
+)
+def test_stream_index_update_bloom_ahead_of_smj(spark, name, table):
     # r11: the self-updating ingest index capstone probes through
     # streaming/history.py — the per-batch verdict plan must show the
     # map-side Bloom prescreen (member bits feeding the salted-
     # sentinel probe key) AHEAD of a merge SMJ that reads the bucketed
     # index in place. Captured from the batch that actually ran inside
-    # foreachBatch (core.LAST_INGEST_PLAN).
+    # foreachBatch (core.LAST_INGEST_PLAN); the tiered cell's index
+    # has been through promotions by then.
     from datafusion_functions_variant_spark.streaming import core
 
-    REGISTRY["stream_dedup_index_update"].build(spark, SF)
+    REGISTRY[name].build(spark, SF)
     plan = core.LAST_INGEST_PLAN[0]
     assert plan, "no ingest probe plan captured"
     assert "SortMergeJoin" in plan and "LeftOuter" in plan
     # the index side never broadcasts and is read bucket-in-place
     assert "BroadcastHashJoin" not in plan
-    assert "stream_upd_hash_idx" in plan
+    assert table in plan
     assert "SelectedBucketsCount" in plan
     # bloom membership runs map-side in the probe-key projection
     # (shiftright/element_at over the broadcast bits words)
@@ -1321,21 +1332,29 @@ def test_stream_index_update_bloom_ahead_of_smj(spark):
     assert "bit_or" not in plan
 
 
-def test_stream_index_restart_recovered_probe_plan(spark):
+@pytest.mark.parametrize(
+    "name,table",
+    [
+        ("stream_dedup_index_restart", "stream_restart_hash_idx"),
+        ("stream_dedup_index_restart_tiered", "stream_trestart_hash_idx"),
+    ],
+    ids=["stream_dedup_index_restart", "stream_dedup_index_restart_tiered"],
+)
+def test_stream_index_restart_recovered_probe_plan(spark, name, table):
     """The restart capstone's LAST captured batch plan is batch 2 —
     probed by the attach()-RECOVERED index: the re-registered external
-    table must still be read bucket-in-place (no Exchange under it, no
-    broadcast), and the REBUILT bitset must still prescreen map-side.
-    Recovery changing the probe topology would be a silent 100 TB
-    regression the answer hash can't see."""
+    tables must still be read bucket-in-place (no Exchange under them,
+    no broadcast), and the REBUILT bitset must still prescreen
+    map-side. Recovery changing the probe topology would be a silent
+    100 TB regression the answer hash can't see."""
     from datafusion_functions_variant_spark.streaming import core
 
-    REGISTRY["stream_dedup_index_restart"].build(spark, SF)
+    REGISTRY[name].build(spark, SF)
     plan = core.LAST_INGEST_PLAN[0]
     assert plan, "no ingest probe plan captured"
     assert "SortMergeJoin" in plan and "LeftOuter" in plan
     assert "BroadcastHashJoin" not in plan
-    assert "stream_restart_hash_idx" in plan
+    assert table in plan
     assert "SelectedBucketsCount" in plan
     assert "shiftright" in plan and "element_at" in plan
     assert "bit_or" not in plan

@@ -10,23 +10,21 @@ Scale design (100 TB of documents):
 * **Exact dedup** = hash → groupBy → min-keeper. One shuffle on the
   hash; partial aggregation collapses duplicates map-side first.
 * **MinHash-LSH** = in-row gram hashing → 1 groupBy for signatures →
-  band explode → bucket groupBy on (band, value). Only colliding
-  buckets produce pairs, and per-bucket pair expansion is CAPPED:
-  buckets larger than ``max_bucket`` emit star pairs to the min-id
-  keeper (O(n), same connected component) instead of all-pairs
-  (O(n²)) — a million-document boilerplate cluster stays one bounded
-  task instead of 10¹² pairs. (AQE skew-join splitting does NOT help
-  here: it splits skewed join partitions, not a skewed groupBy whose
-  aggregate is collect_set.) ``lsh_bucket_stats`` surfaces the
-  overflow count as a count-only pre-flight audit.
+  band explode → pairs within each (band, value) bucket. Only
+  colliding buckets produce pairs, and ``routed_bucket_pairs`` caps
+  the expansion: buckets larger than ``max_bucket`` emit star pairs to
+  the min-id keeper (O(n), same connected component) instead of
+  all-pairs (O(n²)), so a million-document boilerplate cluster stays
+  one bounded task instead of 10¹² pairs. (AQE skew-join splitting
+  does NOT help here: it splits skewed join partitions, not a skewed
+  groupBy.) ``lsh_bucket_stats`` is the count-only pre-flight audit.
 * **Verification** re-computes exact Jaccard ONLY for candidate
   pairs — a join of the (small) candidate set back to the shingle
   table, never all-pairs.
-* **SimHash** = per-token hash bits → weighted bit-majority per doc
-  (one groupBy), 64-bit signature; candidate pairs by Hamming
-  distance. The brute pair scan here is for the oracle-checkable
-  small path; at scale you'd block on signature prefixes (same LSH
-  pattern as above).
+* **SimHash** = per-token hash bits → weighted bit-majority per doc,
+  in-row, 60-bit signature; candidate pairs by pigeonhole chunk
+  blocking through the same ``routed_bucket_pairs``, then an exact
+  Hamming filter.
 * **Persisted bucketed band index** (continuous ingest): the corpus'
   (band, hash) index written ``bucketBy(8)`` once means each batch
   probe shuffles only the BATCH side. Measured (bench.py r6, 5-run
@@ -42,6 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def normalize_text(col) -> F.Column:
@@ -353,6 +352,111 @@ def banded_rows_inrow(
     ).select(id_col, *extra, "bnd.band_id", "bnd.band_hash")
 
 
+def routed_bucket_pairs(
+    rows: DataFrame, max_bucket: int, pair_sql: str, observation=None
+) -> DataFrame:
+    """Pairs within each bucket of ``rows``: the bounded-state pair
+    expansion shared by ``lsh_candidate_pairs``, ``simhash_near_pairs``
+    and ``phash.neardup_pairs``.
+
+    ``rows`` holds one row per (bucket key, member): the ``member``
+    column is the member and every other column is the bucket key. A
+    member is either a bare id or a struct whose ``id`` field is the
+    id, with extra fields riding along for the pair SQL (read from the
+    schema). A bucket's keeper is its min member, i.e. its min id.
+    ``pair_sql`` is the SQL struct of one pair over the members ``{a}``
+    (the lower id) and ``{b}``; the result has the struct's fields as
+    columns, one row per pair per shared bucket (callers collapse
+    pairs that collide in several buckets).
+
+    Overflow routing: a bucket with more than ``max_bucket`` members
+    is a near-identical boilerplate cluster. All-pairs there would be
+    O(n²) inside one task, so it emits star pairs (keeper, member)
+    instead: O(n), the same connected component under downstream
+    clustering, and the keeper matches ``exact_dedup_groups``'s min-id
+    convention. Buckets at or under the cap emit all pairs.
+
+    Bounded state: no per-bucket array ever holds more than
+    ``max_bucket`` members. A window over the bucket key annotates each
+    row with its bucket size ``n`` and keeper, and rows are routed to
+    subgroups BEFORE any array forms: a small bucket keeps one subgroup
+    (``_sub`` NULL), while every member of an overflow bucket becomes
+    its own single-row subgroup that already knows its keeper, so its
+    star pair falls out of a one-element array. One exchange: the
+    window's hash partitioning on the bucket key satisfies the subgroup
+    aggregate's clustering (a superset key), so the groupBy reuses it
+    (plan-pinned in ``tests/test_plans.py``). The all-pairs/star CASE
+    lives in one projection, so the input lineage is evaluated once.
+
+    ``observation``: an optional ``pyspark.sql.Observation``. When
+    given, the bucket audit ``lsh_bucket_stats`` computes (n_buckets /
+    n_colliding_buckets / n_overflow_buckets / max_bucket_size) rides
+    the subgroup aggregate via ``DataFrame.observe``, instead of a
+    second pass over the input. ``n_overflow_buckets > 0`` means some
+    bucket was star-routed. Read it after acting on the result via
+    ``plans.observe.observed_metrics`` (which tolerates the zero-row
+    corner where AQE collapses the subtree).
+    """
+    cap = int(max_bucket)
+    key = [c for c in rows.columns if c != "member"]
+    is_struct = isinstance(rows.schema["member"].dataType, StructType)
+
+    def id_of(m: str) -> str:
+        return f"{m}.id" if is_struct else m
+
+    w = Window.partitionBy(*key)
+    routed = rows.select(
+        *key,
+        "member",
+        F.count(F.lit(1)).over(w).alias("_n"),
+        F.min("member").over(w).alias("_keeper"),
+    ).withColumn(
+        # n is bucket-constant, so the two regimes never mix in a bucket
+        "_sub",
+        F.when(F.col("_n") <= cap, F.lit(None)).otherwise(F.expr(id_of("member"))),
+    )
+    buckets = routed.groupBy(*key, "_sub").agg(
+        F.first("_n").alias("n"),
+        F.first("_keeper").alias("keeper"),
+        F.sort_array(F.collect_set("member")).alias("members"),
+    )
+    if observation is not None:
+        # an overflow bucket spans several subgroup rows: count it once,
+        # on its keeper's row. Observe BEFORE the n > 1 filter so
+        # n_buckets counts singleton buckets too.
+        is_bucket_row = (F.col("n") <= cap) | F.expr(
+            f"{id_of('element_at(members, 1)')} = {id_of('keeper')}"
+        )
+        buckets = buckets.observe(
+            observation,
+            F.sum(is_bucket_row.cast("long")).alias("n_buckets"),
+            F.sum((is_bucket_row & (F.col("n") > 1)).cast("long")).alias(
+                "n_colliding_buckets"
+            ),
+            F.sum((is_bucket_row & (F.col("n") > cap)).cast("long")).alias(
+                "n_overflow_buckets"
+            ),
+            F.max("n").alias("max_bucket_size"),
+        )
+    all_pairs = (
+        "flatten(transform(members, (x, i) ->"
+        " transform(slice(members, i + 2, size(members) - i - 1),"
+        f" y -> {pair_sql.format(a='x', b='y')})))"
+    )
+    # an overflow subgroup holds one member: its star pair against the
+    # keeper (the keeper's own subgroup emits nothing)
+    star_pairs = (
+        f"transform(filter(members, y -> {id_of('y')} != {id_of('keeper')}),"
+        f" y -> {pair_sql.format(a='keeper', b='y')})"
+    )
+    expansion = f"CASE WHEN n <= {cap} THEN {all_pairs} ELSE {star_pairs} END"
+    return (
+        buckets.where(F.col("n") > 1)
+        .select(F.explode(F.expr(expansion)).alias("p"))
+        .select("p.*")
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str,
@@ -362,125 +466,26 @@ def lsh_candidate_pairs(
     observation=None,
 ) -> DataFrame:
     """Band the signature (r = H/bands rows per band), bucket by band
-    value, and generate pairs WITHIN each bucket — with the expansion
-    CAPPED at ``max_bucket`` members per bucket.
+    value, and pair the docs within each bucket (``routed_bucket_pairs``:
+    buckets past ``max_bucket`` emit star pairs; ``observation`` gets
+    the bucket audit). Use ``lsh_bucket_stats`` for the same audit as a
+    count-only pre-flight before committing to the expansion.
 
     Returns (doc_a, doc_b, n_shared_bands) with doc_a < doc_b. The
     bucket-groupBy formulation computes the (expensive) signature
-    pipeline ONCE — a band-value self-join would re-evaluate the whole
-    shingle→minhash lineage for each join side (2× the dominant cost;
-    measured 2× wall-clock at sf0.1). Collision probability for
-    Jaccard j is 1-(1-j^r)^b — with H=8, b=2, r=4: j=0.98 → 0.996
-    recall, j=0.03 → ~2e-6 false-candidate rate.
-
-    Overflow routing: a bucket with more than ``max_bucket`` members
-    means a near-identical boilerplate cluster (a band collision at
-    that multiplicity is astronomically unlikely for genuinely
-    distinct docs). All-pairs there would be O(n²) inside ONE task —
-    the 100 TB scale killer. Instead those buckets emit star pairs
-    (min-id keeper, member): O(n), same connected component under the
-    downstream clustering, and the keeper choice matches
-    ``exact_dedup_groups``'s min-id convention. The CASE lives inside
-    one projection, so the plan stays a single aggregate + expansion
-    pass (no second lineage evaluation). Use ``lsh_bucket_stats`` to
-    audit overflow counts without collecting ids at all.
-
-    ``observation``: an optional ``pyspark.sql.Observation``. When
-    given, the same bucket-size audit that ``lsh_bucket_stats``
-    computes (n_buckets / n_colliding_buckets / n_overflow_buckets /
-    max_bucket_size) is attached via ``DataFrame.observe`` to the
-    bucket aggregate INSIDE this plan — the stats ride the pass that
-    produces the pairs, instead of re-running the whole
-    shingle→minhash→band lineage a second time as a separate
-    pre-flight job. Read the metrics after acting on the returned
-    DataFrame via ``plans.observe.observed_metrics`` (tolerates the
-    zero-row-input corner where AQE collapses the subtree and the raw
-    ``Observation.get`` raises on Spark's empty metrics row).
-    Standalone ``lsh_bucket_stats`` remains the right tool when you
-    want the audit BEFORE committing to the expansion at all.
-
-    BOUNDED STATE (round 9): no unbounded per-bucket array exists
-    anywhere in this plan. The earlier formulation aggregated
-    ``collect_set(id)`` per (band, hash) FIRST and CASE-routed
-    afterwards — the overflow branch's pair *output* was O(n), but the
-    aggregate still materialized every member id of a flood bucket in
-    ONE array in ONE task (10⁸ boilerplate copies → a multi-GB row).
-    Now a window over the bucket key annotates each banded row with
-    its bucket size and keeper (min id) first, and rows are routed to
-    per-bucket subgroups BEFORE any array forms: small buckets
-    (n ≤ max_bucket) keep one subgroup — their collected array is ≤
-    max_bucket by construction — while every member of an overflow
-    bucket becomes its OWN single-row subgroup, already knowing its
-    keeper, so the star pair falls out of a 1-element array. One
-    exchange total: the window's hash partitioning on (band_id,
-    band_hash) satisfies the subgroup aggregate's clustering (subset
-    key), so the groupBy re-uses it (plan-pinned).
+    pipeline ONCE: a band-value self-join would re-evaluate the whole
+    shingle→minhash lineage for each join side (measured 2× wall-clock
+    at sf0.1). Collision probability for Jaccard j is 1-(1-j^r)^b:
+    with H=8, b=2, r=4, j=0.98 → 0.996 recall, j=0.03 → ~2e-6
+    false-candidate rate.
     """
-    banded = banded_rows_inrow(sigs, id_col, num_hashes, bands)
-    w = Window.partitionBy("band_id", "band_hash")
-    routed = banded.select(
-        "band_id",
-        "band_hash",
-        F.col(id_col).alias("_id"),
-        F.count(F.lit(1)).over(w).alias("_n"),
-        F.min(id_col).over(w).alias("_keeper"),
-    ).withColumn(
-        # small bucket → one NULL subgroup (nulls group together);
-        # overflow bucket → one subgroup PER MEMBER (no array ever
-        # holds more than max_bucket ids). n is bucket-constant, so
-        # the two regimes never mix within a (band_id, band_hash).
-        "_sub",
-        F.when(F.col("_n") <= int(max_bucket), F.lit(None)).otherwise(
-            F.col("_id")
-        ),
+    banded = banded_rows_inrow(sigs, id_col, num_hashes, bands).select(
+        "band_id", "band_hash", F.col(id_col).alias("member")
     )
-    buckets = routed.groupBy("band_id", "band_hash", "_sub").agg(
-        F.first("_n").alias("n"),
-        F.first("_keeper").alias("keeper"),
-        F.sort_array(F.collect_set("_id")).alias("ids"),
+    pairs = routed_bucket_pairs(
+        banded, max_bucket, "struct({a} AS doc_a, {b} AS doc_b)", observation
     )
-    if observation is not None:
-        # Same definitions as lsh_bucket_stats. An overflow bucket now
-        # spans several subgroup rows — count it once via its keeper's
-        # row (ids = [keeper] there); small buckets are one row each.
-        # Must observe BEFORE the n > 1 filter so n_buckets counts
-        # singleton buckets too.
-        is_bucket_row = (F.col("n") <= int(max_bucket)) | (
-            F.element_at("ids", 1) == F.col("keeper")
-        )
-        is_overflow = F.col("n") > int(max_bucket)
-        buckets = buckets.observe(
-            observation,
-            F.sum(is_bucket_row.cast("long")).alias("n_buckets"),
-            F.sum((is_bucket_row & (F.col("n") > 1)).cast("long")).alias(
-                "n_colliding_buckets"
-            ),
-            F.sum((is_bucket_row & is_overflow).cast("long")).alias(
-                "n_overflow_buckets"
-            ),
-            F.max("n").alias("max_bucket_size"),
-        )
-    buckets = buckets.where(F.col("n") > 1)
-    all_pairs = (
-        "flatten(transform(ids, (x, i) ->"
-        " transform(slice(ids, i + 2, size(ids) - i - 1),"
-        " y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    # overflow subgroups hold exactly one member: its star pair
-    # against the bucket keeper (the keeper's own subgroup filters out)
-    star_pairs = (
-        "filter(transform(ids, y -> struct(keeper AS doc_a, y AS doc_b)),"
-        " p -> p.doc_b != p.doc_a)"
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                f"CASE WHEN n <= {int(max_bucket)} THEN {all_pairs}"
-                f" ELSE {star_pairs} END"
-            )
-        ).alias("p")
-    )
-    return pairs.groupBy("p.doc_a", "p.doc_b").agg(
+    return pairs.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("n_shared_bands")
     )
 
@@ -603,44 +608,28 @@ def simhash_near_pairs(
 
     Chunk blocking with a pigeonhole guarantee: the 60-bit signature
     splits into ``max_hamming + 1`` chunks, and any pair within the
-    Hamming budget must agree on at least one whole chunk — so
-    bucketing on (chunk_id, chunk_value) loses NOTHING while cutting
-    the candidate space from O(n²) to colliding buckets only. Pair
-    generation happens inside each bucket (routed-subgroup expansion,
-    one pipeline pass — see lsh_candidate_pairs); the exact Hamming
-    filter then runs on candidates alone.
+    Hamming budget must agree on at least one whole chunk, so
+    bucketing on (chunk_id, chunk_val) loses NOTHING while cutting the
+    candidate space from O(n²) to colliding buckets only. Pairs come
+    from ``routed_bucket_pairs`` (the Hamming distance is computed
+    inside the expansion); the exact Hamming filter then runs on
+    candidates alone.
 
-    Buckets larger than ``max_bucket`` (boilerplate clusters) route to
-    star pairs against the bucket's min-id member instead of all-pairs
-    — same O(n)-not-O(n²) overflow guard as ``lsh_candidate_pairs``,
-    and the same BOUNDED-STATE formulation: a window annotates each
-    (doc, chunk) row with its bucket size and keeper first, overflow
-    members become single-row subgroups, and no per-bucket array ever
-    exceeds ``max_bucket`` entries. Members still pass the exact
-    Hamming check against that keeper.
+    CAUTION: star routing TRADES AWAY the pigeonhole exactness inside
+    overflow buckets (more than ``max_bucket`` members). Members pair
+    only with the keeper, so two non-keeper members within the Hamming
+    budget are NOT emitted as a pair (a 549-deep chunk bucket once
+    star-routed 24 true pairs past a 256 cap at sf0.1). Pass
+    ``observation``: ``n_overflow_buckets > 0`` means the guarantee was
+    forfeited and ``max_bucket`` needs raising (or the corpus needs an
+    exact-dup collapse first).
 
-    CAUTION — star routing TRADES AWAY the pigeonhole exactness inside
-    overflow buckets: members pair only with the keeper, so two
-    non-keeper members within the Hamming budget are NOT emitted as a
-    pair (they remain transitively connected through the keeper only
-    if both pass the keeper check). The r8 sf0.1 replay caught exactly
-    this silently (a 549-deep chunk bucket star-routed 24 true pairs
-    past a 256 cap). Pass ``observation`` to detect the trade at
-    runtime: the chunk-bucket audit (n_buckets / n_colliding_buckets /
-    n_overflow_buckets / max_bucket_size) rides the pair-producing
-    pass via ``DataFrame.observe`` — ``n_overflow_buckets > 0`` means
-    the exactness guarantee was forfeited and ``max_bucket`` needs
-    raising (or the corpus needs an exact-dup collapse first). Read
-    via ``plans.observe.observed_metrics`` after acting on the result.
-
-    ``max_bucket=None`` (default) AUTO-SIZES from the corpus count —
-    min(count, 8192) — so a default caller keeps pigeonhole exactness
-    for any bucket depth up to the whole corpus or the task-memory
-    ceiling, whichever is smaller (the r8 incident: a 549-deep bucket
-    silently star-routed 24 true pairs past the old literal-256
-    default; the kNN-graph count-based dial is the precedent). Costs
-    one count pass over the signature frame; callers that know their
-    corpus pass an explicit cap and skip it.
+    ``max_bucket=None`` (default) AUTO-SIZES from the corpus count,
+    max(min(count, 8192), 256), so a default caller keeps pigeonhole
+    exactness for any bucket depth up to the whole corpus or the
+    task-memory ceiling, whichever is smaller. Costs one count pass
+    over the signature frame; callers that know their corpus pass an
+    explicit cap and skip it.
     """
     if max_bucket is None:
         max_bucket = max(min(sigs.count(), _SIMHASH_MAX_BUCKET_CEILING), 256)
@@ -659,69 +648,17 @@ def simhash_near_pairs(
             for c in range(n_chunks)
         ]
     )
-    exploded = sigs.select(
-        F.col(id_col), F.col("simhash"), F.explode(chunks).alias("ch")
-    ).select(id_col, "simhash", "ch.chunk_id", "ch.chunk_val")
-    w = Window.partitionBy("chunk_id", "chunk_val")
-    member = F.struct(F.col(id_col).alias("id"), F.col("simhash"))
-    routed = exploded.select(
-        "chunk_id",
-        "chunk_val",
-        member.alias("_m"),
-        F.count(F.lit(1)).over(w).alias("_n"),
-        # struct min orders by leading field = id → the min-id member
-        F.min(member).over(w).alias("_keeper"),
-    ).withColumn(
-        "_sub",
-        F.when(F.col("_n") <= int(max_bucket), F.lit(None)).otherwise(
-            F.col("_m.id")
-        ),
+    rows = sigs.select(
+        F.struct(F.col(id_col).alias("id"), F.col("simhash")).alias("member"),
+        F.explode(chunks).alias("ch"),
+    ).select("ch.chunk_id", "ch.chunk_val", "member")
+    pair = (
+        "struct({a}.id AS doc_a, {b}.id AS doc_b,"
+        " cast(bit_count({a}.simhash ^ {b}.simhash) AS INT) AS hamming)"
     )
-    buckets = routed.groupBy("chunk_id", "chunk_val", "_sub").agg(
-        F.first("_n").alias("n"),
-        F.first("_keeper").alias("keeper"),
-        F.sort_array(F.collect_set("_m")).alias("members"),
-    )
-    if observation is not None:
-        is_bucket_row = (F.col("n") <= int(max_bucket)) | (
-            F.element_at("members", 1)["id"] == F.col("keeper.id")
-        )
-        is_overflow = F.col("n") > int(max_bucket)
-        buckets = buckets.observe(
-            observation,
-            F.sum(is_bucket_row.cast("long")).alias("n_buckets"),
-            F.sum((is_bucket_row & (F.col("n") > 1)).cast("long")).alias(
-                "n_colliding_buckets"
-            ),
-            F.sum((is_bucket_row & is_overflow).cast("long")).alias(
-                "n_overflow_buckets"
-            ),
-            F.max("n").alias("max_bucket_size"),
-        )
-    buckets = buckets.where(F.col("n") > 1)
-    # hamming computed INSIDE the expansion: the multi-chunk distinct
-    # then dedups (doc_a, doc_b, hamming) — 3 narrow columns instead
-    # of carrying both 64-bit signatures through the exchange
-    all_pairs = (
-        "flatten(transform(members, (x, i) ->"
-        " transform(slice(members, i + 2, size(members) - i - 1),"
-        " y -> struct(x.id AS doc_a, y.id AS doc_b,"
-        " cast(bit_count(x.simhash ^ y.simhash) AS INT) AS hamming))))"
-    )
-    star_pairs = (
-        "filter(transform(members,"
-        " y -> struct(keeper.id AS doc_a, y.id AS doc_b,"
-        " cast(bit_count(keeper.simhash ^ y.simhash) AS INT) AS hamming)),"
-        " p -> p.doc_b != p.doc_a)"
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                f"CASE WHEN n <= {int(max_bucket)} THEN {all_pairs}"
-                f" ELSE {star_pairs} END"
-            )
-        ).alias("p")
-    ).select("p.*").distinct()  # a pair may collide in several chunks
+    # hamming rides the pair, so the distinct dedups 3 narrow columns
+    # (a pair may collide in several chunks)
+    pairs = routed_bucket_pairs(rows, max_bucket, pair, observation).distinct()
     return pairs.where(F.col("hamming") <= max_hamming)
 
 

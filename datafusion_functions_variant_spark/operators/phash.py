@@ -13,8 +13,9 @@ banding is LOSSLESS for Hamming <= N_BANDS - 1 = 3; from 4 up it is
 LSH-style best-effort recall (6 bits can spread 2+2+1+1 over the 4
 bands), raise N_BANDS for a lossless higher threshold. The exact
 bit_count(xor) verify then removes chance collisions. Never
-all-pairs: the candidate join is equi on (band_idx, band_value), the
-image-dedup twin of the text MinHash banding in operators/dedup.py.
+all-pairs: pairs form only within a (band_idx, band_value) bucket,
+through the same routed expansion as the text MinHash banding
+(operators/dedup.py::routed_bucket_pairs).
 
 No reference counterpart (the reference is a variant codec,
 open-variant/src/values/mod.rs); this is the perceptual-dedup stage a
@@ -23,8 +24,10 @@ multimodal training-data pipeline runs over decoded images.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import routed_bucket_pairs
 
 #: fixed dHash geometry: input images are 2*GRID_W x 2*GRID_H gray
 GRID_W, GRID_H = 9, 8
@@ -111,115 +114,37 @@ def neardup_pairs(
     """Banded blocking + exact verify over dHash signatures. Returns
     (id_a, id_b, hamming) with id_a < id_b, hamming <= max_hamming.
 
-    Flood-proof bucket formulation (round 9 — was an unguarded
-    ``exploded ⋈ exploded`` band self-join, which a million identical
-    logos would blow to 10¹² candidate rows inside one band bucket):
-    the image twin of ``operators/dedup.py::lsh_candidate_pairs``.
-    A window over (band_idx, band_value) annotates every banded row
-    with its bucket size and keeper (the min-id member); buckets at or
-    under ``max_bucket`` keep one subgroup whose collected member
-    array is bounded by construction, while every member of an
-    overflow bucket becomes its OWN single-row subgroup and emits one
-    star pair against the keeper — O(n) candidates per flood bucket,
-    no per-bucket array ever exceeds ``max_bucket`` structs, and the
-    exact Hamming verify still runs on every emitted pair. Star pairs
-    keep the same connected component under downstream clustering
-    (keeper = min id, the ``exact_dedup_groups`` convention).
+    Each image lands in one (band_idx, band_value) bucket per band;
+    ``dedup.routed_bucket_pairs`` pairs the images within each bucket
+    (star pairs past ``max_bucket``, so an identical-logo flood stays
+    O(n)). The signature rides the band explode, so the Hamming distance
+    is computed inside the expansion and candidates never join back to
+    ``sigs``; ``distinct()`` collapses multi-band collisions of the same
+    pair (the bands are functionally dependent on the id, so a distinct
+    over (id_a, id_b, hamming) is a pair distinct).
 
     Like SimHash star routing, overflow trades away within-bucket
-    completeness (non-keeper members aren't paired with each other);
-    pass ``observation`` to get the bucket audit (n_buckets /
-    n_colliding_buckets / n_overflow_buckets / max_bucket_size) riding
-    the pair-producing pass — ``n_overflow_buckets > 0`` is the signal
-    to widen bands or run an exact content-md5 canonicalize first
-    (``pipeline_media_to_shards`` does). Signatures ride along through
-    the explode, so candidates never join back to sigs; ``distinct()``
-    collapses multi-band collisions of the same pair."""
-    member = F.struct(
-        F.col(id_col).alias("id"),
-        *[F.col(f"band{k}").alias(f"band{k}") for k in range(N_BANDS)],
-    )
-    exploded = sigs.select(
-        member.alias("_m"),
+    completeness (non-keeper members are not paired with each other):
+    ``n_overflow_buckets > 0`` on the ``observation`` audit is the
+    signal to widen bands or run an exact content-md5 canonicalize
+    first (``pipeline_media_to_shards`` does)."""
+    rows = sigs.select(
+        F.struct(
+            F.col(id_col).alias("id"),
+            *[F.col(f"band{k}") for k in range(N_BANDS)],
+        ).alias("member"),
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(k).alias("bi"), F.col(f"band{k}").alias("bv")
-                    )
+                    F.struct(F.lit(k).alias("bi"), F.col(f"band{k}").alias("bv"))
                     for k in range(N_BANDS)
                 ]
             )
         ).alias("e"),
-    ).select("_m", F.col("e.bi").alias("bi"), F.col("e.bv").alias("bv"))
-    w = Window.partitionBy("bi", "bv")
-    routed = exploded.select(
-        "bi",
-        "bv",
-        "_m",
-        F.count(F.lit(1)).over(w).alias("_n"),
-        F.min("_m").over(w).alias("_keeper"),
-    ).withColumn(
-        "_sub",
-        F.when(F.col("_n") <= int(max_bucket), F.lit(None)).otherwise(
-            F.col("_m.id")
-        ),
+    ).select("e.bi", "e.bv", "member")
+    ham = " + ".join(
+        f"bit_count({{a}}.band{k} ^ {{b}}.band{k})" for k in range(N_BANDS)
     )
-    buckets = routed.groupBy("bi", "bv", "_sub").agg(
-        F.first("_n").alias("n"),
-        F.first("_keeper").alias("keeper"),
-        F.sort_array(F.collect_set("_m")).alias("members"),
-    )
-    if observation is not None:
-        is_bucket_row = (F.col("n") <= int(max_bucket)) | (
-            F.element_at("members", 1)["id"] == F.col("keeper.id")
-        )
-        is_overflow = F.col("n") > int(max_bucket)
-        buckets = buckets.observe(
-            observation,
-            F.sum(is_bucket_row.cast("long")).alias("n_buckets"),
-            F.sum((is_bucket_row & (F.col("n") > 1)).cast("long")).alias(
-                "n_colliding_buckets"
-            ),
-            F.sum((is_bucket_row & is_overflow).cast("long")).alias(
-                "n_overflow_buckets"
-            ),
-            F.max("n").alias("max_bucket_size"),
-        )
-    buckets = buckets.where(F.col("n") > 1)
-    # hamming computed INSIDE the expansion, so the multi-band
-    # distinct below dedups 3 narrow columns instead of carrying both
-    # signatures through (bands are functionally dependent on the ids,
-    # so distinct over (id_a, id_b, hamming) equals a pair distinct) —
-    # measured ~2x on the adversarial 250-group depth probe
-    def pair_struct(x: str) -> str:
-        ham = " + ".join(
-            f"bit_count({x}.band{k} ^ y.band{k})" for k in range(N_BANDS)
-        )
-        return (
-            f"struct({x}.id AS id_a, y.id AS id_b,"
-            f" cast({ham} AS INT) AS hamming)"
-        )
-
-    all_pairs = (
-        "flatten(transform(members, (x, i) ->"
-        " transform(slice(members, i + 2, size(members) - i - 1),"
-        f" y -> {pair_struct('x')})))"
-    )
-    star_pairs = (
-        f"filter(transform(members, y -> {pair_struct('keeper')}),"
-        " p -> p.id_b != p.id_a)"
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    f"CASE WHEN n <= {int(max_bucket)} THEN {all_pairs}"
-                    f" ELSE {star_pairs} END"
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        .distinct()
-    )
+    pair = f"struct({{a}}.id AS id_a, {{b}}.id AS id_b, cast({ham} AS INT) AS hamming)"
+    pairs = routed_bucket_pairs(rows, max_bucket, pair, observation).distinct()
     return pairs.where(F.col("hamming") <= max_hamming)

@@ -99,8 +99,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8 perms)-LSH(2 bands x 4 rows) candidate pairs over
-    char-8-gram sets of documents. Bucket join, not all-pairs: the
-    shuffle key is the band hash. The bucket audit (incl.
+    char-8-gram sets of documents. Pairs form only within a (band,
+    band hash) bucket (``dedup.routed_bucket_pairs``): never all-pairs,
+    no join. The bucket audit (incl.
     n_overflow_buckets — silent star-routing is a correctness hazard,
     see the r8 simhash incident) rides the pass by default; read it
     from ``plans.observe.REGISTERED_OBSERVATIONS`` after acting."""
@@ -1804,8 +1805,9 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pixels NEVER shuffle — encode, decode and hashing chain in
     ONE mapInPandas stage pipeline (plan-pinned: payload chain has no
-    Exchange); only 4 ints/image leave the stage. The candidate join
-    is equi on (band_idx, band_value) — never all-pairs; bucket depth
+    Exchange); only 4 ints/image leave the stage. Candidates pair only
+    within a (band_idx, band_value) bucket — never all-pairs, no join
+    (``dedup.routed_bucket_pairs``); bucket depth
     is the usual LSH dial (16-bit bands here; at 100 TB widen bands /
     add a second blocking key exactly as operators/dedup.py does for
     text MinHash). Oracle replays grid, hash, banding and verify

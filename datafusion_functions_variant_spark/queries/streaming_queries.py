@@ -342,8 +342,11 @@ def _run_capstone(spark, sf_dir, tag, feed, index_kwargs, mode):
         run((0, 1), idx, keep_checkpoint=True)
         for g in range(idx.n_generations):
             spark.sql(f"DROP TABLE IF EXISTS {idx._gtable(g)}")
+        # the layout (bucket count, budgets) comes from the index's own
+        # record, so only the per-session settings are passed back
         idx = _history.GenerationalHistoryIndex.attach(
-            spark, idx_table, "h", **kwargs
+            spark, idx_table, "h",
+            **{k: v for k, v in kwargs.items() if k not in _history.LAYOUT_FIELDS},
         )
         run((2,), idx)
     else:

@@ -55,6 +55,30 @@ DEFAULT_BROADCAST_THRESHOLD_ROWS = 4_000_000
 DEFAULT_BLOOM_MAX_BITS = 1 << 26
 
 
+#: The on-disk layout of a ``GenerationalHistoryIndex``: written once
+#: by ``__init__`` to ``_LAYOUT_RECORD`` in the index directory and read
+#: back by ``attach``, so a recovered index can never probe with a
+#: bucket count (or budgets) other than the ones its files were
+#: written with.
+LAYOUT_FIELDS = ("bucket_count", "n_generations", "budget_rows", "growth")
+_LAYOUT_RECORD = "_layout.json"
+
+
+def _write_json_durably(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON atomically: write a
+    sibling, fsync it, ``os.replace`` it in. A power loss leaves the
+    old file or the new one, never a truncated mix that reads as
+    valid."""
+    import json
+
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
 def _check_key_dtype(df: DataFrame, key: str) -> None:
     """The mutable index stores the key as STRING (the md5-hex /
     content-hash convention every registered pipeline uses, and the
@@ -220,6 +244,9 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
     literal True, as in ``build_history_index``. The tables are the
     durable truth and the bitset is in-memory pruning state: a
     restarted pipeline rebuilds it once (``attach``) before probing.
+    The layout (``LAYOUT_FIELDS``) is part of that durable truth: the
+    constructor records it once in the index directory and ``attach``
+    reads it back instead of trusting its caller.
 
     Invariants (promotion-safe, replay-safe):
     * a key lives in EXACTLY ONE generation (appends anti-join all
@@ -260,17 +287,14 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         overwrite: bool = False,
         auto_rebuild_fill: float | None = None,
     ) -> None:
-        self.spark = spark
-        self.table_name = table_name
-        self.key = key
-        self.bucket_count = bucket_count
-        self.bits_col = bits_col
-        self.path = path
-        self.budget_rows = budget_rows
-        self.growth = growth
-        self.n_generations = n_generations
-        self.bloom_max_bits = bloom_max_bits
-        self._init_auto_rebuild(auto_rebuild_fill)
+        layout = dict(
+            bucket_count=bucket_count, n_generations=n_generations,
+            budget_rows=budget_rows, growth=growth,
+        )
+        self._setup(
+            spark, table_name, key, path, layout, expected_keys,
+            bloom_max_bits, bits_col, auto_rebuild_fill,
+        )
         import shutil
 
         if os.path.isdir(path) and os.listdir(path) and not overwrite:
@@ -280,6 +304,7 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
             )
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path, exist_ok=True)
+        _write_json_durably(os.path.join(path, _LAYOUT_RECORD), layout)
         for g in range(n_generations):
             spark.sql(f"DROP TABLE IF EXISTS {self._gtable(g)}")
             self._create_empty(g)
@@ -293,21 +318,34 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         #: only ever shift WHEN a promotion fires, never correctness.
         self._gen_rows = [0] * n_generations
         self._write_manifest(None)
-        m_bits = min(bloom_m_bits(expected_keys), bloom_max_bits)
-        if m_bits >= 2 * expected_keys:
-            self.m_bits = m_bits
+        if self.m_bits is not None:
             self.bitset = self._zero_bitset()
-        else:
-            self.m_bits = None
-            self.bitset = None
 
-    # --- bloom auto-rebuild policy (round 14) ---------------------------
-
-    def _init_auto_rebuild(self, auto_rebuild_fill: float | None) -> None:
+    def _setup(
+        self, spark: SparkSession, table_name: str, key: str, path: str,
+        layout: dict, expected_keys: int, bloom_max_bits: int,
+        bits_col: str, auto_rebuild_fill: float | None,
+    ) -> None:
+        """The attributes ``__init__`` and ``attach`` share: names, the
+        on-disk layout (``bucket_count``, ``n_generations``,
+        ``budget_rows``, ``growth``), the bitset size (``m_bits`` None
+        below ~2 bits per expected key: no prescreen) and the
+        auto-rebuild policy state. The bitset itself starts absent."""
         if auto_rebuild_fill is not None and not (0.0 < auto_rebuild_fill < 1.0):
             raise ValueError(
                 f"auto_rebuild_fill must be in (0, 1), got {auto_rebuild_fill}"
             )
+        self.spark = spark
+        self.table_name = table_name
+        self.key = key
+        self.path = path
+        self.bits_col = bits_col
+        self.bloom_max_bits = bloom_max_bits
+        for field in LAYOUT_FIELDS:
+            setattr(self, field, layout[field])
+        m_bits = min(bloom_m_bits(expected_keys), bloom_max_bits)
+        self.m_bits = m_bits if m_bits >= 2 * expected_keys else None
+        self.bitset = None
         #: opt-in: when the bitset's fill exceeds this fraction,
         #: append() rebuilds it at the next power-of-two m_bits (r13
         #: verdict "next" #4 — the bloom_saturation() dial, wired to
@@ -317,14 +355,16 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         #: measured fill}); also what tests pin.
         self.bloom_rebuilds: list[dict] = []
         #: don't re-MEASURE fill until the index has grown past this
-        #: many rows — the analytic gate below re-arms it, keeping the
-        #: steady-state policy pure driver arithmetic (zero jobs).
+        #: many rows — ``_maybe_auto_rebuild``'s analytic gate re-arms
+        #: it, keeping the steady-state policy pure driver arithmetic.
         self._next_fill_check = 0
         #: warn-once latch for an ingest that saturates the bitset at
         #: the ``bloom_max_bits`` cap (ADVICE r14: doubling must stop
         #: there — the cap bounds driver/broadcast state AND every
         #: probe's crossJoin payload).
         self._bloom_cap_warned = False
+
+    # --- bloom auto-rebuild policy (round 14) ---------------------------
 
     def _maybe_auto_rebuild(self) -> None:
         """Fires at most one bitset-epoch resize per append. Gate
@@ -505,14 +545,10 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         ``_read_manifest`` reports "unknown" and attach() runs the
         (unconditionally correct) overlap repair on every adjacent
         generation pair instead of skipping it."""
-        import json as _json
-
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({"promoting": promoting, "rows": list(self._gen_rows)}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, self._manifest_path())
+        _write_json_durably(
+            self._manifest_path(),
+            {"promoting": promoting, "rows": list(self._gen_rows)},
+        )
 
     def _read_manifest(self):
         """The manifest's ``promoting`` field: an int (a promotion
@@ -840,35 +876,39 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
         *,
         path: str,
         expected_keys: int,
-        budget_rows: int = 100_000,
-        growth: int = 8,
-        n_generations: int = 3,
-        bucket_count: int = 8,
         bloom_max_bits: int = DEFAULT_BLOOM_MAX_BITS,
         bits_col: str = "bits",
         auto_rebuild_fill: float | None = None,
     ) -> "GenerationalHistoryIndex":
-        """Restart-and-keep recovery across ALL generations: finish
-        any crashed per-generation swap (``__old`` restore, stale
-        sibling cleanup), re-register the external tables, repair a
-        crashed PROMOTION per the manifest (anti-join-rewrite the
-        source generation against its destination — removes exactly
-        the overlap a committed-but-unemptied promote left, removes
-        nothing otherwise), then rebuild the bitset once."""
+        """Restart-and-keep recovery across ALL generations: read the
+        layout record ``__init__`` wrote (bucket count, generation
+        count, budgets; ``ValueError`` when it is missing or
+        unreadable), finish any crashed per-generation swap (``__old``
+        restore, stale sibling cleanup), re-register the external
+        tables, repair a crashed PROMOTION per the manifest
+        (anti-join-rewrite the source generation against its
+        destination — removes exactly the overlap a
+        committed-but-unemptied promote left, removes nothing
+        otherwise), then rebuild the bitset once."""
+        import json
         import shutil
 
+        record = os.path.join(path, _LAYOUT_RECORD)
+        try:
+            with open(record) as fh:
+                layout = json.load(fh)
+            layout = {f: int(layout[f]) for f in LAYOUT_FIELDS}
+        except (OSError, ValueError, TypeError, KeyError) as e:
+            raise ValueError(
+                f"GenerationalHistoryIndex.attach: no readable layout "
+                f"record at {record} ({e!r})"
+            ) from e
         idx = cls.__new__(cls)
-        idx.spark = spark
-        idx.table_name = table_name
-        idx.key = key
-        idx.bucket_count = bucket_count
-        idx.bits_col = bits_col
-        idx.path = path
-        idx.budget_rows = budget_rows
-        idx.growth = growth
-        idx.n_generations = n_generations
-        idx.bloom_max_bits = bloom_max_bits
-        idx._init_auto_rebuild(auto_rebuild_fill)
+        idx._setup(
+            spark, table_name, key, path, layout, expected_keys,
+            bloom_max_bits, bits_col, auto_rebuild_fill,
+        )
+        n_generations = idx.n_generations
         for g in range(n_generations):
             gp = idx._gpath(g)
             old = gp + "__old"
@@ -900,11 +940,5 @@ class GenerationalHistoryIndex(_BloomProbeMixin):
             idx.spark.table(idx._gtable(g)).count() for g in range(n_generations)
         ]
         idx._write_manifest(None)
-        m_bits = min(bloom_m_bits(expected_keys), bloom_max_bits)
-        if m_bits >= 2 * expected_keys:
-            idx.m_bits = m_bits
-            idx.rebuild_bitset()
-        else:
-            idx.m_bits = None
-            idx.bitset = None
+        idx.rebuild_bitset()  # no-op without a prescreen (m_bits None)
         return idx

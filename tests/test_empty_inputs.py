@@ -34,6 +34,34 @@ def test_simhash_empty(spark):
     assert dedup.simhash_signatures(_empty_docs(spark), "text", "doc_id").count() == 0
 
 
+def test_simhash_near_pairs_empty_and_singleton(spark):
+    """Zero docs -> zero pairs at the auto-sized default cap (a count of
+    0) and at an explicit one, with an observation that reads back
+    without raising; one doc -> one signature whose chunk buckets are
+    all singletons, so zero pairs (never a self-pair)."""
+    from pyspark.sql import Observation
+
+    from datafusion_functions_variant_spark.plans.observe import observed_metrics
+
+    sigs0 = dedup.simhash_signatures(_empty_docs(spark), "text", "doc_id")
+    assert dedup.simhash_near_pairs(sigs0, "doc_id").count() == 0
+    obs = Observation()
+    pairs = dedup.simhash_near_pairs(
+        sigs0, "doc_id", max_hamming=4, max_bucket=64, observation=obs
+    )
+    assert pairs.count() == 0
+    got = observed_metrics(obs, n_buckets=0, n_colliding_buckets=0,
+                           n_overflow_buckets=0, max_bucket_size=None)
+    assert got["n_buckets"] == 0
+
+    one = spark.createDataFrame(
+        [(7, "one lonely document")], "doc_id long, text string"
+    )
+    sigs1 = dedup.simhash_signatures(one, "text", "doc_id")
+    assert sigs1.count() == 1
+    assert dedup.simhash_near_pairs(sigs1, "doc_id").count() == 0
+
+
 def test_similarity_empty_corpus(spark):
     emb = _empty_emb(spark)
     queries = load_table(spark, SF_DIR, "embeddings").where(F.col("vec_id") < 2)

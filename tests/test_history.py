@@ -202,7 +202,6 @@ def test_self_updating_index_attach_recovers_across_sessions(spark):
 
     re = GenerationalHistoryIndex.attach(
         spark, "gidx_t_attach", "k", path=path, expected_keys=400,
-        budget_rows=100, growth=4,
     )
     assert re.relation().count() == 250
     seen = _keys(spark, 150, salt="a1").unionByName(_keys(spark, 100, salt="a2"))
@@ -232,6 +231,52 @@ def test_self_updating_index_attach_recovers_across_sessions(spark):
         .count()
         == 0
     )
+
+
+def test_attach_takes_the_layout_from_the_index_record(spark):
+    """attach() must probe with the bucket count the files were
+    written with, not one its caller supplies: 200 keys written into
+    16 buckets and attached from a fresh metastore are all still
+    members (with 8 assumed buckets, about half of them came back as
+    novel). A missing or unreadable layout record refuses to attach."""
+    import os as _os
+
+    import pytest as _pytest
+
+    from datafusion_functions_variant_spark.streaming.history import (
+        GenerationalHistoryIndex,
+    )
+
+    path = _idx_dir(spark, "gidx_t_layout")
+    idx = _gidx(spark, "gidx_t_layout", bucket_count=16)
+    keys = _keys(spark, 200, salt="lay").withColumn(
+        "doc_id", F.monotonically_increasing_id()
+    )
+    idx.append(keys.select("k"), batch_id=0)
+    for g in range(idx.n_generations):
+        spark.sql(f"DROP TABLE IF EXISTS {idx._gtable(g)}")
+
+    re = GenerationalHistoryIndex.attach(
+        spark, "gidx_t_layout", "k", path=path, expected_keys=2000
+    )
+    assert (re.bucket_count, re.n_generations, re.budget_rows, re.growth) == (
+        16, 3, 100, 4,
+    )
+    assert re.dup_flags(keys, "doc_id").where("is_dup = 0").count() == 0
+    assert re.novel_keys(keys).count() == 0
+
+    record = _os.path.join(path, "_layout.json")
+    with open(record, "w") as fh:
+        fh.write('{"bucket_count": 16')  # truncated
+    with _pytest.raises(ValueError, match="layout record"):
+        GenerationalHistoryIndex.attach(
+            spark, "gidx_t_layout", "k", path=path, expected_keys=2000
+        )
+    _os.remove(record)
+    with _pytest.raises(ValueError, match="layout record"):
+        GenerationalHistoryIndex.attach(
+            spark, "gidx_t_layout", "k", path=path, expected_keys=2000
+        )
 
 
 def test_tiered_ingest_is_exactly_once_under_batch_replay(spark):
@@ -464,7 +509,7 @@ def test_generational_index_crash_mid_promote_repaired_by_attach(spark):
 
     re = GenerationalHistoryIndex.attach(
         spark, "gidx_crash", "k", path=_idx_dir(spark, "gidx_crash"),
-        expected_keys=2000, budget_rows=100, growth=4,
+        expected_keys=2000,
     )
     assert re._read_manifest() is None
     rels = re.relations()
@@ -617,7 +662,7 @@ def test_generational_unparseable_manifest_triggers_full_repair(spark):
 
     re_idx = H.GenerationalHistoryIndex.attach(
         spark, "gidx_unk", "k", path=_idx_dir(spark, "gidx_unk"),
-        expected_keys=2000, budget_rows=100, growth=4,
+        expected_keys=2000,
     )
     assert re_idx._read_manifest() is None
     rels = re_idx.relations()
@@ -779,7 +824,7 @@ def test_non_dict_manifest_reads_unknown(spark):
         assert idx._read_manifest() == "unknown"
     re_idx = H.GenerationalHistoryIndex.attach(
         spark, "gidx_nondict", "k", path=_idx_dir(spark, "gidx_nondict"),
-        expected_keys=2000, budget_rows=100,
+        expected_keys=2000,
     )
     assert re_idx._read_manifest() is None
     assert sum(r.count() for r in re_idx.relations()) == 60
@@ -892,7 +937,7 @@ def test_generational_attach_restores_bloom_max_bits(spark):
     re_idx = H.GenerationalHistoryIndex.attach(
         spark, "gidx_capattach", "k",
         path=_idx_dir(spark, "gidx_capattach"),
-        expected_keys=200, budget_rows=100_000, bloom_max_bits=8192,
+        expected_keys=200, bloom_max_bits=8192,
         auto_rebuild_fill=0.5,
     )
     assert re_idx.bloom_max_bits == 8192
@@ -916,7 +961,7 @@ def test_generational_attach_carries_auto_rebuild_policy(spark):
     idx.append(_keys(spark, 400, salt="ra0"), batch_id=0)
     re_idx = H.GenerationalHistoryIndex.attach(
         spark, "gidx_rbattach", "k", path=_idx_dir(spark, "gidx_rbattach"),
-        expected_keys=200, budget_rows=100_000, auto_rebuild_fill=0.5,
+        expected_keys=200, auto_rebuild_fill=0.5,
     )
     assert re_idx.auto_rebuild_fill == 0.5 and re_idx.bloom_rebuilds == []
     for b in range(1, 5):
@@ -1118,7 +1163,6 @@ def test_generational_degenerate_arms(spark):
     _sh.rmtree(_os.path.join(p, "g1"), ignore_errors=True)
     re_idx = GenerationalHistoryIndex.attach(
         spark, "gidx_nobloom", "k", path=p, expected_keys=10**12,
-        budget_rows=100, growth=4,
     )
     assert re_idx.bitset is None  # no-bloom attach arm
     rels = re_idx.relations()

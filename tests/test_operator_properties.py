@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -203,69 +205,131 @@ def test_lsh_overflow_bucket_emits_star_pairs_not_all_pairs(spark):
     assert stats.max_bucket_size == n
 
 
-def test_lsh_observation_matches_standalone_bucket_stats(spark):
+def _near_dup_case(spark, op):
+    """One small corpus with real near-dup clusters per near-dup
+    operator: ``(pairs, reference)`` where ``pairs(max_bucket,
+    observation=None)`` runs the operator and ``reference(max_bucket)``
+    is the one-row bucket audit computed apart from it — the standalone
+    ``lsh_bucket_stats`` for MinHash, a count-only groupBy over the
+    same chunk/band rows for SimHash and dHash."""
+    from datafusion_functions_variant_spark.operators import dedup, phash
+
+    def audit(sizes, cap):
+        return sizes.agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.sum((F.col("n") > 1).cast("long")).alias("n_colliding_buckets"),
+            F.sum((F.col("n") > cap).cast("long")).alias("n_overflow_buckets"),
+            F.max("n").alias("max_bucket_size"),
+        )
+
+    def bucket_sizes(sigs, buckets):
+        return (
+            sigs.select(F.explode(F.array(*buckets)).alias("b"))
+            .groupBy("b")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    if op == "minhash":
+        # 10 clusters of 4 near-identical docs
+        base = "abcdefghijklmnopqrstuvwxyz0123456789"
+        rows = [(i, base + str(i // 4) * 3) for i in range(40)]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
+        return (
+            lambda cap, observation=None: dedup.lsh_candidate_pairs(
+                sigs, "doc_id", num_hashes=8, bands=2, max_bucket=cap,
+                observation=observation,
+            ),
+            lambda cap: dedup.lsh_bucket_stats(
+                sigs, "doc_id", num_hashes=8, bands=2, max_bucket=cap
+            ),
+        )
+    if op == "simhash":
+        # clusters of 3 share most words, with small perturbations
+        vocab = [f"w{i}" for i in range(30)]
+        rows = []
+        for i in range(60):
+            words = [vocab[(i // 3 * 7 + j) % 30] for j in range(12)]
+            if i % 3:
+                words[i % 12] = vocab[(i * 13) % 30]
+            rows.append((i, " ".join(words)))
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        sigs = dedup.simhash_signatures(docs, "text", "doc_id")
+        bounds = [0, 12, 24, 36, 48, 60]  # max_hamming 4 → 5 chunks
+        chunks = [
+            F.struct(
+                F.lit(c).alias("c"),
+                F.shiftright("simhash", lo).bitwiseAND((1 << (hi - lo)) - 1).alias("v"),
+            )
+            for c, (lo, hi) in enumerate(zip(bounds, bounds[1:]))
+        ]
+        return (
+            lambda cap, observation=None: dedup.simhash_near_pairs(
+                sigs, "doc_id", max_hamming=4, max_bucket=cap,
+                observation=observation,
+            ),
+            lambda cap: audit(bucket_sizes(sigs, chunks), cap),
+        )
+    import pandas as pd
+
+    from datafusion_functions_variant_spark.operators import png as pngmod
+
+    # 8 groups of 5 brightness-shifted copies (identical dHash)
+    payloads = []
+    for g in range(8):
+        pix = bytes(((3 + g) * x + (5 + 2 * g) * y) % 90 for y in range(16) for x in range(18))
+        for v in range(5):
+            shifted = bytes(p + 2 * v for p in pix)
+            payloads.append((5 * g + v, pngmod.encode_png(18, 16, shifted, 1, v % 5)))
+    assets = spark.createDataFrame(
+        pd.DataFrame(payloads, columns=["asset_id", "payload"])
+    )
+    sigs = phash.dhash_bands(assets, "asset_id", "payload").localCheckpoint()
+    bands = [
+        F.struct(F.lit(k).alias("k"), F.col(f"band{k}").alias("v"))
+        for k in range(phash.N_BANDS)
+    ]
+    return (
+        lambda cap, observation=None: phash.neardup_pairs(
+            sigs, "asset_id", max_hamming=6, max_bucket=cap,
+            observation=observation,
+        ),
+        lambda cap: audit(bucket_sizes(sigs, bands), cap),
+    )
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash", "dhash"])
+def test_lsh_observation_matches_standalone_bucket_stats(spark, op):
     """The fused observe() audit riding the pair-generation pass must
-    report exactly what the standalone ``lsh_bucket_stats`` pre-flight
-    reports, and attaching it must not change the pairs themselves
-    (the stats are free monitoring, not a second job)."""
+    report exactly what a standalone count-only audit of the same
+    buckets reports, with and without overflow buckets, and attaching
+    it must not change the pairs themselves (the stats are free
+    monitoring, not a second job)."""
     from pyspark.sql import Observation
 
-    from datafusion_functions_variant_spark.operators import dedup
+    from datafusion_functions_variant_spark.plans.observe import observed_metrics
 
-    base = "abcdefghijklmnopqrstuvwxyz0123456789"
-    rows = [(i, base + str(i // 4) * 3) for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
-
-    obs = Observation()
-    pairs = dedup.lsh_candidate_pairs(
-        sigs, "doc_id", num_hashes=8, bands=2, max_bucket=256, observation=obs
-    )
-    got_pairs = sorted(map(tuple, pairs.collect()))
-    fused = obs.get
-
-    plain = sorted(
-        map(
-            tuple,
-            dedup.lsh_candidate_pairs(
-                sigs, "doc_id", num_hashes=8, bands=2, max_bucket=256
-            ).collect(),
-        )
-    )
-    assert got_pairs == plain
-
-    standalone = dedup.lsh_bucket_stats(
-        sigs, "doc_id", num_hashes=8, bands=2, max_bucket=256
-    ).collect()[0]
-    assert fused["n_buckets"] == standalone.n_buckets
-    assert fused["n_colliding_buckets"] == standalone.n_colliding_buckets
-    assert fused["n_overflow_buckets"] == standalone.n_overflow_buckets
-    assert fused["max_bucket_size"] == standalone.max_bucket_size
+    pairs, reference = _near_dup_case(spark, op)
+    for cap in (256, 3):
+        obs = Observation()
+        got_pairs = sorted(map(tuple, pairs(cap, obs).collect()))
+        fused = observed_metrics(obs)
+        assert got_pairs == sorted(map(tuple, pairs(cap).collect()))
+        want = reference(cap).collect()[0].asDict()
+        assert {k: fused[k] for k in want} == want, (cap, fused, want)
+        assert (want["n_overflow_buckets"] > 0) == (cap == 3), want
 
 
-def test_lsh_small_buckets_unaffected_by_cap(spark):
+@pytest.mark.parametrize("op", ["minhash", "simhash", "dhash"])
+def test_lsh_small_buckets_unaffected_by_cap(spark, op):
     """Pairs from buckets at or under the cap are identical with and
     without the overflow guard (the cap only reroutes oversized
-    buckets)."""
-    from datafusion_functions_variant_spark.operators import dedup
-
-    rng = random.Random(42)
-    base = "abcdefghijklmnopqrstuvwxyz0123456789"
-    rows = []
-    for i in range(40):
-        # 10 clusters of 4 near-identical docs
-        text = base + str(i // 4) * 3
-        rows.append((i, text))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
-    capped = dedup.lsh_candidate_pairs(
-        sigs, "doc_id", num_hashes=8, bands=2, max_bucket=256
-    )
-    uncapped = dedup.lsh_candidate_pairs(
-        sigs, "doc_id", num_hashes=8, bands=2, max_bucket=10**9
-    )
-    assert sorted(map(tuple, capped.collect())) == sorted(
-        map(tuple, uncapped.collect())
+    buckets). The tight cap is the deepest bucket itself, so the
+    ``n <= max_bucket`` boundary is exercised."""
+    pairs, reference = _near_dup_case(spark, op)
+    deepest = reference(10**9).collect()[0].max_bucket_size
+    assert sorted(map(tuple, pairs(deepest).collect())) == sorted(
+        map(tuple, pairs(10**9).collect())
     )
 
 
@@ -1058,32 +1122,6 @@ def test_phash_overflow_flood_emits_star_pairs_with_observation(spark):
     assert got["n_buckets"] == 4
     assert got["n_colliding_buckets"] == 4
     assert got["max_bucket_size"] == n
-
-
-def test_phash_small_buckets_unaffected_by_cap(spark):
-    """Below the cap the guard must be invisible: pairs (and their
-    hammings) identical between a tight cap and an effectively-infinite
-    one, on a corpus with real near-dup structure (brightness-shifted
-    clusters of 5)."""
-    import pandas as pd
-    from datafusion_functions_variant_spark.operators import phash
-    from datafusion_functions_variant_spark.operators import png as pngmod
-
-    payloads = []
-    for g in range(8):
-        pix = bytes(((3 + g) * x + (5 + 2 * g) * y) % 90 for y in range(16) for x in range(18))
-        for v in range(5):
-            shifted = bytes(p + 2 * v for p in pix)
-            payloads.append((5 * g + v, pngmod.encode_png(18, 16, shifted, 1, v % 5)))
-    assets = spark.createDataFrame(
-        pd.DataFrame(payloads, columns=["asset_id", "payload"])
-    )
-    sigs = phash.dhash_bands(assets, "asset_id", "payload")
-    capped = phash.neardup_pairs(sigs, "asset_id", max_hamming=6, max_bucket=16)
-    uncapped = phash.neardup_pairs(sigs, "asset_id", max_hamming=6, max_bucket=10**9)
-    assert sorted(map(tuple, capped.collect())) == sorted(
-        map(tuple, uncapped.collect())
-    )
 
 
 def test_simhash_observation_detects_forfeited_exactness(spark):

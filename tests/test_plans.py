@@ -1128,32 +1128,62 @@ def test_image_phash_payloads_stay_in_stage_no_all_pairs(spark):
         assert "payload" not in m.group(0), m.group(0)
 
 
-def test_lsh_pairs_bounded_state_single_bucket_exchange(spark):
-    # round-9 bounded-state pin for lsh_candidate_pairs: the window
-    # that annotates bucket size/keeper and the routed-subgroup
-    # aggregate share ONE hash exchange on the band key (the groupBy's
-    # clustering is a superset of the window's partitioning, so no
-    # second shuffle may appear), the only other hash exchange is the
-    # final pair-count groupBy, and no join node exists — the overflow
-    # path emits star pairs from single-member subgroups, never from a
-    # per-bucket id array
-    from datafusion_functions_variant_spark.operators import dedup
+def _near_dup_pairs(spark, op):
+    """(signature frame, pair frame, bucket key) for one of the three
+    near-dup operators built on ``dedup.routed_bucket_pairs``."""
+    from pyspark.sql import functions as F
+
+    from datafusion_functions_variant_spark.operators import dedup, phash
     from datafusion_functions_variant_spark.sources.tables import load_table
 
+    if op == "dhash":
+        sigs = spark.range(64).select(
+            F.col("id").alias("asset_id"),
+            *[((F.col("id") % 7) + k).cast("int").alias(f"band{k}") for k in range(4)],
+        )
+        return sigs, phash.neardup_pairs(sigs, "asset_id"), ["bi", "bv"]
     docs = load_table(spark, SF, "documents")
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
-    base = sigs._jdf.queryExecution().executedPlan().toString().count(
-        "Exchange hashpartitioning"
-    )
-    pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
+    if op == "minhash":
+        sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
+        pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
+        return sigs, pairs, ["band_id", "band_hash"]
+    sigs = dedup.simhash_signatures(docs, "text", "doc_id")
+    pairs = dedup.simhash_near_pairs(sigs, "doc_id", max_hamming=4, max_bucket=4096)
+    return sigs, pairs, ["chunk_id", "chunk_val"]
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash", "dhash"])
+def test_routed_bucket_pairs_share_one_bucket_exchange(spark, op):
+    # bounded-state pin for dedup.routed_bucket_pairs under each of its
+    # three operators: the window that annotates bucket size/keeper and
+    # the routed-subgroup aggregate share ONE hash exchange on the
+    # bucket key (the groupBy's clustering is a superset of the
+    # window's partitioning, so no second shuffle may appear), and no
+    # join node exists — the overflow path emits star pairs from
+    # single-member subgroups, never from a per-bucket id array
+    import re
+
+    sigs, pairs, key = _near_dup_pairs(spark, op)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
-    # exactly 2 exchanges beyond whatever the signature stage needs:
-    # the band-key window (shared with the subgroup aggregate) and the
-    # final pair-count groupBy
-    assert plan.count("Exchange hashpartitioning") == base + 2, plan
+    exchanged = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    on_key = [
+        e for e in exchanged
+        if [c.split("#")[0] for c in e.split(", ")[:-1]] == key
+    ]
+    assert len(on_key) == 1, plan
+    # the subgroup aggregate (bucket key + _sub) reuses that exchange
+    assert not any("_sub" in e for e in exchanged), plan
     assert plan.count("Window") == 1
     for node in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
         assert node not in plan, node
+    if op == "minhash":
+        # exactly 2 exchanges beyond whatever the signature stage needs:
+        # the band-key window (shared with the subgroup aggregate) and
+        # the final pair-count groupBy
+        base = sigs._jdf.queryExecution().executedPlan().toString().count(
+            "Exchange hashpartitioning"
+        )
+        assert plan.count("Exchange hashpartitioning") == base + 2, plan
 
 
 def test_aqe_skew_join_split_engages_at_runtime(spark):

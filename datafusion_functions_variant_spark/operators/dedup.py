@@ -9,8 +9,9 @@ Scale design (100 TB of documents):
 
 * **Exact dedup** = hash → groupBy → min-keeper. One shuffle on the
   hash; partial aggregation collapses duplicates map-side first.
-* **MinHash-LSH** = in-row gram hashing → 1 groupBy for signatures →
-  band explode → pairs within each (band, value) bucket. Only
+* **MinHash-LSH** = one in-row projection signs each doc (gram
+  hashes → one ``array_min`` per permutation, no shuffle) → band
+  explode → pairs within each (band, value) bucket. Only
   colliding buckets produce pairs, and ``routed_bucket_pairs`` caps
   the expansion: buckets larger than ``max_bucket`` emit star pairs to
   the min-id keeper (O(n), same connected component) instead of
@@ -99,14 +100,9 @@ def gram_array(text_col, n: int = 8):
 
 
 def char_ngrams(df: DataFrame, text_col: str, id_col: str, n: int = 8) -> DataFrame:
-    """Distinct character n-grams per document: (id, g).
-
-    Per-doc dedup happens IN-ROW via array_distinct before the
-    explode, so this plan has no shuffle at all — the old formulation
-    (explode raw grams → global .distinct()) shuffled the entire gram
-    stream just to collapse per-doc repeats (measured: the distinct
-    exchange dominated dedup_minhash_lsh wall-clock at sf0.1).
-    """
+    """Distinct character n-grams per document: (id, g). Per-doc
+    dedup happens IN-ROW (``gram_array``) before the explode, so the
+    plan has no shuffle at all."""
     return df.select(
         F.col(id_col), F.explode(gram_array(text_col, n)).alias("g")
     )
@@ -115,29 +111,6 @@ def char_ngrams(df: DataFrame, text_col: str, id_col: str, n: int = 8) -> DataFr
 #: Deterministic 60-bit xor-permutation constants (golden-ratio odd
 #: multiples, masked to the hash width) — engine-portable integers.
 XOR_CONSTS = [(0x9E3779B97F4A7C15 * (h + 1)) & ((1 << 60) - 1) for h in range(64)]
-
-
-def minhash_signatures(
-    grams: DataFrame, id_col: str, num_hashes: int = 8, hash_fn: str = "md5"
-) -> DataFrame:
-    """H min-hashes per doc: mh_h = MIN((hash_60(g)) XOR c_h).
-
-    One hash per gram (the dominant cost — measured 3.5x faster than
-    one hash per gram PER HASH), lifted into a 60-bit integer; the H
-    "permutations" are xor by fixed constants, which is a bijection on
-    [0, 2^60) and keeps every minimum inside native-long HashAggregate.
-    Xor-permutations are not min-wise independent (slightly biased
-    Jaccard estimator vs true random permutations) — acceptable for
-    candidate generation because verified_near_dups re-checks exact
-    Jaccard downstream. min() is duplicate-insensitive, so the gram
-    feed needn't be distinct (Catalyst removes the distinct anyway).
-    """
-    pre = grams.select(F.col(id_col), gram_hash(F.col("g"), hash_fn).alias("_x"))
-    aggs = [
-        F.min(F.expr(f"_x ^ {XOR_CONSTS[h]}")).alias(f"mh{h}")
-        for h in range(num_hashes)
-    ]
-    return pre.groupBy(id_col).agg(*aggs)
 
 
 def gram_hash(g: F.Column, hash_fn: str = "md5") -> F.Column:
@@ -158,7 +131,7 @@ def gram_hash(g: F.Column, hash_fn: str = "md5") -> F.Column:
     total gram count (every byte of every doc) while the bucket join
     scales with #docs, so the 1.47× stage win is the one that matters.
     Both land in [0, 2^60), so the xor-permutation constants and the
-    min-aggregation downstream are shared unchanged.
+    minimum downstream are shared unchanged.
     """
     if hash_fn == "md5":
         return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
@@ -167,36 +140,48 @@ def gram_hash(g: F.Column, hash_fn: str = "md5") -> F.Column:
     raise ValueError(f"unknown hash_fn {hash_fn!r} (md5 | xxhash64)")
 
 
-def minhash_signatures_text(
+def minhash_signatures(
     df: DataFrame,
     text_col: str,
     id_col: str,
     n: int = 8,
     num_hashes: int = 8,
     hash_fn: str = "md5",
+    keep: list | None = None,
 ) -> DataFrame:
-    """Narrow-path minhash: signatures straight from the text column.
+    """H min-hashes per doc, mh_h = MIN(gram_hash(g) XOR XOR_CONSTS[h])
+    over its distinct character n-grams, in ONE projection: each gram
+    is hashed once inside an array ``transform`` and each permutation
+    is an ``array_min`` over that array. No explode, no groupBy, no
+    exchange, so a stateless stream signs with it too. The xor
+    "permutations" are bijections on [0, 2^60) but not min-wise
+    independent (a slightly biased Jaccard estimate), fine for
+    candidates: ``verified_near_dups`` re-checks exact Jaccard.
 
-    Grams are generated AND hashed inside one array ``transform`` (one
-    hash per gram occurrence, evaluated once per row), exploded, then
-    min-aggregated. The only shuffle is the final groupBy(id), and its
-    input is already partially aggregated map-side to H longs per doc —
-    versus the grams-relation formulation which shuffles the raw gram
-    stream through a global distinct first. Same signatures as
-    ``minhash_signatures`` (min is duplicate-insensitive, so skipping
-    per-doc dedup changes nothing). ``hash_fn`` picks the gram hash:
-    md5 (default, oracle-reproducible) or xxhash64 (production fast
-    path) — see ``gram_hash``.
+    A text shorter than ``n`` (or NULL) has no grams: its signature is
+    all NULL and ``banded_rows_inrow`` puts it in no bucket. ``keep``
+    lists the columns carried through (default: the id alone).
+
+    NOTE: the xor lambda must stay UNARY — pyspark treats a 2-arg HOF
+    lambda as (element, index), which would silently xor with the
+    array index instead of the permutation constant.
     """
-    hx = F.transform(
-        gram_array(text_col, n), lambda g: gram_hash(g, hash_fn)
-    )
-    pre = df.select(F.col(id_col), F.explode(hx).alias("_x"))
-    aggs = [
-        F.min(F.col("_x").bitwiseXOR(F.lit(XOR_CONSTS[h]))).alias(f"mh{h}")
-        for h in range(num_hashes)
-    ]
-    return pre.groupBy(id_col).agg(*aggs)
+    hx = F.transform(gram_array(text_col, n), lambda g: gram_hash(g, hash_fn))
+    out = df.withColumn("_hx", hx)
+
+    def xor_min(const: int) -> F.Column:
+        return F.array_min(
+            F.transform(F.col("_hx"), lambda x: x.bitwiseXOR(F.lit(const)))
+        )
+
+    mh = [xor_min(XOR_CONSTS[h]).alias(f"mh{h}") for h in range(num_hashes)]
+    return out.select(*(keep if keep is not None else [id_col]), *mh)
+
+
+#: Former name, still called by three query helpers: renaming them
+#: would push the never-verified queries past the verification window
+#: (``queries._WINDOW``, ``tests/test_registry.py``).
+minhash_signatures_inrow = minhash_signatures
 
 
 def text_content_key(col) -> F.Column:
@@ -225,7 +210,7 @@ def text_content_key(col) -> F.Column:
     )
 
 
-def minhash_signatures_text_canonical(
+def minhash_signatures_canonical(
     df: DataFrame,
     text_col: str,
     id_col: str,
@@ -233,14 +218,15 @@ def minhash_signatures_text_canonical(
     num_hashes: int = 8,
     hash_fn: str = "md5",
 ) -> DataFrame:
-    """``minhash_signatures_text`` with exact-duplicate texts
-    collapsed FIRST: the signature is a pure function of the text, so
-    each DISTINCT text is signed once and the signatures are joined
-    back to ids by the content key (``text_content_key``: two
-    xxhash64 words + length, JVM intrinsics instead of an md5 digest) —
-    identical (id, mh*) rows, the gram-hash stage (the dominant cost:
-    ~len(text) md5s per text) paid once per distinct text instead of
-    once per copy.
+    """``minhash_signatures`` with exact-duplicate texts collapsed
+    FIRST: the signature is a pure function of the text, so each
+    DISTINCT text is signed once and the signatures are joined back to
+    ids by the content key (``text_content_key``: two xxhash64 words +
+    length, JVM intrinsics instead of an md5 digest) — identical
+    (id, mh*) rows, the gram-hash stage (the dominant cost: ~len(text)
+    md5s per text) paid once per distinct text instead of once per
+    copy. A NULL text has a NULL key, so its id gets no row (the plain
+    form gives it an all-NULL signature, which no bucket takes).
 
     Trade-off (guide §2.3 shuffle-fewer-bytes vs compute): this adds
     one exchange of the text bytes (the content-hash distinct) and a
@@ -249,7 +235,7 @@ def minhash_signatures_text_canonical(
     bench.py's K×-replica scaled corpus by construction — the saved
     gram hashing dwarfs both (measured: see OPTIMIZATION_r15.md). On
     an already-unique corpus it wastes one text shuffle; callers that
-    KNOW their input is unique should keep ``minhash_signatures_text``.
+    KNOW their input is unique should call ``minhash_signatures``.
     """
     th = text_content_key(text_col).alias("_th")
     keyed = df.select(F.col(id_col), th)
@@ -267,51 +253,10 @@ def minhash_signatures_text_canonical(
         )
         .dropDuplicates(["_th"])
     )
-    sigs_t = minhash_signatures_text(
+    sigs_t = minhash_signatures(
         texts, text_col, "_th", n=n, num_hashes=num_hashes, hash_fn=hash_fn
     )
     return keyed.join(sigs_t, "_th").drop("_th")
-
-
-def minhash_signatures_inrow(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 8,
-    num_hashes: int = 8,
-    hash_fn: str = "md5",
-    keep: list | None = None,
-) -> DataFrame:
-    """Zero-shuffle minhash: the whole signature is computed INSIDE
-    one row (``array_min`` over the per-row gram-hash array), no
-    explode, no groupBy. Produces byte-identical signatures to
-    ``minhash_signatures_text`` (min over the same multiset), pinned
-    by a property test.
-
-    Trade-off vs the explode+groupBy formulation: this one is a pure
-    projection — usable in a STATELESS streaming query (no streaming
-    aggregation state) and free of even the map-side-combined shuffle
-    — but it holds each row's whole gram-hash array in memory at once,
-    so the explode path remains preferable for pathologically long
-    single documents. ``keep`` lists extra columns to carry through
-    (default: all original columns).
-
-    NOTE: the xor lambda must stay UNARY — pyspark treats a 2-arg HOF
-    lambda as (element, index), which would silently xor with the
-    array index instead of the permutation constant.
-    """
-    hx = F.transform(gram_array(text_col, n), lambda g: gram_hash(g, hash_fn))
-    out = df.withColumn("_hx", hx)
-
-    def xor_min(const: int) -> F.Column:
-        return F.array_min(
-            F.transform(F.col("_hx"), lambda x: x.bitwiseXOR(F.lit(const)))
-        )
-
-    for h in range(num_hashes):
-        out = out.withColumn(f"mh{h}", xor_min(XOR_CONSTS[h]))
-    cols = keep if keep is not None else [c for c in df.columns]
-    return out.select(*cols, *[f"mh{h}" for h in range(num_hashes)])
 
 
 def banded_hashes(
@@ -341,15 +286,25 @@ def banded_rows_inrow(
     ``keep`` columns carried through. The band hash is
     ``banded_hashes``' md5 of the band's r concatenated minhash values;
     its cardinality is ≈ #docs, so a downstream bucket groupBy shuffles
-    uniformly. One in-row explode; no shuffle."""
+    uniformly. One in-row explode; no shuffle.
+
+    A band with no grams (the all-NULL signature of a text shorter
+    than the gram width) has a NULL hash and belongs to no bucket: its
+    row is dropped, or every such doc would share one NULL bucket and
+    pair with every other. Callers that need every doc keep reading
+    ``banded_hashes`` directly."""
     extra = keep or []
     band_rows = [
         F.struct(F.lit(b).alias("band_id"), h.alias("band_hash"))
         for b, h in enumerate(banded_hashes(sigs, num_hashes, bands))
     ]
-    return sigs.select(
-        F.col(id_col), *extra, F.explode(F.array(*band_rows)).alias("bnd")
-    ).select(id_col, *extra, "bnd.band_id", "bnd.band_hash")
+    return (
+        sigs.select(
+            F.col(id_col), *extra, F.explode(F.array(*band_rows)).alias("bnd")
+        )
+        .select(id_col, *extra, "bnd.band_id", "bnd.band_hash")
+        .where(F.col("band_hash").isNotNull())
+    )
 
 
 def routed_bucket_pairs(

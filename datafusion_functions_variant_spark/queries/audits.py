@@ -415,7 +415,7 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_a", "doc_b")
     )
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id", n=8, num_hashes=8)
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
     cand = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2).select(
         "doc_a", "doc_b"
     )

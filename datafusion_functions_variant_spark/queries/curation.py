@@ -436,7 +436,7 @@ def _register_round4_tail() -> None:
         truncation every iteration re-embeds it — 28 corpus scans in
         the untruncated 4-iteration plan."""
         docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        sigs = dedup.minhash_signatures_text(
+        sigs = dedup.minhash_signatures(
             docs, "text", "doc_id", n=8, num_hashes=8
         )
         pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
@@ -1122,7 +1122,7 @@ def _register_containment() -> None:
         the single division is integer/integer rounded to 6 on both
         engines."""
         docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        sigs = dedup.minhash_signatures_text(docs, "text", "doc_id", n=8, num_hashes=8)
+        sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
         cand = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2).select(
             "doc_a", "doc_b"
         )
@@ -2226,7 +2226,7 @@ def _register_source_dup_matrix() -> None:
         wholesale instead of deduping pair by pair. The doc->source
         map broadcasts onto the (small) candidate set."""
         docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        sigs = dedup.minhash_signatures_text(docs, "text", "doc_id", n=8, num_hashes=8)
+        sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
         pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
         src = docs.select("doc_id", "source")
         a = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("source_a"))
@@ -2488,7 +2488,7 @@ def _register_lpa() -> None:
         lineage is the whole LSH pipeline; untruncated, every
         iteration would re-embed it)."""
         docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-        sigs = dedup.minhash_signatures_text(
+        sigs = dedup.minhash_signatures(
             docs, "text", "doc_id", n=8, num_hashes=8
         )
         pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)

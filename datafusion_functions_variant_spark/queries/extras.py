@@ -23,11 +23,7 @@ from ..operators.similarity import _dot_decimal, _dot_double
 from ..plans.session import stage_boundary
 from ..sources.tables import load_table, register_views
 from . import dsum, dsum_sql, query
-
-#: Scratch dir for sink/source roundtrips (inside the repo; overwritten
-#: on every run — never a correctness input, only a roundtrip target).
-_IO_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".tmp_io")
+from .catalog import _IO_DIR
 
 
 # --- embedding-cosine near-dup ----------------------------------------------

@@ -105,11 +105,11 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted (band_id, band_hash) table that ``sink_*`` layouts
     store, and only the probe side is computed fresh.
 
-    Plan shape at 100 TB: the index build is the corpus signature
-    pipeline (one shuffle, map-side combined); each batch then costs
-    one in-row signature projection over the BATCH only (zero-shuffle
-    ``minhash_signatures_inrow`` — the same stateless probe the
-    streaming twin ``stream_neardup_at_ingest`` uses) plus one
+    Plan shape at 100 TB: the index build signs the corpus' distinct
+    texts (one content-key shuffle); each batch then costs one in-row
+    signature projection over the BATCH only (zero-shuffle
+    ``minhash_signatures`` — the same stateless probe the streaming
+    twin ``stream_neardup_at_ingest`` uses) plus one
     semi-join shuffled on band_hash, whose cardinality is ≈ #batch
     rows × bands. No all-pairs, no corpus rescan, no skew (band
     hashes are md5-uniform)."""
@@ -140,14 +140,14 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, F.col("_th"))
         .dropDuplicates(["_th"])
     )
-    sigs_c = dedup.minhash_signatures_text(
+    sigs_c = dedup.minhash_signatures(
         corpus_t, "text", "_th", n=8, num_hashes=8
     )
     index = dedup.banded_rows_inrow(sigs_c, "_th", 8, 2).select(
         "band_id", "band_hash"
     ).distinct()
 
-    probe = dedup.minhash_signatures_inrow(
+    probe = dedup.minhash_signatures(
         dedup.fan_out(incoming),
         "text", "doc_id", n=8, num_hashes=8, keep=["doc_id", "lang"]
     )
@@ -769,40 +769,49 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold → more candidates (candidate_slots column shows the
     cost), fewer bands → only tighter duplicates recalled.
 
-    Plan: ONE signature pipeline (the dominant cost — grams hashed
-    once), then three count-only bucket aggregates, each map-side
-    combinable; no pair is ever materialized. At 100 TB this costs
-    one corpus pass + three vocabulary-sized shuffles."""
+    Plan: ONE in-row signature projection (the dominant cost — grams
+    hashed once) feeding ONE explode of every split's band rows, then
+    a count-only bucket aggregate keyed by (bands, band) and a
+    per-split rollup, both map-side combinable; no pair is ever
+    materialized. At 100 TB this costs one corpus pass + two
+    vocabulary-sized shuffles. A band with no grams (a text shorter
+    than the gram width) is in no bucket, as in ``banded_rows_inrow``."""
     docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    sigs = dedup.minhash_signatures_text(
-        docs, "text", "doc_id", n=8, num_hashes=8
-    )
-    out = None
-    for b in _SWEEP_BANDS:
-        r = 8 // b
-        counts = (
-            dedup.banded_rows_inrow(sigs, "doc_id", 8, b)
-            .groupBy("band_id", "band_hash")
-            .agg(F.count(F.lit(1)).alias("n"))
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
+    band_rows = [
+        F.struct(
+            F.lit(b).alias("bands"), F.lit(i).alias("band_id"), h.alias("band_hash")
         )
-        cfg = counts.agg(
+        for b in _SWEEP_BANDS
+        for i, h in enumerate(dedup.banded_hashes(sigs, 8, b))
+    ]
+    counts = (
+        sigs.select(F.explode(F.array(*band_rows)).alias("bnd"))
+        .select("bnd.*")
+        .where(F.col("band_hash").isNotNull())
+        .groupBy("bands", "band_id", "band_hash")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    thresholds = F.create_map(
+        *[F.lit(x) for b in _SWEEP_BANDS for x in (b, _sweep_threshold_ppm(b, 8 // b))]
+    )
+    return (
+        counts.groupBy("bands")
+        .agg(
             F.count(F.lit(1)).cast("long").alias("n_buckets"),
-            F.sum((F.col("n") > 1).cast("long")).cast("long").alias(
-                "n_colliding"
-            ),
-            F.sum(F.expr("n * (n - 1) div 2")).cast("long").alias(
-                "candidate_slots"
-            ),
-        ).select(
-            F.lit(b).alias("bands"),
-            F.lit(r).alias("rows_per_band"),
+            F.sum((F.col("n") > 1).cast("long")).cast("long").alias("n_colliding"),
+            F.sum(F.expr("n * (n - 1) div 2")).cast("long").alias("candidate_slots"),
+        )
+        .select(
+            "bands",
+            F.expr("8 div bands").cast("int").alias("rows_per_band"),
             "n_buckets",
             "n_colliding",
             "candidate_slots",
-            F.lit(_sweep_threshold_ppm(b, r)).alias("threshold_ppm"),
+            thresholds[F.col("bands")].alias("threshold_ppm"),
         )
-        out = cfg if out is None else out.unionByName(cfg)
-    return out.orderBy("bands")
+        .orderBy("bands")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1334,7 +1343,7 @@ def bucketed_index_build(spark: SparkSession, sf_dir: str) -> None:
         .repartition(spark.sparkContext.defaultParallelism, F.col("_th"))
         .dropDuplicates(["_th"])
     )
-    sigs_c = dedup.minhash_signatures_text(
+    sigs_c = dedup.minhash_signatures(
         corpus_t, "text", "_th", n=8, num_hashes=8
     )
     index = (
@@ -1373,7 +1382,7 @@ def bucketed_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idx = spark.table("band_index_b")
 
-    probe = dedup.minhash_signatures_inrow(
+    probe = dedup.minhash_signatures(
         dedup.fan_out(incoming),
         "text", "doc_id", n=8, num_hashes=8, keep=["doc_id", "lang"]
     )
@@ -1510,8 +1519,7 @@ def dedup_chunk_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: chunks built IN-ROW (sequence+transform over the
     split array), signatures in-row per chunk (``array_min`` over the
-    gram-hash array — chunk texts are small, the zero-shuffle path's
-    sweet spot), then the SAME bucket-min discipline as the capstone:
+    gram-hash array), then the SAME bucket-min discipline as the capstone:
     one groupBy on (band, hash) + one join back — earlier-chunk
     precedence is a single integer compare (key = doc_id·(1<<20) + pos,
     the runtime-asserted ``_NEAR_KEY_SHIFT`` capacity),
@@ -1543,7 +1551,7 @@ def dedup_chunk_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.col("pos"),
     )
     signable = ch.where(F.length("chunk") >= 8)
-    sigs = dedup.minhash_signatures_inrow(
+    sigs = dedup.minhash_signatures(
         signable.select("key", "chunk"), "chunk", "key",
         n=8, num_hashes=8, keep=["key"],
     )
@@ -2224,7 +2232,7 @@ def _register_bloom_prescreen() -> None:
         incoming = docs.where(F.col("doc_id") % 5 == 0).select(
             "doc_id", "lang", "text"
         )
-        sigs_c = dedup.minhash_signatures_text(
+        sigs_c = dedup.minhash_signatures(
             corpus, "text", "doc_id", n=8, num_hashes=8
         )
         index = (
@@ -2237,7 +2245,7 @@ def _register_bloom_prescreen() -> None:
         bitset = bloom_build(
             index, F.xxhash64(F.col("band_id"), F.col("band_hash")), m_bits
         )
-        probe = dedup.minhash_signatures_inrow(
+        probe = dedup.minhash_signatures(
             incoming, "text", "doc_id", n=8, num_hashes=8, keep=["doc_id", "lang"]
         )
         bands_i = dedup.banded_rows_inrow(probe, "doc_id", num_hashes=8, bands=2)

@@ -92,10 +92,13 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_a, doc_b, n_shared_bands FROM candidates
     ORDER BY doc_a, doc_b
     """,
-    # the round-15 canonicalize-first signing lives in this helper;
-    # without the declaration, editing it would not re-front the query
-    # (r16: + the dedup.text_content_key it collapses on)
-    hash_deps=(dedup.minhash_signatures_text_canonical, dedup.text_content_key),
+    # the canonicalize-first signing lives in these helpers; without
+    # the declaration, editing them would not re-front the query
+    hash_deps=(
+        dedup.minhash_signatures_canonical,
+        dedup.minhash_signatures,
+        dedup.text_content_key,
+    ),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8 perms)-LSH(2 bands x 4 rows) candidate pairs over
@@ -112,7 +115,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No fan_out here: the helper's own pinned-width content-hash
     # repartition spreads the heavy stage, and a fan_out would run
     # once per branch (ids + texts) — two extra full-table exchanges.
-    sigs = dedup.minhash_signatures_text_canonical(
+    sigs = dedup.minhash_signatures_canonical(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
         n=8, num_hashes=8,
     )
@@ -160,14 +163,18 @@ _XXHASH_SIGS_PATH = _xxhash_sigs_path()
     GROUP BY 1, 2
     ORDER BY doc_a, doc_b
     """,
-    # same round-15 canonicalize-first helper as dedup_minhash_lsh
-    hash_deps=(dedup.minhash_signatures_text_canonical, dedup.text_content_key),
+    # same canonicalize-first helpers as dedup_minhash_lsh
+    hash_deps=(
+        dedup.minhash_signatures_canonical,
+        dedup.minhash_signatures,
+        dedup.text_content_key,
+    ),
 )
 def dedup_minhash_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production fast-path twin of ``dedup_minhash_lsh``: identical
-    pipeline shape (in-row gram hashing → minhash groupBy → band-bucket
-    pairs) with the gram hash swapped from md5-hex-conv to Spark's
-    native ``xxhash64`` intrinsic. md5 in the oracled twin is pure
+    pipeline shape (in-row signing → band-bucket pairs) with the gram
+    hash swapped from md5-hex-conv to Spark's native ``xxhash64``
+    intrinsic. md5 in the oracled twin is pure
     portability tax (the DuckDB oracle must reproduce the integers);
     this entry shows the number a Spark-only deployment gets.
 
@@ -183,7 +190,7 @@ def dedup_minhash_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as dedup_minhash_lsh: the persisted per-doc signatures are
     # byte-identical, the xxhash64 gram stage runs once per distinct
     # text
-    sigs = dedup.minhash_signatures_text_canonical(
+    sigs = dedup.minhash_signatures_canonical(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
         n=8, num_hashes=8, hash_fn="xxhash64",
     )
@@ -221,7 +228,7 @@ def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     largest bucket. Count-only aggregate — no id collection — so it is
     the query you run on the full corpus BEFORE the expansion."""
     docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id", n=8, num_hashes=8)
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
     return dedup.lsh_bucket_stats(sigs, "doc_id", num_hashes=8, bands=2, max_bucket=256)
 
 
@@ -252,7 +259,7 @@ def dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify only candidates (never all pairs)."""
     docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
     grams = dedup.char_ngrams(docs, "text", "doc_id", n=8)
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id", n=8, num_hashes=8)
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
     cands = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2).select(
         "doc_a", "doc_b"
     )
@@ -300,7 +307,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts it; the corpus itself never reshuffles. The oracle
     replays the same graph with a recursive CTE."""
     docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id", n=8, num_hashes=8)
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
     labels = graph.min_label_components(pairs, src="doc_a", dst="doc_b")
     members = docs.select("doc_id", "n_chars").join(
@@ -356,7 +363,7 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle closes the same triangles with a three-way self-join over
     the candidate pairs."""
     docs = dedup.fan_out(load_table(spark, sf_dir, "documents"))
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id", n=8, num_hashes=8)
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
     pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
     return (
         graph.triangle_counts(pairs, src="doc_a", dst="doc_b")
@@ -632,7 +639,7 @@ def text_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact_kept = q.join(keepers, "doc_id").localCheckpoint(eager=False)
     grams = dedup.char_ngrams(exact_kept, "text", "doc_id", n=8)
-    sigs = dedup.minhash_signatures_text(exact_kept, "text", "doc_id", n=8, num_hashes=8)
+    sigs = dedup.minhash_signatures(exact_kept, "text", "doc_id", n=8, num_hashes=8)
     cands = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2).select(
         "doc_a", "doc_b"
     )

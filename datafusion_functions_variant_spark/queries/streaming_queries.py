@@ -1436,9 +1436,9 @@ def stream_neardup_at_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR-duplicate screening at ingest — the streaming complement
     to ``stream_dedup_against_corpus`` (which only catches byte-exact
     content): each arriving document's MinHash-LSH band hashes are
-    computed IN-ROW (``array_min`` over the per-row gram-hash array —
-    no explode, no per-doc groupBy, so unlike the batch formulation
-    there is NO streaming aggregation) and probed against the
+    computed IN-ROW (``dedup.minhash_signatures``: ``array_min`` over
+    the per-row gram-hash array, a pure projection, so there is NO
+    streaming aggregation) and probed against the
     historical corpus' distinct band-bucket index (both bands folded
     into one md5 key so one index serves both probes). 100% STATELESS:
     no watermark, no state store, append mode. The index relation is

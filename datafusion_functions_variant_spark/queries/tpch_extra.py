@@ -13,9 +13,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from . import davg_sql, dsum, dsum_sql, query
-
-_IO_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".tmp_io")
+from .catalog import _IO_DIR
 
 
 @query(

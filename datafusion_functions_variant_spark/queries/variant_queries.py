@@ -18,9 +18,7 @@ from ..operators.dedup import fan_out
 from ..sources import shredded
 from ..sources.tables import load_table
 from . import davg_sql, dsum, dsum_sql, isum, isum_sql, query
-
-_IO_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".tmp_io")
+from .catalog import _IO_DIR
 
 
 @query(

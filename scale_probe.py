@@ -18,9 +18,10 @@ is deliberately NOT applied: identical replicas are the ADVERSARIAL
 case for dedup (maximum bucket collision pressure — every LSH bucket
 is K× deeper), making these numbers upper bounds.
 
-Run: ``python3 scale_probe.py`` (≈ 8-12 min on local[32] with the
-round-5 cases: incremental-index probe, capstone pipeline, and the
-kNN fixed-vs-scaled-bits pair).
+Run: ``python3 scale_probe.py [case ...]`` runs the named cases, or
+every case when none is named (≈ 8-12 min on local[32]); an unknown
+name lists the known ones. Each case prints one JSON line as it ends,
+and a summary line closes the run.
 """
 
 from __future__ import annotations
@@ -29,13 +30,31 @@ import json
 import os
 import sys
 import time
-from functools import partial
+from functools import partial, reduce
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 KS = (1, 2, 4, 8)
 RUNS = int(os.environ.get("SCALE_RUNS", "3"))
+
+
+def timed(fn):
+    """(median wall seconds of RUNS calls of fn after one warm-up call,
+    the last call's return value)."""
+    samples, out = [], None
+    for i in range(RUNS + 1):
+        t0 = time.perf_counter()
+        out = fn()
+        if i:
+            samples.append(time.perf_counter() - t0)
+    return round(sorted(samples)[len(samples) // 2], 3), out
+
+
+def over_k(setup) -> dict:
+    """{K: median seconds of the call ``setup(K)`` returns}; the setup
+    itself (replication, plan building) stays untimed."""
+    return {k: timed(setup(k))[0] for k in KS}
 
 
 def replicate(df, k: int, id_col: str):
@@ -47,8 +66,6 @@ def replicate(df, k: int, id_col: str):
     count. (A broadcast-crossJoin replication keeps the source's
     partition count — on a one-split test file that serializes the
     whole probe onto one core; measured and rejected.)"""
-    from functools import reduce
-
     from pyspark.sql import functions as F
 
     if k == 1:
@@ -59,27 +76,30 @@ def replicate(df, k: int, id_col: str):
     return reduce(lambda a, b: a.unionByName(b), copies)
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     from pyspark.sql import functions as F
 
     from datafusion_functions_variant_spark.operators import dedup, multimodal, similarity
     from datafusion_functions_variant_spark.operators.text import quality_stats, words
     from datafusion_functions_variant_spark.plans.session import get_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = get_session(
-        app_name="scale_probe", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 16)
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    results: dict[str, dict] = {}
 
-    docs0 = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
-        "doc_id", "text", "lang"
-    )
-    emb0 = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    emb_id, emb_vec = emb0.columns[0], emb0.columns[1]
+    def record(label: str, per_k: dict, **extra) -> None:
+        """Store and print one case's per-K medians and its growth
+        factor T(K_max)/T(K_min)."""
+        ks = sorted(per_k)
+        results[label] = {
+            "per_k": per_k,
+            **extra,
+            f"growth_{ks[-1] // ks[0]}x": round(per_k[ks[-1]] / per_k[ks[0]], 2),
+        }
+        print(json.dumps({"case": label, **results[label]}), flush=True)
 
+    # --- generic cases: one pipeline over the K×-replicated docs or
+    # embeddings, timed end to end
     def minhash_lsh(docs):
-        sigs = dedup.minhash_signatures_text(docs, "text", "doc_id", hash_fn="xxhash64")
+        sigs = dedup.minhash_signatures(docs, "text", "doc_id", hash_fn="xxhash64")
         pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
         return pairs.agg(F.count(F.lit(1)), F.sum("n_shared_bands"))
 
@@ -144,17 +164,17 @@ def main() -> None:
             F.count(F.lit(1)), F.sum("n_grams"), F.sum("n_dup_grams")
         )
 
-    cases = {
-        "dedup_minhash_lsh_xxhash": ("docs", minhash_lsh),
-        "dedup_substring_spans": ("docs", substring_spans),
-        "text_quality_stats": ("docs", token_quality),
-        "vocab_token_agg": ("docs", vocab_agg),
-        "similarity_dot_topk": ("emb", dot_topk),
-        "classifier_broadcast_score": ("docs", classifier_score),
-        "multimodal_png_decode": ("docs", png_decode_pipeline),
-    }
+    def generic(src: str, fn):
+        def case(label: str) -> None:
+            base, id_col = (docs0, "doc_id") if src == "docs" else (emb0, emb_id)
 
-    results: dict[str, dict] = {}
+            def setup(k):
+                rep = replicate(base, k, id_col)
+                return lambda: fn(rep).collect()
+
+            record(label, over_k(setup))
+
+        return case
 
     # --- bespoke case 1: incremental-index probe ------------------------
     # Fixed-size incoming batch screened against the K×-replicated
@@ -164,44 +184,33 @@ def main() -> None:
     # the timed part is what a batch actually costs: in-row signatures
     # + one semi-join. Scale claim under test: per-batch cost is
     # independent of corpus size K.
-    def _timed_probe(index):
-        batch = docs0.where(F.col("doc_id") % 5 == 0)
-        probe = dedup.minhash_signatures_inrow(
-            batch.select("doc_id", "text"), "text", "doc_id",
-            hash_fn="xxhash64", keep=["doc_id"],
-        )
-        bands_i = dedup.banded_rows_inrow(
-            probe, "doc_id", num_hashes=8, bands=2
-        )
-        hits = bands_i.join(index, ["band_id", "band_hash"], "left_semi")
-        return hits.agg(F.count(F.lit(1)), F.count_distinct("doc_id"))
+    def incremental_index_probe(label: str) -> None:
+        def timed_probe(index):
+            batch = docs0.where(F.col("doc_id") % 5 == 0)
+            probe = dedup.minhash_signatures(
+                batch.select("doc_id", "text"), "text", "doc_id",
+                hash_fn="xxhash64",
+            )
+            bands_i = dedup.banded_rows_inrow(
+                probe, "doc_id", num_hashes=8, bands=2
+            )
+            hits = bands_i.join(index, ["band_id", "band_hash"], "left_semi")
+            return hits.agg(F.count(F.lit(1)), F.count_distinct("doc_id"))
 
-    per_k = {}
-    for k in KS:
-        corpus = replicate(docs0, k, "doc_id")
-        sigs_c = dedup.minhash_signatures_text(
-            corpus, "text", "doc_id", hash_fn="xxhash64"
-        )
-        index = (
-            dedup.banded_rows_inrow(sigs_c, "doc_id", 8, 2)
-            .select("band_id", "band_hash").distinct().persist()
-        )
-        index.count()  # materialize index outside the timed probe
-        samples = []
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            _timed_probe(index).collect()
-            if i:
-                samples.append(time.perf_counter() - t0)
-        index.unpersist()
-        per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-    results["incremental_index_probe_fixed_batch"] = {
-        "per_k": per_k,
-        "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
-    }
-    print(json.dumps({"case": "incremental_index_probe_fixed_batch",
-                      **results["incremental_index_probe_fixed_batch"]}),
-          flush=True)
+        per_k = {}
+        for k in KS:
+            corpus = replicate(docs0, k, "doc_id")
+            sigs_c = dedup.minhash_signatures(
+                corpus, "text", "doc_id", hash_fn="xxhash64"
+            )
+            index = (
+                dedup.banded_rows_inrow(sigs_c, "doc_id", 8, 2)
+                .select("band_id", "band_hash").distinct().persist()
+            )
+            index.count()  # materialize index outside the timed probe
+            per_k[k] = timed(lambda: timed_probe(index).collect())[0]
+            index.unpersist()
+        record(label, per_k)
 
     # --- bespoke case 2: kNN graph, fixed vs scaled bits ----------------
     # Replicas are ROTATED (dims shifted per replica) so they are
@@ -210,14 +219,11 @@ def main() -> None:
     # expected bucket depth grows ∝ K and the blocked self-join does
     # ∝ K² pair work; scaling bits with log2(K) (the dial documented
     # on operators/similarity.py::knn_graph) holds depth constant.
-    dim = len(emb0.select(emb_vec).first()[0])
-
     def replicate_rotated(k: int):
-        from functools import reduce as _reduce
-
         base = emb0.select(emb_id, emb_vec)
         if k == 1:
             return base
+        dim = len(base.select(emb_vec).first()[0])
         copies = []
         for rep in range(k):
             v = F.col(emb_vec)
@@ -231,7 +237,19 @@ def main() -> None:
                     v.alias(emb_vec),
                 )
             )
-        return _reduce(lambda x, y: x.unionByName(y), copies)
+        return reduce(lambda x, y: x.unionByName(y), copies)
+
+    def knn_graph(bits_of):
+        def setup(k):
+            rep = replicate_rotated(k)
+            return lambda: similarity.knn_graph(
+                rep, emb_id, emb_vec, bits_per_band=bits_of(k), bands=2, exact=False,
+            ).agg(F.count(F.lit(1)), F.sum("cosine")).collect()
+
+        def case(label: str) -> None:
+            record(label, over_k(setup))
+
+        return case
 
     # --- bespoke case: the whole capstone pipeline at K× -----------------
     # quality gate → exact dedup → bucket-min near-dup → packing, one
@@ -239,29 +257,20 @@ def main() -> None:
     # makes every doc K×-duplicated — the exact-dedup window and the
     # bucket-min stage absorb the entire K× inflation, so this is the
     # adversarial all-dup corpus for the full pipeline.
-    from datafusion_functions_variant_spark.queries.ingestion import (
-        crawl_to_shards_report,
-    )
+    def pipeline_crawl_to_shards(label: str) -> None:
+        from datafusion_functions_variant_spark.queries.ingestion import (
+            crawl_to_shards_report,
+        )
 
-    docs_full = spark.read.parquet(
-        os.path.join(SF_DIR, "documents.parquet")
-    ).select("doc_id", "text", "lang", "n_chars")
-    per_k = {}
-    for k in KS:
-        rep = replicate(docs_full, k, "doc_id")
-        samples = []
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            crawl_to_shards_report(rep).collect()
-            if i:
-                samples.append(time.perf_counter() - t0)
-        per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-    results["pipeline_crawl_to_shards"] = {
-        "per_k": per_k,
-        "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
-    }
-    print(json.dumps({"case": "pipeline_crawl_to_shards",
-                      **results["pipeline_crawl_to_shards"]}), flush=True)
+        docs_full = spark.read.parquet(
+            os.path.join(SF_DIR, "documents.parquet")
+        ).select("doc_id", "text", "lang", "n_chars")
+
+        def setup(k):
+            rep = replicate(docs_full, k, "doc_id")
+            return lambda: crawl_to_shards_report(rep).collect()
+
+        record(label, over_k(setup))
 
     # --- bespoke case: snapshot diff, FIXED drift, K× corpus ------------
     # operators/reconcile.py::bucketed_snapshot_diff. The drift is held
@@ -270,47 +279,39 @@ def main() -> None:
     # linear scans producing 4096-row summaries, and phase 3 (the only
     # join that touches rows) expands ONLY the ≤512 dirty buckets, so
     # total time grows ≲ K (scan-bound) with NO corpus-sized join.
-    from datafusion_functions_variant_spark.operators.reconcile import (
-        bucketed_snapshot_diff,
-    )
-
-    orders0 = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet")).select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
-        F.col("o_orderstatus").alias("status"),
-    )
-
-    def snapshot_diff_fixed_drift(a):
-        # deletes: okey in [0,256); modifies: okey in [256,512) — the
-        # replicated key space is okey*k+rep, so the sub-512 range
-        # always holds ~512 keys total regardless of K
-        b = a.where("okey >= 256").select(
-            "okey",
-            F.expr(
-                "cast(CASE WHEN okey < 512 THEN price + 100.00 ELSE price END"
-                " as decimal(18,2))"
-            ).alias("price"),
-            "status",
+    def snapshot_diff_fixed_drift(label: str) -> None:
+        from datafusion_functions_variant_spark.operators.reconcile import (
+            bucketed_snapshot_diff,
         )
-        diff = bucketed_snapshot_diff(a, b, "okey", ["price", "status"])
-        return diff.agg(F.count(F.lit(1)), F.count_distinct("kind"))
 
-    per_k = {}
-    for k in KS:
-        rep = replicate(orders0, k, "okey")
-        samples = []
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            snapshot_diff_fixed_drift(rep).collect()
-            if i:
-                samples.append(time.perf_counter() - t0)
-        per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-    results["snapshot_diff_fixed_drift"] = {
-        "per_k": per_k,
-        "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
-    }
-    print(json.dumps({"case": "snapshot_diff_fixed_drift",
-                      **results["snapshot_diff_fixed_drift"]}), flush=True)
+        orders0 = spark.read.parquet(
+            os.path.join(SF_DIR, "orders.parquet")
+        ).select(
+            F.col("o_orderkey").alias("okey"),
+            F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
+            F.col("o_orderstatus").alias("status"),
+        )
+
+        def diff_of(a):
+            # deletes: okey in [0,256); modifies: okey in [256,512) — the
+            # replicated key space is okey*k+rep, so the sub-512 range
+            # always holds ~512 keys total regardless of K
+            b = a.where("okey >= 256").select(
+                "okey",
+                F.expr(
+                    "cast(CASE WHEN okey < 512 THEN price + 100.00 ELSE price END"
+                    " as decimal(18,2))"
+                ).alias("price"),
+                "status",
+            )
+            diff = bucketed_snapshot_diff(a, b, "okey", ["price", "status"])
+            return diff.agg(F.count(F.lit(1)), F.count_distinct("kind"))
+
+        def setup(k):
+            rep = replicate(orders0, k, "okey")
+            return lambda: diff_of(rep).collect()
+
+        record(label, over_k(setup))
 
     # --- bespoke case: incremental rollup maintenance, FIXED delta ---
     # operators/ivm.py. The stored rollup is pre-materialized per K
@@ -320,64 +321,50 @@ def main() -> None:
     # join. Contrast case: the full recompute over the K× corpus that
     # maintenance replaces. Claim: maintenance stays FLAT while
     # recompute grows ~K — the reason the operator exists.
-    from datafusion_functions_variant_spark.operators import ivm
+    def rollup_ivm(label: str) -> None:
+        from datafusion_functions_variant_spark.operators import ivm
+        from datafusion_functions_variant_spark.sources.tables import load_table
 
-    from datafusion_functions_variant_spark.sources.tables import load_table
-
-    ev0 = load_table(spark, SF_DIR, "events").select(
-        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        F.hour("ts").alias("hour"),
-        "event_type",
-        F.col("value").cast("decimal(18,2)").alias("v"),
-        "event_id",
-    )
-    # K-independent signed changelog: ~600 rows from the base corpus
-    delta_src = ev0.where(F.col("event_id") % 97 == 0).select(
-        "day", "hour", "event_type",
-        F.when(F.col("event_id") % 3 == 0, F.lit(-1)).otherwise(F.lit(1))
-        .alias("sign"),
-        "v",
-    )
-    ivm_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_bench", "ivm_probe"
-    )
-    # sf0.1 events are small enough that fixed overheads hide the
-    # recompute's linear term until ~1M+ rows — probe to K=32 so the
-    # contrast is visible (measured: recompute flat to K=8, 2.9x at 32)
-    KS_IVM = (1, 8, 32)
-    per_k_m, per_k_r = {}, {}
-    for k in KS_IVM:
-        rep = replicate(ev0, k, "event_id")
-        stored_path = os.path.join(ivm_dir, f"rollup_k{k}")
-        ivm.rollup_full(rep, "ivm_probe_full").write.mode("overwrite").parquet(
-            stored_path
-        )  # untimed one-time build
-        stored = spark.read.parquet(stored_path)
-        m_samples, r_samples = [], []
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            ivm.merge_rollup(
-                stored, ivm.rollup_delta(delta_src, "ivm_probe_delta")
-            ).agg(F.count(F.lit(1)), F.sum("n")).collect()
-            if i:
-                m_samples.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            ivm.rollup_full(rep, "ivm_probe_full").agg(
-                F.count(F.lit(1)), F.sum("n")
-            ).collect()
-            if i:
-                r_samples.append(time.perf_counter() - t0)
-        per_k_m[k] = round(sorted(m_samples)[len(m_samples) // 2], 3)
-        per_k_r[k] = round(sorted(r_samples)[len(r_samples) // 2], 3)
-    for label, per_k in (
-        ("rollup_ivm_fixed_delta_maintain", per_k_m),
-        ("rollup_ivm_full_recompute", per_k_r),
-    ):
-        results[label] = {
-            "per_k": per_k,
-            "growth_32x": round(per_k[KS_IVM[-1]] / per_k[KS_IVM[0]], 2),
-        }
-        print(json.dumps({"case": label, **results[label]}), flush=True)
+        ev0 = load_table(spark, SF_DIR, "events").select(
+            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
+            F.hour("ts").alias("hour"),
+            "event_type",
+            F.col("value").cast("decimal(18,2)").alias("v"),
+            "event_id",
+        )
+        # K-independent signed changelog: ~600 rows from the base corpus
+        delta_src = ev0.where(F.col("event_id") % 97 == 0).select(
+            "day", "hour", "event_type",
+            F.when(F.col("event_id") % 3 == 0, F.lit(-1)).otherwise(F.lit(1))
+            .alias("sign"),
+            "v",
+        )
+        ivm_dir = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), ".tmp_bench", "ivm_probe"
+        )
+        # sf0.1 events are small enough that fixed overheads hide the
+        # recompute's linear term until ~1M+ rows — probe to K=32 so the
+        # contrast is visible (measured: recompute flat to K=8, 2.9x at 32)
+        per_k_m, per_k_r = {}, {}
+        for k in (1, 8, 32):
+            rep = replicate(ev0, k, "event_id")
+            stored_path = os.path.join(ivm_dir, f"rollup_k{k}")
+            ivm.rollup_full(rep, "ivm_probe_full").write.mode("overwrite").parquet(
+                stored_path
+            )  # untimed one-time build
+            stored = spark.read.parquet(stored_path)
+            per_k_m[k] = timed(
+                lambda: ivm.merge_rollup(
+                    stored, ivm.rollup_delta(delta_src, "ivm_probe_delta")
+                ).agg(F.count(F.lit(1)), F.sum("n")).collect()
+            )[0]
+            per_k_r[k] = timed(
+                lambda: ivm.rollup_full(rep, "ivm_probe_full").agg(
+                    F.count(F.lit(1)), F.sum("n")
+                ).collect()
+            )[0]
+        record("rollup_ivm_fixed_delta_maintain", per_k_m)
+        record("rollup_ivm_full_recompute", per_k_r)
 
     # --- bespoke case: perceptual image dedup, ADVERSARIAL near-dup
     # corpus: 1000*K images with a FIXED 250 pattern groups, so every
@@ -387,29 +374,19 @@ def main() -> None:
     # ~K^2 per group (C(4K,2) verified pairs x 250). Codec work grows
     # K; the claim under test is that blocking stays an equi-join
     # (never all-pairs) and the K^2 term is the OUTPUT, not a scan.
-    from datafusion_functions_variant_spark.operators import phash
+    def image_phash_neardup_depth(label: str) -> None:
+        from datafusion_functions_variant_spark.operators import phash
 
-    per_k = {}
-    for k in KS:
-        ids = spark.range(0, 1000 * k).select(F.col("id").alias("doc_id"))
-        assets = multimodal.synthesize_assets(
-            ids, "doc_id", partial(multimodal.phash_png, group_modulus=250)
-        )
-        sigs = phash.dhash_bands(assets, "asset_id", "payload")
-        pairs = phash.neardup_pairs(sigs, "asset_id", max_hamming=6)
-        samples = []
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            pairs.agg(F.count(F.lit(1)), F.sum("hamming")).collect()
-            if i:
-                samples.append(time.perf_counter() - t0)
-        per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-    results["image_phash_neardup_depth"] = {
-        "per_k": per_k,
-        "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
-    }
-    print(json.dumps({"case": "image_phash_neardup_depth",
-                      **results["image_phash_neardup_depth"]}), flush=True)
+        def setup(k):
+            ids = spark.range(0, 1000 * k).select(F.col("id").alias("doc_id"))
+            assets = multimodal.synthesize_assets(
+                ids, "doc_id", partial(multimodal.phash_png, group_modulus=250)
+            )
+            sigs = phash.dhash_bands(assets, "asset_id", "payload")
+            pairs = phash.neardup_pairs(sigs, "asset_id", max_hamming=6)
+            return lambda: pairs.agg(F.count(F.lit(1)), F.sum("hamming")).collect()
+
+        record(label, over_k(setup))
 
     # --- bespoke case: IDENTICAL-image flood vs the overflow guard
     # (round 9). The depth case above cannot distinguish the join from
@@ -422,79 +399,29 @@ def main() -> None:
     # bucket join would expand C(8000,2) ≈ 32M candidates per band.
     # The emitted pair count is asserted, so a silently-degraded
     # guard fails the probe rather than mis-reporting it.
-    per_k = {}
-    out_k = {}
-    for k in KS:
-        ids = spark.range(0, 1000 * k).select(
-            F.lit(0).cast("long").alias("doc_id")  # constant → identical PNGs
-        )
-        assets = multimodal.synthesize_assets(
-            ids, "doc_id", partial(multimodal.phash_png, group_modulus=1)
-        ).withColumn("asset_id", F.monotonically_increasing_id())
-        sigs = phash.dhash_bands(assets, "asset_id", "payload")
-        pairs = phash.neardup_pairs(
-            sigs, "asset_id", max_hamming=6, max_bucket=256
-        )
-        samples = []
-        n_pairs = None
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            [row] = pairs.agg(F.count(F.lit(1)).alias("n")).collect()
-            n_pairs = row.n
-            if i:
-                samples.append(time.perf_counter() - t0)
-        assert n_pairs == 1000 * k - 1, (
-            f"flood guard degraded: {n_pairs} pairs at n={1000 * k}"
-        )
-        per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-        out_k[k] = n_pairs
-    results["image_phash_flood_guard"] = {
-        "per_k": per_k,
-        "pairs_per_k": out_k,
-        "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
-    }
-    print(json.dumps({"case": "image_phash_flood_guard",
-                      **results["image_phash_flood_guard"]}), flush=True)
+    def image_phash_flood_guard(label: str) -> None:
+        from datafusion_functions_variant_spark.operators import phash
 
-    for label, bits_of in (
-        ("knn_graph_fixed_bits", lambda k: 8),
-        ("knn_graph_scaled_bits", lambda k: 8 + max(0, k.bit_length() - 1)),
-    ):
-        per_k = {}
+        per_k, out_k = {}, {}
         for k in KS:
-            rep = replicate_rotated(k)
-            bits = bits_of(k)
-            samples = []
-            for i in range(RUNS + 1):
-                t0 = time.perf_counter()
-                similarity.knn_graph(
-                    rep, emb_id, emb_vec,
-                    bits_per_band=bits, bands=2, exact=False,
-                ).agg(F.count(F.lit(1)), F.sum("cosine")).collect()
-                if i:
-                    samples.append(time.perf_counter() - t0)
-            per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-        results[label] = {
-            "per_k": per_k,
-            "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
-        }
-        print(json.dumps({"case": label, **results[label]}), flush=True)
-
-    for name, (src, fn) in cases.items():
-        per_k = {}
-        for k in KS:
-            base = docs0 if src == "docs" else emb0
-            rep = replicate(base, k, "doc_id" if src == "docs" else emb_id)
-            samples = []
-            for i in range(RUNS + 1):
-                t0 = time.perf_counter()
-                fn(rep).collect()
-                if i:
-                    samples.append(time.perf_counter() - t0)
-            per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-        growth = round(per_k[KS[-1]] / per_k[KS[0]], 2)
-        results[name] = {"per_k": per_k, "growth_8x": growth}
-        print(json.dumps({"case": name, **results[name]}), flush=True)
+            ids = spark.range(0, 1000 * k).select(
+                F.lit(0).cast("long").alias("doc_id")  # constant → identical PNGs
+            )
+            assets = multimodal.synthesize_assets(
+                ids, "doc_id", partial(multimodal.phash_png, group_modulus=1)
+            ).withColumn("asset_id", F.monotonically_increasing_id())
+            sigs = phash.dhash_bands(assets, "asset_id", "payload")
+            pairs = phash.neardup_pairs(
+                sigs, "asset_id", max_hamming=6, max_bucket=256
+            )
+            per_k[k], [row] = timed(
+                lambda: pairs.agg(F.count(F.lit(1)).alias("n")).collect()
+            )
+            assert row.n == 1000 * k - 1, (
+                f"flood guard degraded: {row.n} pairs at n={1000 * k}"
+            )
+            out_k[k] = row.n
+        record(label, per_k, pairs_per_k=out_k)
 
     # --- bespoke case: transformWithState state-store growth (r10).
     # The registered stream_transform_with_state query over events
@@ -503,103 +430,89 @@ def main() -> None:
     # and the Python state server round-trips K× getValueState /
     # MapState updates. The claim: wall tracks data (~K at worst),
     # never state-size^2 — the state layer adds no superlinear term.
-    from bench import ensure_scaled_dir
-    from datafusion_functions_variant_spark.queries import load_all_queries
+    def stream_transform_with_state_growth(label: str) -> None:
+        from bench import ensure_scaled_dir
+        from datafusion_functions_variant_spark.queries import load_all_queries
 
-    tws = load_all_queries()["stream_transform_with_state"]
-    per_k, out_k = {}, {}
-    for k in KS:
-        tws_dir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            ".tmp_bench",
-            f"tws_probe_k{k}",
+        tws = load_all_queries()["stream_transform_with_state"]
+        per_k, out_k = {}, {}
+        for k in KS:
+            tws_dir = os.path.join(
+                os.path.dirname(os.path.abspath(__file__)),
+                ".tmp_bench",
+                f"tws_probe_k{k}",
+            )
+            ensure_scaled_dir(spark, SF_DIR, k, tws_dir)
+            per_k[k], out_k[k] = timed(lambda: tws.build(spark, tws_dir).count())
+        record(label, per_k, rows_per_k=out_k)
+
+    def history_fingerprints():
+        """md5 content keys of the sf0.1 docs with doc_id % 3 != 0: the
+        history the two streaming-index cases salt K× (md5 of
+        hash#replica), so the DISTINCT index genuinely grows — exact
+        copies would dedup away."""
+        from datafusion_functions_variant_spark.operators.dedup import (
+            normalize_text,
         )
-        ensure_scaled_dir(spark, SF_DIR, k, tws_dir)
-        samples = []
-        n_rows = None
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            n_rows = tws.build(spark, tws_dir).count()
-            if i:
-                samples.append(time.perf_counter() - t0)
-        per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-        out_k[k] = n_rows
-    results["stream_transform_with_state_growth"] = {
-        "per_k": per_k,
-        "rows_per_k": out_k,
-        "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
-    }
-    print(json.dumps({"case": "stream_transform_with_state_growth",
-                      **results["stream_transform_with_state_growth"]}),
-          flush=True)
+
+        docs_src = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+        return docs_src.where(F.col("doc_id") % 3 != 0).select(
+            F.md5(normalize_text("text")).alias("h")
+        )
 
     # --- bespoke case: streaming ingest probe vs K×-replicated
     # HISTORY (r10, verdict #1 done-criterion). The arriving stream is
     # FIXED (sf0.1 docs with doc_id % 3 = 0) while the dedup history
-    # grows K×: replica fingerprints are salted per replica (md5 of
-    # hash#replica) so the DISTINCT index genuinely grows — exact
-    # copies would dedup away. Scale path forced (threshold 0): the
-    # per-batch streaming cost must track the PROBE side, not the
-    # history — the bucketed index is read in place. (Index build +
-    # bloom build are untimed: one-time per history generation.)
-    from datafusion_functions_variant_spark.operators.dedup import (
-        normalize_text,
-    )
-    from datafusion_functions_variant_spark.streaming import core as score
-    from datafusion_functions_variant_spark.streaming.history import (
-        build_history_index,
-    )
+    # grows K×. Scale path forced (threshold 0): the per-batch
+    # streaming cost must track the PROBE side, not the history — the
+    # bucketed index is read in place. (Index build + bloom build are
+    # untimed: one-time per history generation.)
+    def stream_history_probe_vs_k_history(label: str) -> None:
+        from datafusion_functions_variant_spark.operators.dedup import (
+            normalize_text,
+        )
+        from datafusion_functions_variant_spark.streaming import core as score
+        from datafusion_functions_variant_spark.streaming.history import (
+            build_history_index,
+        )
 
-    docs_src = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    base_fp = docs_src.where(F.col("doc_id") % 3 != 0).select(
-        F.md5(normalize_text("text")).alias("h")
-    )
-    per_k = {}
-    for k in KS:
-        hist_k = base_fp if k == 1 else base_fp.unionByName(
-            spark.range(1, k)
-            .crossJoin(base_fp)
-            .select(F.md5(F.concat_ws("#", "h", "id")).alias("h"))
-        )
-        idx = build_history_index(
-            spark,
-            hist_k,
-            "h",
-            table_name=f"hist_probe_k{k}",
-            broadcast_threshold_rows=0,  # force the 100 TB topology
-        )
-        st = score.read_table_stream(spark, SF_DIR, "documents")
-        new_docs = st.where(F.col("doc_id") % 3 == 0).withColumn(
-            "content_hash", F.md5(normalize_text("text"))
-        )
-        # single-pass salted-sentinel probe — the registered query's
-        # exact scale-path shape (one scan, narrow-column shuffle)
-        probe = idx.attach_bitset(new_docs)
-        probe_key = F.when(
-            idx.member("content_hash"), F.col("content_hash")
-        ).otherwise(
-            F.concat(F.lit("#"), (F.col("doc_id") % 64).cast("string"))
-        )
-        survivors = (
-            probe.select("doc_id", probe_key.alias("_pk"))
-            .hint("merge")
-            .join(idx.relation, F.col("_pk") == F.col("h"), "left_anti")
-            .select("doc_id")
-        )
-        samples = []
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            score.run_to_batch(survivors, "append").count()
-            if i:
-                samples.append(time.perf_counter() - t0)
-        per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-    results["stream_history_probe_vs_k_history"] = {
-        "per_k": per_k,
-        "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
-    }
-    print(json.dumps({"case": "stream_history_probe_vs_k_history",
-                      **results["stream_history_probe_vs_k_history"]}),
-          flush=True)
+        base_fp = history_fingerprints()
+        per_k = {}
+        for k in KS:
+            hist_k = base_fp if k == 1 else base_fp.unionByName(
+                spark.range(1, k)
+                .crossJoin(base_fp)
+                .select(F.md5(F.concat_ws("#", "h", "id")).alias("h"))
+            )
+            idx = build_history_index(
+                spark,
+                hist_k,
+                "h",
+                table_name=f"hist_probe_k{k}",
+                broadcast_threshold_rows=0,  # force the 100 TB topology
+            )
+            st = score.read_table_stream(spark, SF_DIR, "documents")
+            new_docs = st.where(F.col("doc_id") % 3 == 0).withColumn(
+                "content_hash", F.md5(normalize_text("text"))
+            )
+            # single-pass salted-sentinel probe — the registered query's
+            # exact scale-path shape (one scan, narrow-column shuffle)
+            probe = idx.attach_bitset(new_docs)
+            probe_key = F.when(
+                idx.member("content_hash"), F.col("content_hash")
+            ).otherwise(
+                F.concat(F.lit("#"), (F.col("doc_id") % 64).cast("string"))
+            )
+            survivors = (
+                probe.select("doc_id", probe_key.alias("_pk"))
+                .hint("merge")
+                .join(idx.relation, F.col("_pk") == F.col("h"), "left_anti")
+                .select("doc_id")
+            )
+            per_k[k] = timed(
+                lambda: score.run_to_batch(survivors, "append").count()
+            )[0]
+        record(label, per_k)
 
     # --- bespoke case: self-updating ingest index, steady-state
     # per-batch cost vs index SIZE (the stream_dedup_index_update
@@ -612,56 +525,99 @@ def main() -> None:
     # claim: per-batch cost tracks the BATCH plus one in-place index
     # scan — no index shuffle, no per-batch distinct over the store,
     # and the O(batch) bitset merge stays flat in K.
-    import shutil as _sh
+    def stream_index_update_batch_cost(label: str) -> None:
+        import shutil as _sh
 
-    from datafusion_functions_variant_spark.streaming.history import (
-        GenerationalHistoryIndex,
-    )
+        from datafusion_functions_variant_spark.operators.dedup import (
+            normalize_text,
+        )
+        from datafusion_functions_variant_spark.streaming.history import (
+            GenerationalHistoryIndex,
+        )
 
-    batch_fp = (
-        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-        .where(F.col("doc_id") % 3 == 0)
-        .select("doc_id", F.md5(normalize_text("text")).alias("h"))
-        .localCheckpoint(eager=True)
-    )
-    upd_base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".tmp_bench", "idx_update_probe"
-    )
-    n_base = base_fp.count()
-    per_k = {}
-    for k in KS:
-        tbl = f"idx_update_probe_k{k}"
-        tdir = os.path.join(upd_base, tbl)
-        _sh.rmtree(tdir, ignore_errors=True)
-        idx = GenerationalHistoryIndex(
-            spark, tbl, "h", path=tdir, expected_keys=(k + 1) * n_base,
-            overwrite=True,
+        base_fp = history_fingerprints()
+        batch_fp = (
+            spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+            .where(F.col("doc_id") % 3 == 0)
+            .select("doc_id", F.md5(normalize_text("text")).alias("h"))
+            .localCheckpoint(eager=True)
         )
-        seed = spark.range(1, k + 1).crossJoin(base_fp).select(
-            F.md5(F.concat_ws("#", "h", "id")).alias("h")
+        upd_base = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), ".tmp_bench", "idx_update_probe"
         )
-        idx.append(seed.distinct(), batch_id=0)  # untimed: the accumulated history
-        samples = []
-        for i in range(RUNS + 1):
-            t0 = time.perf_counter()
-            idx.dup_flags(batch_fp, "doc_id").agg(
-                F.count(F.lit(1)), F.sum("is_dup")
-            ).collect()
-            idx.append(idx.novel_keys(batch_fp), batch_id=i + 1)
-            if i:
-                samples.append(time.perf_counter() - t0)
-        per_k[k] = round(sorted(samples)[len(samples) // 2], 3)
-    results["stream_index_update_batch_cost"] = {
-        "per_k": per_k,
-        "growth_8x": round(per_k[KS[-1]] / per_k[KS[0]], 2),
+        n_base = base_fp.count()
+        per_k = {}
+        for k in KS:
+            tbl = f"idx_update_probe_k{k}"
+            tdir = os.path.join(upd_base, tbl)
+            _sh.rmtree(tdir, ignore_errors=True)
+            idx = GenerationalHistoryIndex(
+                spark, tbl, "h", path=tdir, expected_keys=(k + 1) * n_base,
+                overwrite=True,
+            )
+            seed = spark.range(1, k + 1).crossJoin(base_fp).select(
+                F.md5(F.concat_ws("#", "h", "id")).alias("h")
+            )
+            idx.append(seed.distinct(), batch_id=0)  # untimed: the accumulated history
+            batch_id = iter(range(1, RUNS + 2))
+
+            def transaction():
+                idx.dup_flags(batch_fp, "doc_id").agg(
+                    F.count(F.lit(1)), F.sum("is_dup")
+                ).collect()
+                idx.append(idx.novel_keys(batch_fp), batch_id=next(batch_id))
+
+            per_k[k] = timed(transaction)[0]
+        record(label, per_k)
+
+    # run order = declaration order; a case records every label it owns
+    cases = {
+        "incremental_index_probe_fixed_batch": incremental_index_probe,
+        "pipeline_crawl_to_shards": pipeline_crawl_to_shards,
+        "snapshot_diff_fixed_drift": snapshot_diff_fixed_drift,
+        "rollup_ivm": rollup_ivm,
+        "image_phash_neardup_depth": image_phash_neardup_depth,
+        "image_phash_flood_guard": image_phash_flood_guard,
+        "knn_graph_fixed_bits": knn_graph(lambda k: 8),
+        "knn_graph_scaled_bits": knn_graph(
+            lambda k: 8 + max(0, k.bit_length() - 1)
+        ),
+        "dedup_minhash_lsh_xxhash": generic("docs", minhash_lsh),
+        "dedup_substring_spans": generic("docs", substring_spans),
+        "text_quality_stats": generic("docs", token_quality),
+        "vocab_token_agg": generic("docs", vocab_agg),
+        "similarity_dot_topk": generic("emb", dot_topk),
+        "classifier_broadcast_score": generic("docs", classifier_score),
+        "multimodal_png_decode": generic("docs", png_decode_pipeline),
+        "stream_transform_with_state_growth": stream_transform_with_state_growth,
+        "stream_history_probe_vs_k_history": stream_history_probe_vs_k_history,
+        "stream_index_update_batch_cost": stream_index_update_batch_cost,
     }
-    print(json.dumps({"case": "stream_index_update_batch_cost",
-                      **results["stream_index_update_batch_cost"]}),
-          flush=True)
+    unknown = [n for n in names if n not in cases]
+    if unknown:
+        raise SystemExit(
+            f"unknown case(s) {', '.join(unknown)}; known: {', '.join(cases)}"
+        )
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    spark = get_session(
+        app_name="scale_probe", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 16)
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+
+    docs0 = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
+        "doc_id", "text", "lang"
+    )
+    emb0 = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    emb_id, emb_vec = emb0.columns[0], emb0.columns[1]
+
+    for name, case in cases.items():
+        if not names or name in names:
+            case(name)
 
     print(json.dumps({"metric": "scale_probe", "sf": SF_DIR, "results": results}))
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

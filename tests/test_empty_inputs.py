@@ -25,7 +25,7 @@ def test_exact_dedup_empty(spark):
 
 
 def test_minhash_empty(spark):
-    sigs = dedup.minhash_signatures_text(_empty_docs(spark), "text", "doc_id", n=8, num_hashes=8)
+    sigs = dedup.minhash_signatures(_empty_docs(spark), "text", "doc_id", n=8, num_hashes=8)
     assert sigs.count() == 0
     assert dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2).count() == 0
 
@@ -149,7 +149,7 @@ def test_lsh_pairs_with_observation_empty(spark):
 
     from datafusion_functions_variant_spark.plans.observe import observed_metrics
 
-    sigs = dedup.minhash_signatures_text(
+    sigs = dedup.minhash_signatures(
         _empty_docs(spark), "text", "doc_id", n=8, num_hashes=8
     )
     obs = Observation()

@@ -298,19 +298,6 @@ def test_fan_out_repartitions_only_narrow_inputs(spark):
     assert fan_out(wide).rdd.getNumPartitions() == 64  # untouched
 
 
-def test_minhash_text_matches_grams_formulation(spark):
-    """The narrow signature path must produce IDENTICAL signatures to
-    the grams-relation formulation (min is duplicate-insensitive)."""
-    from datafusion_functions_variant_spark.operators import dedup
-    from datafusion_functions_variant_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(200)
-    grams = dedup.char_ngrams(docs, "text", "doc_id", n=8)
-    a = dedup.minhash_signatures(grams, "doc_id", num_hashes=4)
-    b = dedup.minhash_signatures_text(docs, "text", "doc_id", n=8, num_hashes=4)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_multimodal_decoder_seam(spark):
     """The MediaDecoder seam: without a decoder featurize_binary emits
     exactly MEDIA_META_SCHEMA (the oracle-checked default must not

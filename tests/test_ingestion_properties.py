@@ -94,11 +94,11 @@ def test_incremental_probe_flags_every_exact_duplicate(spark):
     corpus = spark.createDataFrame(corpus_rows, ["doc_id", "text"])
     incoming = spark.createDataFrame(incoming_rows, ["doc_id", "text"])
 
-    sigs_c = dedup.minhash_signatures_text(corpus, "text", "doc_id", n=8, num_hashes=8)
+    sigs_c = dedup.minhash_signatures(corpus, "text", "doc_id", n=8, num_hashes=8)
     index = dedup.banded_rows_inrow(sigs_c, "doc_id", 8, 2).select(
         "band_id", "band_hash"
     ).distinct()
-    probe = dedup.minhash_signatures_inrow(
+    probe = dedup.minhash_signatures(
         incoming, "text", "doc_id", n=8, num_hashes=8, keep=["doc_id"]
     )
     bands_i = dedup.banded_rows_inrow(probe, "doc_id", num_hashes=8, bands=2)
@@ -294,7 +294,7 @@ def test_chunk_near_flags_repeated_chunks_across_docs(spark):
     ch = df.select(
         "doc_id", F.posexplode(chunks).alias("pos", "chunk")
     ).withColumn("key", F.col("doc_id") * 4096 + F.col("pos"))
-    sigs = dedup.minhash_signatures_inrow(
+    sigs = dedup.minhash_signatures(
         ch.where(F.length("chunk") >= 8).select("key", "chunk"),
         "chunk", "key", n=8, num_hashes=8, keep=["key"],
     )

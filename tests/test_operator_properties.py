@@ -187,7 +187,7 @@ def test_lsh_overflow_bucket_emits_star_pairs_not_all_pairs(spark):
         F.col("id").alias("doc_id"),
         F.lit("the same boilerplate license header text").alias("text"),
     )
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id")
     pairs = dedup.lsh_candidate_pairs(
         sigs, "doc_id", num_hashes=8, bands=2, max_bucket=256
     )
@@ -234,7 +234,7 @@ def _near_dup_case(spark, op):
         base = "abcdefghijklmnopqrstuvwxyz0123456789"
         rows = [(i, base + str(i // 4) * 3) for i in range(40)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
+        sigs = dedup.minhash_signatures(docs, "text", "doc_id")
         return (
             lambda cap, observation=None: dedup.lsh_candidate_pairs(
                 sigs, "doc_id", num_hashes=8, bands=2, max_bucket=cap,
@@ -391,7 +391,7 @@ def test_minhash_xxhash_family_recalls_exact_dup_pairs(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     def full_band_pairs(hash_fn):
-        sigs = dedup.minhash_signatures_text(
+        sigs = dedup.minhash_signatures(
             docs, "text", "doc_id", n=8, num_hashes=8, hash_fn=hash_fn
         )
         pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
@@ -776,38 +776,80 @@ def test_ivf_full_probe_matches_naive_cosine(spark):
     assert got == want
 
 
-def test_inrow_minhash_matches_explode_groupby_formulation(spark):
-    """The zero-shuffle in-row minhash must produce byte-identical
-    signatures to the explode+groupBy formulation on random docs —
-    min over the same gram multiset, two plans, one answer."""
+def _reference_minhash(text, n=8, num_hashes=8):
+    """Pure-Python MinHash of one text: each distinct n-gram's md5,
+    its first 15 hex digits as an integer, xor-permuted by
+    ``XOR_CONSTS[h]``, minimum per permutation. A text shorter than
+    ``n`` (or NULL) has no grams: all-None."""
+    import hashlib
+
+    from datafusion_functions_variant_spark.operators.dedup import XOR_CONSTS
+
+    if text is None or len(text) < n:
+        return (None,) * num_hashes
+    xs = {
+        int(hashlib.md5(text[i:i + n].encode()).hexdigest()[:15], 16)
+        for i in range(len(text) - n + 1)
+    }
+    return tuple(min(x ^ XOR_CONSTS[h] for x in xs) for h in range(num_hashes))
+
+
+def test_minhash_signatures_match_python_reference(spark):
+    """The signer equals a pure-Python MinHash row for row on random
+    docs, short (no grams → all-NULL) and NULL ones included, and
+    carries ``keep`` through (default: the id alone)."""
     from datafusion_functions_variant_spark.operators import dedup
 
     rng = random.Random(33)
-    alphabet = "abcdefghij "
+    alphabet = "abcdefghij é"
     rows = [
         (i, "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 60))))
         for i in range(80)
-    ]
+    ] + [(80, None)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    agg = {
-        r.doc_id: tuple(r[f"mh{h}"] for h in range(8))
-        for r in dedup.minhash_signatures_text(
-            docs, "text", "doc_id", n=8, num_hashes=8
-        ).collect()
-    }
-    inrow = {
-        r.doc_id: tuple(r[f"mh{h}"] for h in range(8))
-        for r in dedup.minhash_signatures_inrow(
-            docs, "text", "doc_id", n=8, num_hashes=8, keep=["doc_id"]
-        ).collect()
-    }
-    # docs shorter than the gram width produce no grams: absent from
-    # the groupBy formulation, all-NULL signature in the in-row one
-    for doc_id, sig in inrow.items():
-        if doc_id in agg:
-            assert sig == agg[doc_id], doc_id
-        else:
-            assert sig == (None,) * 8, doc_id
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
+    assert sigs.columns == ["doc_id", *[f"mh{h}" for h in range(8)]]
+    got = {r[0]: tuple(r[1:]) for r in sigs.collect()}
+    assert got == {i: _reference_minhash(t) for i, t in rows}
+    assert any(t is not None and len(t) < 8 for _, t in rows)
+
+    kept = dedup.minhash_signatures(
+        docs, "text", "doc_id", n=8, num_hashes=2, keep=["doc_id", "text"]
+    )
+    assert kept.columns == ["doc_id", "text", "mh0", "mh1"]
+
+
+def test_short_documents_never_pair(spark):
+    """A text shorter than the gram width (or empty, or NULL) has no
+    grams, so no bucket: LSH never pairs it, however many such docs
+    there are, and the bucket audit counts no NULL bucket — the pairs
+    and the audit equal those of the long documents alone."""
+    from datafusion_functions_variant_spark.operators import dedup
+
+    rng = random.Random(7)
+    base = "".join(rng.choice("abcdefghij ") for _ in range(200))
+    long_docs = [(i, base) for i in range(4)] + [(4, base + "k"), (5, "k" + base)]
+    short_docs = [(10, "abc"), (11, "abcdefg"), (12, "xyz"), (13, ""), (14, None)]
+    docs = spark.createDataFrame(long_docs + short_docs, "doc_id long, text string")
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id", n=8, num_hashes=8)
+    long_sigs = sigs.where(F.col("doc_id") < 10)
+
+    def pairs_of(s):
+        return {
+            (r.doc_a, r.doc_b)
+            for r in dedup.lsh_candidate_pairs(s, "doc_id", 8, 2).collect()
+        }
+
+    pairs = pairs_of(sigs)
+    assert not any(a >= 10 or b >= 10 for a, b in pairs), pairs
+    assert pairs == pairs_of(long_sigs)
+    # the exact copies share every bucket
+    assert {(a, b) for a in range(4) for b in range(a + 1, 4)} <= pairs
+
+    def stats_of(s):
+        return dedup.lsh_bucket_stats(s, "doc_id", 8, 2).collect()[0].asDict()
+
+    assert stats_of(sigs) == stats_of(long_sigs)
 
 
 def test_cusum_changepoint_matches_bruteforce(spark):
@@ -1421,66 +1463,49 @@ def test_fan_out_repartitions_only_when_under_target(spark):
     assert fan_out(wide, min_partitions=4) is wide  # already saturated
 
 
-def test_minhash_signatures_gram_input_and_hash_guard(spark):
-    """The grams-input form must equal the _text convenience wrapper
-    on the same documents (same grams → same signature), and an
-    unknown hash_fn must raise."""
+def test_gram_hash_rejects_unknown_hash_fn(spark):
     import pytest
 
-    from datafusion_functions_variant_spark.operators.dedup import (
-        char_ngrams,
-        gram_hash,
-        minhash_signatures,
-        minhash_signatures_text,
-    )
+    from datafusion_functions_variant_spark.operators.dedup import gram_hash
 
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps"), (2, "pack my box with five dozen")],
-        ["doc_id", "text"],
-    )
-    via_grams = minhash_signatures(
-        char_ngrams(docs, "text", "doc_id"), "doc_id", num_hashes=4
-    )
-    via_text = minhash_signatures_text(docs, "text", "doc_id", num_hashes=4)
-    assert sorted(map(tuple, via_grams.collect())) == sorted(
-        map(tuple, via_text.collect())
-    )
     with pytest.raises(ValueError, match="unknown hash_fn"):
         gram_hash(F.lit("x"), "sha9000")
 
 
-def test_minhash_signatures_text_canonical_equals_plain(spark):
+def test_minhash_signatures_canonical_equals_plain(spark):
     """The canonicalize-first form (sign each DISTINCT text once, join
     signatures back by content hash) must return EXACTLY the plain
     form's rows — same (id, mh*) per document, one row per id — on a
-    duplicate-heavy corpus, for both hash families."""
+    duplicate-heavy corpus with a text too short to sign, for both
+    hash families."""
     from datafusion_functions_variant_spark.operators.dedup import (
-        minhash_signatures_text,
-        minhash_signatures_text_canonical,
+        minhash_signatures,
+        minhash_signatures_canonical,
     )
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
         "pack my box with five dozen liquor jugs",
         "sphinx of black quartz judge my vow",
+        "tiny",
     ]
-    # 30 docs over 3 distinct texts — the exact-dup mass the canonical
+    # 32 docs over 4 distinct texts — the exact-dup mass the canonical
     # form exists for
     docs = spark.createDataFrame(
-        [(i, texts[i % 3]) for i in range(30)], ["doc_id", "text"]
+        [(i, texts[i % 4]) for i in range(32)], ["doc_id", "text"]
     )
     for hash_fn in ("md5", "xxhash64"):
-        plain = minhash_signatures_text(
+        plain = minhash_signatures(
             docs, "text", "doc_id", num_hashes=4, hash_fn=hash_fn
         )
-        canon = minhash_signatures_text_canonical(
+        canon = minhash_signatures_canonical(
             docs, "text", "doc_id", num_hashes=4, hash_fn=hash_fn
         )
         assert canon.columns == plain.columns
         rows_p = sorted(map(tuple, plain.collect()))
         rows_c = sorted(map(tuple, canon.collect()))
         assert rows_c == rows_p
-        assert len({r[0] for r in rows_c}) == 30  # one row per doc id
+        assert len({r[0] for r in rows_c}) == 32  # one row per doc id
 
 
 def test_text_content_key_fields_and_canonical_plan(spark, monkeypatch):
@@ -1521,7 +1546,7 @@ def test_text_content_key_fields_and_canonical_plan(spark, monkeypatch):
     )
 
     def plan() -> str:
-        out = dedup.minhash_signatures_text_canonical(
+        out = dedup.minhash_signatures_canonical(
             docs, "text", "doc_id", num_hashes=4, hash_fn="xxhash64"
         )
         return out._jdf.queryExecution().executedPlan().toString()

@@ -216,15 +216,17 @@ def test_scd2_windows_share_one_shuffle(spark):
 
 
 def test_minhash_signatures_have_no_gram_exchange(spark):
-    # narrow gram path: the only exchanges are the doc-level agg and
-    # the band bucket agg -- the raw gram stream itself never shuffles
+    # in-row signing: the grams are hashed and min-reduced inside one
+    # projection, so neither the gram stream nor the doc ids shuffle
     from datafusion_functions_variant_spark.operators import dedup
     from datafusion_functions_variant_spark.sources.tables import load_table
 
     docs = load_table(spark, SF, "documents")
-    sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id")
     plan = sigs._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1  # only the groupBy(doc_id)
+    assert plan.count("Exchange") == 0
+    for node in ("Generate", "HashAggregate"):
+        assert node not in plan, node
 
 
 def test_runtime_bloom_filter_injection(spark):
@@ -685,6 +687,9 @@ def test_band_sweep_no_pair_materialization(spark):
     plan = plan_of(spark, "dedup_lsh_band_sweep")
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
+    # one in-row signing projection (8 permutations) feeds all three
+    # splits: a per-split branch would sign every document again
+    assert plan.count("array_min(") == 8
 
 
 def test_norm_profile_single_agg_no_join(spark):
@@ -1144,7 +1149,7 @@ def _near_dup_pairs(spark, op):
         return sigs, phash.neardup_pairs(sigs, "asset_id"), ["bi", "bv"]
     docs = load_table(spark, SF, "documents")
     if op == "minhash":
-        sigs = dedup.minhash_signatures_text(docs, "text", "doc_id")
+        sigs = dedup.minhash_signatures(docs, "text", "doc_id")
         pairs = dedup.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=2)
         return sigs, pairs, ["band_id", "band_hash"]
     sigs = dedup.simhash_signatures(docs, "text", "doc_id")

@@ -1123,24 +1123,19 @@ def to_json_str(value_buf: bytes, metadata_buf: bytes) -> str:
 def get_path(
     value_buf: bytes, metadata_buf: bytes, path: str
 ) -> Any:
-    """Evaluate a JSON path like ``$.a.b[2].c`` against a variant pair.
+    """Evaluate a JSON path like ``$.a.b[2].c`` against a variant pair:
+    the Python value at the path, or None if it is absent. Key
+    resolution is one ``Metadata.find_string`` per step (the
+    reference's amortization point, open-variant/README.md:55-57).
 
-    Key resolution happens once per call via ``Metadata.find_string``
-    (an index lookup) — the reference's amortization point
-    (open-variant/README.md:55-57). Returns a Python value or None if the
-    path is absent.
-
-    Batch callers (the pandas UDFs) should instead parse the path once
-    with ``parse_json_path``, take the metadata and field ids from a
-    ``BatchDecoder``, and evaluate rows via ``walk_path`` /
-    ``get_path_prepared`` — rows with the same key set share one
-    metadata blob, so per-row Metadata construction + dictionary
-    lookups are overhead (this was ~5x the cost of the actual decode
-    when every row carried the batch's whole dictionary).
+    Batch callers (``functions/explicit.py::_get_row``) instead parse
+    the path once and take the Metadata and field ids of each shared
+    metadata blob from a ``BatchDecoder``, then ``walk_path`` per row.
     """
     metadata = Metadata(metadata_buf)
     steps = parse_json_path(path)
-    return get_path_prepared(value_buf, metadata, steps, resolve_steps(metadata, steps))
+    v = walk_path(value_buf, steps, resolve_steps(metadata, steps), metadata.sorted_strings)
+    return None if v is None else to_python(v, metadata)
 
 
 def resolve_steps(metadata: "Metadata", steps: list) -> list:
@@ -1173,18 +1168,9 @@ def walk_path(
     return v
 
 
-def get_path_prepared(
-    value_buf: bytes, metadata: "Metadata", steps: list, fids: list
-) -> Any:
-    """``get_path`` with all row-invariant work hoisted out."""
-    v = walk_path(value_buf, steps, fids, metadata.sorted_strings)
-    if v is None:
-        return None
-    return to_python(v, metadata)
-
-
 def parse_json_path(path: str) -> list[str | int]:
-    """``$.a.b[2]['c d']`` → ['a', 'b', 2, 'c d']."""
+    """``$.a.b[2]['c d']`` → ['a', 'b', 2, 'c d']. Any malformed path
+    (``a.b``, ``$..a``, ``$[x]``, ``$[1``, ``$['a``) raises ``VariantError``."""
     if not path.startswith("$"):
         raise VariantError(f"JSON path must start with $: {path!r}")
     steps: list[str | int] = []
@@ -1202,12 +1188,14 @@ def parse_json_path(path: str) -> list[str | int]:
             steps.append(path[i:j])
             i = j
         elif c == "[":
-            j = path.index("]", i)
-            inner = path[i + 1 : j]
-            if inner and inner[0] in "'\"":
+            j = path.find("]", i)
+            inner = path[i + 1 : j] if j > 0 else ""
+            if len(inner) >= 2 and inner[0] in "'\"" and inner[-1] == inner[0]:
                 steps.append(inner[1:-1])
-            else:
+            elif inner.isascii() and inner.isdigit():
                 steps.append(int(inner))
+            else:
+                raise VariantError(f"bad JSON path step at {i} in {path!r}")
             i = j + 1
         else:
             raise VariantError(f"bad JSON path syntax at {i} in {path!r}")

@@ -21,15 +21,19 @@ Scale notes:
 * These UDFs are opaque to Catalyst (no pushdown through them) — keep
   them at ingestion/extraction edges and shred hot fields early
   (functions/variant.py:shred).
+
+The typed getters are one kernel with two entry points, a literal path
+(``variant_get``, ``variant_extract``) and a path column
+(``variant_get_path_column``): both run each row through ``_get_row``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import re
+from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
     BinaryType,
@@ -42,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from .. import codec
+from .variant import _col
 
 #: Physical schema of an explicit-track variant column — mirrors the
 #: reference's StructArray layout (json.rs:67-80).
@@ -80,6 +85,7 @@ _GETTER_TYPES = {
     "double": DoubleType(),
     "string": StringType(),
     "boolean": BooleanType(),
+    "typeof": StringType(),  # the runtime type name at the path
 }
 
 
@@ -107,87 +113,130 @@ def variant_extract(col, fields: dict[str, tuple[str, str]]) -> Column:
     getter UDFs each re-ship metadata+value bytes over the Arrow
     channel and re-walk the buffers; fused, both costs are paid once.
     """
-    specs: list[tuple[str, list, str]] = []
-    out_fields: list[StructField] = []
-    for name, (path, dtype) in fields.items():
-        if dtype != "typeof" and dtype not in _GETTER_TYPES:
-            raise ValueError(f"dtype must be 'typeof' or one of {sorted(_GETTER_TYPES)}")
-        specs.append((name, codec.parse_json_path(path), dtype))
-        out_fields.append(
-            StructField(name, StringType() if dtype == "typeof" else _GETTER_TYPES[dtype])
-        )
-
     # Specs that share a json path are grouped: per row the shared
     # path is walked once and decoded to Python once, and each member
     # only pays its own coercion — a bigint + string getter on $.k
     # cost one walk_path + one to_python, not two of each (round 15:
     # decode measured 0.64x on the bench key's spec shape).
-    groups: list[tuple[tuple, list[tuple[str, str]]]] = []
-    _by_path: dict[tuple, int] = {}
-    for name, steps, dtype in specs:
-        gi = _by_path.setdefault(tuple(steps), len(groups))
-        if gi == len(groups):
-            groups.append((tuple(steps), []))
-        groups[gi][1].append((name, dtype))
+    groups: dict[tuple, list[tuple[str, str]]] = {}
+    out_fields: list[StructField] = []
+    for name, (path, dtype) in fields.items():
+        if dtype not in _GETTER_TYPES:
+            raise ValueError(f"dtype must be one of {sorted(_GETTER_TYPES)}")
+        groups.setdefault(tuple(codec.parse_json_path(path)), []).append((name, dtype))
+        out_fields.append(StructField(name, _GETTER_TYPES[dtype]))
 
     @pandas_udf(StructType(out_fields))
     def _extract(v: pd.DataFrame) -> pd.DataFrame:
         dec = codec.BatchDecoder()
-        data: dict[str, list] = {name: [] for name, _, _ in specs}
+        data: dict[str, list] = {name: [] for name in fields}
         for mb, vb in zip(v["metadata"], v["value"]):
             if vb is None or mb is None:
-                for name, _, _ in specs:
-                    data[name].append(None)
+                for column in data.values():
+                    column.append(None)
                 continue
-            mkey = bytes(mb)
-            m = dec.metadata(mkey)
-            vbytes = bytes(vb)
-            for steps, outs in groups:
-                try:
-                    node = codec.walk_path(
-                        vbytes, steps, dec.fids(mkey, steps), m.sorted_strings
-                    )
-                except codec.VariantError:
-                    node = None
-                py = None
-                decoded = False
-                for name, dtype in outs:
-                    if node is None:
-                        data[name].append(None)
-                    elif dtype == "typeof":
-                        data[name].append(node.type_name())
-                    else:
-                        if not decoded:
-                            decoded = True
-                            try:
-                                py = codec.to_python(node, m)
-                            except codec.VariantError:
-                                py = None
-                        data[name].append(_coerce(py, dtype))
-        return pd.DataFrame(data)
+            mkey, vbytes = bytes(mb), bytes(vb)
+            for steps, outs in groups.items():
+                _get_row(dec, mkey, vbytes, steps, outs, data)
+        # object columns: pandas would read an int column that holds a
+        # None as float64, which rounds past 2^53 and overflows at 2^63-1
+        return pd.DataFrame(data, dtype=object)
 
     return _extract(_col(col))
 
 
+def variant_get_path_column(dtype: str):
+    """``variant_get`` with the JSON path as a column, behind the SQL
+    ``codec_get_*`` names. Each distinct path parses once per batch; a
+    NULL or malformed path reads NULL."""
+
+    @pandas_udf(_GETTER_TYPES[dtype])
+    def _get(v: pd.DataFrame, paths: pd.Series) -> pd.Series:
+        dec = codec.BatchDecoder()
+        parsed: dict = {None: None}
+        out: list = []
+        data, member = {"v": out}, (("v", dtype),)
+        for mb, vb, path in zip(v["metadata"], v["value"], paths):
+            if path not in parsed:
+                try:
+                    parsed[path] = tuple(codec.parse_json_path(path))
+                except codec.VariantError:
+                    parsed[path] = None
+            if vb is None or mb is None or parsed[path] is None:
+                out.append(None)
+            else:
+                _get_row(dec, bytes(mb), bytes(vb), parsed[path], member, data)
+        return pd.Series(out, dtype=object)
+
+    return _get
+
+
+def _get_row(dec: codec.BatchDecoder, mkey: bytes, vbytes: bytes, steps: tuple,
+             outs, data: dict) -> None:
+    """The getter step of both entry points, for one row and one parsed
+    path: walk ``steps`` once, decode the node to Python at most once,
+    and append each ``(name, dtype)`` member's value to ``data[name]``."""
+    m = dec.metadata(mkey)
+    try:
+        node = codec.walk_path(vbytes, steps, dec.fids(mkey, steps), m.sorted_strings)
+    except codec.VariantError:
+        node = None
+    py, decoded = None, False
+    for name, dtype in outs:
+        if node is None:
+            data[name].append(None)
+        elif dtype == "typeof":
+            data[name].append(node.type_name())
+        else:
+            if not decoded:
+                decoded = True
+                try:
+                    py = codec.to_python(node, m)
+                except codec.VariantError:
+                    py = None
+            data[name].append(_coerce(py, dtype))
+
+
+#: Spark's casts of a string (``try_variant_get`` of a JSON string): a
+#: bigint trims bytes <= 0x20 and DEL around ASCII digits; a double trims
+#: bytes <= 0x20 around Java's decimal syntax or Spark's inf/nan words
+#: (Java's hex floats are left out).
+_BIGINT_TEXT = re.compile(r"[\0- \x7f]*([+-]?[0-9]+)[\0- \x7f]*")
+_DOUBLE_TEXT = re.compile(
+    r"[\0- ]*(?:([+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?)[fFdD]?"
+    r"|([+-]?(?:NaN|Infinity)|(?i:[+-]?inf(?:inity)?|nan)))[\0- ]*"
+)
+
+
 def _coerce(py, dtype: str):
+    """A decoded value as ``dtype``, or None where Spark's
+    ``try_variant_get`` gives NULL. Two classes keep Track C's own
+    reading (ARCHITECTURE.md, "Track N vs Track C"): a boolean is read
+    only from a boolean, and a double renders as Python's ``str``."""
     if py is None:
         return None
-    try:
-        if dtype == "bigint":
-            return int(py) if not isinstance(py, (list, dict)) else None
-        if dtype == "double":
-            return float(py) if not isinstance(py, (list, dict)) else None
-        if dtype == "boolean":
-            return py if isinstance(py, bool) else None
-        if dtype == "string":
-            if isinstance(py, (list, dict)):
-                return codec._render_json(py)
-            if isinstance(py, bool):
-                return "true" if py else "false"
-            return str(py)
-    except (TypeError, ValueError):
-        return None
-    return None
+    if dtype == "bigint":
+        if isinstance(py, str):
+            m = _BIGINT_TEXT.fullmatch(py)
+            py = int(m.group(1)) if m else None
+        elif isinstance(py, float):
+            # as Spark: NULL unless floor/ceil fit, then saturate (2^63 → 2^63-1)
+            py = min(int(py), 2**63 - 1) if -(2.0**63) <= py <= 2.0**63 else None
+        elif not isinstance(py, (int, Decimal)):
+            return None
+        return int(py) if py is not None and -(2**63) <= py < 2**63 else None
+    if dtype == "double":
+        if isinstance(py, str):
+            m = _DOUBLE_TEXT.fullmatch(py)
+            return float(m.group(1) or m.group(2)) if m else None
+        return float(py) if isinstance(py, (int, float, Decimal)) else None
+    if dtype == "boolean":
+        return py if isinstance(py, bool) else None
+    if isinstance(py, (list, dict)):
+        return codec._render_json(py)
+    if isinstance(py, bool):
+        return "true" if py else "false"
+    return str(py)
 
 
 @pandas_udf(StringType())
@@ -218,10 +267,6 @@ def is_variant_null(v: pd.DataFrame) -> pd.Series:
     for vb in v["value"]:
         out.append(None if vb is None else codec.Variant(bytes(vb)).is_null())
     return pd.Series(out, dtype=object)
-
-
-def _col(c) -> Column:
-    return c if isinstance(c, Column) else F.col(c)
 
 
 @pandas_udf(VARIANT_STRUCT)

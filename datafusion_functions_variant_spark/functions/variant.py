@@ -26,9 +26,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-ColumnOrName = "Column | str"
-
-
 def _col(c) -> Column:
     return c if isinstance(c, Column) else F.col(c)
 

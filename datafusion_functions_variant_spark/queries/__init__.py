@@ -199,7 +199,10 @@ def spec_hash(spec: QuerySpec) -> str:
     CALLS (operators/*.py) don't move this hash — the rotating
     re-verify sample and the local oracle-parity suite cover that gap;
     builders that are thin wrappers over a query-specific helper must
-    declare it in ``hash_deps`` so the primary logic stays covered."""
+    declare it in ``hash_deps`` so the primary logic stays covered.
+    The checkout's own path is normalised out of the oracle (one
+    embeds a scratch file under the repository root), so every
+    checkout of the same code has the same hash."""
     import hashlib
     import inspect
 
@@ -211,7 +214,7 @@ def spec_hash(spec: QuerySpec) -> str:
 
     parts = [src_of(spec.build)]
     parts.extend(src_of(dep) for dep in spec.hash_deps)
-    parts.append(spec.oracle or "")
+    parts.append((spec.oracle or "").replace(_repo_root(), "<repo>"))
     return hashlib.md5("\x00".join(parts).encode()).hexdigest()
 
 

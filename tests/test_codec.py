@@ -671,6 +671,9 @@ def test_to_python_declared_only_ids_and_path_walk_misses():
         c.parse_json_path("$..x")  # empty step
     with pytest.raises(c.VariantError):
         c.parse_json_path("$x")  # bad syntax after root
+    for bad in ("$[x]", "$[1", "$['a", "$['a]", "$[-1]", "$[]"):
+        with pytest.raises(c.VariantError):  # never a bare ValueError
+            c.parse_json_path(bad)
     with pytest.raises(c.VariantError):
         c._render_json(object())  # not JSON serializable
 

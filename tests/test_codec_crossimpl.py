@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import math
+import re
 
 import pytest
 from hypothesis import given, settings
@@ -375,6 +376,157 @@ def test_cross_track_json_contract(spark):
             _strict_loads(got_c)
     # variant_get(..., 'string') on a container renders the same way
     assert _coerce({"a": [math.inf, "é"]}, "string") == '{"a":["Infinity","é"]}'
+
+
+# --- Track N vs Track C: the typed getters ----------------------------------
+#
+# (JSON at ``$.a``, dtype, Track N ``try_variant_get(parse_json(t))``,
+# Track C ``variant_get(variant_from_json(t))``). Track C follows Track
+# N except on the classes ARCHITECTURE.md's "Track N vs Track C" table
+# documents: boolean reads only a boolean, a double renders as Python's
+# ``str`` (a Float64 by the reference's data model), and a hex-float
+# string is no double. All rows run in one query: one raising value
+# fails them all.
+_BIG = "123456789012345678901234"
+GETTER_ROWS = [
+    ("1e20", "bigint", None, None),
+    ("1.5e300", "bigint", None, None),
+    ("1E400", "bigint", None, None),
+    (_BIG, "bigint", None, None),
+    ("9223372036854775807", "bigint", 2**63 - 1, 2**63 - 1),
+    ("9223372036854775808", "bigint", None, None),
+    ("-9223372036854775809", "bigint", None, None),
+    ("9.2233720368547758E18", "bigint", 2**63 - 1, 2**63 - 1),
+    ("-0.0", "bigint", 0, 0),
+    ("7.0", "bigint", 7, 7),
+    ("3.7", "bigint", 3, 3),
+    ('"true"', "bigint", None, None),
+    ('"12"', "bigint", 12, 12),
+    ('"\\u0000 12\\u007f"', "bigint", 12, 12),
+    ('"12.5"', "bigint", None, None),
+    ('"1_000"', "bigint", None, None),
+    ('"\\u0661"', "bigint", None, None),
+    ("true", "bigint", 1, 1),
+    ("null", "bigint", None, None),
+    ("1e20", "double", 1e20, 1e20),
+    ("1E400", "double", math.inf, math.inf),
+    (_BIG, "double", 1.2345678901234568e23, 1.2345678901234568e23),
+    ("3.7", "double", 3.7, 3.7),
+    ('"12"', "double", 12.0, 12.0),
+    ('"1.5e3f"', "double", 1500.0, 1500.0),
+    ('" 12 "', "double", 12.0, 12.0),
+    ('"0x1p3"', "double", 8.0, None),
+    ('"-INF"', "double", -math.inf, -math.inf),
+    ('"+nan"', "double", None, None),
+    ('"1_000"', "double", None, None),
+    ('"true"', "double", None, None),
+    ("null", "double", None, None),
+    ("1e20", "boolean", True, None),
+    ("-0.0", "boolean", False, None),
+    ("7.0", "boolean", True, None),
+    ("3.7", "boolean", True, None),
+    ('"true"', "boolean", True, None),
+    ('"12"', "boolean", None, None),
+    ("9223372036854775808", "boolean", True, None),
+    ("true", "boolean", True, True),
+    ("null", "boolean", None, None),
+    ("1e20", "string", "1.0E20", "1e+20"),
+    ("1.5e300", "string", "1.5E300", "1.5e+300"),
+    ("-0.0", "string", "0", "-0.0"),
+    ("7.0", "string", "7", "7.0"),
+    ("3.7", "string", "3.7", "3.7"),
+    ('"true"', "string", "true", "true"),
+    ('"12"', "string", "12", "12"),
+    (_BIG, "string", _BIG, _BIG),
+    ("9223372036854775808", "string", "9223372036854775808", "9223372036854775808"),
+    ('{"x":[1,"y"]}', "string", '{"x":[1,"y"]}', '{"x":[1,"y"]}'),
+    ("null", "string", None, None),
+]
+
+
+def test_cross_track_getter_contract(spark):
+    from pyspark.sql import functions as F
+
+    from datafusion_functions_variant_spark.functions import explicit
+
+    docs = sorted({f'{{"a":{value}}}' for value, _, _, _ in GETTER_ROWS})
+    dtypes = ("bigint", "double", "boolean", "string")
+    df = spark.createDataFrame(list(enumerate(docs)), "i int, t string")
+    track_c = explicit.variant_extract(
+        explicit.variant_from_json(F.col("t")), {d: ("$.a", d) for d in dtypes}
+    )
+    rows = df.select(
+        "i",
+        *[F.try_variant_get(F.parse_json("t"), "$.a", d).alias("n_" + d) for d in dtypes],
+        *[track_c[d].alias("c_" + d) for d in dtypes],
+    ).collect()
+    got = {docs[r["i"]]: r for r in rows}
+    for value, dtype, track_n, track_c in GETTER_ROWS:
+        r = got[f'{{"a":{value}}}']
+        assert (r["n_" + dtype], r["c_" + dtype]) == (track_n, track_c), (value, dtype)
+
+
+def _holds_float(obj) -> bool:
+    if isinstance(obj, dict):
+        return any(_holds_float(v) for v in obj.values())
+    if isinstance(obj, list):
+        return any(_holds_float(v) for v in obj)
+    return isinstance(obj, float)
+
+
+_GETTER_DTYPES = ("bigint", "double", "boolean", "string")
+
+
+def _lower_escapes(text: str) -> str:
+    """A control character in a rendered container escapes as
+    ``\\u001F`` on Track N (Jackson) and ``\\u001f`` on Track C."""
+    return re.sub(r"\\u[0-9A-F]{4}", lambda m: m.group(0).lower(), text)
+
+
+@given(st.lists(json_rows, min_size=1, max_size=6))
+@settings(max_examples=25, deadline=None)
+def test_property_getters_follow_track_n(spark, docs):
+    """For random documents, every path that exists (the root included)
+    and every dtype: the Track C getter never fails the query, and it
+    equals Track N except on the documented classes — boolean of a
+    non-boolean (Track C NULL) and string of a value holding a double.
+    A path that another document has but this one lacks reads NULL on
+    both tracks."""
+    from pyspark.sql import functions as F
+
+    from datafusion_functions_variant_spark.functions import explicit
+
+    walks = [[("$", d)] + _all_paths(d) for d in docs]
+    present = [dict(w) for w in walks]
+    paths = list(dict.fromkeys(p for w in walks for p, _ in w[:12]))[:40]
+    texts = [json.dumps(d, ensure_ascii=False) for d in docs]
+    fields = {f"{k}_{d}": (p, d) for k, p in enumerate(paths) for d in _GETTER_DTYPES}
+    track_c = explicit.variant_extract(explicit.variant_from_json(F.col("t")), fields)
+    rows = (
+        spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+        .select(
+            "i",
+            track_c.alias("c"),
+            *[
+                F.try_variant_get(F.parse_json("t"), p, d).alias(f"n{name}")
+                for name, (p, d) in fields.items()
+            ],
+        )
+        .collect()
+    )
+    for r in rows:
+        at = present[r["i"]]
+        for name, (p, dtype) in fields.items():
+            n, c = r["n" + name], r["c"][name]
+            if p not in at:
+                assert n is None and c is None, (texts[r["i"]], p, dtype)
+            elif dtype == "boolean" and not isinstance(at[p], bool):
+                assert c is None, (texts[r["i"]], p)
+            elif not (dtype == "string" and _holds_float(at[p])):
+                if dtype == "string" and isinstance(at[p], (list, dict)):
+                    n, c = _lower_escapes(n), _lower_escapes(c)
+                same = n == c or n != n and c != c  # NaN reads NaN on both
+                assert same, (texts[r["i"]], p, dtype, n, c)
 
 
 _any_floats = st.floats(allow_nan=True, allow_infinity=True)

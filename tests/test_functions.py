@@ -149,6 +149,40 @@ def test_explicit_extract_grouped_paths_match_single_getters(spark):
     assert [r["f_root"] for r in out] == ["object", "object", "object", None]
 
 
+def test_sql_getter_path_column_matches_literal_getter(spark):
+    """``codec_get_bigint(v, p)`` over a non-literal path column: each
+    row equals ``explicit.variant_get`` with that row's path as a
+    literal, and a malformed or NULL path reads NULL instead of failing
+    the query."""
+    from datafusion_functions_variant_spark.functions.registry import (
+        register_sql_functions,
+    )
+
+    register_sql_functions(spark)
+    doc = '{"a": {"b": [10, 2e20, " 7 "]}, "k": 5}'
+    valid = ["$.k", "$.a.b[0]", "$.a.b[1]", "$.a.b[2]", "$['a']['b'][0]"]
+    missing = ["$.nope", "$.a.b[9]", "$.k.x"]
+    malformed = ["$[x]", "$[1", "$['a", "a.b", "$..a"]
+    paths = valid + missing + malformed + [None]
+    spark.createDataFrame(
+        [(i, doc, p) for i, p in enumerate(paths)], "i int, j string, p string"
+    ).withColumn("v", explicit.variant_from_json(F.col("j"))).createOrReplaceTempView(
+        "path_column_rows"
+    )
+    got = dict(spark.sql("SELECT i, codec_get_bigint(v, p) FROM path_column_rows").collect())
+    literal = (
+        spark.createDataFrame([(doc,)], "j string")
+        .select(explicit.variant_from_json(F.col("j")).alias("v"))
+        .select(
+            *[explicit.variant_get("v", p, "bigint") for p in valid + missing]
+        )
+        .first()
+    )
+    assert [got[i] for i in range(len(valid) + len(missing))] == list(literal)
+    assert list(literal) == [5, 10, None, 7, 10, None, None, None]
+    assert [got[i] for i in range(len(valid) + len(missing), len(paths))] == [None] * 6
+
+
 def test_explicit_tolerant_parse(spark):
     df = spark.createDataFrame([('{"ok": 1}',), ("{broken",), (None,)], ["j"])
     out = df.select(explicit.try_variant_from_json(F.col("j")).alias("v")).collect()
